@@ -4,8 +4,9 @@ The reference defines a listener with onStarted/onProgress/onTerminated
 (stream_processor.py:463-490) but attaches it via a nonexistent
 ``query.addListener`` (:467) — dead code.  This is the working
 equivalent, attached through the real API
-(``spark.streams.addListener``), recording the same metrics the
-reference logs: rows/sec and trigger latency."""
+(``spark.streams.addListener``), recording the metrics the reference
+logs (rows/sec and trigger latency) plus the full per-phase duration
+breakdown and the state-store figures of every stateful operator."""
 
 from __future__ import annotations
 
@@ -16,12 +17,25 @@ from pyspark.sql.streaming import StreamingQueryListener
 
 
 @dataclass
+class StateRecord:
+    """One stateful operator's figures after a trigger."""
+
+    num_rows_total: int
+    memory_used_bytes: int
+    num_rows_dropped_by_watermark: int
+
+
+@dataclass
 class ProgressRecord:
     query_name: str
     batch_id: int
     num_input_rows: int
     processed_rows_per_second: float
-    duration_ms: int
+    duration_ms: int  # triggerExecution
+    #: the whole ``durationMs`` map (addBatch, queryPlanning, walCommit, ...)
+    durations_ms: dict[str, int] = field(default_factory=dict)
+    #: one entry per stateful operator, in ``stateOperators`` order
+    state: list[StateRecord] = field(default_factory=list)
 
 
 class QueryMonitor(StreamingQueryListener):
@@ -41,13 +55,19 @@ class QueryMonitor(StreamingQueryListener):
     def onQueryProgress(self, event) -> None:
         p = event.progress
         if len(self.progress) < self.max_records:
+            durations = dict(p.durationMs or {})
             self.progress.append(
                 ProgressRecord(
                     query_name=p.name or str(p.id),
                     batch_id=p.batchId,
                     num_input_rows=p.numInputRows,
                     processed_rows_per_second=p.processedRowsPerSecond or 0.0,
-                    duration_ms=(p.durationMs or {}).get("triggerExecution", 0),
+                    duration_ms=durations.get("triggerExecution", 0),
+                    durations_ms=durations,
+                    state=[
+                        StateRecord(s.numRowsTotal, s.memoryUsedBytes, s.numRowsDroppedByWatermark)
+                        for s in p.stateOperators or []
+                    ],
                 )
             )
 

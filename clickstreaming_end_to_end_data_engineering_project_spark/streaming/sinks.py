@@ -13,29 +13,81 @@ append sink would therefore duplicate keys (a latent reference bug,
 stream_processor.py:310).  Sinks that can upsert take ``key_cols`` and
 overwrite per key; append-only sinks document that downstream readers
 must take the latest row per (key, batch).
+
+Single materialization: a foreachBatch frame is the micro-batch's whole
+plan, stateful operator included, and every action on it re-executes
+that plan (a stateful one reloads its previous state version and
+recomputes).  So the outermost sink call persists the batch and
+materializes it with ONE ``count()`` job that doubles as the emptiness
+check; every sink nested in that call (``CompositeSink`` children, and
+sinks reached through wrappers that are not ``Sink``s) reads the cache
+and runs no emptiness job of its own; the cache is released when the
+outermost call returns or raises.  A non-empty ``CompositeSink(
+IdempotentParquetSink, MetricsSink)`` call therefore runs 3 jobs
+(count, write, delta collect), a lone sink 2, an empty batch 1.
 """
 
 from __future__ import annotations
 
+import threading
 import time
 from abc import ABC, abstractmethod
 from collections import defaultdict
+from contextlib import contextmanager
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame
+
+# the frame an enclosing sink call on this thread has already persisted
+# and found non-empty: foreachBatch hands a batch to one thread, and
+# every nested sink call on it receives the same frame object
+_held = threading.local()
+
+
+@contextmanager
+def _materialized(df: DataFrame):
+    """Yield whether ``df`` has rows, with ``df`` cached for the block.
+
+    Outermost use: persist ``df`` (unless it is already cached, in
+    which case the caller owns the cache), run one ``count()`` that
+    materializes it, and unpersist on exit, also on error.  Nested use
+    with the same frame object runs no job and yields True.  The check
+    is keyed on the enclosing call, not on ``df.is_cached``: a frame
+    the caller cached is still counted, so an empty one short-circuits."""
+    outer = getattr(_held, "df", None)
+    if outer is df:
+        yield True
+        return
+    owned = df.storageLevel == StorageLevel.NONE
+    if owned:
+        df.persist()
+    try:
+        nonempty = df.count() > 0
+        if nonempty:
+            _held.df = df
+        yield nonempty
+    finally:
+        _held.df = outer
+        if owned:
+            df.unpersist()
 
 
 def _batch_delta(df: DataFrame, key_col: str, count_col: str) -> list[tuple]:
-    """Stage a micro-batch as per-key summed deltas: one groupBy/sum
-    collect, NULL sums dropped.  Shared by every metrics-style sink so
-    the staging (and its NULL handling) cannot drift between twins;
+    """Stage a micro-batch as per-key summed deltas, NULL sums dropped
+    (a key whose values are all NULL is left out).  One collect of the
+    two projected columns, summed per key on the driver: no shuffle,
+    and a scan of the cached batch under a sink call.  The metrics
+    family's input is an already-reduced per-key aggregate (see
+    ``RedisMetricsSink``), so the collect is the size of the delta the
+    driver keeps anyway.  Shared by every metrics-style sink so the
+    staging (and its NULL handling) cannot drift between twins;
     everything that can raise happens here, BEFORE any sink state is
     touched, which is what makes the retry wrapper safe."""
-    rows = df.groupBy(key_col).sum(count_col).collect()
-    return [
-        (r[key_col], r[f"sum({count_col})"])
-        for r in rows
-        if r[f"sum({count_col})"] is not None
-    ]
+    sums: dict = {}
+    for key, value in df.select(key_col, count_col).collect():
+        if value is not None:
+            sums[key] = value if key not in sums else sums[key] + value
+    return list(sums.items())
 
 
 class Sink(ABC):
@@ -48,18 +100,21 @@ class Sink(ABC):
     def write(self, df: DataFrame, batch_id: int) -> None: ...
 
     def __call__(self, df: DataFrame, batch_id: int) -> None:
-        """foreachBatch entrypoint with the reference's retry policy
-        (3 tries, exponential backoff — stream_processor.py:305-324)."""
-        if df.isEmpty():
-            return
-        for attempt in range(self.max_retries):
-            try:
-                self.write(df, batch_id)
+        """foreachBatch entrypoint: skip an empty batch, else ``write``
+        with the reference's retry policy (3 tries, exponential backoff
+        — stream_processor.py:305-324), the batch held cached by
+        ``_materialized`` throughout."""
+        with _materialized(df) as nonempty:
+            if not nonempty:
                 return
-            except Exception:
-                if attempt == self.max_retries - 1:
-                    raise
-                time.sleep(2**attempt)
+            for attempt in range(self.max_retries):
+                try:
+                    self.write(df, batch_id)
+                    return
+                except Exception:
+                    if attempt == self.max_retries - 1:
+                        raise
+                    time.sleep(2**attempt)
 
 
 class MemorySink(Sink):
@@ -136,27 +191,22 @@ class CompositeSink(Sink):
     (Postgres + Redis — stream_processor.py:158/167, 240/249), which
     re-reads Kafka and recomputes the aggregation twice; one query +
     composite sink halves source load and keeps the sinks in lockstep
-    on the same batch."""
+    on the same batch.  The batch is materialized once for all the
+    children (module docstring).
+
+    No composite-level retry (``max_retries = 1``): each sub-sink runs
+    its OWN retry via ``Sink.__call__``, and a sub-sink that already
+    succeeded must not be re-run when a sibling fails (that would
+    duplicate appends)."""
+
+    max_retries = 1
 
     def __init__(self, *sinks: Sink):
         self.sinks = sinks
 
-    def __call__(self, df: DataFrame, batch_id: int) -> None:
-        # no composite-level retry: each sub-sink runs its OWN retry via
-        # Sink.__call__, and a sub-sink that already succeeded must not
-        # be re-run when a sibling fails (that would duplicate appends)
-        if df.isEmpty():
-            return
-        self.write(df, batch_id)
-
     def write(self, df: DataFrame, batch_id: int) -> None:
-        # persist so N sinks don't recompute the batch plan N times
-        df.persist()
-        try:
-            for sink in self.sinks:
-                sink(df, batch_id)
-        finally:
-            df.unpersist()
+        for sink in self.sinks:
+            sink(df, batch_id)
 
 
 def write_kafka(df: DataFrame, brokers: str, topic: str, key_col: str | None = None):
@@ -355,7 +405,7 @@ class MetricsSink(Sink):
         self.series: dict[str, list[tuple[float, int]]] = defaultdict(list)
 
     def write(self, df: DataFrame, batch_id: int) -> None:
-        # re-aggregate per batch like the reference (stream_processor.py:369);
+        # per-key batch totals like the reference (stream_processor.py:369);
         # _batch_delta stages the FULL mutation delta before touching
         # shared state: Sink.__call__ re-runs write() on failure, so a
         # half-applied row loop would double-count already-applied keys

@@ -301,6 +301,14 @@ def test_query_monitor_records_progress(spark, events_dir):
         assert mon.started, "onQueryStarted not delivered"
         assert any(p.num_input_rows > 0 for p in mon.progress), mon.progress
         assert mon.terminated, "onQueryTerminated not delivered"
+        # full duration breakdown and the windowed aggregate's state figures
+        first = next(p for p in mon.progress if p.num_input_rows > 0)
+        assert first.durations_ms["triggerExecution"] == first.duration_ms
+        assert {"addBatch", "queryPlanning", "walCommit"} <= first.durations_ms.keys()
+        assert len(first.state) == 1
+        assert first.state[0].num_rows_total == len(sink.result)
+        assert first.state[0].memory_used_bytes > 0
+        assert first.state[0].num_rows_dropped_by_watermark == 0  # initial watermark
     finally:
         detach_monitor(spark, mon)
 
