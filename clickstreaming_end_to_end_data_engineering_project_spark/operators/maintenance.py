@@ -1,18 +1,21 @@
-"""Segment-count maintenance policy for the appendable written-index
-layouts — the helper that ENFORCES the operating rule SCALING.md's r13
-compaction measurements recorded ("append daily, compact on a cadence
-that bounds segment count; at ~7 segments probes stay within ~25% of
-the single-segment floor, and one compaction pays ~1 store rewrite to
-restore it").  Until r14 that rule lived only in prose; every caller
-had to remember which ``compact_*`` to run and when.
+"""Cross-store maintenance entry points for the written-index layouts:
+``maintain_index`` (the segment-count compaction policy) and
+``forget_ids`` (the right-to-be-forgotten cascade).  The layout table,
+the policy, the verbs and their crash orders live in
+``operators/segstore.py``; this module only dispatches to it.
+
+The policy ENFORCES the operating rule SCALING.md's r13 compaction
+measurements recorded ("append daily, compact on a cadence that bounds
+segment count; at ~7 segments probes stay within ~25% of the
+single-segment floor, and one compaction pays ~1 store rewrite to
+restore it").
 
 ``maintain_index`` closes the loop: point it at any of the five
 appendable layouts (BM25 / LSH / IVF / PQ / IVFPQ — self-identified by
 their params sidecars, so there is no layout argument to get wrong),
-and it compacts IFF the segment count exceeds ``max_segments``.  All
-compactions go through the existing crash-safe ``fsutil.
-swap_with_staging`` rename discipline, so the helper inherits its
-terminal-runs-only rule: never run it while an ingest stream is
+and it compacts IFF the segment count exceeds ``max_segments``.
+Compaction is a staged swap of the whole root, so the helper inherits
+the terminal-runs-only rule: never run it while an ingest stream is
 writing the index — and NOT from inside the stream's own foreachBatch
 either, even though batches run serially.  The reason is replay
 idempotence, not concurrency: the ingest sinks' exactly-once story is
@@ -34,34 +37,7 @@ LLM-data-pipeline extension mandate's 100 TB serving story.
 
 from __future__ import annotations
 
-import os
-
-# (params sidecar that identifies the layout,
-#  segment root relative to the index root,
-#  dotted compaction entrypoint within operators/)
-_LAYOUTS = (
-    ("_bm25_params", "", "retrieval", "compact_bm25_index"),
-    ("_lsh_params", "", "similarity", "compact_lsh_index"),
-    ("_ivf_params", "vectors", "similarity", "compact_ivf_index"),
-    ("_ivfpq_params", "codes", "similarity", "compact_ivfpq_index"),
-    ("_pq_params", "codes", "similarity", "compact_pq_index"),
-)
-
-
-def detect_index_kind(spark, root: str) -> "tuple[str, str, str] | None":
-    """(kind, segment_root, compact_fn_name) for the layout at
-    ``root``, identified by its params sidecar — None if ``root`` is
-    not a recognized written index.  Sidecar order matters only for
-    IVFPQ-vs-PQ, which share ``_pq_codebooks``: ``_ivfpq_params`` is
-    checked first and is unique to the IVFPQ layout."""
-    from ..fsutil import fs_for
-
-    _, fs, _ = fs_for(spark, root)
-    for sidecar, seg_rel, mod, fn in _LAYOUTS:
-        _, _, hpath = fs_for(spark, os.path.join(root, sidecar))
-        if fs.exists(hpath):
-            return (sidecar.strip("_").replace("_params", ""), seg_rel, f"{mod}.{fn}")
-    return None
+from . import segstore
 
 
 def maintain_index(
@@ -71,71 +47,21 @@ def maintain_index(
     ``root``: if its ``batch=<id>`` segment count exceeds
     ``max_segments`` (default 7 — the SCALING.md r13 operating point:
     probes within ~25% of the single-segment floor), compact it to one
-    segment via the layout's own crash-safe compaction; otherwise do
-    nothing.  Returns ``{"kind", "segments_before", "segments_after",
-    "compacted"}``.  Raises on a path that is not a recognized index —
-    a silent no-op on a typo'd path would read as "maintained".
-
-    Idempotent and safe to call on every ingest cadence tick; the
-    compaction itself is the existing swap-based job, so the
-    terminal-runs-only rule applies (do not run concurrently with an
-    ingest stream writing ``root``)."""
-    if max_segments < 1:
-        raise ValueError(f"max_segments must be >= 1, got {max_segments}")
-    detected = detect_index_kind(spark, root)
-    if detected is None:
-        raise ValueError(
-            f"maintain_index: no recognized written-index layout at {root} "
-            "(expected a _bm25/_lsh/_ivf/_ivfpq/_pq params sidecar)"
-        )
-    kind, seg_rel, compact_ref = detected
-    from ..fsutil import existing_batch_ids, heal_segment_debris
-
-    seg_root = os.path.join(root, seg_rel) if seg_rel else root
-    # a crashed segment-level job (a delete) leaves batch=<id>.erase_*
-    # debris that would poison the compaction's partition-discovery
-    # reads — heal every segmented dir of the layout first
-    sidecars = {
-        "bm25": ("", "_doclens", "_termstats", "_bm25_params"),
-        "lsh": ("", "_id_map"),
-        "ivf": ("vectors", "_id_map"),
-        "ivfpq": ("codes",),
-        "pq": ("codes",),
-    }[kind]
-    for sub in sidecars:
-        heal_segment_debris(spark, os.path.join(root, sub) if sub else root)
-    before = len(existing_batch_ids(spark, seg_root))
-    if before <= max_segments:
-        return {
-            "kind": kind,
-            "segments_before": before,
-            "segments_after": before,
-            "compacted": False,
-        }
-    mod_name, fn_name = compact_ref.split(".")
-    import importlib
-
-    mod = importlib.import_module(f".{mod_name}", package=__package__)
-    getattr(mod, fn_name)(spark, root)
-    after = len(existing_batch_ids(spark, seg_root))
-    return {
-        "kind": kind,
-        "segments_before": before,
-        "segments_after": after,
-        "compacted": True,
-    }
+    segment; otherwise do nothing (``segstore.maintain``).  Returns
+    ``{"kind", "segments_before", "segments_after", "compacted"}``.
+    Raises on a path that is not a recognized index — a silent no-op on
+    a typo'd path would read as "maintained".  Terminal-runs-only (see
+    the module docstring)."""
+    return segstore.maintain(spark, root, max_segments)
 
 
-# kind (as detect_index_kind reports it) → the layout's delete verb.
-# All five share the (spark, path, ids, id_col) signature and the
-# O(touched-segment) staged-swap discipline.
-_DELETE_VERBS = {
-    "bm25": ("retrieval", "delete_from_bm25_index", "doc_id"),
-    "lsh": ("similarity", "delete_from_lsh_index", "vec_id"),
-    "ivf": ("similarity", "delete_from_ivf_index", "vec_id"),
-    "ivfpq": ("similarity", "delete_from_ivfpq_index", "vec_id"),
-    "pq": ("similarity", "delete_from_pq_index", "vec_id"),
-}
+def _qualified(spark, path: str) -> str:
+    """``path`` as the filesystem names it: scheme, absolute, no
+    trailing slash — so two spellings of one directory compare equal."""
+    from ..fsutil import fs_for
+
+    _, fs, hpath = fs_for(spark, path)
+    return str(fs.makeQualified(hpath).toString()).rstrip("/")
 
 
 def forget_ids(
@@ -188,22 +114,26 @@ def forget_ids(
     awaited (no store is left mid-swap by an abandoned future — each
     either finished its swaps or never started them), then the first
     failure in input order is re-raised."""
-    import importlib
     from concurrent.futures import ThreadPoolExecutor
 
-    # validate BEFORE the first delete verb runs: a duplicate target
-    # must fail with zero side effects, not after earlier stores were
-    # already irreversibly erased (r16 review)
-    seen_roots = set()
-    for root in index_roots:
-        if root in seen_roots:
-            raise ValueError(f"forget_ids: index root listed twice: {root}")
-        seen_roots.add(root)
-    seen_ds = set()
-    for path, _ in datasets:
-        if path in seen_ds:
-            raise ValueError(f"forget_ids: dataset listed twice: {path}")
-        seen_ds.add(path)
+    # validate BEFORE the first delete verb runs: a duplicate or nested
+    # target must fail with zero side effects, not after earlier stores
+    # were already irreversibly erased.  Roots compare QUALIFIED: "p"
+    # and "p/" are one store, and two pooled deletes of it would race.
+    for role, paths in (("index root", index_roots), ("dataset", [p for p, _ in datasets])):
+        seen: "dict[str, str]" = {}
+        for path in paths:
+            q = _qualified(spark, path)
+            if q in seen:
+                raise ValueError(f"forget_ids: {role} listed twice: {path}")
+            seen[q] = path
+    roots = {_qualified(spark, r): r for r in index_roots}
+    for q, root in roots.items():
+        for q2, outer in roots.items():
+            if q.startswith(q2 + "/"):
+                raise ValueError(
+                    f"forget_ids: index root {root} is nested under {outer}"
+                )
 
     overrides = id_col_overrides or {}
 
@@ -211,20 +141,18 @@ def forget_ids(
     # root must fail with zero side effects, same as the duplicate case
     index_jobs = []
     for root in index_roots:
-        detected = detect_index_kind(spark, root)
-        if detected is None:
+        layout = segstore.detect(spark, root)
+        if layout is None:
             raise ValueError(
                 f"forget_ids: no recognized written-index layout at {root}"
             )
-        kind = detected[0]
-        mod_name, fn_name, default_col = _DELETE_VERBS[kind]
-        mod = importlib.import_module(f".{mod_name}", package=__package__)
-        index_jobs.append((root, kind, getattr(mod, fn_name), default_col))
+        index_jobs.append((root, layout))
 
     def _run_index(job):
-        root, kind, fn, default_col = job
-        res = fn(spark, root, ids, id_col=overrides.get(root, default_col))
-        return ("index", root), {"kind": kind, **res}
+        root, layout = job
+        id_col = overrides.get(root, layout.id_col)
+        res = segstore.delete(layout.kind, spark, root, ids, id_col)
+        return ("index", root), {"kind": layout.kind, **res}
 
     def _run_dataset(ds):
         path, id_col = ds

@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from . import segstore
 from .text import tokens
 
 
@@ -175,7 +176,7 @@ def _score_and_rank(scored: DataFrame, id_col: str, k: int, k1: float, b: float)
 # fixed sidecar schemas: probes read them with explicit schemas so no
 # footer-inference job runs per query (the probe-latency term that
 # would otherwise grow with segment count)
-_PARAMS_SCHEMA = "n_docs long, sum_dl long, n_buckets int"
+_PARAMS_SCHEMA = segstore.LAYOUTS["bm25"].params_schema
 _TERMSTATS_SCHEMA = "_t string, _df long"
 
 
@@ -196,12 +197,11 @@ def write_bm25_index(
     n_buckets: int = 64,
 ) -> None:
     """Materialize the inverted index ``bm25_topk`` builds on the fly —
-    the written-retrieval layout completing the written-ANN family's
-    pattern (LSH/IVF/PQ/IVFPQ → +BM25).  The layout is SEGMENTED
-    (Lucene's increment model, r12 verdict #4): every build/append is
-    one ``batch=<id>`` increment, and corpus statistics are stored as
-    mergeable per-batch sums, so appending a day's documents writes
-    one new segment instead of rebuilding the corpus index:
+    the written-retrieval member of the written-index family.  The
+    layout is SEGMENTED (Lucene's increment model): every build/append
+    is one ``batch=<id>`` increment, and corpus statistics are stored
+    as mergeable per-segment sums, so appending a day's documents
+    writes one new segment instead of rebuilding the corpus index:
 
     - ``batch=<id>/bucket=<b>/``: posting rows (doc_id, term, tf, dl)
       with ``bucket = crc32(term) % n_buckets`` — a probe statically
@@ -209,143 +209,21 @@ def write_bm25_index(
       column prunes regardless of how many batches exist) and reads
       |query|/n_buckets of the postings, never the corpus.  The
       document length rides IN every posting row (Lucene's
-      norms-in-postings, +8 bytes/posting): the probe scores from the
-      pruned partitions ALONE, no corpus-sized sidecar join.
+      norms-in-postings), so the probe scores from the pruned
+      partitions alone.
     - ``_termstats/batch=<id>/``: (_t, _df) per segment.  Document
       frequencies over disjoint doc sets ADD, so the probe sums the
-      query terms' rows across segments — exact-integer merge, no
-      postings aggregation at probe time.
+      query terms' rows across segments.
     - ``_doclens/batch=<id>/``: (doc_id, _dl) — the membership table
-      appends validate against (and the length audit).
+      appends and deletes read.
     - ``_bm25_params/batch=<id>/``: 1 row (n_docs, sum_dl, n_buckets)
       per segment; the probe derives N = Σ n_docs and avgdl =
       Σ sum_dl / Σ n_docs — integer sums, so the double division is
       bit-identical to a single-build index.
 
-    This ``write`` is just the first segment (``batch=0``).
-    Rebuilding over an EXISTING index goes through the crash-safe
-    staging swap (r15, the write_pq_index discipline extended to the
-    whole write_* family): the old index stays probe-able until the
-    new build fully lands.  All filesystem work goes through the
-    Hadoop FileSystem API, so the same code maintains a local, HDFS,
-    or s3a layout (the fsutil rule).
-    """
-    from ..fsutil import fs_for, heal_swap_crash, swap_with_staging
-
-    spark = docs.sparkSession
-    heal_swap_crash(spark, path)
-    _, fs, hpath = fs_for(spark, path)
-    if fs.exists(hpath):
-        swap_with_staging(
-            spark, path,
-            lambda staging: _write_bm25_segment(
-                docs, staging, 0, id_col, text_col, n_buckets
-            ),
-            job="compact",
-        )
-    else:
-        _write_bm25_segment(docs, path, 0, id_col, text_col, n_buckets)
-
-
-def _existing_bm25_batches(spark, path: str) -> "list[int]":
-    from ..fsutil import existing_batch_ids
-
-    return existing_batch_ids(spark, path)
-
-
-def _write_bm25_segment(
-    docs: DataFrame,
-    path: str,
-    batch_id: int,
-    id_col: str,
-    text_col: str,
-    n_buckets: int,
-) -> "dict[str, int]":
-    """One segment's four directory writes, each ``batch=<id>``-scoped
-    with mode=overwrite: re-running the SAME batch id rewrites its own
-    directories (the near_dedup survivor discipline), so a crash
-    mid-append heals by replaying the append — no partial segment can
-    double-count.
-
-    Write ORDER matters for crash recovery (r13 advisory + r15
-    symmetry audit): ``_bm25_params`` lands FIRST (a bootstrap that
-    crashes after the postings write replays down the APPEND path,
-    which reads params for n_buckets — params-last wedged that replay
-    on PATH_NOT_FOUND), then ``_doclens`` — the slice append OVERLAP
-    VALIDATION reads — and only then the postings dir that
-    ``existing_batch_ids`` lists, then ``_termstats``.  Doclens before
-    postings is the ``append_ivf_index`` id_map-first rule: a crash
-    between them leaves the batch UNDISCOVERABLE, so a default-id
-    retry replays the SAME id and overwrites everything; the pre-r15
-    postings-first order let a crash window strand a listed segment
-    invisible to the overlap check — the retry took max+1 and
-    double-counted every id's stats.  A crash AFTER postings leaves
-    the batch discoverable AND validated: a default-id retry raises
-    the (correct) duplicate error, and the healing replay is an
-    explicit same-batch-id append — which is exactly what the
-    streaming ingest sink does on every restart."""
-    import os
-
-    seg = f"batch={batch_id}"
-    spark = docs.sparkSession
-    # ONE tokenize pass (r18 optimization round): tf rows are the
-    # segment's ground truth, and the document length is their per-doc
-    # tf sum (size(tokens) ≡ Σ tf — counts, not distincts), so dl no
-    # longer pays a second full tokenize of the corpus.  The
-    # checkpointed tf frame also feeds _termstats directly, replacing
-    # the former re-read of the just-written postings partitions (same
-    # rows by construction — the write is derived from this frame).
-    tf_rows = (
-        docs.select(F.col(id_col), F.explode(tokens(text_col)).alias("_t"))
-        .groupBy(id_col, "_t")
-        .agg(F.count(F.lit(1)).alias("_tf"))
-        .localCheckpoint()
-    )
-    # cast keeps _dl INT exactly as F.size() produced it — appended
-    # segments must stay schema-identical to pre-existing ones
-    dl = (
-        tf_rows.groupBy(id_col)
-        .agg(F.sum("_tf").cast("int").alias("_dl"))
-        .localCheckpoint()
-    )
-    # one action for both corpus statistics (was two: count + sum)
-    totals = dl.agg(
-        F.count(F.lit(1)).alias("_n"), F.sum("_dl").alias("_s")
-    ).first()
-    n_docs = int(totals["_n"])
-    if n_docs == 0:
-        # nothing tokenizable: write NOTHING rather than a data-less
-        # segment — an empty batch=<id> dir breaks schema inference for
-        # every later probe (caught by the r13 empty-segment check);
-        # replays of the same all-empty batch are likewise no-ops
-        return {"batch_id": batch_id, "n_docs": 0}
-    sum_dl = int(totals["_s"])
-    # params as a JVM-literal frame: a 1-row createDataFrame goes
-    # through the pickled-RDD path — a Python-worker job (and the
-    # session's pool FORK, ~5 s, when it is the first such job)
-    (
-        spark.range(1)
-        .select(
-            F.lit(n_docs).cast("long").alias("n_docs"),
-            F.lit(sum_dl).cast("long").alias("sum_dl"),
-            F.lit(n_buckets).cast("int").alias("n_buckets"),
-        )
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(os.path.join(path, "_bm25_params", seg))
-    )
-    dl.write.mode("overwrite").parquet(os.path.join(path, "_doclens", seg))
-    postings = tf_rows.join(dl, id_col).withColumn(
-        "bucket",
-        F.pmod(F.crc32(F.col("_t").cast("binary")), F.lit(n_buckets)),
-    )
-    postings.write.mode("overwrite").partitionBy("bucket").parquet(
-        os.path.join(path, seg)
-    )
-    tf_rows.groupBy("_t").agg(F.count(F.lit(1)).alias("_df")).write.mode(
-        "overwrite"
-    ).parquet(os.path.join(path, "_termstats", seg))
-    return {"batch_id": batch_id, "n_docs": n_docs}
+    This build is segment 0.  Verbs and crash orders:
+    ``operators/segstore.py``."""
+    segstore.bootstrap("bm25", docs, path, {"n_buckets": n_buckets}, id_col, text_col)
 
 
 def append_bm25_index(
@@ -355,65 +233,14 @@ def append_bm25_index(
     text_col: str = "text",
     batch_id: "int | None" = None,
 ) -> "dict[str, int]":
-    """Append ``new_docs`` to an existing ``write_bm25_index`` layout
-    as one new segment — the incremental-maintenance path (r12 verdict
-    #4): cost is proportional to the APPENDED documents, not the
-    corpus, and a probe of the appended index is bit-equal to a probe
-    of a full rebuild over the union (pinned by test — df/N/avgdl all
-    merge as exact integer sums).
-
-    ``batch_id`` defaults to max(existing)+1.  Passing an explicit id
-    makes the append REPLAYABLE: re-running a batch id overwrites that
-    segment's four directories (streaming/bm25_ingest.py relies on
-    this for foreachBatch exactly-once).  New doc ids must not already
-    exist in OTHER segments (raises — BM25 stats would double-count;
-    route updates through a rebuild or a delete-then-append cycle).
-
-    The increment is MATERIALIZED before any directory is overwritten
-    (r15): a replay's input may lawfully derive from the index's own
-    sidecars (e.g. "re-deliver the docs _doclens says batch N holds"),
-    and the doclens-first write order would otherwise invalidate that
-    lazy input's file listing mid-append.  Increments are
-    increment-sized by definition, so the checkpoint is bounded — the
-    whole-corpus initial build keeps the lazy path (its crash healing
-    is the staged-swap rebuild, never an in-place replay).
-    """
-    spark = new_docs.sparkSession
-    import os
-
-    new_docs = new_docs.localCheckpoint(eager=True)
-    existing = _existing_bm25_batches(spark, path)
-    if not existing:
-        raise ValueError(
-            f"append_bm25_index: no index at {path} — build one with "
-            "write_bm25_index first"
-        )
-    if batch_id is None:
-        batch_id = existing[-1] + 1
-    params = spark.read.schema(_PARAMS_SCHEMA).parquet(
-        os.path.join(path, "_bm25_params")
-    )
-    n_buckets = params.select("n_buckets").first()[0]
-    other = [b for b in existing if b != batch_id]
-    if other:
-        prior = spark.read.parquet(os.path.join(path, "_doclens")).filter(
-            F.col("batch").isin(other)
-        )
-        dup = (
-            new_docs.select(F.col(id_col))
-            .join(prior, new_docs[id_col] == prior[id_col], "left_semi")
-            .limit(1)
-            .count()
-        )
-        if dup:
-            raise ValueError(
-                "append_bm25_index: some new doc ids already exist in the "
-                "index — appending them would double-count df/N/avgdl; "
-                "rebuild instead"
-            )
-    return _write_bm25_segment(
-        new_docs, path, batch_id, id_col, text_col, n_buckets
-    )
+    """Append ``new_docs`` to a ``write_bm25_index`` layout as one new
+    segment: cost is proportional to the appended documents, and a
+    probe afterwards is bit-equal to a full rebuild over the union
+    (df/N/avgdl merge as exact integer sums).  New doc ids must not
+    exist in other segments (stats would double-count: update =
+    delete + append).  ``batch_id`` semantics and write order:
+    ``segstore.append``."""
+    return segstore.append("bm25", path, [new_docs], id_col, text_col, batch_id)[0]
 
 
 def bm25_topk_indexed(
@@ -516,196 +343,21 @@ def bm25_topk_indexed(
 def delete_from_bm25_index(
     spark, path: str, doc_ids: "list", id_col: str = "doc_id"
 ) -> "dict[str, int]":
-    """Delete documents from a ``write_bm25_index`` layout — the
-    missing third verb of the index CRUD story (build/append/DELETE/
-    compact), and what makes "update = delete + append" real for the
-    right-to-be-forgotten and re-crawl cases.  Cost is O(touched
-    segments): ``_doclens`` (thin, two columns) names which
-    ``batch=<id>`` segments contain the ids, and ONLY those segments
-    are rewritten minus the deleted docs — per-segment stats (df,
-    n_docs, sum_dl) are recomputed EXACTLY from the survivors, so a
-    probe after deletion is BIT-EQUAL to a fresh rebuild over the
-    surviving corpus (pinned by test; no Lucene-style stale-stats
-    tombstone window).  A segment whose docs are all deleted is
-    removed whole (the empty-segment rule).
-
-    Crash discipline: postings are rewritten FIRST (a crash after that
-    leaves the deleted docs out of results immediately, with stats
-    momentarily stale-high), then termstats/params, and ``_doclens``
-    strictly LAST — ``_doclens`` is the DISCOVERY table this very
-    function uses to find touched segments, so as long as it still
-    lists the deleted ids, a re-run re-finds the batch and re-heals
-    every other directory; rewriting it before the stats (the pre-r15
-    order) left a crash window where termstats/params stayed
-    permanently stale because the re-run no longer saw the segment as
-    touched (r15 advisory).  Every rewrite is idempotent filtering, so
-    a crashed delete heals by RE-RUNNING it — the same survivor
-    discipline as appends.  Each directory rewrite goes through the
-    crash-safe staging swap, so no partial write can lose surviving
-    rows.  Terminal-runs-only, like
-    every swap-based job.  Returns {"segments_rewritten",
-    "segments_removed", "docs_deleted"}.  Unknown ids are a no-op."""
-    import os
-
-    from ..fsutil import fs_for, heal_segment_debris, swap_with_staging
-
-    if not doc_ids:
-        return {"segments_rewritten": 0, "segments_removed": 0, "docs_deleted": 0}
-    # a crashed per-segment swap leaves batch=<id>.erase_* debris that
-    # poisons partition discovery — heal all four roots BEFORE any
-    # listing or read (a stranded live segment must be restored before
-    # _existing_bm25_batches counts segments)
-    for sub in ("", "_doclens", "_termstats", "_bm25_params"):
-        heal_segment_debris(spark, os.path.join(path, sub) if sub else path)
-    existing = _existing_bm25_batches(spark, path)
-    if not existing:
-        raise ValueError(f"delete_from_bm25_index: no index at {path}")
-    ids = list(doc_ids)
-    doclens = spark.read.parquet(os.path.join(path, "_doclens"))
-    hit = (
-        doclens.filter(F.col(id_col).isin(ids))
-        .groupBy("batch")
-        .agg(F.count(F.lit(1)).alias("_n"))
-        .collect()
-    )
-    touched = sorted(int(r["batch"]) for r in hit)
-    n_deleted = int(sum(r["_n"] for r in hit))
-    if not touched:
-        return {"segments_rewritten": 0, "segments_removed": 0, "docs_deleted": 0}
-    jvm, fs, _ = fs_for(spark, path)
-    rewritten = removed = 0
-    for b in touched:
-        seg = f"batch={b}"
-        seg_path = os.path.join(path, seg)
-        if not fs.exists(jvm.org.apache.hadoop.fs.Path(seg_path)):
-            # a previous whole-segment removal crashed between dir
-            # deletes: finish removing the sidecar slices (idempotent;
-            # _doclens LAST — it is the discovery table that got us
-            # here, so it must outlive the stats slices)
-            for d in (os.path.join(path, "_termstats", seg),
-                      os.path.join(path, "_bm25_params", seg),
-                      os.path.join(path, "_doclens", seg)):
-                fs.delete(jvm.org.apache.hadoop.fs.Path(d), True)
-            removed += 1
-            continue
-        survivors = spark.read.parquet(seg_path).filter(
-            ~F.col(id_col).isin(ids)
-        )
-        if survivors.limit(1).count() == 0:
-            # whole segment deleted: drop its four directories,
-            # _doclens last (discovery table — see docstring)
-            for d in (seg_path, os.path.join(path, "_termstats", seg),
-                      os.path.join(path, "_bm25_params", seg),
-                      os.path.join(path, "_doclens", seg)):
-                fs.delete(jvm.org.apache.hadoop.fs.Path(d), True)
-            removed += 1
-            continue
-
-        def _postings(staging: str) -> None:
-            survivors.write.partitionBy("bucket").parquet(staging)
-
-        swap_with_staging(spark, seg_path, _postings, job="erase")
-        kept = spark.read.parquet(seg_path)
-
-        def _termstats_w(staging: str) -> None:
-            kept.groupBy("_t").agg(F.count(F.lit(1)).alias("_df")).write.parquet(
-                staging
-            )
-
-        swap_with_staging(
-            spark, os.path.join(path, "_termstats", seg), _termstats_w, job="erase"
-        )
-        stats = kept.select(id_col, "_dl").distinct().agg(
-            F.count(F.lit(1)).alias("n"), F.sum("_dl").alias("s")
-        ).first()
-        n_buckets = (
-            spark.read.schema(_PARAMS_SCHEMA)
-            .parquet(os.path.join(path, "_bm25_params", seg))
-            .first()["n_buckets"]
-        )
-
-        def _params_w(staging: str) -> None:
-            # JVM-literal frame (r18): the pickled-RDD createDataFrame
-            # here measured 7.4 s of the 9.5 s single-segment delete —
-            # the Python-worker pool fork landing on a 1-row frame
-            (
-                spark.range(1)
-                .select(
-                    F.lit(int(stats["n"])).cast("long").alias("n_docs"),
-                    F.lit(int(stats["s"])).cast("long").alias("sum_dl"),
-                    F.lit(int(n_buckets)).cast("int").alias("n_buckets"),
-                )
-                .coalesce(1)
-                .write.parquet(staging)
-            )
-
-        swap_with_staging(
-            spark, os.path.join(path, "_bm25_params", seg), _params_w, job="erase"
-        )
-
-        def _doclens_w(staging: str) -> None:
-            kept.select(id_col, "_dl").distinct().write.parquet(staging)
-
-        # _doclens LAST: every earlier crash point leaves the deleted
-        # ids listed here, so a re-run still discovers this segment as
-        # touched and re-heals the stats (r15 advisory)
-        swap_with_staging(
-            spark, os.path.join(path, "_doclens", seg), _doclens_w, job="erase"
-        )
-        rewritten += 1
-    return {
-        "segments_rewritten": rewritten,
-        "segments_removed": removed,
-        "docs_deleted": n_deleted,
-    }
+    """Delete documents from a ``write_bm25_index`` layout: only the
+    touched segments are rewritten, with df/n_docs/sum_dl recomputed
+    exactly from the survivors, so a probe afterwards is BIT-EQUAL to a
+    rebuild over the surviving corpus (no stale-stats tombstone window).
+    Returns {"segments_rewritten", "segments_removed", "docs_deleted"};
+    unknown ids are a no-op.  Crash order: ``segstore.delete``."""
+    return segstore.delete("bm25", spark, path, doc_ids, id_col)
 
 
 def compact_bm25_index(spark, path: str) -> None:
-    """Collapse a segmented BM25 index to ONE segment (``batch=0``) —
-    the maintenance job that bounds probe listing cost after many
-    appends, exactly as ``sketch_ingest.compact_sketch_store`` bounds
-    the sketch store.  Every statistic merges losslessly (postings are
-    disjoint rows; df/n_docs/sum_dl are integer sums), so probes are
-    bit-identical before and after — pinned by test.  The whole index
-    root goes through one crash-safe ``fsutil.swap_with_staging``;
-    like every swap-based job, run it only while no ingest stream is
-    writing the index."""
-    import os
-
-    from ..fsutil import swap_with_staging
-
-    def _write(staging: str) -> None:
-        raw = spark.read.parquet(path)
-        id_col = [
-            c for c in raw.columns if c not in ("_t", "_tf", "_dl", "bucket", "batch")
-        ][0]
-        seg = "batch=0"
-        raw.select(id_col, "_t", "_tf", "_dl", "bucket").write.partitionBy(
-            "bucket"
-        ).parquet(os.path.join(staging, seg))
-        (
-            spark.read.schema(_TERMSTATS_SCHEMA)
-            .parquet(os.path.join(path, "_termstats"))
-            .groupBy("_t")
-            .agg(F.sum("_df").alias("_df"))
-            .write.parquet(os.path.join(staging, "_termstats", seg))
-        )
-        spark.read.parquet(os.path.join(path, "_doclens")).drop("batch").write.parquet(
-            os.path.join(staging, "_doclens", seg)
-        )
-        (
-            spark.read.schema(_PARAMS_SCHEMA)
-            .parquet(os.path.join(path, "_bm25_params"))
-            .agg(
-                F.sum("n_docs").alias("n_docs"),
-                F.sum("sum_dl").alias("sum_dl"),
-                F.max("n_buckets").alias("n_buckets"),
-            )
-            .coalesce(1)
-            .write.parquet(os.path.join(staging, "_bm25_params", seg))
-        )
-
-    swap_with_staging(spark, path, _write, job="compact")
+    """Collapse a segmented BM25 index to one segment
+    (``segstore.compact``): postings move unchanged and the statistics
+    are recomputed from them, so probes are bit-identical before and
+    after."""
+    segstore.compact("bm25", spark, path)
 
 
 def rrf_fuse(

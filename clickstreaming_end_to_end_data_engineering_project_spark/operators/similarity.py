@@ -25,6 +25,7 @@ from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 from pyspark.sql.window import Window
 
 from ..sources.formats import local_rows_df
+from . import segstore
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -370,109 +371,19 @@ def write_lsh_index(
     vec_col: str = "embedding",
 ) -> None:
     """Materialize the corpus partitioned by LSH bucket — the storage
-    layout ``lsh_topk``'s docstring assumes at scale.  One directory
-    per bucket (2^planes dirs); a probe then reads only the query's
-    directory via static partition pruning (``lsh_topk_indexed``).
-    Writing is one pass over the corpus + a hash-partitioned shuffleless
-    write (partitionBy splits files per task, no exchange).
-
-    Two sidecars make the probe bounded and self-describing (both
-    underscore-prefixed, so Spark's FileIndex and DuckDB ignore them
-    when reading ``path``):
-    - ``_id_map/``: (id, lsh_bucket) parquet — the id→bucket lookup, so
-      an id-only probe never scans vector data (columnar id pushdown
-      over two thin columns instead of opening every bucket directory);
-    - ``_lsh_params/``: a 1-row (planes, dims) parquet — read back by
-      the probe so an index written with different parameters can't be
-      silently probed as if it matched (a real deployment would keep
-      this in the table catalog).  Written THROUGH Spark, not a
-      driver-local json.dump, so the index layout works unchanged on
-      any cluster filesystem (s3a/hdfs) the corpus write itself used.
-
-    The layout is SEGMENTED (r13, the BM25 increment model): vectors
-    live under ``batch=<id>/lsh_bucket=<b>/`` and the id map under
-    ``_id_map/batch=<id>/``; this initial build is segment 0.
-    ``append_lsh_index`` adds new vectors as one new segment at
-    O(increment) cost — hyperplanes are content-deterministic
-    (xxhash64 seeds, nothing trained), so an appended index is
-    IDENTICAL, bucket for bucket, to a full rebuild over the union,
-    and probes prune on the second-level ``lsh_bucket`` partition
-    column across every segment.
-
-    Rebuilding over an EXISTING index goes through the crash-safe
-    staging swap (r15, the write_pq_index discipline extended to the
-    whole write_* family): the old index stays probe-able until the
-    new build fully lands."""
-    from ..fsutil import fs_for, heal_swap_crash, swap_with_staging
-
-    spark = df.sparkSession
-    heal_swap_crash(spark, path)
-    _, fs, hpath = fs_for(spark, path)
-    if fs.exists(hpath) and not df.isEmpty():
-        swap_with_staging(
-            spark, path,
-            lambda staging: _write_lsh_segment(
-                df, staging, 0, planes, dims, id_col, vec_col, write_params=True
-            ),
-            job="compact",
-        )
-        return
-    if fs.exists(hpath):
-        # empty-input rebuild: pre-r15 semantics (clear, then the
-        # segment writer's empty guard leaves no index)
-        fs.delete(hpath, True)
-    _write_lsh_segment(df, path, 0, planes, dims, id_col, vec_col, write_params=True)
-
-
-def _write_lsh_segment(
-    vecs: DataFrame,
-    path: str,
-    batch_id: int,
-    planes: int,
-    dims: int,
-    id_col: str,
-    vec_col: str,
-    write_params: bool = False,
-) -> None:
-    """One LSH segment's two directory writes (vectors by bucket + the
-    id-map slice), each ``batch=<id>``-scoped with mode=overwrite so a
-    replayed id rewrites its own segment.  ``write_params`` also lays
-    down the ``_lsh_params`` sidecar (initial build / stream
-    bootstrap)."""
-    import os
-
-    seg = f"batch={batch_id}"
-    if vecs.isEmpty():
-        # never write a data-less segment dir — it breaks schema
-        # inference for every later probe (the r13 empty-segment rule)
-        return
-    if write_params:
-        # params FIRST: a bootstrap that crashes mid-segment then
-        # replays takes the append path (segments exist ⇒ params must
-        # be readable) and overwrites its own segment — fully healed
-        (
-            local_rows_df(
-                vecs.sparkSession, [(int(planes), int(dims))], "planes int, dims int"
-            )
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(os.path.join(path, "_lsh_params"))
-        )
-    bucketed = vecs.withColumn("lsh_bucket", lsh_bucket(F.col(vec_col), planes, dims))
-    # _id_map slice FIRST (r15, the append_ivf_index advisory applied
-    # to its LSH twin): batch ids are listed from the VECTORS root and
-    # append overlap is validated against _id_map, so a crash between
-    # the two writes must leave the DISCOVERABLE side (vectors) absent
-    # — the retry then replays the same batch id and overwrites both.
-    # The old vectors-first order let a crashed append strand a
-    # vectors segment invisible to the overlap check: the retry took
-    # batch max+1 and inserted every id twice.
-    bucketed.select(id_col, "lsh_bucket").write.mode("overwrite").parquet(
-        os.path.join(path, "_id_map", seg)
-    )
-    bucketed.write.mode("overwrite").partitionBy("lsh_bucket").parquet(
-        os.path.join(path, seg)
-    )
+    layout ``lsh_topk``'s docstring assumes at scale: vectors under
+    ``batch=<id>/lsh_bucket=<b>/`` (this build is segment 0), so a probe
+    reads only the query's bucket directories via static partition
+    pruning (``lsh_topk_indexed``).  Two sidecars, written through
+    Spark so the layout works on any cluster filesystem:
+    ``_id_map/batch=<id>/`` (id, lsh_bucket), the id→bucket lookup an
+    id probe and appends read instead of vector data, and
+    ``_lsh_params/`` (planes, dims), read back by the probe and by
+    appends.  Hyperplanes are content-deterministic (xxhash64 seeds,
+    nothing trained), so an appended index equals a rebuild over the
+    union bucket for bucket.  Verbs and crash orders:
+    ``operators/segstore.py``."""
+    segstore.bootstrap("lsh", df, path, {"planes": planes, "dims": dims}, id_col, vec_col)
 
 
 def append_lsh_index(
@@ -483,65 +394,10 @@ def append_lsh_index(
     batch_id: "int | None" = None,
 ) -> "dict[str, int]":
     """Append vectors to a ``write_lsh_index`` layout as one new
-    segment — incremental maintenance for the hyperplane-LSH index
-    (r12 verdict's missing #3).  Buckets are computed with the INDEX'S
-    OWN stored (planes, dims), and since hyperplanes derive from
-    xxhash64 seeds (content-deterministic, never trained), the
-    appended index equals a full rebuild over the union bit-for-bit —
-    probe equality is pinned by test, with no recall caveat.
-
-    ``batch_id`` defaults to max(existing)+1; an explicit id OVERWRITES
-    that segment's two directories, making the append replayable
-    (streaming/ann_ingest.LshIngestSink's exactly-once).  New ids must
-    not already exist in OTHER segments (checked against the thin
-    ``_id_map`` sidecar, never the vector data; raises on overlap).
-    The increment is MATERIALIZED up front (r15 — the caller contract
-    "replayed input must not lazily read the segment being
-    overwritten" is now enforced rather than documented): with the
-    id_map-first write order, an input deriving from the index's own
-    sidecars would otherwise lose its files mid-append.  Increments
-    are increment-sized, so the checkpoint is bounded.
-    """
-    import os
-
-    from ..fsutil import existing_batch_ids
-
-    spark = new_vecs.sparkSession
-    new_vecs = new_vecs.localCheckpoint(eager=True)
-    existing = existing_batch_ids(spark, path)
-    if not existing:
-        raise ValueError(
-            f"append_lsh_index: no index at {path} — build one with "
-            "write_lsh_index first"
-        )
-    if batch_id is None:
-        batch_id = existing[-1] + 1
-    params = (
-        spark.read.schema("planes int, dims int")
-        .parquet(os.path.join(path, "_lsh_params"))
-        .head()
-    )
-    other = [b for b in existing if b != batch_id]
-    if other:
-        prior = spark.read.parquet(os.path.join(path, "_id_map")).filter(
-            F.col("batch").isin(other)
-        )
-        dup = (
-            new_vecs.select(F.col(id_col))
-            .join(prior, new_vecs[id_col] == prior[id_col], "left_semi")
-            .limit(1)
-            .count()
-        )
-        if dup:
-            raise ValueError(
-                "append_lsh_index: some new vector ids already exist in the "
-                "index — duplicate rows would surface in probe results; "
-                "rebuild instead"
-            )
-    _write_lsh_segment(
-        new_vecs, path, batch_id, params.planes, params.dims, id_col, vec_col
-    )
-    return {"batch_id": batch_id, "n_vectors": new_vecs.count()}
+    segment, bucketed with the index's own stored (planes, dims): the
+    appended index equals a full rebuild over the union.  ``batch_id``
+    semantics, overlap check and write order: ``segstore.append``."""
+    return segstore.append("lsh", path, [new_vecs], id_col, vec_col, batch_id)[0]
 
 
 def lsh_topk_indexed(
@@ -811,334 +667,82 @@ def write_ivf_index(
 ) -> None:
     """Materialize the learned-IVF layout ``ivf_topk``'s docstring
     prescribes at scale: the FULL-PRECISION corpus partitioned by its
-    learned k-means cluster (``cluster=<c>/`` Hive dirs), so an
-    nprobe-cluster probe is a PartitionFilters-pruned scan of
-    nprobe/n_clusters of the data with exact in-cluster rerank — the
-    no-compression member of the written-ANN family (LSH dirs, PQ
-    codes, IVFPQ residual codes being the others).  Three sidecars
-    (``write_lsh_index`` discipline, written through Spark):
-    ``_ivf_centroids/`` (cluster, centroid), ``_ivf_params/``
-    (n_clusters, dims), and ``_id_map/batch=<id>/`` (id, cluster) —
-    the thin membership table ``append_ivf_index`` validates overlaps
-    against, so an append never has to scan the vector store's id
-    column (the one append-path term that grew with corpus file
-    count; r13 verdict #3).
+    learned k-means cluster (``vectors/batch=<id>/cluster=<c>/``, this
+    build = segment 0), so an nprobe-cluster probe is a
+    PartitionFilters-pruned scan of nprobe/n_clusters of the data with
+    exact in-cluster rerank — the no-compression member of the
+    written-ANN family.  Sidecars: ``_ivf_centroids/`` (cluster,
+    centroid), ``_ivf_params/`` (n_clusters, dims) and
+    ``_id_map/batch=<id>/`` (id, cluster), the thin membership table
+    appends validate against.
 
-    The vector store is SEGMENTED (r13):
-    ``vectors/batch=<id>/cluster=<c>/``, initial build = segment 0;
-    ``append_ivf_index`` assigns new vectors to the STORED centroids
-    and lands them as one new segment — cluster pruning holds across
-    segments (second-level partition column).  Centroids are not
-    retrained by appends (Faiss's add-after-train model): probe
-    results over the probed clusters stay exact, and recall degrades
-    only as far as the data distribution drifts from the training
-    sample — retraining IS the rebuild.
-
-    Rebuilding over an EXISTING index goes through the crash-safe
-    staging swap (r15, the write_pq_index discipline extended to the
-    whole write_* family): a failure anywhere in training or the build
-    writes leaves the old index live and probe-able."""
-    import os
-
-    from ..fsutil import fs_for, heal_swap_crash, swap_with_staging
+    Appends assign new vectors to the STORED centroids (Faiss's
+    add-after-train model): probe results over the probed clusters stay
+    exact, and recall degrades only as far as the data drifts from the
+    training sample — retraining IS the rebuild.  Verbs and crash
+    orders: ``operators/segstore.py``."""
     from .kmeans import kmeans_assign
 
-    spark = df.sparkSession
-    heal_swap_crash(spark, path)
-    _, fs, hpath = fs_for(spark, path)
     clusters = kmeans_assign(
         df, k=n_clusters, iterations=iterations, id_col=id_col, vec_col=vec_col
     )
     if "cluster" in df.columns:
         df = df.drop("cluster")
     clustered = df.join(clusters, id_col).localCheckpoint(eager=True)
-    cents = build_ivf_centroids(clustered, "cluster", vec_col)
-    dims = len(df.select(vec_col).first()[0])
-
-    def _build(root: str) -> None:
-        clustered.write.partitionBy("cluster").parquet(
-            os.path.join(root, "vectors", "batch=0")
-        )
-        clustered.select(id_col, "cluster").write.parquet(
-            os.path.join(root, "_id_map", "batch=0")
-        )
-        (
-            cents.select(
-                F.col("cluster").cast("int"),
-                F.col("centroid").cast("array<double>"),
-            )
-            .coalesce(1)
-            .write.parquet(os.path.join(root, "_ivf_centroids"))
-        )
-        (
-            local_rows_df(
-                spark, [(int(n_clusters), int(dims))], "n_clusters int, dims int"
-            )
-            .coalesce(1)
-            .write.parquet(os.path.join(root, "_ivf_params"))
-        )
-
-    if fs.exists(hpath):
-        swap_with_staging(spark, path, _build, job="compact")
-    else:
-        _build(path)
-
-
-def _delete_ids_from_segments(
-    spark,
-    store_root: str,
-    id_col: str,
-    ids: "list",
-    partition_col: "str | None",
-    id_map_root: "str | None" = None,
-) -> "dict[str, int]":
-    """Shared delete engine for the segmented vector layouts (the
-    ``delete_from_bm25_index`` discipline without corpus stats, since
-    vector layouts carry none): discover the TOUCHED ``batch=<id>``
-    segments through the thin table (the ``_id_map`` sidecar where one
-    exists, else the store itself — columnar-pruned to the id column),
-    rewrite only those segments minus the deleted ids through the
-    crash-safe staging swap, and drop a segment whole when every id in
-    it is deleted (the empty-segment rule).  Idempotent: a crashed
-    delete heals by re-running it (filtering again is a no-op, and a
-    segment dir lost mid-removal has its sidecar slice finished off on
-    replay).  Trained sidecars (centroids, codebooks, params) are
-    untouched — deletion never retrains, exactly as appends never
-    retrain (Faiss/Lucene semantics)."""
-    import os
-
-    from ..fsutil import fs_for, swap_with_staging
-
-    if not ids:
-        return {"segments_rewritten": 0, "segments_removed": 0, "vectors_deleted": 0}
-    from ..fsutil import heal_segment_debris
-
-    jvm, fs, store_hpath = fs_for(spark, store_root)
-    if not fs.exists(store_hpath):
-        raise ValueError(f"delete: no index store at {store_root}")
-    # a crashed per-segment swap leaves batch=<id>.erase_* debris that
-    # poisons partition discovery — heal BEFORE the discovery read
-    heal_segment_debris(spark, store_root)
-    thin_root = store_root
-    if id_map_root is not None:
-        heal_segment_debris(spark, id_map_root)
-        _, _, im_hpath = fs_for(spark, id_map_root)
-        if fs.exists(im_hpath):
-            thin_root = id_map_root
-    hit = (
-        spark.read.parquet(thin_root)
-        .filter(F.col(id_col).isin(ids))
-        .groupBy("batch")
-        .agg(F.countDistinct(id_col).alias("_n"))
-        .collect()
+    cents = build_ivf_centroids(clustered, "cluster", vec_col).select(
+        F.col("cluster").cast("int"), F.col("centroid").cast("array<double>")
     )
-    touched = sorted(int(r["batch"]) for r in hit)
-    n_deleted = int(sum(r["_n"] for r in hit))
-    rewritten = removed = 0
-
-    def _hp(p: str):
-        return jvm.org.apache.hadoop.fs.Path(p)
-
-    for b in touched:
-        seg = f"batch={b}"
-        seg_path = os.path.join(store_root, seg)
-        im_seg = os.path.join(id_map_root, seg) if id_map_root else None
-        if not fs.exists(_hp(seg_path)):
-            # previous whole-segment removal crashed between deletes:
-            # finish the sidecar slice (idempotent replay)
-            if im_seg:
-                fs.delete(_hp(im_seg), True)
-            removed += 1
-            continue
-        survivors = spark.read.parquet(seg_path).filter(~F.col(id_col).isin(ids))
-        if survivors.limit(1).count() == 0:
-            fs.delete(_hp(seg_path), True)
-            if im_seg:
-                fs.delete(_hp(im_seg), True)
-            removed += 1
-            continue
-
-        def _store_w(staging: str) -> None:
-            w = survivors.write
-            if partition_col:
-                w = w.partitionBy(partition_col)
-            w.parquet(staging)
-
-        swap_with_staging(spark, seg_path, _store_w, job="erase")
-        if im_seg and fs.exists(_hp(im_seg)):
-            im_kept = spark.read.parquet(im_seg).filter(~F.col(id_col).isin(ids))
-
-            def _im_w(staging: str) -> None:
-                im_kept.write.parquet(staging)
-
-            swap_with_staging(spark, im_seg, _im_w, job="erase")
-        rewritten += 1
-    return {
-        "segments_rewritten": rewritten,
-        "segments_removed": removed,
-        "vectors_deleted": n_deleted,
-    }
+    dims = len(df.select(vec_col).first()[0])
+    segstore.build(
+        "ivf", path, clustered, id_col, {"n_clusters": n_clusters, "dims": dims},
+        trained=[("_ivf_centroids", cents)],
+    )
 
 
 def delete_from_lsh_index(
     spark, path: str, vec_ids: "list", id_col: str = "vec_id"
 ) -> "dict[str, int]":
-    """Delete vectors from a ``write_lsh_index`` layout — O(touched
-    segments), discovery through the ``_id_map`` sidecar; a probe
-    after deletion is IDENTICAL to a fresh rebuild over the survivors
-    (hyperplanes are content-deterministic; pinned by test)."""
-    import os
-
-    return _delete_ids_from_segments(
-        spark, path, id_col, vec_ids, "lsh_bucket",
-        id_map_root=os.path.join(path, "_id_map"),
-    )
+    """Delete vectors from a ``write_lsh_index`` layout (``segstore.delete``);
+    a probe afterwards equals a rebuild over the survivors."""
+    return segstore.delete("lsh", spark, path, vec_ids, id_col)
 
 
 def delete_from_ivf_index(
     spark, path: str, vec_ids: "list", id_col: str = "vec_id"
 ) -> "dict[str, int]":
-    """Delete vectors from a ``write_ivf_index`` layout — O(touched
-    segments).  Centroids are NOT retrained (trained state; the
-    append rule in reverse), so an exhaustive probe after deletion
-    equals brute force over the survivors (pinned), while serving-
-    nprobe recall drifts only as far as the surviving distribution
-    drifts from the training sample — retrain = rebuild."""
-    import os
-
-    return _delete_ids_from_segments(
-        spark, os.path.join(path, "vectors"), id_col, vec_ids, "cluster",
-        id_map_root=os.path.join(path, "_id_map"),
-    )
+    """Delete vectors from a ``write_ivf_index`` layout (``segstore.delete``).
+    Centroids are not retrained, so an exhaustive probe afterwards
+    equals brute force over the survivors."""
+    return segstore.delete("ivf", spark, path, vec_ids, id_col)
 
 
 def delete_from_pq_index(
     spark, path: str, vec_ids: "list", id_col: str = "vec_id"
 ) -> "dict[str, int]":
-    """Delete vectors from a ``write_pq_index`` layout — O(touched
-    segments) over the codes table (the codes ARE the thin table).
-    Codebooks untouched; probe after deletion equals a same-codebook
-    rebuild over the survivors (pinned)."""
-    import os
-
-    return _delete_ids_from_segments(
-        spark, os.path.join(path, "codes"), id_col, vec_ids, None
-    )
+    """Delete vectors from a ``write_pq_index`` layout (``segstore.delete``);
+    a probe afterwards equals a same-codebook rebuild over the survivors."""
+    return segstore.delete("pq", spark, path, vec_ids, id_col)
 
 
 def delete_from_ivfpq_index(
     spark, path: str, vec_ids: "list", id_col: str = "vec_id"
 ) -> "dict[str, int]":
-    """Delete vectors from a ``write_ivfpq_index`` layout — O(touched
-    segments) over the residual-codes table (multiple assignment means
-    assign_n rows per id, all removed together).  Coarse centroids and
-    codebooks untouched; exhaustive probe after deletion equals brute
-    force over the survivors (pinned)."""
-    import os
-
-    return _delete_ids_from_segments(
-        spark, os.path.join(path, "codes"), id_col, vec_ids, "cluster"
-    )
+    """Delete vectors (all ``assign_n`` entries of each) from a
+    ``write_ivfpq_index`` layout (``segstore.delete``); an exhaustive
+    probe afterwards equals brute force over the survivors."""
+    return segstore.delete("ivfpq", spark, path, vec_ids, id_col)
 
 
 def compact_lsh_index(spark, path: str) -> None:
-    """Collapse a segmented LSH index to ONE segment (``batch=0``) —
-    bounds the probe's directory-listing cost after many appends
-    (the ``compact_bm25_index`` pattern; one crash-safe root swap).
-    Pure row movement: bucket contents and the id map are unioned
-    unchanged, so probes are identical before and after (pinned by
-    test).  Terminal-runs-only, like every swap-based job."""
-    import os
-
-    from ..fsutil import swap_with_staging
-
-    def _write(staging: str) -> None:
-        (
-            spark.read.parquet(path)
-            .drop("batch")
-            .write.partitionBy("lsh_bucket")
-            .parquet(os.path.join(staging, "batch=0"))
-        )
-        # _id_map REBUILT from the store, not copied (r15, the
-        # compact_ivf_index rule): the id_map-FIRST append ordering
-        # means a crashed append can orphan a slice whose vectors
-        # never landed — copying would fold phantom ids into batch=0
-        # and wedge later appends of those ids on the overlap check
-        idc = [
-            c
-            for c in spark.read.parquet(os.path.join(path, "_id_map")).columns
-            if c not in ("lsh_bucket", "batch")
-        ][0]
-        (
-            spark.read.parquet(path)
-            .select(idc, "lsh_bucket")
-            .write.parquet(os.path.join(staging, "_id_map", "batch=0"))
-        )
-        (
-            spark.read.schema("planes int, dims int")
-            .parquet(os.path.join(path, "_lsh_params"))
-            .coalesce(1)
-            .write.parquet(os.path.join(staging, "_lsh_params"))
-        )
-
-    swap_with_staging(spark, path, _write, job="compact")
+    """Collapse a segmented LSH index to one segment (``segstore.compact``);
+    probes are identical before and after."""
+    segstore.compact("lsh", spark, path)
 
 
 def compact_ivf_index(spark, path: str) -> None:
-    """Collapse a segmented IVF vector store to ONE segment — the
-    ``compact_lsh_index`` twin for the cluster-partitioned layout.
-    Sidecars (centroids/params) are copied unchanged: compaction moves
-    rows, never retrains."""
-    import os
-
-    from ..fsutil import swap_with_staging
-
-    def _write(staging: str) -> None:
-        from ..fsutil import fs_for
-
-        (
-            spark.read.parquet(os.path.join(path, "vectors"))
-            .drop("batch")
-            .write.partitionBy("cluster")
-            .parquet(os.path.join(staging, "vectors", "batch=0"))
-        )
-        # the _id_map overlap-validation sidecar is REBUILT from the
-        # vector store rather than copied (r15): with the append's
-        # id_map-FIRST write order, a crash between the two writes can
-        # orphan an _id_map slice whose vectors never landed — copying
-        # would fold those phantom ids into batch=0 and later appends
-        # of the same ids would fail the overlap check forever.
-        # Deriving from the store makes compaction the heal point; the
-        # extra scan is column-pruned to (id, cluster).  A pre-r14
-        # layout without an id map stays without — appends there fall
-        # back to the vector-store id scan.
-        id_map_root = os.path.join(path, "_id_map")
-        _, fs, id_map_hpath = fs_for(spark, id_map_root)
-        if fs.exists(id_map_hpath):
-            idc = [
-                c
-                for c in spark.read.parquet(id_map_root).columns
-                if c not in ("cluster", "batch")
-            ][0]
-            (
-                spark.read.parquet(os.path.join(path, "vectors"))
-                .select(idc, "cluster")
-                .write.parquet(os.path.join(staging, "_id_map", "batch=0"))
-            )
-        (
-            spark.read.schema("cluster int, centroid array<double>")
-            .parquet(os.path.join(path, "_ivf_centroids"))
-            .coalesce(1)
-            .write.parquet(os.path.join(staging, "_ivf_centroids"))
-        )
-        (
-            spark.read.schema("n_clusters int, dims int")
-            .parquet(os.path.join(path, "_ivf_params"))
-            .coalesce(1)
-            .write.parquet(os.path.join(staging, "_ivf_params"))
-        )
-
-    swap_with_staging(spark, path, _write, job="compact")
+    """Collapse a segmented IVF vector store to one segment
+    (``segstore.compact``); centroids are copied, never retrained."""
+    segstore.compact("ivf", spark, path)
 
 
 def append_ivf_index(
@@ -1149,122 +753,15 @@ def append_ivf_index(
     batch_id: "int | None" = None,
 ) -> "dict[str, int]":
     """Append vectors to a ``write_ivf_index`` layout as one new
-    segment: each new vector is assigned to its nearest STORED centroid
-    by SQUARED EUCLIDEAN distance, ties to the lower cluster id — the
-    SAME rule ``kmeans_assign`` uses at build time, so an appended
-    vector lands in exactly the cluster a rebuild over the union would
-    place it in given these centroids (r13 advisory: the earlier
-    cosine-placement rule diverged from the build's geometry for
-    non-unit-norm vectors, silently shifting serving-nprobe recall away
-    from rebuild parity) — and written under
-    ``vectors/batch=<id>/cluster=<c>/``.  Cost is O(increment): one
-    broadcast join against the n_clusters-sized centroid frame, no
-    corpus I/O, no retraining.
-
-    Exactness contract (pinned by test): a probe at nprobe = n_clusters
-    (exhaustive) over the appended index equals brute-force cosine over
-    the union — appends can never corrupt scores, only (at serving
-    nprobe) recall, and only as far as the appended data drifts from
-    the training distribution (Faiss's add-after-train model; retrain
-    = rebuild).  ``batch_id`` semantics are ``append_lsh_index``'s:
-    default max+1, explicit id overwrites its own segment (replayable).
-    New ids must not exist in other segments — checked against the
-    thin ``_id_map`` sidecar (two columns, increment-sized join; never
-    the vector store — r13 verdict #3 removed the last append term
-    that grew with corpus file count), falling back to a
-    columnar-pruned id scan of the vector store for pre-r14 layouts
-    without the sidecar; raises on overlap."""
-    import os
-
-    from ..fsutil import existing_batch_ids
-
-    spark = new_vecs.sparkSession
-    vec_root = os.path.join(path, "vectors")
-    existing = existing_batch_ids(spark, vec_root)
-    if not existing:
-        raise ValueError(
-            f"append_ivf_index: no index at {path} — build one with "
-            "write_ivf_index first"
-        )
-    if batch_id is None:
-        batch_id = existing[-1] + 1
-    # one action answers both "is the increment empty?" and "what are
-    # its dims?" (was isEmpty + first — two scans of the increment)
-    head = new_vecs.select(vec_col).head(1)
-    if not head:
-        # the empty-segment rule: write nothing, report nothing added
-        return {"batch_id": batch_id, "n_vectors": 0}
-    params = (
-        spark.read.schema("n_clusters int, dims int")
-        .parquet(os.path.join(path, "_ivf_params"))
-        .head()
-    )
-    dims = len(head[0][0])
-    if dims != params.dims:
-        raise ValueError(
-            f"append_ivf_index: vectors have {dims} dims, index expects "
-            f"{params.dims}"
-        )
-    other = [b for b in existing if b != batch_id]
-    if other:
-        from ..fsutil import fs_for
-
-        id_map_root = os.path.join(path, "_id_map")
-        _, fs, id_map_hpath = fs_for(spark, id_map_root)
-        if fs.exists(id_map_hpath):
-            # the thin sidecar: (id, cluster) only — overlap validation
-            # cost is bounded by the id map's file count, not the
-            # vector store's (r13 verdict #3)
-            prior = spark.read.parquet(id_map_root).filter(
-                F.col("batch").isin(other)
-            ).select(F.col(id_col))
-        else:
-            # pre-r14 layout without the sidecar: columnar-pruned id
-            # scan of the vector store (the old path)
-            prior = spark.read.parquet(vec_root).filter(
-                F.col("batch").isin(other)
-            ).select(F.col(id_col))
-        dup = (
-            new_vecs.select(F.col(id_col))
-            .join(prior, new_vecs[id_col] == prior[id_col], "left_semi")
-            .limit(1)
-            .count()
-        )
-        if dup:
-            raise ValueError(
-                "append_ivf_index: some new vector ids already exist in the "
-                "index — duplicate rows would surface in probe results; "
-                "rebuild instead"
-            )
-    cents = spark.read.schema("cluster int, centroid array<double>").parquet(
-        os.path.join(path, "_ivf_centroids")
-    )
-    if "cluster" in new_vecs.columns:
-        new_vecs = new_vecs.drop("cluster")
-    from .kmeans import _sq_dist
-
-    w = Window.partitionBy(id_col).orderBy(F.col("_d").asc(), F.col("cluster"))
-    assigned = (
-        new_vecs.crossJoin(F.broadcast(cents))
-        .withColumn("_d", _sq_dist(F.col(vec_col), F.col("centroid")))
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_d", "_rn", "centroid")
-    )
-    assigned = assigned.localCheckpoint(eager=True)
-    # _id_map slice FIRST (r15 advisory): batch ids are listed from the
-    # VECTORS root, so a crash between the two writes replays the same
-    # default batch_id and mode("overwrite") replaces both directories;
-    # the reverse order left a window where ids lived in the store but
-    # not in _id_map, and a retried append (max+1 from the vectors
-    # listing) passed the id_map overlap check and duplicated them.
-    assigned.select(id_col, "cluster").write.mode("overwrite").parquet(
-        os.path.join(path, "_id_map", f"batch={batch_id}")
-    )
-    assigned.write.mode("overwrite").partitionBy("cluster").parquet(
-        os.path.join(vec_root, f"batch={batch_id}")
-    )
-    return {"batch_id": batch_id, "n_vectors": assigned.count()}
+    segment: each vector goes to its nearest STORED centroid by squared
+    euclidean distance, ties to the lower cluster id — the build's own
+    ``kmeans_assign`` rule, so it lands where a rebuild given these
+    centroids would place it.  O(increment), no retraining: an
+    exhaustive probe afterwards equals brute-force cosine over the
+    union.  ``batch_id`` semantics, overlap check (``_id_map``, or the
+    store for a layout without it) and write order:
+    ``segstore.append``."""
+    return segstore.append("ivf", path, [new_vecs], id_col, vec_col, batch_id)[0]
 
 
 def append_ivf_index_many(
@@ -1273,171 +770,18 @@ def append_ivf_index_many(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> "list[dict[str, int]]":
-    """Append SEVERAL increments to a ``write_ivf_index`` layout in one
-    pass — the multi-batch form of ``append_ivf_index`` (r19
-    optimization round; the r18 profile of the 8-append maintenance
-    cycle found no dominator, just eight repetitions of the same five
-    fixed-cost actions: head, params read, overlap check, assign +
-    checkpoint, count).  Semantically equivalent to calling
-    ``append_ivf_index`` on each frame in order with default batch ids
-    (consecutive ``max+1`` ids; empty increments consume no id and
-    write no segment) and PINNED so by test: same segment directories,
-    same rows, same ``_id_map`` slices, same assignment rule (nearest
-    stored centroid by squared euclidean, ties to the lower cluster
-    id).  The amortization (guide §1.2 / §2.6):
-
-    - ONE assignment job over the tagged union of all increments
-      (localCheckpointed), ONE per-batch count aggregate, ONE dims
-      validation, ONE id-overlap check (which also catches ids
-      duplicated ACROSS increments — exactly what the sequential form
-      detects when a later append meets an earlier one's ``_id_map``
-      slice) — instead of five actions per increment;
-    - the per-segment writes overlap through a small driver thread
-      pool in two pooled PHASES: every ``_id_map`` slice first, then a
-      barrier, then every vector segment — preserving the r15
-      map-before-store ordering globally, not just per batch (ids can
-      appear in ``_id_map`` without vectors after a crash — the safe
-      direction, healed by the same-id overwrite — never the reverse).
-
-    All increments must share one schema (the union is positional
-    after the ``cluster`` drop); validation failures raise BEFORE any
-    write, so a rejected call leaves the index untouched (the
-    sequential form can stop mid-way with earlier days landed).  Crash
-    mid-write + re-run raises on the id-overlap check exactly as
-    re-running a sequential multi-day append script does — keep the
-    increment set and rebuild or heal before retrying."""
-    import os
-    from concurrent.futures import ThreadPoolExecutor
-
-    from ..fsutil import existing_batch_ids, fs_for
-
+    """Append several increments to a ``write_ivf_index`` layout in one
+    pass, with the layout and reports of ``append_ivf_index`` called on
+    each in order with default batch ids.  One encode, one validation
+    aggregate and one overlap check (which also rejects ids repeated
+    across increments) cover every increment, and every check runs
+    before the first write; the segment writes overlap in a small pool
+    (``segstore.append``).  All increments must share one schema."""
     if not new_batches:
         return []
-    spark = new_batches[0].sparkSession
-    vec_root = os.path.join(path, "vectors")
-    existing = existing_batch_ids(spark, vec_root)
-    if not existing:
-        raise ValueError(
-            f"append_ivf_index_many: no index at {path} — build one with "
-            "write_ivf_index first"
-        )
-    params = (
-        spark.read.schema("n_clusters int, dims int")
-        .parquet(os.path.join(path, "_ivf_params"))
-        .head()
+    return segstore.append(
+        "ivf", path, new_batches, id_col, vec_col, verb="append_ivf_index_many"
     )
-    cents = spark.read.schema("cluster int, centroid array<double>").parquet(
-        os.path.join(path, "_ivf_centroids")
-    )
-    from .kmeans import _sq_dist
-
-    tagged = None
-    for i, nb in enumerate(new_batches):
-        if "cluster" in nb.columns:
-            nb = nb.drop("cluster")
-        nb = nb.withColumn("_ab", F.lit(i))
-        tagged = nb if tagged is None else tagged.unionByName(nb)
-    w = Window.partitionBy("_ab", id_col).orderBy(
-        F.col("_d").asc(), F.col("cluster")
-    )
-    assigned = (
-        tagged.crossJoin(F.broadcast(cents))
-        .withColumn("_d", _sq_dist(F.col(vec_col), F.col("centroid")))
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_d", "_rn", "centroid")
-    ).localCheckpoint(eager=True)
-    # one aggregate answers per-batch emptiness AND dims validation
-    meta = {
-        r["_ab"]: (r["_n"], r["_dmin"], r["_dmax"])
-        for r in assigned.groupBy("_ab")
-        .agg(
-            F.count(F.lit(1)).alias("_n"),
-            F.min(F.size(vec_col)).alias("_dmin"),
-            F.max(F.size(vec_col)).alias("_dmax"),
-        )
-        .collect()
-    }
-    for i in range(len(new_batches)):
-        n, dmin, dmax = meta.get(i, (0, None, None))
-        if n and (dmin != params.dims or dmax != params.dims):
-            raise ValueError(
-                f"append_ivf_index_many: increment {i} has vectors of "
-                f"{dmin}..{dmax} dims, index expects {params.dims}"
-            )
-    # default consecutive ids; empty increments consume no id (the
-    # sequential form's max+1 rule reproduced exactly)
-    next_id = existing[-1] + 1
-    batch_ids: "list[int]" = []
-    for i in range(len(new_batches)):
-        batch_ids.append(next_id)
-        if meta.get(i, (0,))[0]:
-            next_id += 1
-    # ONE overlap check: new ids vs every PRIOR segment's _id_map (the
-    # sidecar; sequential parity for the pre-r14 no-sidecar layout is
-    # not needed here — this verb targets the sidecar-era layout, and
-    # falls back to the store scan the same way) plus ids duplicated
-    # across increments
-    newids = assigned.select(F.col(id_col), "_ab").distinct()
-    cross_dup = (
-        newids.groupBy(id_col)
-        .agg(F.count(F.lit(1)).alias("_c"))
-        .filter(F.col("_c") > 1)
-        .limit(1)
-        .count()
-    )
-    if cross_dup:
-        raise ValueError(
-            "append_ivf_index_many: an id appears in more than one "
-            "increment — duplicate rows would surface in probe results"
-        )
-    id_map_root = os.path.join(path, "_id_map")
-    _, fs, id_map_hpath = fs_for(spark, id_map_root)
-    if fs.exists(id_map_hpath):
-        prior = spark.read.parquet(id_map_root).filter(
-            F.col("batch").isin(existing)
-        ).select(F.col(id_col))
-    else:
-        prior = spark.read.parquet(vec_root).filter(
-            F.col("batch").isin(existing)
-        ).select(F.col(id_col))
-    dup = (
-        newids.select(F.col(id_col).alias("_nid"))
-        .join(prior, F.col("_nid") == prior[id_col], "left_semi")
-        .limit(1)
-        .count()
-    )
-    if dup:
-        raise ValueError(
-            "append_ivf_index_many: some new vector ids already exist in "
-            "the index — duplicate rows would surface in probe results; "
-            "rebuild instead"
-        )
-    live = [i for i in range(len(new_batches)) if meta.get(i, (0,))[0]]
-
-    def _write_id_map(i: int) -> None:
-        assigned.filter(F.col("_ab") == i).select(id_col, "cluster").write.mode(
-            "overwrite"
-        ).parquet(os.path.join(id_map_root, f"batch={batch_ids[i]}"))
-
-    def _write_vectors(i: int) -> None:
-        assigned.filter(F.col("_ab") == i).drop("_ab").write.mode(
-            "overwrite"
-        ).partitionBy("cluster").parquet(
-            os.path.join(vec_root, f"batch={batch_ids[i]}")
-        )
-
-    for phase in (_write_id_map, _write_vectors):
-        if not live:
-            break
-        with ThreadPoolExecutor(max_workers=min(3, len(live))) as pool:
-            futures = [pool.submit(phase, i) for i in live]
-            for fut in futures:  # await every write before the barrier
-                fut.result()
-    return [
-        {"batch_id": batch_ids[i], "n_vectors": meta.get(i, (0,))[0]}
-        for i in range(len(new_batches))
-    ]
 
 
 def ivf_topk_indexed(
@@ -2184,45 +1528,19 @@ def write_ivfpq_index(
     vec_col: str = "embedding",
 ) -> None:
     """Materialize the IVFADC index the way a 100 TB deployment stores
-    it: ``codes/`` partitioned BY CLUSTER (``cluster=<c>/`` Hive
-    dirs), so an ``nprobe``-cluster probe is a PartitionFilters-pruned
-    scan of nprobe/n_clusters of the index — the other dirs are never
-    opened — and each entry is m bytes of residual codes instead of
-    the float vector (8–16× smaller before pruning).  Build over a
+    it: ``codes/batch=<id>/cluster=<c>/`` (this build = segment 0), so
+    an ``nprobe``-cluster probe is a PartitionFilters-pruned scan of
+    nprobe/n_clusters of the index, and each entry is m bytes of
+    residual codes instead of the float vector.  Build over a
     ``unit_normalize``-d corpus to serve cosine (see ``ivfpq_topk``).
-
-    Three self-describing sidecars (underscore-prefixed, ignored by
-    FileIndex readers; the ``write_lsh_index``/``write_pq_index``
-    discipline, all written THROUGH Spark for cluster-filesystem
-    portability):
-
-    - ``_ivfpq_centroids/``: (cluster, centroid) — the coarse
-      quantizer, n_clusters rows;
-    - ``_pq_codebooks/``: the (subspace, code, centroid) residual
-      codebook grid;
-    - ``_ivfpq_params/``: 1-row (n_clusters, m, k, dims, assign_n) —
-      read back by the probe so an index can never be silently probed
-      with mismatched geometry.
-
-    The codes table is SEGMENTED (r14, the family's last O(corpus)
-    rebuild term — r13 verdict #2): ``codes/batch=<id>/cluster=<c>/``,
-    this build = segment 0.  ``append_ivfpq_index`` encodes NEW
-    vectors' residuals against the STORED codebooks and coarse
-    centroids into one new segment (Faiss add-after-train) — cluster
-    pruning holds across segments (second-level partition column).
-    Codebooks and centroids are never retrained by appends: retraining
-    IS the rebuild.
-
-    Rebuilding over an EXISTING index goes through the crash-safe
-    staging swap (r15 advisory, the ``write_pq_index`` discipline): the
-    old index stays live until the new one fully lands."""
-    import os
-
-    from ..fsutil import fs_for, heal_swap_crash, swap_with_staging
-
+    Sidecars: ``_ivfpq_centroids/`` (the coarse quantizer),
+    ``_pq_codebooks/`` (the residual codebook grid) and
+    ``_ivfpq_params/`` (n_clusters, m, k, dims, assign_n), read back by
+    the probe so an index is never probed with mismatched geometry.
+    Appends encode against the stored centroids and codebooks (Faiss
+    add-after-train); retraining IS the rebuild.  Verbs and crash
+    orders: ``operators/segstore.py``."""
     spark = df.sparkSession
-    heal_swap_crash(spark, path)
-    _, fs, hpath = fs_for(spark, path)
     codes, cent_rows, codebooks = ivfpq_build(
         df,
         n_clusters=n_clusters,
@@ -2233,40 +1551,15 @@ def write_ivfpq_index(
         assign_n=assign_n,
         id_col=id_col,
         vec_col=vec_col,
-        # the write below is the single consumer of codes — skip the
-        # in-memory materialization ivfpq_build does for probe reuse
+        # the segment write is the single consumer of codes
         materialize=False,
     )
-    dims = len(cent_rows[0][1])
-
-    def _build(root: str) -> None:
-        codes.write.partitionBy("cluster").parquet(
-            os.path.join(root, "codes", "batch=0")
-        )
-        (
-            local_rows_df(spark, cent_rows, "cluster int, centroid array<double>")
-            .coalesce(1)
-            .write.parquet(os.path.join(root, "_ivfpq_centroids"))
-        )
-        (
-            local_rows_df(spark, codebooks, "s int, c int, cv array<double>")
-            .coalesce(1)
-            .write.parquet(os.path.join(root, "_pq_codebooks"))
-        )
-        (
-            local_rows_df(
-                spark,
-                [(int(n_clusters), int(m), int(codes_k), int(dims), int(assign_n))],
-                "n_clusters int, m int, k int, dims int, assign_n int",
-            )
-            .coalesce(1)
-            .write.parquet(os.path.join(root, "_ivfpq_params"))
-        )
-
-    if fs.exists(hpath):
-        swap_with_staging(spark, path, _build, job="compact")
-    else:
-        _build(path)
+    params = {"n_clusters": n_clusters, "m": m, "k": codes_k,
+              "dims": len(cent_rows[0][1]), "assign_n": assign_n}
+    segstore.build("ivfpq", path, codes, id_col, params, trained=[
+        ("_ivfpq_centroids", local_rows_df(spark, cent_rows, "cluster int, centroid array<double>")),
+        ("_pq_codebooks", local_rows_df(spark, codebooks, "s int, c int, cv array<double>")),
+    ])
 
 
 def ivfpq_topk_indexed(
@@ -2397,162 +1690,20 @@ def append_ivfpq_index(
     batch_id: "int | None" = None,
 ) -> "dict[str, int]":
     """Append vectors to a ``write_ivfpq_index`` layout as one new
-    ``codes/batch=<id>/cluster=<c>/`` segment — Faiss's add-after-train
-    for IVFADC (r13 verdict #2, the family's last O(corpus) rebuild
-    term): each new vector is assigned to its ``assign_n`` nearest
-    STORED coarse centroids by squared Euclidean distance (the build's
-    own rule, ties to the lower cluster id), its per-assignment
-    residual is encoded against the STORED codebooks, and only the
-    increment is written.  Cost is O(increment): one broadcast join
-    against the n_clusters-sized centroid frame plus the encode pass
-    over the new rows — no corpus I/O, no retraining.
-
-    Exactness contract (pinned by test): a probe at nprobe = n_clusters
-    and shortlist ≥ corpus over the appended index equals brute-force
-    L2 over the union — the ADC estimate only ORDERS the shortlist, and
-    an exhaustive shortlist is exact-reranked in full.  At serving
-    nprobe/shortlist, recall drifts only as far as the appended data
-    drifts from the training distribution; codebook/centroid RETRAINING
-    IS THE REBUILD (``write_ivfpq_index``), exactly as for IVF appends.
-
-    ``batch_id`` semantics are ``append_ivf_index``'s: default max+1,
-    explicit id overwrites its own segment (replayable).  New ids must
-    not exist in other segments — checked against the codes table's id
-    column, which IS the family's thin membership table (id + m small
-    ints per row; 8–16× under the vectors); raises on overlap."""
-    import os
-
-    from ..fsutil import existing_batch_ids
-    from .kmeans import _sq_dist
-
-    spark = new_vecs.sparkSession
-    codes_root = os.path.join(path, "codes")
-    existing = existing_batch_ids(spark, codes_root)
-    if not existing:
-        raise ValueError(
-            f"append_ivfpq_index: no index at {path} — build one with "
-            "write_ivfpq_index first"
-        )
-    if batch_id is None:
-        batch_id = existing[-1] + 1
-    if new_vecs.isEmpty():
-        # the empty-segment rule: write nothing, report nothing added
-        return {"batch_id": batch_id, "n_vectors": 0}
-    params = (
-        spark.read.schema("n_clusters int, m int, k int, dims int, assign_n int")
-        .parquet(os.path.join(path, "_ivfpq_params"))
-        .head()
-    )
-    dims = len(new_vecs.select(vec_col).first()[0])
-    if dims != params.dims:
-        raise ValueError(
-            f"append_ivfpq_index: vectors have {dims} dims, index expects "
-            f"{params.dims}"
-        )
-    other = [b for b in existing if b != batch_id]
-    if other:
-        prior = spark.read.parquet(codes_root).filter(
-            F.col("batch").isin(other)
-        ).select(F.col(id_col))
-        dup = (
-            new_vecs.select(F.col(id_col))
-            .join(prior, new_vecs[id_col] == prior[id_col], "left_semi")
-            .limit(1)
-            .count()
-        )
-        if dup:
-            raise ValueError(
-                "append_ivfpq_index: some new vector ids already exist in "
-                "the index — duplicate rows would surface in probe results; "
-                "rebuild instead"
-            )
-    cent_df = (
-        spark.read.schema("cluster int, centroid array<double>")
-        .parquet(os.path.join(path, "_ivfpq_centroids"))
-        .withColumnRenamed("centroid", "_cent")
-    )
-    books = read_pq_codebooks(spark, path)
-    if "cluster" in new_vecs.columns:
-        new_vecs = new_vecs.drop("cluster")
-    # assign_n nearest stored centroids — identical geometry to
-    # ivfpq_build's multiple assignment (WindowGroupLimit top-n per id)
-    w = Window.partitionBy("_aid").orderBy("_ad", "cluster")
-    assigned = (
-        new_vecs.select(F.col(id_col).alias("_aid"), F.col(vec_col).alias("_av"))
-        .crossJoin(F.broadcast(cent_df))
-        .withColumn("_ad", _sq_dist(F.col("_av"), F.col("_cent")))
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= params.assign_n)
-        .select(
-            F.col("_aid").alias(id_col),
-            "cluster",
-            F.zip_with(
-                F.col("_av"), F.col("_cent"), lambda x, c: x.cast("double") - c
-            ).alias("_resid"),
-        )
-        .localCheckpoint(eager=True)  # consumed by encode AND the join back
-    )
-    # the (id, cluster) encode key is a STRUCT, not a delimited string
-    # concat (r15 advisory: string ids containing '#' could collide
-    # across (id, cluster) pairs and cross-wire codes to wrong rows)
-    entry = assigned.select(
-        F.struct(
-            F.col(id_col).alias("_k_id"), F.col("cluster").alias("_k_cl")
-        ).alias("_ek"),
-        id_col,
-        "cluster",
-        "_resid",
-    )
-    codes = (
-        pq_encode(entry, books, id_col="_ek", vec_col="_resid")
-        .join(entry.select("_ek", id_col, "cluster"), "_ek")
-        .drop("_ek")
-    )
-    codes.write.mode("overwrite").partitionBy("cluster").parquet(
-        os.path.join(codes_root, f"batch={batch_id}")
-    )
-    return {"batch_id": batch_id, "n_vectors": new_vecs.count()}
+    segment (Faiss add-after-train for IVFADC): each vector goes to its
+    ``assign_n`` nearest STORED coarse centroids by the build's rule,
+    and each residual is encoded against the STORED codebooks.  An
+    exhaustive probe (nprobe = n_clusters, shortlist ≥ corpus)
+    afterwards equals brute-force L2 over the union.  ``batch_id``
+    semantics, overlap check (the codes table) and write order:
+    ``segstore.append``."""
+    return segstore.append("ivfpq", path, [new_vecs], id_col, vec_col, batch_id)[0]
 
 
 def compact_ivfpq_index(spark, path: str) -> None:
-    """Collapse a segmented IVFPQ codes table to ONE segment — the
-    ``compact_ivf_index`` twin for the residual-code layout.  Sidecars
-    (centroids/codebooks/params) are copied unchanged: compaction
-    moves code rows, never retrains.  One crash-safe root swap;
-    terminal-runs-only like every swap-based job."""
-    import os
-
-    from ..fsutil import swap_with_staging
-
-    def _write(staging: str) -> None:
-        (
-            spark.read.parquet(os.path.join(path, "codes"))
-            .drop("batch")
-            .write.partitionBy("cluster")
-            .parquet(os.path.join(staging, "codes", "batch=0"))
-        )
-        (
-            spark.read.schema("cluster int, centroid array<double>")
-            .parquet(os.path.join(path, "_ivfpq_centroids"))
-            .coalesce(1)
-            .write.parquet(os.path.join(staging, "_ivfpq_centroids"))
-        )
-        (
-            spark.read.schema("s int, c int, cv array<double>")
-            .parquet(os.path.join(path, "_pq_codebooks"))
-            .coalesce(1)
-            .write.parquet(os.path.join(staging, "_pq_codebooks"))
-        )
-        (
-            spark.read.schema(
-                "n_clusters int, m int, k int, dims int, assign_n int"
-            )
-            .parquet(os.path.join(path, "_ivfpq_params"))
-            .coalesce(1)
-            .write.parquet(os.path.join(staging, "_ivfpq_params"))
-        )
-
-    swap_with_staging(spark, path, _write, job="compact")
+    """Collapse a segmented IVFPQ codes table to one segment
+    (``segstore.compact``); centroids and codebooks are copied."""
+    segstore.compact("ivfpq", spark, path)
 
 
 def write_pq_index(
@@ -2566,38 +1717,18 @@ def write_pq_index(
     codebooks: "list[tuple[int, int, list[float]]] | None" = None,
 ) -> None:
     """Materialize the PQ index the ``pq_topk_*`` probes assume at
-    scale: ``codes/`` holds (id, m-int codes) — the 8–16×-compressed
-    representation that replaces the vectors for the ADC pass — plus
-    two self-describing sidecars (underscore-prefixed, ignored by
-    FileIndex readers; same discipline as ``write_lsh_index``):
-
-    - ``_pq_codebooks/``: the (subspace, code, centroid) rows, written
-      THROUGH Spark so the layout works on any cluster filesystem;
-    - ``_pq_params/``: 1-row (m, k, dims) — read back by the probe so
-      an index can never be silently probed with mismatched geometry.
+    scale: ``codes/batch=<id>/`` (id, m-int codes; this build = segment
+    0) — the 8–16×-compressed representation that replaces the vectors
+    for the ADC pass — plus ``_pq_codebooks/`` (subspace, code,
+    centroid) and ``_pq_params/`` (m, k, dims), read back by the probe
+    so an index is never probed with mismatched geometry.
 
     ``codebooks`` defaults to ``train_pq_codebooks`` (Lloyd-trained);
     pass ``anchor_pq_codebooks(...)`` for the deterministic
-    training-free variant.  At 10 B vectors the codes table is ~80 GB
-    vs ~2.5 TB of float32 vectors — the probe's scan bound.
-
-    The codes table is SEGMENTED (r14): ``codes/batch=<id>/``, this
-    build = segment 0.  ``append_pq_index`` encodes NEW vectors
-    against the STORED codebooks into one new segment (Faiss
-    add-after-train) — O(increment), no retraining; retraining IS the
-    rebuild.
-
-    Rebuilding over an EXISTING index goes through the crash-safe
-    staging swap (r15 advisory): the old index stays live and probe-able
-    until the new build fully lands — the pre-r15 delete-then-train
-    order left no index at all if the long training/build failed."""
-    import os
-
-    from ..fsutil import fs_for, heal_swap_crash, swap_with_staging
-
+    training-free variant.  Appends encode against the STORED codebooks
+    (Faiss add-after-train); retraining IS the rebuild.  Verbs and
+    crash orders: ``operators/segstore.py``."""
     spark = df.sparkSession
-    heal_swap_crash(spark, path)
-    _, fs, hpath = fs_for(spark, path)
     if codebooks is None:
         codebooks = train_pq_codebooks(df, m, k, iterations, id_col, vec_col)
     m = max(s for s, _, _ in codebooks) + 1
@@ -2617,29 +1748,11 @@ def write_pq_index(
             "write_pq_index: centroids have mixed dimensionality; every "
             f"centroid must be {sub_d}-dim"
         )
-    dims = m * sub_d
-
-    def _build(root: str) -> None:
-        pq_encode(df, codebooks, id_col, vec_col).write.parquet(
-            os.path.join(root, "codes", "batch=0")
-        )
-        (
-            local_rows_df(spark, codebooks, "s int, c int, cv array<double>")
-            .coalesce(1)
-            .write.parquet(os.path.join(root, "_pq_codebooks"))
-        )
-        (
-            local_rows_df(
-                spark, [(int(m), int(k), int(dims))], "m int, k int, dims int"
-            )
-            .coalesce(1)
-            .write.parquet(os.path.join(root, "_pq_params"))
-        )
-
-    if fs.exists(hpath):
-        swap_with_staging(spark, path, _build, job="compact")
-    else:
-        _build(path)
+    segstore.build(
+        "pq", path, pq_encode(df, codebooks, id_col, vec_col), id_col,
+        {"m": m, "k": k, "dims": m * sub_d},
+        trained=[("_pq_codebooks", local_rows_df(spark, codebooks, "s int, c int, cv array<double>"))],
+    )
 
 
 def read_pq_codebooks(spark, path: str) -> "list[tuple[int, int, list[float]]]":
@@ -2748,104 +1861,18 @@ def append_pq_index(
     vec_col: str = "embedding",
     batch_id: "int | None" = None,
 ) -> "dict[str, int]":
-    """Append vectors to a ``write_pq_index`` layout as one new
-    ``codes/batch=<id>/`` segment — Faiss's add-after-train for plain
-    PQ (r13 verdict #2): new vectors are encoded against the STORED
-    codebooks and only the increment is written.  O(increment); no
-    retraining (codebook retraining IS the rebuild).
-
-    Exactness contract (pinned by test): a probe with shortlist ≥
-    corpus over the appended index equals brute-force L2 over the
-    union (the exhaustive shortlist is exact-reranked in full); at
-    serving shortlist the appended vectors carry exactly the codes a
-    same-codebook rebuild would give them, so probe results match a
-    ``write_pq_index(union, codebooks=stored)`` rebuild row for row.
-
-    ``batch_id``: default max+1; explicit id overwrites its own
-    segment (replayable).  New ids must not exist in other segments —
-    checked against the codes table's id column (the codes table IS
-    the thin membership table: id + m small ints); raises on overlap.
-    """
-    import os
-
-    from ..fsutil import existing_batch_ids
-
-    spark = new_vecs.sparkSession
-    codes_root = os.path.join(path, "codes")
-    existing = existing_batch_ids(spark, codes_root)
-    if not existing:
-        raise ValueError(
-            f"append_pq_index: no index at {path} — build one with "
-            "write_pq_index first"
-        )
-    if batch_id is None:
-        batch_id = existing[-1] + 1
-    if new_vecs.isEmpty():
-        return {"batch_id": batch_id, "n_vectors": 0}
-    params = (
-        spark.read.schema("m int, k int, dims int")
-        .parquet(os.path.join(path, "_pq_params"))
-        .head()
-    )
-    dims = len(new_vecs.select(vec_col).first()[0])
-    if dims != params.dims:
-        raise ValueError(
-            f"append_pq_index: vectors have {dims} dims, index expects "
-            f"{params.dims}"
-        )
-    other = [b for b in existing if b != batch_id]
-    if other:
-        prior = spark.read.parquet(codes_root).filter(
-            F.col("batch").isin(other)
-        ).select(F.col(id_col))
-        dup = (
-            new_vecs.select(F.col(id_col))
-            .join(prior, new_vecs[id_col] == prior[id_col], "left_semi")
-            .limit(1)
-            .count()
-        )
-        if dup:
-            raise ValueError(
-                "append_pq_index: some new vector ids already exist in the "
-                "index — duplicate rows would surface in probe results; "
-                "rebuild instead"
-            )
-    books = read_pq_codebooks(spark, path)
-    pq_encode(new_vecs, books, id_col, vec_col).write.mode("overwrite").parquet(
-        os.path.join(codes_root, f"batch={batch_id}")
-    )
-    return {"batch_id": batch_id, "n_vectors": new_vecs.count()}
+    """Append vectors to a ``write_pq_index`` layout as one new segment,
+    encoded against the STORED codebooks: appended vectors carry exactly
+    the codes a same-codebook rebuild gives them.  ``batch_id``
+    semantics, overlap check (the codes table) and write order:
+    ``segstore.append``."""
+    return segstore.append("pq", path, [new_vecs], id_col, vec_col, batch_id)[0]
 
 
 def compact_pq_index(spark, path: str) -> None:
-    """Collapse a segmented PQ codes table to ONE segment — bounds the
-    probe's listing cost after many appends.  Pure row movement (codes
-    are disjoint); sidecars copied unchanged.  One crash-safe root
-    swap; terminal-runs-only."""
-    import os
-
-    from ..fsutil import swap_with_staging
-
-    def _write(staging: str) -> None:
-        (
-            spark.read.parquet(os.path.join(path, "codes"))
-            .drop("batch")
-            .write.parquet(os.path.join(staging, "codes", "batch=0"))
-        )
-        (
-            spark.read.schema("s int, c int, cv array<double>")
-            .parquet(os.path.join(path, "_pq_codebooks"))
-            .coalesce(1)
-            .write.parquet(os.path.join(staging, "_pq_codebooks"))
-        )
-        (
-            spark.read.schema("m int, k int, dims int")
-            .parquet(os.path.join(path, "_pq_params"))
-            .coalesce(1)
-            .write.parquet(os.path.join(staging, "_pq_params"))
-        )
-
-    swap_with_staging(spark, path, _write, job="compact")
+    """Collapse a segmented PQ codes table to one segment
+    (``segstore.compact``); codebooks are copied."""
+    segstore.compact("pq", spark, path)
 
 
 def anchor_pq_codebooks(

@@ -26,156 +26,59 @@ indexes):
   given the codebooks); IVFPQ additionally inherits the IVF recall
   caveat under distribution drift.
 
-All sinks inherit replay idempotence from the explicit ``batch_id``
-overwrite semantics of ``append_*_index``: a re-delivered micro-batch
-rewrites its own segment's directories, so crashed or replayed
-batches can never double-insert a vector.  Compaction must NOT run
-from inside a live stream's cadence — see
-operators/maintenance.maintain_index for the replay-wedge analysis.
+Every sink is ``operators/segstore.IngestSink`` with its layout's
+geometry: a micro-batch becomes one segment under its own micro-batch
+id, so a re-delivered batch rewrites its own segment's directories and
+crashed or replayed batches can never double-insert a vector.
+Compaction must NOT run from inside a live stream's cadence — see
+operators/maintenance.py for the replay-wedge analysis.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from ..operators.segstore import IngestSink
 
 
-class LshIngestSink:
+class LshIngestSink(IngestSink):
     """foreachBatch callable: micro-batch of (id, vector) rows → one
     LSH index segment (bootstraps the layout on the first batch)."""
 
-    def __init__(
-        self,
-        index_dir: str,
-        planes: int = 4,
-        dims: int = 64,
-        id_col: str = "vec_id",
-        vec_col: str = "embedding",
-    ) -> None:
-        self.index_dir = index_dir
-        self.planes = planes
-        self.dims = dims
-        self.id_col = id_col
-        self.vec_col = vec_col
+    kind = "lsh"
 
-    def __call__(self, batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        from ..fsutil import existing_batch_ids
-        from ..operators.similarity import _write_lsh_segment, append_lsh_index
-
-        if not existing_batch_ids(batch.sparkSession, self.index_dir):
-            # bootstrap: geometry from the sink (laid down as the
-            # _lsh_params sidecar; later segments read it back so it
-            # can never drift).  The first segment is written under
-            # THIS batch's id so a replay of it overwrites the same
-            # directories.
-            _write_lsh_segment(
-                batch,
-                self.index_dir,
-                batch_id,
-                self.planes,
-                self.dims,
-                self.id_col,
-                self.vec_col,
-                write_params=True,
-            )
-            return
-        append_lsh_index(
-            batch,
-            self.index_dir,
-            id_col=self.id_col,
-            vec_col=self.vec_col,
-            batch_id=batch_id,
-        )
+    def __init__(self, index_dir: str, planes: int = 4, dims: int = 64,
+                 id_col: str = "vec_id", vec_col: str = "embedding") -> None:
+        super().__init__(index_dir, id_col, vec_col, planes=planes, dims=dims)
 
 
-class IvfIngestSink:
+class IvfIngestSink(IngestSink):
     """foreachBatch callable: micro-batch of (id, vector) rows → one
     segment of a PRE-TRAINED IVF layout (raises if the index does not
     exist — train first with ``write_ivf_index``)."""
 
-    def __init__(
-        self,
-        index_dir: str,
-        id_col: str = "vec_id",
-        vec_col: str = "embedding",
-    ) -> None:
-        self.index_dir = index_dir
-        self.id_col = id_col
-        self.vec_col = vec_col
+    kind = "ivf"
 
-    def __call__(self, batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        from ..operators.similarity import append_ivf_index
-
-        append_ivf_index(
-            batch,
-            self.index_dir,
-            id_col=self.id_col,
-            vec_col=self.vec_col,
-            batch_id=batch_id,
-        )
+    def __init__(self, index_dir: str, id_col: str = "vec_id", vec_col: str = "embedding") -> None:
+        super().__init__(index_dir, id_col, vec_col)
 
 
-class PqIngestSink:
+class PqIngestSink(IngestSink):
     """foreachBatch callable: micro-batch of (id, vector) rows → one
     ``codes/batch=<id>`` segment of a PRE-TRAINED PQ layout (raises if
-    the index does not exist — train first with ``write_pq_index``).
-    Encoding against stored codebooks is deterministic, so the
-    streamed index equals a same-codebook batch build bit-for-bit."""
+    the index does not exist — train first with ``write_pq_index``)."""
 
-    def __init__(
-        self,
-        index_dir: str,
-        id_col: str = "vec_id",
-        vec_col: str = "embedding",
-    ) -> None:
-        self.index_dir = index_dir
-        self.id_col = id_col
-        self.vec_col = vec_col
+    kind = "pq"
 
-    def __call__(self, batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        from ..operators.similarity import append_pq_index
-
-        append_pq_index(
-            batch,
-            self.index_dir,
-            id_col=self.id_col,
-            vec_col=self.vec_col,
-            batch_id=batch_id,
-        )
+    def __init__(self, index_dir: str, id_col: str = "vec_id", vec_col: str = "embedding") -> None:
+        super().__init__(index_dir, id_col, vec_col)
 
 
-class IvfpqIngestSink:
+class IvfpqIngestSink(IngestSink):
     """foreachBatch callable: micro-batch of (id, vector) rows → one
     ``codes/batch=<id>/cluster=<c>/`` segment of a PRE-TRAINED IVFPQ
     layout (raises if the index does not exist — train first with
-    ``write_ivfpq_index``).  Assignment to stored coarse centroids +
-    residual encoding against stored codebooks — the streaming face of
-    ``append_ivfpq_index``'s add-after-train contract."""
+    ``write_ivfpq_index``)."""
 
-    def __init__(
-        self,
-        index_dir: str,
-        id_col: str = "vec_id",
-        vec_col: str = "embedding",
-    ) -> None:
-        self.index_dir = index_dir
-        self.id_col = id_col
-        self.vec_col = vec_col
+    kind = "ivfpq"
 
-    def __call__(self, batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        from ..operators.similarity import append_ivfpq_index
-
-        append_ivfpq_index(
-            batch,
-            self.index_dir,
-            id_col=self.id_col,
-            vec_col=self.vec_col,
-            batch_id=batch_id,
-        )
+    def __init__(self, index_dir: str, id_col: str = "vec_id", vec_col: str = "embedding") -> None:
+        super().__init__(index_dir, id_col, vec_col)

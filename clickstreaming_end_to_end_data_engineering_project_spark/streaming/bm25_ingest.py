@@ -6,9 +6,9 @@ for HLL rollups): batch operators own the math, a foreachBatch sink
 owns exactly-once delivery.
 
 Each micro-batch of documents becomes ONE index segment
-(``batch=<micro-batch id>``) via ``append_bm25_index``'s explicit
-``batch_id`` — a replayed micro-batch OVERWRITES its own segment's
-four directories instead of appending a duplicate, so the index is
+(``batch=<micro-batch id>``) through ``operators/segstore.IngestSink``
+— a replayed micro-batch OVERWRITES its own segment's four directories
+instead of appending a duplicate, so the index is
 exactly-once at the file level no matter how the stream crashes
 (the survivor discipline).  Because every corpus statistic in the
 layout is a mergeable per-segment sum (df, n_docs, sum_dl), a probe
@@ -28,67 +28,16 @@ for the LLM-data-pipeline extension mandate.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from ..operators.segstore import IngestSink
 
 
-class Bm25IngestSink:
+class Bm25IngestSink(IngestSink):
     """foreachBatch callable: micro-batch of documents → one BM25
     index segment under ``index_dir`` (replay-idempotent: a
     re-delivered batch id rewrites its own segment)."""
 
-    def __init__(
-        self,
-        index_dir: str,
-        id_col: str = "doc_id",
-        text_col: str = "text",
-        n_buckets: int = 64,
-    ) -> None:
-        self.index_dir = index_dir
-        self.id_col = id_col
-        self.text_col = text_col
-        self.n_buckets = n_buckets
+    kind = "bm25"
 
-    def __call__(self, batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        import os
-
-        from ..fsutil import fs_for
-        from ..operators.retrieval import (
-            _existing_bm25_batches,
-            _write_bm25_segment,
-            append_bm25_index,
-        )
-
-        existing = _existing_bm25_batches(batch.sparkSession, self.index_dir)
-        _, fs, params_path = fs_for(
-            batch.sparkSession, os.path.join(self.index_dir, "_bm25_params")
-        )
-        # bootstrap when no segments exist, OR when the only segment is
-        # THIS batch's own and the params sidecar is missing — the
-        # bootstrap-crash window (r13 advisory): a first micro-batch
-        # that died after the postings write but before params would
-        # otherwise replay down the append path and wedge forever on
-        # the missing sidecar.  (_write_bm25_segment now writes params
-        # first, so this branch only fires on layouts crashed under the
-        # old ordering — belt and braces.)
-        if not existing or (existing == [batch_id] and not fs.exists(params_path)):
-            # first segment bootstraps the layout (geometry comes from
-            # the sink's n_buckets; later segments read it back from
-            # the _bm25_params sidecar so it can never drift)
-            _write_bm25_segment(
-                batch,
-                self.index_dir,
-                batch_id,
-                self.id_col,
-                self.text_col,
-                self.n_buckets,
-            )
-            return
-        append_bm25_index(
-            batch,
-            self.index_dir,
-            id_col=self.id_col,
-            text_col=self.text_col,
-            batch_id=batch_id,
-        )
+    def __init__(self, index_dir: str, id_col: str = "doc_id", text_col: str = "text",
+                 n_buckets: int = 64) -> None:
+        super().__init__(index_dir, id_col, text_col, n_buckets=n_buckets)

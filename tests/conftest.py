@@ -40,6 +40,18 @@ def pytest_collection_modifyitems(config, items):
             item.add_marker(skip)
 
 
+def pytest_terminal_summary(terminalreporter):
+    """Say how many @slow batteries the default profile skipped, so a
+    green run cannot be mistaken for a full one."""
+    slow = [
+        r for r in terminalreporter.stats.get("skipped", [])
+        if "SPARK_GRAFT_FULL_SUITE" in str(r.longrepr)
+    ]
+    terminalreporter.write_line(
+        f"{len(slow)} @slow tests skipped (run them with SPARK_GRAFT_FULL_SUITE=1)"
+    )
+
+
 @pytest.fixture(scope="session")
 def spark():
     s = get_spark("engine-tests", cpus=os.environ.get("SPARK_GRAFT_TEST_CPUS", "8"))

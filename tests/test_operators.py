@@ -4473,36 +4473,81 @@ def test_interval_point_join_drops_inverted_intervals(spark):
 
 
 @pytest.mark.slow
-def test_bm25_delete_any_crash_point_heals_on_rerun(spark, tmp_path, monkeypatch):
-    """r15 advisory (medium): delete_from_bm25_index must rewrite
-    ``_doclens`` strictly LAST — it is the discovery table the delete
-    itself uses to find touched segments, so every earlier crash point
-    leaves the deleted ids listed there and a RE-RUN re-finds the
-    segment and re-heals the stats.  Fault-inject a crash after each of
-    the first three per-segment swaps (postings / termstats / params),
-    re-run, and require the probe to be BIT-EQUAL to a fresh rebuild
+@pytest.mark.parametrize("kind", ["bm25", "lsh", "ivf", "pq", "ivfpq"])
+def test_bm25_delete_any_crash_point_heals_on_rerun(spark, tmp_path, monkeypatch, kind):
+    """Every delete_from_*_index rewrites the touched store segment
+    first, its stat slices next and its membership slice strictly LAST
+    — membership is where the delete finds touched segments, so every
+    earlier crash point leaves the deleted ids listed and a RE-RUN
+    re-finds the segment and re-heals it.  For each layout, fault-inject
+    a crash after each of the delete's swaps in turn (the last one
+    included), re-run, and require the probe to equal a fresh rebuild
     over the survivors every time."""
     import pytest
 
     from clickstreaming_end_to_end_data_engineering_project_spark import fsutil
     from clickstreaming_end_to_end_data_engineering_project_spark.operators import (
         retrieval as R,
+        similarity as S,
     )
 
-    docs = spark.createDataFrame(
-        [(i, f"spark stream doc{i % 4} hash tok{i % 7}") for i in range(24)],
-        "doc_id long, text string",
-    )
-    survivors = docs.filter(~F.col("doc_id").isin([3, 9]))
-    rebuilt = str(tmp_path / "bm25_rebuild")
-    R.write_bm25_index(survivors, rebuilt, n_buckets=4)
-    terms = ["spark", "doc1", "tok2"]
-    want = [tuple(r) for r in R.bm25_topk_indexed(spark, rebuilt, terms, k=24).collect()]
+    victims = [3, 9]
+    if kind == "bm25":
+        rows = spark.createDataFrame(
+            [(i, f"spark stream doc{i % 4} hash tok{i % 7}") for i in range(24)],
+            "doc_id long, text string",
+        )
+        survivors = rows.filter(~F.col("doc_id").isin(victims))
+        build = lambda df, p: R.write_bm25_index(df, p, n_buckets=4)
+        probe = lambda p: R.bm25_topk_indexed(spark, p, ["spark", "doc1", "tok2"], k=24)
+    else:
+        rows = spark.createDataFrame(
+            [(i, [float((i * 7) % 11), float(i % 5), 1.0, float(i % 4)]) for i in range(24)],
+            "vec_id long, embedding array<double>",
+        )
+        if kind == "ivfpq":
+            rows = S.unit_normalize(rows)
+        rows = rows.localCheckpoint(eager=True)
+        survivors = rows.filter(~F.col("vec_id").isin(victims))
+        q = [3.0, 1.0, 0.5, 2.0]
+        books = S.anchor_pq_codebooks(rows, m=2, k=4)
+        # exhaustive probes: exact over the survivors, so a retrained
+        # rebuild (IVF, IVFPQ) must rank identically
+        build, probe = {
+            "lsh": (
+                lambda df, p: S.write_lsh_index(df, p, planes=2, dims=4),
+                lambda p: S.lsh_topk_indexed(spark, p, query_vec=q, k=24, nprobe=4),
+            ),
+            "ivf": (
+                lambda df, p: S.write_ivf_index(df, p, n_clusters=3, iterations=1),
+                lambda p: S.ivf_topk_indexed(spark, p, q, k=24, nprobe=3),
+            ),
+            "pq": (
+                lambda df, p: S.write_pq_index(df, p, codebooks=books),
+                lambda p: S.pq_topk_indexed(spark, p, survivors, q, k=10, shortlist=24),
+            ),
+            "ivfpq": (
+                lambda df, p: S.write_ivfpq_index(
+                    df, p, n_clusters=2, m=2, codes_k=4, coarse_iterations=1,
+                    pq_iterations=1, assign_n=2,
+                ),
+                lambda p: S.ivfpq_topk_indexed(
+                    spark, p, survivors, q, k=10, nprobe=2, shortlist=48
+                ),
+            ),
+        }[kind]
+    delete = getattr(R if kind == "bm25" else S, f"delete_from_{kind}_index")
+    rebuilt = str(tmp_path / f"{kind}_rebuild")
+    build(survivors, rebuilt)
+    want = [tuple(r) for r in probe(rebuilt).collect()]
+    assert len(want) >= 10
 
+    # store, then stat slices, then membership: one swap each
+    swaps = {"bm25": 4, "lsh": 2, "ivf": 2, "pq": 1, "ivfpq": 1}[kind]
     real_swap = fsutil.swap_with_staging
-    for crash_after in (1, 2, 3):
-        idx = str(tmp_path / f"bm25_crash{crash_after}")
-        R.write_bm25_index(docs, idx, n_buckets=4)
+    for crash_after in range(1, swaps + 1):
+        idx = str(tmp_path / f"{kind}_crash{crash_after}")
+        build(rows, idx)
         calls = {"n": 0}
 
         def crashing(spark_, path, write_fn, job="compact", _ca=crash_after):
@@ -4513,14 +4558,14 @@ def test_bm25_delete_any_crash_point_heals_on_rerun(spark, tmp_path, monkeypatch
 
         monkeypatch.setattr(fsutil, "swap_with_staging", crashing)
         with pytest.raises(RuntimeError, match="injected crash"):
-            R.delete_from_bm25_index(spark, idx, [3, 9])
+            delete(spark, idx, victims)
         monkeypatch.setattr(fsutil, "swap_with_staging", real_swap)
-        # the deleted ids are still listed in _doclens, so the re-run
-        # re-discovers the touched segment and completes all four swaps
-        out = R.delete_from_bm25_index(spark, idx, [3, 9])
-        assert out["segments_rewritten"] == 1
-        got = [tuple(r) for r in R.bm25_topk_indexed(spark, idx, terms, k=24).collect()]
-        assert got == want, f"crash after swap {crash_after} did not heal"
+        # before the membership swap the deleted ids are still listed,
+        # so the re-run re-discovers the touched segment and completes
+        out = delete(spark, idx, victims)
+        assert out["segments_rewritten"] == (1 if crash_after < swaps else 0)
+        got = [tuple(r) for r in probe(idx).collect()]
+        assert got == want, f"{kind}: crash after swap {crash_after} did not heal"
 
 
 def test_ivf_append_crash_before_vectors_write_retries_clean(spark, tmp_path):
@@ -5268,6 +5313,51 @@ def test_bm25_append_crash_before_postings_write_retries_clean(spark, tmp_path):
     got = [tuple(r) for r in R.bm25_topk_indexed(spark, idx, terms, k=24).collect()]
     rebuilt = str(tmp_path / "bm25_crash_rebuild")
     R.write_bm25_index(docs, rebuilt, n_buckets=4)
+    want = [tuple(r) for r in R.bm25_topk_indexed(spark, rebuilt, terms, k=24).collect()]
+    assert got == want and len(got) == 24
+
+
+def test_bm25_compaction_heals_orphaned_append_slice(spark, tmp_path):
+    """The orphan + compaction block of the LSH crash test, for BM25: an
+    append that crashed after its _bm25_params/_doclens slices but
+    before the postings (and _termstats) leaves orphaned slices.
+    Compaction folds only the segments discoverable in the store, so
+    the statistics and the membership table cover exactly the live
+    docs, the crashed increment then appends cleanly, and the probe is
+    bit-equal to a rebuild."""
+    import os
+    import shutil
+
+    from clickstreaming_end_to_end_data_engineering_project_spark.operators import (
+        retrieval as R,
+    )
+
+    docs = spark.createDataFrame(
+        [(i, f"spark stream doc{i % 4} tok{i % 7}") for i in range(24)],
+        "doc_id long, text string",
+    )
+    part_a = docs.filter(F.col("doc_id") < 16)
+    part_b = docs.filter(F.col("doc_id") >= 16)
+    idx = str(tmp_path / "bm25_orphan")
+    R.write_bm25_index(part_a, idx, n_buckets=4)
+    R.append_bm25_index(part_b, idx)
+    shutil.rmtree(os.path.join(idx, "batch=1"))
+    shutil.rmtree(os.path.join(idx, "_termstats", "batch=1"))
+    R.compact_bm25_index(spark, idx)
+
+    def params(root):
+        p = spark.read.parquet(os.path.join(root, "_bm25_params"))
+        return tuple(p.agg(F.sum("n_docs"), F.sum("sum_dl")).first())
+
+    live = str(tmp_path / "bm25_live")
+    R.write_bm25_index(part_a, live, n_buckets=4)
+    assert spark.read.parquet(os.path.join(idx, "_doclens")).count() == 16
+    assert params(idx) == params(live) and params(idx)[0] == 16
+    assert R.append_bm25_index(part_b, idx)["n_docs"] == 8
+    terms = ["spark", "doc1", "tok2"]
+    rebuilt = str(tmp_path / "bm25_rebuild")
+    R.write_bm25_index(docs, rebuilt, n_buckets=4)
+    got = [tuple(r) for r in R.bm25_topk_indexed(spark, idx, terms, k=24).collect()]
     want = [tuple(r) for r in R.bm25_topk_indexed(spark, rebuilt, terms, k=24).collect()]
     assert got == want and len(got) == 24
 
@@ -8538,6 +8628,46 @@ def test_forget_ids_pooled_deletes_keep_swap_discipline(spark, sf_dir, tmp_path)
         if col in store.columns:
             got = {r[0] for r in store.select(col).distinct().collect()}
             assert not (got & vic), f"{root} still serves victim ids"
+
+
+def test_forget_ids_rejects_aliased_and_nested_index_roots(spark, tmp_path):
+    """forget_ids compares index roots QUALIFIED: "p" and "p/" name one
+    store, and the pooled deletes would run it twice in parallel; a
+    root nested inside another root is rejected too.  Both fail before
+    any delete runs, so every store still holds the ids."""
+    import os
+
+    import pytest
+
+    from clickstreaming_end_to_end_data_engineering_project_spark.operators import (
+        retrieval as R,
+        similarity as S,
+    )
+    from clickstreaming_end_to_end_data_engineering_project_spark.operators.maintenance import (
+        forget_ids,
+    )
+
+    docs = spark.createDataFrame(
+        [(i, f"spark stream doc{i % 3} hash") for i in range(12)],
+        "doc_id long, text string",
+    )
+    vecs = spark.createDataFrame(
+        [(i, [float(i % 4), 1.0, float(i % 3), 0.5]) for i in range(12)],
+        "vec_id long, embedding array<double>",
+    )
+    outer = str(tmp_path / "bm25")
+    inner = os.path.join(outer, "_lsh")  # hidden from the outer store's reads
+    R.write_bm25_index(docs, outer, n_buckets=4)
+    S.write_lsh_index(vecs, inner, planes=2, dims=4)
+
+    with pytest.raises(ValueError, match="listed twice"):
+        forget_ids(spark, [3, 5], index_roots=[outer, outer + "/"])
+    with pytest.raises(ValueError, match="nested"):
+        forget_ids(spark, [3, 5], index_roots=[outer, inner])
+    with pytest.raises(ValueError, match="nested"):
+        forget_ids(spark, [3, 5], index_roots=[inner + "/", outer])
+    assert spark.read.parquet(os.path.join(outer, "_doclens")).count() == 12
+    assert spark.read.parquet(os.path.join(inner, "_id_map")).count() == 12
 
 
 def test_cosine_dense_gate_bounds_collect_bytes(spark, monkeypatch):
