@@ -63,6 +63,19 @@ _DENSE_VERIFY_CELLS_CAP = 1 << 23
 _DENSE_GRAM_FLOPS_CAP = 1 << 33
 
 
+def _tf_matrix(tf: DataFrame):
+    """(ids, dense int64 rep × term matrix) collected from a
+    (_id, term, _tf) frame — the one matrix build of both dense arms."""
+    import numpy as np
+
+    pdf = tf.select("_id", "term", "_tf").toPandas()
+    ids = pd.Index(pdf["_id"].unique())
+    term_codes, term_uniques = pd.factorize(pdf["term"])
+    mat = np.zeros((len(ids), len(term_uniques)), dtype=np.int64)
+    mat[ids.get_indexer(pdf["_id"]), term_codes] = pdf["_tf"].to_numpy(np.int64)
+    return ids, mat
+
+
 def _dense_all_pairs_gram(
     tf: DataFrame,
     threshold: float,
@@ -72,56 +85,37 @@ def _dense_all_pairs_gram(
     rep_meta: "DataFrame | None" = None,
 ) -> "DataFrame | None":
     """Every qualifying rep pair straight from the dense tf matrix:
-    block-wise exact Gram products distributed over the executors via
-    ``mapInPandas`` against the same broadcast (ids, int64 matrix) the
-    dense VERIFY arm uses — no prefix build, no candidate join, no
-    per-pair aggregate.
+    block-wise Gram products distributed over the executors via
+    ``mapInPandas`` against one broadcast of (ids, float64 matrix,
+    sqrt-norms) — no prefix build, no candidate join, no per-pair
+    aggregate.  Returns None when max ‖tf‖² ≥ 2⁵³, where float64
+    accumulation could round (exactness: ``_cosine_prefix_join``).
 
-    Exactness: each Gram block runs in float64 BLAS, and every value
-    it accumulates is an integer bounded by max(‖tf‖²) — the helper
-    returns None (caller falls back to the prefix machinery) unless
-    max(‖tf‖²) < 2⁵³, so every partial sum is an exactly-representable
-    integer and the block product equals the exact long dot.  The
-    epilogue dot/(√nsq_a·√nsq_b) and the ≥-threshold filter are the
-    same IEEE float64 ops the prefix path's verification performs, so
-    the emitted cosines are bit-identical (pinned by the standing
-    dense-vs-map differential and the brute-force threshold sweeps).
-
-    ``rep_meta`` (incremental form): optional (id → side, fingerprint)
-    rows for every rep; when given, only pairs involving a side-1
-    (batch) rep and with UNEQUAL fingerprints are emitted — the same
-    pair set the side-aware candidate join produces (same-fp pairs
-    belong to the intra path) — and each pair is emitted with the
-    batch rep in ``a_col``, matching the expansion join's contract.
-    Without it, pairs are emitted once per unordered pair in matrix
-    order; rep-level column order is irrelevant downstream because
-    the expansion join covers every rep on both sides and normalizes
-    MEMBER ids with least/greatest."""
+    ``rep_meta`` (incremental form): (id → side, fingerprint) rows for
+    every rep; only pairs involving a side-1 rep and with unequal
+    fingerprints are emitted — the side-aware candidate join's pair
+    set — each with the batch rep in ``a_col``.  Without it, pairs are
+    emitted once per unordered pair in matrix order.  ``bc_sink``
+    collects the broadcast for the caller to destroy."""
     import numpy as np
     from pyspark.sql.types import DoubleType, StructField, StructType
 
     spark = tf.sparkSession
-    pdf = tf.select("_id", "term", "_tf").toPandas()
-    ids = pd.Index(pdf["_id"].unique())
-    term_codes, term_uniques = pd.factorize(pdf["term"])
+    id_t = tf.schema["_id"].dataType
+    schema = StructType(
+        [
+            StructField(a_col, id_t),
+            StructField(b_col, id_t),
+            StructField("cosine", DoubleType()),
+        ]
+    )
+    ids, mat = _tf_matrix(tf)
     n = len(ids)
     if n < 2:
         # zero or one rep: no pairs by construction
-        return tf.sparkSession.createDataFrame(
-            [], StructType(
-                [
-                    StructField(a_col, tf.schema["_id"].dataType),
-                    StructField(b_col, tf.schema["_id"].dataType),
-                    StructField("cosine", DoubleType()),
-                ]
-            )
-        )
-    mat = np.zeros((n, len(term_uniques)), dtype=np.int64)
-    mat[ids.get_indexer(pdf["_id"]), term_codes] = pdf["_tf"].to_numpy(np.int64)
+        return spark.createDataFrame([], schema)
     nsq = np.einsum("ij,ij->i", mat, mat)
     if int(nsq.max()) >= (1 << 53):
-        # float64 accumulation could round — fall back to the exact
-        # long prefix machinery (pathological ‖tf‖² ≥ 2⁵³ corpora)
         return None
     side = fpc = None
     if rep_meta is not None:
@@ -132,25 +126,20 @@ def _dense_all_pairs_gram(
             )
         side = meta["_side"].to_numpy(np.int64)
         fpc = pd.factorize(meta["_fp"])[0]
-    bc = spark.sparkContext.broadcast((ids, mat, nsq, side, fpc))
+    # float64 once on the driver (exact under the < 2^53 gate), so no
+    # task copies the matrix
+    bc = spark.sparkContext.broadcast(
+        (ids, mat.astype(np.float64), np.sqrt(nsq.astype(np.float64)), side, fpc)
+    )
+    del mat
     if bc_sink is not None:
         bc_sink.append(bc)
     t = float(threshold)
     block = max(64, (1 << 23) // n)  # bounds each block's Gram slab
     n_blocks = (n + block - 1) // block
-    id_t = tf.schema["_id"].dataType
-    schema = StructType(
-        [
-            StructField(a_col, id_t),
-            StructField(b_col, id_t),
-            StructField("cosine", DoubleType()),
-        ]
-    )
 
     def _gram(batches):
-        b_ids, b_mat, b_nsq, b_side, b_fpc = bc.value
-        matf = b_mat.astype(np.float64)
-        sq = np.sqrt(b_nsq.astype(np.float64))
+        b_ids, matf, sq, b_side, b_fpc = bc.value
         nn = len(b_ids)
         for pdf_blk in batches:
             for blk in pdf_blk["id"].to_numpy():
@@ -163,9 +152,7 @@ def _dense_all_pairs_gram(
                 keep = cos >= t
                 # strict upper triangle in matrix order: each
                 # unordered pair once, no self pairs
-                cols = np.arange(nn)[None, :]
-                rows = np.arange(lo, hi)[:, None]
-                keep &= cols > rows
+                keep &= np.arange(nn)[None, :] > np.arange(lo, hi)[:, None]
                 if b_side is not None:
                     keep &= (b_side[lo:hi, None] == 1) | (b_side[None, :] == 1)
                     keep &= b_fpc[lo:hi, None] != b_fpc[None, :]
@@ -179,13 +166,7 @@ def _dense_all_pairs_gram(
                     swap = b_side[ii + lo] != 1
                     ga = np.where(swap, gb, ids_a)
                     gb = np.where(swap, ids_a, gb)
-                yield pd.DataFrame(
-                    {
-                        a_col: ga,
-                        b_col: gb,
-                        "cosine": cos[ii, jj],
-                    }
-                )
+                yield pd.DataFrame({a_col: ga, b_col: gb, "cosine": cos[ii, jj]})
 
     width = max(1, spark.sparkContext.defaultParallelism)
     blocks = spark.range(0, n_blocks, 1, min(n_blocks, width))
@@ -198,70 +179,30 @@ def _verify_cosine_candidates(
     threshold: float,
     a_col: str,
     b_col: str,
-    cells_cap: "int | None" = None,
+    dense: bool,
     bc_sink: "list | None" = None,
 ) -> DataFrame:
-    """Exact verification for cosine prefix-join candidates — the ONE
-    copy shared by ``cosine_prefix_pairs`` and
-    ``cosine_prefix_new_pairs`` (their verify stages were identical
-    modulo column names).
+    """Exact verification of cosine prefix-join candidates.
 
     ``need``: (a_col, b_col, _nsqa, _nsqb) candidate pairs still
-    requiring the full dot.  ``tf``: (_id, term, _tf) exact term
-    frequencies covering every id that can appear in ``need``.
-    Output: (a_col, b_col, cosine) with cosine >= threshold.
+    requiring the full dot.  ``tf``: (_id, term, _tf) covering every
+    id in ``need``.  Output: (a_col, b_col, cosine ≥ threshold).  Two
+    arms with bit-identical results (pinned by test); the caller's
+    dense gate picks one:
 
-    Two regimes, bit-identical results (pinned by test):
-
-    - DENSE (guide §4.2 — vectorized native code per Arrow batch; §8 —
-      ship ids, not payloads): when n_reps · n_terms <= ``cells_cap``
-      the rep postings are collected once, laid out as a dense int64
-      (rep × term) matrix, broadcast, and each Arrow batch of candidate
-      id pairs is verified as two numpy row gathers + an int64
-      einsum dot.  Integer adds are order-independent, so the dot is
-      the SAME exact long the map path accumulates; the epilogue
-      dot/(sqrt(nsqa)·sqrt(nsqb)) runs in numpy float64 — the same
-      correctly-rounded IEEE ops the JVM expression performs, so the
-      cosine is bit-identical.  No join, no shuffle: the UDF projects
-      the persisted candidate partitions in place.  Profiled at sf0.1
-      / t=0.9 (the flat-vocabulary worst case, 10.57 M candidates):
-      19.8 s map path → ~2 s dense.
-    - MAP (the r18 forward-index form, unchanged): per-doc term maps
-      semi-joined to candidate docs, ``map_zip_with`` union dot —
+    - DENSE (``_verify_cosine_dense``): the rep matrix is broadcast
+      and each Arrow batch of candidate pairs is two numpy row gathers
+      and an int64 einsum — the same exact long, no join, no shuffle.
+    - MAP: per-doc term maps semi-joined to candidate docs and a
+      ``map_zip_with`` union dot (L2AP's forward index) —
       self-balancing for the Zipf/large-vocabulary regime where
       candidates are few and reps are many.
 
-    The gate costs one tiny aggregate over the persisted ``tf``
-    (countDistinct id/term + posting count + total term bytes); the
-    collect that builds the matrix is bounded by the same cap
-    (posting rows <= cells) AND — r19, the r18 advisory — by an
-    estimate of the collected pandas payload in BYTES
-    (Σ length(term) + 16 B/posting id+tf ≤ 8·cap, the same 64 MB
-    budget the int64 matrix gets at the default cap): a small-doc
-    huge-vocabulary corpus with long terms replicates each term
-    string across its posting rows and could otherwise pull hundreds
-    of MB into the driver despite a within-cap matrix.
-
-    ``bc_sink``: optional list the dense arm appends its (ids, matrix)
-    broadcast to, so the CALLER can destroy it once the result is
-    eagerly materialized — without this every dedup call leaked one
-    driver+executor broadcast for the life of the session (r18
-    advisory, medium).
-    """
+    ``bc_sink`` collects the dense arm's broadcast for the caller to
+    destroy once its result is materialized."""
     t = float(threshold)
-    epilogue = lambda dot: dot / (F.sqrt("_nsqa") * F.sqrt("_nsqb"))  # noqa: E731
-    cap = _DENSE_VERIFY_CELLS_CAP if cells_cap is None else int(cells_cap)
-    if cap > 0:
-        dims = tf.agg(
-            F.countDistinct("_id").alias("_nd"),
-            F.countDistinct("term").alias("_nt"),
-            F.count(F.lit(1)).alias("_np"),
-            F.sum(F.length("term")).alias("_tl"),
-        ).first()
-        n_docs, n_terms = int(dims["_nd"] or 0), int(dims["_nt"] or 0)
-        est_bytes = int(dims["_tl"] or 0) + 16 * int(dims["_np"] or 0)
-        if n_docs * n_terms <= cap and est_bytes <= 8 * cap:
-            return _verify_cosine_dense(need, tf, t, a_col, b_col, bc_sink)
+    if dense:
+        return _verify_cosine_dense(need, tf, t, a_col, b_col, bc_sink)
     tmap = tf.groupBy("_id").agg(
         F.map_from_entries(F.collect_list(F.struct("term", "_tf"))).alias("_m")
     )
@@ -286,7 +227,7 @@ def _verify_cosine_candidates(
         need.select(a_col, b_col, "_nsqa", "_nsqb")
         .join(ma_, a_col)
         .join(mb_, b_col)
-        .withColumn("cosine", epilogue(dot))
+        .withColumn("cosine", dot / (F.sqrt("_nsqa") * F.sqrt("_nsqb")))
         .filter(F.col("cosine") >= t)
         .select(a_col, b_col, "cosine")
     )
@@ -300,18 +241,13 @@ def _verify_cosine_dense(
     b_col: str,
     bc_sink: "list | None" = None,
 ) -> DataFrame:
-    """Dense-matrix verification arm of ``_verify_cosine_candidates``
-    (see there for the exactness argument and the ``bc_sink``
-    lifetime contract)."""
+    """Dense-matrix arm of ``_verify_cosine_candidates``.  The int64
+    einsum stays integer: unlike the Gram kernel, no < 2⁵³ gate
+    guards this path."""
     import numpy as np
 
-    spark = tf.sparkSession
-    pdf = tf.select("_id", "term", "_tf").toPandas()
-    ids = pd.Index(pdf["_id"].unique())
-    term_codes, term_uniques = pd.factorize(pdf["term"])
-    mat = np.zeros((len(ids), len(term_uniques)), dtype=np.int64)
-    mat[ids.get_indexer(pdf["_id"]), term_codes] = pdf["_tf"].to_numpy(np.int64)
-    bc = spark.sparkContext.broadcast((ids, mat))
+    ids, mat = _tf_matrix(tf)
+    bc = tf.sparkSession.sparkContext.broadcast((ids, mat))
     if bc_sink is not None:
         bc_sink.append(bc)
 
@@ -328,8 +264,7 @@ def _verify_cosine_dense(
                     "dense cosine verify: candidate id missing from the "
                     "tf matrix — the tf frame must cover every need id"
                 )
-            # exact int64 dot (order-independent), then the SAME IEEE
-            # epilogue as the JVM expression: dot / (sqrt(na)·sqrt(nb))
+            # exact int64 dot, then the same IEEE epilogue as the JVM
             dots = np.einsum("ij,ij->i", b_mat[ia], b_mat[ib])
             cos = dots.astype(np.float64) / (
                 np.sqrt(nsqa.to_numpy(np.float64))
@@ -605,137 +540,6 @@ def ngram_containment_pairs(
         doc_cached.unpersist()
 
 
-def prefix_jaccard_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    threshold: float = 0.5,
-) -> DataFrame:
-    """EXACT Jaccard-threshold set-similarity self-join via prefix
-    filtering — same output contract as ``ngram_jaccard_pairs`` with
-    NO doc-frequency cap: correct on boilerplate-heavy corpora where
-    the cap changes semantics, at a cost that stays sub-quadratic
-    because candidates come only from the globally RAREST slice of
-    each document's shingle set.
-
-    Published design (no reference-repo counterpart — the reference
-    has no dedup at all): prefix filtering per Chaudhuri, Ganti,
-    Kaushik (ICDE 2006) with the PPJoin length + positional filters
-    (Xiao, Wang, Lin, Yu, WWW 2008) in the MapReduce layout of
-    Vernica, Carey, Li (SIGMOD 2010) — token ordering by ascending
-    global document frequency, so the inverted index is built over
-    LOW-df shingles only and the hot-shingle skew that forces
-    ``ngram_jaccard_pairs``' cap never reaches the join.
-
-    Filter soundness with a float threshold: every bound below is
-    rounded in the SAFE direction (floor where the exact bound is a
-    ceiling), so prefixes are never too short and candidate filters
-    never reject a qualifying pair — at worst one extra prefix token /
-    a few extra candidates, all removed by exact verification.
-      - prefix length  p = s − floor(t·s) + 1  ≥  s − ceil(t·s) + 1
-        (the exact bound: a partner has ≥ ceil(t·s) shingles in
-        common, all partners share a token inside p);
-      - length filter  floor(t·max(sa,sb)) ≤ min(sa,sb)
-        (exact: t·max ≤ min, since J ≤ min/max);
-      - positional filter  1 + min(sa−pa, sb−pb) ≥ floor(α) with
-        α = t/(1+t)·(sa+sb)  (exact overlap requirement: ceil(α);
-        pa/pb are 1-based positions in the df-sorted full set, so
-        everything after position p contributes at most s−p overlap).
-
-    Cost shape at corpus scale: one vocabulary-sized doc-frequency
-    aggregation, one (index ⋈ df) shuffle to rank shingles, one
-    per-doc re-group (collect_list is doc-sized, bounded), a self-join
-    over the PREFIX index (rare tokens only — the skew-proof join),
-    then two pair-sized joins for exact ``array_intersect``
-    verification.  More shuffles than the capped path, but every one
-    is either vocabulary-bounded or candidate-bounded; this is the
-    price of exactness without semantic caps.  Pinned equal to
-    ``ngram_jaccard_pairs(max_doc_freq=None)`` and to a brute-force
-    reference in tests."""
-    doc_cached = df.select(
-        F.col(id_col).alias("_id"), _shingle_array(text_col, n).alias("_sh")
-    ).persist()
-    try:
-        exploded = doc_cached.select("_id", F.explode("_sh").alias("shingle"))
-        dfreq = exploded.groupBy("shingle").agg(F.count(F.lit(1)).alias("_df"))
-        # rank each doc's shingles rarest-first by (global df, hash) —
-        # any consistent global order is correct; ascending df keeps
-        # hot shingles OUT of prefixes (the skew-proofing).  Persisted:
-        # pref self-joins as a/b, and without the cache the df-join +
-        # per-doc sort lineage re-derives once per alias (r16 review;
-        # the SCALING.md join-alias lesson) — unpersisted in the
-        # nested finally, result is checkpointed before it runs
-        ranked = (
-            exploded.join(dfreq, "shingle")
-            .groupBy("_id")
-            .agg(
-                F.count(F.lit(1)).alias("_s"),
-                F.sort_array(
-                    F.collect_list(F.struct(F.col("_df"), F.col("shingle")))
-                ).alias("_ord"),
-            )
-            .persist()
-        )
-        t = float(threshold)
-        plen = F.greatest(
-            F.lit(1), F.col("_s") - F.floor(F.lit(t) * F.col("_s")).cast("int") + 1
-        )
-        pref = ranked.select(
-            "_id",
-            "_s",
-            F.posexplode(F.slice(F.transform("_ord", lambda x: x["shingle"]), 1, plen)).alias(
-                "_pos0", "shingle"
-            ),
-        ).select("_id", "_s", (F.col("_pos0") + 1).alias("_p"), "shingle")
-        a, b = pref.alias("a"), pref.alias("b")
-        alpha = F.lit(t / (1.0 + t)) * (F.col("a._s") + F.col("b._s"))
-        cand = (
-            a.join(
-                b,
-                (F.col("a.shingle") == F.col("b.shingle"))
-                & (F.col("a._id") < F.col("b._id")),
-            )
-            .filter(
-                (
-                    F.floor(F.lit(t) * F.greatest("a._s", "b._s"))
-                    <= F.least("a._s", "b._s")
-                )
-                & (
-                    1
-                    + F.least(
-                        F.col("a._s") - F.col("a._p"), F.col("b._s") - F.col("b._p")
-                    )
-                    >= F.floor(alpha)
-                )
-            )
-            .select(F.col("a._id").alias("doc_a"), F.col("b._id").alias("doc_b"))
-            .distinct()
-        )
-        sa = doc_cached.select(F.col("_id").alias("doc_a"), F.col("_sh").alias("_sha"))
-        sb = doc_cached.select(F.col("_id").alias("doc_b"), F.col("_sh").alias("_shb"))
-        inter = F.size(F.array_intersect("_sha", "_shb"))
-        out = (
-            cand.join(sa, "doc_a")
-            .join(sb, "doc_b")
-            .select(
-                "doc_a",
-                "doc_b",
-                (
-                    inter
-                    / (F.size("_sha") + F.size("_shb") - inter)
-                ).alias("jaccard"),
-            )
-            .filter(F.col("jaccard") >= threshold)
-        )
-        try:
-            return out.localCheckpoint(eager=True)
-        finally:
-            ranked.unpersist()
-    finally:
-        doc_cached.unpersist()
-
-
 def tf_cosine_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -830,76 +634,143 @@ def tf_cosine_pairs(
         tf_all.unpersist()
 
 
-def prefix_containment_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    threshold: float = 0.9,
+
+def _tag_sides(
+    name: str,
+    corpus: "DataFrame | None",
+    batch: DataFrame,
+    id_col: str,
+    cols: list,
+    threshold: float,
+    at_most: "float | None" = None,
+) -> "tuple[float, DataFrame]":
+    """Entry of every prefix-filter join: the threshold guard, the
+    disjoint-id guard (only when a ``corpus`` is given) and the
+    side-tagged union of ``cols`` — ``_side`` 0 for corpus rows, 1 for
+    batch rows; a self-join is a batch with no corpus.  Returns
+    (float threshold, tagged frame).
+
+    The threshold must be > 0 (and ≤ ``at_most`` when given):
+    candidates come only from pairs sharing a term, so zero-overlap
+    pairs are structurally unreachable and a threshold ≤ 0 would
+    silently drop them instead of returning them."""
+    t = float(threshold)
+    if at_most is not None and not 0.0 < t <= at_most:
+        raise ValueError(
+            f"{name}: threshold must be in (0, {at_most:g}] — the prefix "
+            f"bound is vacuous at t <= 0 and the metric never exceeds {at_most:g}"
+        )
+    if not t > 0.0:
+        raise ValueError(
+            f"{name}: threshold must be > 0 — zero-overlap pairs share no "
+            "term and can never be generated by the prefix join"
+        )
+    tagged = batch.select(*cols, F.lit(1).alias("_side"))
+    if corpus is None:
+        return t, tagged
+    ids = F.col(id_col)
+    if corpus.select(ids).join(batch.select(ids), id_col, "left_semi").limit(1).count():
+        raise ValueError(
+            f"{name}: corpus and new_docs share ids — pair identity would "
+            "be ambiguous; re-id the batch"
+        )
+    return t, corpus.select(*cols, F.lit(0).alias("_side")).unionByName(tagged)
+
+
+def _doc_freq(has_corpus: bool):
+    """The document-frequency aggregate that fixes a prefix join's
+    global term order (ascending df, ties by term: rarest first, so hot
+    terms stay out of prefixes — the skew-proofing).  With a corpus it
+    counts corpus rows only: the order a persisted corpus index keeps
+    for every future batch, batch-only terms ranking rarest at df 0.
+    A self-join counts every row."""
+    one = F.when(F.col("_side") == 0, F.lit(1)) if has_corpus else F.lit(1)
+    return F.count(one).alias("_df")
+
+
+def _partner(corpus_cond=None):
+    """Join condition of the symmetric arm between a probe row ``a``
+    (always batch) and an index row ``b``: a corpus partner (under
+    ``corpus_cond`` when given), or a batch partner later in id order —
+    every batch-involving unordered pair once, corpus × corpus never."""
+    corpus = F.col("b._side") == 0
+    if corpus_cond is not None:
+        corpus = corpus & corpus_cond
+    return corpus | ((F.col("b._side") == 1) & (F.col("a._id") < F.col("b._id")))
+
+
+def _set_prefix_join(
+    name: str,
+    corpus: "DataFrame | None",
+    batch: DataFrame,
+    id_col: str,
+    text_col: str,
+    n: int,
+    threshold: float,
+    out_col: str,
+    verify,
+    cand_filter,
+    role=None,
 ) -> DataFrame:
-    """EXACT containment-threshold set-similarity self-join via prefix
-    filtering — same output contract as ``ngram_containment_pairs``
-    with NO doc-frequency cap: exact excerpt/quote detection on
-    boilerplate-heavy corpora where the cap changes semantics (a
-    template shingle above the cap can BE the excerpt's evidence).
+    """Exact set-similarity join by prefix filtering: the one body of
+    ``prefix_jaccard_pairs``, ``prefix_containment_pairs`` and their
+    ``_new_pairs`` twins.  Prefix filtering per Chaudhuri, Ganti,
+    Kaushik (ICDE 2006) with the PPJoin length + positional filters
+    (Xiao, Wang, Lin, Yu, WWW 2008), in the side-tagged single-pass
+    MapReduce layout of Vernica, Carey, Li (SIGMOD 2010).
 
-    Published design: the prefix filter of Chaudhuri, Ganti, Kaushik
-    (ICDE 2006) adapted to the OVERLAP-threshold form of Vernica,
-    Carey, Li (SIGMOD 2010 §3.4's generalization), with tokens ranked
-    by ascending global document frequency.  Containment
-    |A∩B|/min(|A|,|B|) ≥ t fixes the required overlap from the SMALLER
-    set alone: o = ceil(t·s_small).  That asymmetry shapes the join:
+    Output (doc_a, doc_b, ``out_col``) with doc_a < doc_b, every pair
+    involving a batch doc (all pairs for a self-join) whose exact
+    ``verify(|A∩B|, |A|, |B|)`` ≥ threshold.  Per-metric pieces:
+    ``verify``; ``cand_filter`` over the matching rows ``a``/``b``
+    (columns _id, _side, _s = set size, _p = 1-based df rank);
+    ``role``: None for a symmetric metric, else the (a, b) condition
+    that puts a pair's prefix-indexed doc on ``a``.
 
-      - SMALL role (the indexed side): every doc emits its prefix of
-        length s − floor(t·s) + 1 over its df-sorted shingles — the
-        prefix lemma (the globally rarest element of A∩B lies within
-        it when |A∩B| ≥ ceil(t·s_small), since all of A∩B sits at or
-        after its position).
-      - LARGE role (the probe side): every doc emits its FULL
-        df-ranked postings.  No shorter probe side is sound: a
-        1-shingle doc contained in a huge one can match on ANY of the
-        huge doc's shingles, so the large side has no prefix bound —
-        this is containment's structural extra cost over Jaccard.
-      - Role assignment (a.s, a.id) < (b.s, b.id) lexicographically:
-        each unordered pair is generated exactly once, with the
-        smaller set always on the prefix side (equal sizes: either
-        role is sound, the id picks one).
+    Prefix lemma: shingles rank by one global order (``_doc_freq``);
+    if |A∩B| ≥ o then the globally first shared shingle lies within
+    each doc's first s − o + 1 positions.  Both metrics need o ≥
+    ceil(t·s) of the doc whose prefix is indexed (Jaccard: of either
+    doc, as |A∪B| ≥ both sizes; containment: of the smaller doc), so every
+    qualifying pair collides in prefix ⋈ prefix (Jaccard) or small-side
+    prefix ⋈ large-side full postings (containment: a tiny doc inside a
+    huge one can match on ANY of the huge doc's shingles).  Any one
+    consistent order is sound, which is why the corpus-df order of an
+    incremental join gives the same pairs as the union-df order of the
+    self-join over corpus ∪ batch.
 
-    Skew safety WITHOUT the cap: a hot (high-df) shingle sorts LAST,
-    so it enters small-side prefixes only for docs that consist almost
-    entirely of hot shingles; the per-shingle candidate count is
-    (prefix postings) × (full postings), and the first factor stays
-    tiny exactly where the second explodes.
+    Lossless-ward rounding: every float bound is relaxed in the safe
+    direction (floor where the exact bound is a ceiling): the prefix is
+    s − floor(t·s) + 1 ≥ s − ceil(t·s) + 1, and filters compare against
+    floors — at worst a few extra candidates, all removed by the exact
+    ``array_intersect`` verification, never a dropped pair at a 1-ulp
+    boundary.  Jaccard's length filter is floor(t·max) ≤ min (J ≤
+    min/max); the positional filter: a match at positions (pa, pb)
+    leaves at most 1 + min(sa − pa, sb − pb) overlap, which must reach
+    floor(t/(1+t)·(sa+sb)) (Jaccard) or floor(t·s_small)
+    (containment).
 
-    Positional filter (pair-wise sound, applied per matching row then
-    OR-ed by the candidate ``distinct``): a match at 1-based df-rank
-    positions (pa, pb) caps the remaining overlap at
-    1 + min(s_a − pa, s_b − pb), which must reach the requirement.
-    Float bounds round LOSSLESS-ward per the repo convention: the
-    exact requirement ceil(t·s_small) is relaxed to floor(t·s_small)
-    (never the reverse), and the prefix uses s − floor(t·s) + 1 ≥ the
-    exact s − ceil(t·s) + 1 — filters may pass a few extra candidates,
-    all removed by exact ``array_intersect`` verification, and can
-    never drop a qualifying pair at a 1-ulp boundary.
-
-    Output (doc_a, doc_b, containment) with doc_a < doc_b by id —
-    int/int double division, oracle-exact.  Pinned equal to
-    ``ngram_containment_pairs(max_doc_freq=None)``, to brute force
-    across a threshold sweep, and shown to DIFFER from the capped path
-    on a boilerplate corpus in tests."""
-    doc_cached = df.select(
-        F.col(id_col).alias("_id"), _shingle_array(text_col, n).alias("_sh")
-    ).persist()
+    Candidates: the probe side is always batch prefix rows.  A
+    symmetric metric needs one arm, prefix ⋈ prefix under
+    ``_partner``; containment joins batch prefix × full postings and
+    corpus prefix × batch full postings, both under ``role``.
+    Corpus × corpus matches are never enumerated.  Caches (the doc
+    frame and the ranked lists, each read by several subtrees) are
+    released once the result is eagerly checkpointed."""
+    t, doc = _tag_sides(
+        name, corpus, batch, id_col,
+        [F.col(id_col).alias("_id"), _shingle_array(text_col, n).alias("_sh")],
+        threshold,
+    )
+    caches = [doc.persist()]
     try:
-        exploded = doc_cached.select("_id", F.explode("_sh").alias("shingle"))
-        dfreq = exploded.groupBy("shingle").agg(F.count(F.lit(1)).alias("_df"))
-        # ranked (the expensive df-join + per-doc sort) feeds BOTH join
-        # roles (pref and full) — persist so the ranking runs once, not
-        # once per alias (the SCALING.md join-alias lesson)
+        exploded = doc.select("_id", "_side", F.explode("_sh").alias("shingle"))
+        dfreq = exploded.groupBy("shingle").agg(_doc_freq(corpus is not None))
         ranked = (
             exploded.join(dfreq, "shingle")
             .groupBy("_id")
             .agg(
+                F.min("_side").alias("_side"),
                 F.count(F.lit(1)).alias("_s"),
                 F.sort_array(
                     F.collect_list(F.struct(F.col("_df"), F.col("shingle")))
@@ -907,108 +778,106 @@ def prefix_containment_pairs(
             )
             .persist()
         )
-        try:
-            t = float(threshold)
-            # small-role prefix: s - floor(t*s) + 1 (>= the exact
-            # s - ceil(t*s) + 1 — at worst one token too long, never short)
-            plen = F.greatest(
-                F.lit(1), F.col("_s") - F.floor(F.lit(t) * F.col("_s")).cast("int") + 1
+        caches.append(ranked)
+        shingles = F.transform("_ord", lambda x: x["shingle"])
+        plen = F.greatest(
+            F.lit(1), F.col("_s") - F.floor(F.lit(t) * F.col("_s")).cast("int") + 1
+        )
+
+        def postings(side, prefix: bool, alias: str) -> DataFrame:
+            rows = ranked if side is None else ranked.filter(F.col("_side") == side)
+            arr = F.slice(shingles, 1, plen) if prefix else shingles
+            return rows.select(
+                "_id", "_side", "_s", F.posexplode(arr).alias("_pos0", "shingle")
+            ).select(
+                "_id", "_side", "_s", (F.col("_pos0") + 1).alias("_p"), "shingle"
+            ).alias(alias)
+
+        if role is None:
+            arms = [(postings(1, True, "a"), postings(None, True, "b"), _partner())]
+        else:
+            arms = [(postings(1, True, "a"), postings(None, False, "b"), role)]
+            if corpus is not None:
+                arms.append((postings(0, True, "a"), postings(1, False, "b"), role))
+        cand = None
+        for a, b, cond in arms:
+            arm = (
+                a.join(b, (F.col("a.shingle") == F.col("b.shingle")) & cond)
+                .filter(cand_filter)
+                .select(F.col("a._id").alias("_ida"), F.col("b._id").alias("_idb"))
             )
-            shingles_ranked = F.transform("_ord", lambda x: x["shingle"])
-            pref = ranked.select(
-                "_id",
-                "_s",
-                F.posexplode(F.slice(shingles_ranked, 1, plen)).alias("_pos0", "shingle"),
-            ).select("_id", "_s", (F.col("_pos0") + 1).alias("_p"), "shingle")
-            full = ranked.select(
-                "_id",
-                "_s",
-                F.posexplode(shingles_ranked).alias("_pos0", "shingle"),
-            ).select("_id", "_s", (F.col("_pos0") + 1).alias("_p"), "shingle")
-            a, b = pref.alias("a"), full.alias("b")
-            # required overlap comes from the SMALL side (a) alone,
-            # floor-relaxed losslessly
-            required = F.floor(F.lit(t) * F.col("a._s"))
-            cand = (
-                a.join(
-                    b,
-                    (F.col("a.shingle") == F.col("b.shingle"))
-                    & (
-                        (F.col("a._s") < F.col("b._s"))
-                        | (
-                            (F.col("a._s") == F.col("b._s"))
-                            & (F.col("a._id") < F.col("b._id"))
-                        )
-                    ),
-                )
-                .filter(
-                    1
-                    + F.least(
-                        F.col("a._s") - F.col("a._p"), F.col("b._s") - F.col("b._p")
-                    )
-                    >= required
-                )
-                .select(F.col("a._id").alias("_id_sm"), F.col("b._id").alias("_id_lg"))
-                .distinct()
+            cand = arm if cand is None else cand.unionByName(arm)
+        sa = doc.select(F.col("_id").alias("_ida"), F.col("_sh").alias("_sha"))
+        sb = doc.select(F.col("_id").alias("_idb"), F.col("_sh").alias("_shb"))
+        inter = F.size(F.array_intersect("_sha", "_shb"))
+        out = (
+            cand.distinct()
+            .join(sa, "_ida")
+            .join(sb, "_idb")
+            .select(
+                F.least("_ida", "_idb").alias("doc_a"),
+                F.greatest("_ida", "_idb").alias("doc_b"),
+                verify(inter, F.size("_sha"), F.size("_shb")).alias(out_col),
             )
-            sa = doc_cached.select(F.col("_id").alias("_id_sm"), F.col("_sh").alias("_sha"))
-            sb = doc_cached.select(F.col("_id").alias("_id_lg"), F.col("_sh").alias("_shb"))
-            inter = F.size(F.array_intersect("_sha", "_shb"))
-            out = (
-                cand.join(sa, "_id_sm")
-                .join(sb, "_id_lg")
-                .select(
-                    F.least("_id_sm", "_id_lg").alias("doc_a"),
-                    F.greatest("_id_sm", "_id_lg").alias("doc_b"),
-                    (inter / F.least(F.size("_sha"), F.size("_shb"))).alias(
-                        "containment"
-                    ),
-                )
-                .filter(F.col("containment") >= threshold)
-            )
-            return out.localCheckpoint(eager=True)
-        finally:
-            ranked.unpersist()
+            .filter(F.col(out_col) >= t)
+        )
+        return out.localCheckpoint(eager=True)
     finally:
-        doc_cached.unpersist()
+        for c in caches:
+            c.unpersist()
 
 
-def _ranked_by_df(docs: DataFrame, dfreq: DataFrame) -> DataFrame:
-    """Per-doc shingle list ranked by a GIVEN global document-frequency
-    order (ascending df, ties by shingle; shingles absent from
-    ``dfreq`` rank rarest at df 0) — the shared scaffolding of the
-    incremental prefix-filtered joins, where the order must come from
-    the CORPUS so the persisted corpus-side index stays valid for any
-    future batch.  Output: (_id, _s, _ord) with _ord the df-sorted
-    shingle structs.  Soundness does not depend on WHICH consistent
-    global order is used (the prefix lemma only needs one shared
-    order), so corpus-df ranking is exactly as correct as
-    union-df ranking — pinned by the differential tests."""
-    exploded = docs.select("_id", F.explode("_sh").alias("shingle"))
-    return (
-        exploded.join(dfreq, "shingle", "left")
-        .select(
-            "_id", "shingle", F.coalesce(F.col("_df"), F.lit(0)).alias("_df")
-        )
-        .groupBy("_id")
-        .agg(
-            F.count(F.lit(1)).alias("_s"),
-            F.sort_array(
-                F.collect_list(F.struct(F.col("_df"), F.col("shingle")))
-            ).alias("_ord"),
-        )
+# overlap still reachable after a match at 1-based positions (a._p, b._p)
+def _overlap_left():
+    return 1 + F.least(
+        F.col("a._s") - F.col("a._p"), F.col("b._s") - F.col("b._p")
     )
 
 
-def _positions(ranked: DataFrame, prefix_expr=None) -> DataFrame:
-    """Posexplode a ranked doc's shingles (full list, or its prefix
-    when ``prefix_expr`` gives the per-doc prefix length) into
-    (_id, _s, _p, shingle) with 1-based df-rank positions."""
-    shingles = F.transform("_ord", lambda x: x["shingle"])
-    arr = F.slice(shingles, 1, prefix_expr) if prefix_expr is not None else shingles
-    return ranked.select(
-        "_id", "_s", F.posexplode(arr).alias("_pos0", "shingle")
-    ).select("_id", "_s", (F.col("_pos0") + 1).alias("_p"), "shingle")
+def _jaccard_join(name, corpus, batch, id_col, text_col, n, threshold):
+    t = float(threshold)
+    alpha = F.lit(t / (1.0 + t)) * (F.col("a._s") + F.col("b._s"))
+    return _set_prefix_join(
+        name, corpus, batch, id_col, text_col, n, threshold, "jaccard",
+        verify=lambda inter, sa, sb: inter / (sa + sb - inter),
+        # length filter: J ≤ min/max; positional: overlap ≥ t/(1+t)·(sa+sb)
+        cand_filter=(
+            F.floor(F.lit(t) * F.greatest("a._s", "b._s")) <= F.least("a._s", "b._s")
+        )
+        & (_overlap_left() >= F.floor(alpha)),
+    )
+
+
+def _containment_join(name, corpus, batch, id_col, text_col, n, threshold):
+    t = float(threshold)
+    return _set_prefix_join(
+        name, corpus, batch, id_col, text_col, n, threshold, "containment",
+        verify=lambda inter, sa, sb: inter / F.least(sa, sb),
+        # the required overlap comes from the small (prefix) side alone
+        cand_filter=_overlap_left() >= F.floor(F.lit(t) * F.col("a._s")),
+        # (size, id) order: each pair once, the smaller set on the prefix side
+        role=(F.col("a._s") < F.col("b._s"))
+        | ((F.col("a._s") == F.col("b._s")) & (F.col("a._id") < F.col("b._id"))),
+    )
+
+
+def prefix_jaccard_pairs(
+    df: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    n: int = 3,
+    threshold: float = 0.5,
+) -> DataFrame:
+    """EXACT Jaccard-threshold self-join over word-``n``-gram shingle
+    sets: (doc_a, doc_b, jaccard) with doc_a < doc_b and jaccard ≥
+    ``threshold`` (> 0, else ValueError).  Same contract as
+    ``ngram_jaccard_pairs(max_doc_freq=None)`` with no doc-frequency
+    cap, at a sub-quadratic cost: candidates come only from each doc's
+    rarest shingles.  See ``_set_prefix_join`` for the algorithm and
+    its soundness."""
+    return _jaccard_join(
+        "prefix_jaccard_pairs", None, df, id_col, text_col, n, threshold
+    )
 
 
 def prefix_jaccard_new_pairs(
@@ -1019,121 +888,37 @@ def prefix_jaccard_new_pairs(
     n: int = 3,
     threshold: float = 0.5,
 ) -> DataFrame:
-    """Incremental EXACT Jaccard join (r16 verdict directive #8): all
-    pairs at Jaccard ≥ ``threshold`` that INVOLVE a new-batch doc —
-    (new × corpus) ∪ (new × new) — without recomputing the corpus
-    self-join.  The shape a growing corpus actually needs: the
-    corpus-side prefix index is derived once (at 100 TB, persist it
-    per corpus version like ``dedup_new_against_corpus``'s artifacts)
-    and each batch probes it with the batch's own prefixes.
-
-    Same filters and verification as ``prefix_jaccard_pairs`` (prefix
-    lemma + PPJoin length/positional filters, lossless-ward float
-    bounds, exact ``array_intersect`` verification); the ONE
-    difference is the global shingle order, which ranks by CORPUS
-    document frequency (absent shingles rank rarest at df 0) so the
-    corpus index never needs re-ranking when a batch arrives.  The
-    prefix lemma is sound under ANY one consistent order, so the
-    output is bit-equal to running the full self-join over
-    corpus ∪ batch and keeping pairs with a batch id — pinned in
-    tests.  Corpus-corpus pairs are structurally absent (no
-    corpus × corpus join exists in the plan).  Ids must be disjoint
-    across the two frames (raises otherwise — an id on both sides
-    would make pair identity ambiguous).  ``threshold`` must be > 0:
-    candidates come only from pairs sharing a shingle, so
-    zero-overlap pairs are structurally unreachable and a threshold
-    ≤ 0 would silently drop them (the tf_cosine_pairs guard's
-    reason, applied family-wide — r17 review)."""
-    if not float(threshold) > 0.0:
-        raise ValueError(
-            "prefix_jaccard_new_pairs: threshold must be > 0 — "
-            "zero-overlap pairs share no shingle and can never be "
-            "generated by the prefix join"
-        )
-    overlap = corpus.select(F.col(id_col)).join(
-        new_docs.select(F.col(id_col)), id_col, "left_semi"
+    """Incremental ``prefix_jaccard_pairs``: every pair at Jaccard ≥
+    ``threshold`` that involves a ``new_docs`` doc — (new × corpus) ∪
+    (new × new) — without the corpus self-join.  Bit-equal to the
+    self-join over corpus ∪ batch restricted to batch-involving pairs.
+    Shingles rank by CORPUS document frequency, so a corpus prefix
+    index stays valid for every future batch.  Ids must be disjoint
+    across the frames and ``threshold`` > 0 (ValueError otherwise).
+    See ``_set_prefix_join``."""
+    return _jaccard_join(
+        "prefix_jaccard_new_pairs", corpus, new_docs, id_col, text_col, n, threshold
     )
-    if overlap.limit(1).count():
-        raise ValueError(
-            "prefix_jaccard_new_pairs: corpus and new_docs share ids — "
-            "pair identity would be ambiguous; re-id the batch"
-        )
-    t = float(threshold)
-    doc_c = corpus.select(
-        F.col(id_col).alias("_id"), _shingle_array(text_col, n).alias("_sh")
-    ).persist()
-    doc_n = new_docs.select(
-        F.col(id_col).alias("_id"), _shingle_array(text_col, n).alias("_sh")
-    ).persist()
-    try:
-        dfreq = (
-            doc_c.select(F.explode("_sh").alias("shingle"))
-            .groupBy("shingle")
-            .agg(F.count(F.lit(1)).alias("_df"))
-        )
-        ranked_c = _ranked_by_df(doc_c, dfreq).persist()
-        ranked_n = _ranked_by_df(doc_n, dfreq).persist()
-        try:
-            plen = F.greatest(
-                F.lit(1),
-                F.col("_s") - F.floor(F.lit(t) * F.col("_s")).cast("int") + 1,
-            )
-            pref_c = _positions(ranked_c, plen)
-            pref_n = _positions(ranked_n, plen)
-            alpha = F.lit(t / (1.0 + t)) * (F.col("a._s") + F.col("b._s"))
-            filters = (
-                (
-                    F.floor(F.lit(t) * F.greatest("a._s", "b._s"))
-                    <= F.least("a._s", "b._s")
-                )
-                & (
-                    1
-                    + F.least(
-                        F.col("a._s") - F.col("a._p"), F.col("b._s") - F.col("b._p")
-                    )
-                    >= F.floor(alpha)
-                )
-            )
-            nc = (
-                pref_n.alias("a")
-                .join(pref_c.alias("b"), F.col("a.shingle") == F.col("b.shingle"))
-                .filter(filters)
-                .select(F.col("a._id").alias("_ida"), F.col("b._id").alias("_idb"))
-            )
-            nn = (
-                pref_n.alias("a")
-                .join(
-                    pref_n.alias("b"),
-                    (F.col("a.shingle") == F.col("b.shingle"))
-                    & (F.col("a._id") < F.col("b._id")),
-                )
-                .filter(filters)
-                .select(F.col("a._id").alias("_ida"), F.col("b._id").alias("_idb"))
-            )
-            cand = nc.unionByName(nn).distinct()
-            both = doc_c.unionByName(doc_n)
-            sa = both.select(F.col("_id").alias("_ida"), F.col("_sh").alias("_sha"))
-            sb = both.select(F.col("_id").alias("_idb"), F.col("_sh").alias("_shb"))
-            inter = F.size(F.array_intersect("_sha", "_shb"))
-            out = (
-                cand.join(sa, "_ida")
-                .join(sb, "_idb")
-                .select(
-                    F.least("_ida", "_idb").alias("doc_a"),
-                    F.greatest("_ida", "_idb").alias("doc_b"),
-                    (
-                        inter / (F.size("_sha") + F.size("_shb") - inter)
-                    ).alias("jaccard"),
-                )
-                .filter(F.col("jaccard") >= threshold)
-            )
-            return out.localCheckpoint(eager=True)
-        finally:
-            ranked_c.unpersist()
-            ranked_n.unpersist()
-    finally:
-        doc_c.unpersist()
-        doc_n.unpersist()
+
+
+def prefix_containment_pairs(
+    df: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    n: int = 3,
+    threshold: float = 0.9,
+) -> DataFrame:
+    """EXACT containment-threshold self-join, containment =
+    |A∩B| / min(|A|, |B|) — the asymmetric metric that catches an
+    excerpt inside a larger page, which Jaccard misses (Broder 1997):
+    (doc_a, doc_b, containment) with doc_a < doc_b and containment ≥
+    ``threshold`` (> 0, else ValueError).  Same contract as
+    ``ngram_containment_pairs(max_doc_freq=None)`` with no cap: a
+    template shingle above a cap can be the excerpt's evidence.  See
+    ``_set_prefix_join``."""
+    return _containment_join(
+        "prefix_containment_pairs", None, df, id_col, text_col, n, threshold
+    )
 
 
 def prefix_containment_new_pairs(
@@ -1144,341 +929,176 @@ def prefix_containment_new_pairs(
     n: int = 3,
     threshold: float = 0.9,
 ) -> DataFrame:
-    """Incremental EXACT containment join (r16 verdict directive #8):
-    all pairs at containment ≥ ``threshold`` that involve a new-batch
-    doc, without the corpus self-join.  The asymmetric roles of
-    ``prefix_containment_pairs`` (the pair's SMALLER set is the
-    indexed-prefix side, the larger probes with full postings) cross
-    the batch boundary freely — a new excerpt can sit inside an old
-    page and vice versa — so candidates come from THREE joins:
-    new-prefix × corpus-full, corpus-prefix × new-full, and
-    new-prefix × new-full, each under the lexicographic (size, id)
-    role condition that generates every unordered pair exactly once.
-    Corpus-corpus pairs are structurally absent.  Shingles rank by
-    CORPUS document frequency (the persistable index order — see
-    ``prefix_jaccard_new_pairs``); exactness is order-invariant,
-    pinned equal to the full ``prefix_containment_pairs`` over
-    corpus ∪ batch restricted to batch-involving pairs.
-    ``threshold`` must be > 0 (zero-overlap pairs are structurally
-    unreachable — the family guard)."""
-    if not float(threshold) > 0.0:
-        raise ValueError(
-            "prefix_containment_new_pairs: threshold must be > 0 — "
-            "zero-overlap pairs share no shingle and can never be "
-            "generated by the prefix join"
-        )
-    overlap = corpus.select(F.col(id_col)).join(
-        new_docs.select(F.col(id_col)), id_col, "left_semi"
+    """Incremental ``prefix_containment_pairs``: every pair at
+    containment ≥ ``threshold`` that involves a ``new_docs`` doc, in
+    either role — a new excerpt inside an old page and an old excerpt
+    inside a new page are both found.  Bit-equal to the self-join over
+    corpus ∪ batch restricted to batch-involving pairs; corpus-df term
+    order; ids must be disjoint and ``threshold`` > 0 (ValueError
+    otherwise).  See ``_set_prefix_join``."""
+    return _containment_join(
+        "prefix_containment_new_pairs", corpus, new_docs, id_col, text_col, n, threshold
     )
-    if overlap.limit(1).count():
-        raise ValueError(
-            "prefix_containment_new_pairs: corpus and new_docs share ids — "
-            "pair identity would be ambiguous; re-id the batch"
-        )
-    t = float(threshold)
-    doc_c = corpus.select(
-        F.col(id_col).alias("_id"), _shingle_array(text_col, n).alias("_sh")
-    ).persist()
-    doc_n = new_docs.select(
-        F.col(id_col).alias("_id"), _shingle_array(text_col, n).alias("_sh")
-    ).persist()
-    try:
-        dfreq = (
-            doc_c.select(F.explode("_sh").alias("shingle"))
-            .groupBy("shingle")
-            .agg(F.count(F.lit(1)).alias("_df"))
-        )
-        ranked_c = _ranked_by_df(doc_c, dfreq).persist()
-        ranked_n = _ranked_by_df(doc_n, dfreq).persist()
-        try:
-            plen = F.greatest(
-                F.lit(1),
-                F.col("_s") - F.floor(F.lit(t) * F.col("_s")).cast("int") + 1,
-            )
-            pref_c, pref_n = _positions(ranked_c, plen), _positions(ranked_n, plen)
-            full_c, full_n = _positions(ranked_c), _positions(ranked_n)
-            role = (F.col("a._s") < F.col("b._s")) | (
-                (F.col("a._s") == F.col("b._s")) & (F.col("a._id") < F.col("b._id"))
-            )
-            required = F.floor(F.lit(t) * F.col("a._s"))
-            posf = (
-                1
-                + F.least(
-                    F.col("a._s") - F.col("a._p"), F.col("b._s") - F.col("b._p")
-                )
-                >= required
-            )
-
-            def cands(pref, full):
-                return (
-                    pref.alias("a")
-                    .join(
-                        full.alias("b"),
-                        (F.col("a.shingle") == F.col("b.shingle")) & role,
-                    )
-                    .filter(posf)
-                    .select(
-                        F.col("a._id").alias("_id_sm"), F.col("b._id").alias("_id_lg")
-                    )
-                )
-
-            cand = (
-                cands(pref_n, full_c)
-                .unionByName(cands(pref_c, full_n))
-                .unionByName(cands(pref_n, full_n))
-                .distinct()
-            )
-            both = doc_c.unionByName(doc_n)
-            sa = both.select(F.col("_id").alias("_id_sm"), F.col("_sh").alias("_sha"))
-            sb = both.select(F.col("_id").alias("_id_lg"), F.col("_sh").alias("_shb"))
-            inter = F.size(F.array_intersect("_sha", "_shb"))
-            out = (
-                cand.join(sa, "_id_sm")
-                .join(sb, "_id_lg")
-                .select(
-                    F.least("_id_sm", "_id_lg").alias("doc_a"),
-                    F.greatest("_id_sm", "_id_lg").alias("doc_b"),
-                    (inter / F.least(F.size("_sha"), F.size("_shb"))).alias(
-                        "containment"
-                    ),
-                )
-                .filter(F.col("containment") >= threshold)
-            )
-            return out.localCheckpoint(eager=True)
-        finally:
-            ranked_c.unpersist()
-            ranked_n.unpersist()
-    finally:
-        doc_c.unpersist()
-        doc_n.unpersist()
 
 
-def cosine_prefix_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    threshold: float = 0.8,
-    dense_verify_cells_cap: "int | None" = None,
+def _cosine_prefix_join(
+    name: str,
+    corpus: "DataFrame | None",
+    batch: DataFrame,
+    id_col: str,
+    text_col: str,
+    threshold: float,
+    dense_verify_cells_cap: "int | None",
 ) -> DataFrame:
-    """EXACT weighted-cosine all-pairs similarity join with NO
-    vocabulary cap (r16 verdict directive #2) — same output contract
-    as ``tf_cosine_pairs(max_doc_freq=None)`` at a cost that stays
-    candidate-bounded, because candidates come only from each vector's
-    PREFIX under the Bayardo bound instead of every shared term.
-    ``tf_cosine_pairs`` uncapped self-joins every corpus-wide
-    stopword's full posting list (the quadratic the Jaccard and
-    containment family members already solved with prefix filters);
-    this is the published answer for the weighted metric: Bayardo, Ma,
-    Srikant, "Scaling Up All Pairs Similarity Search", WWW 2007 —
-    index each vector's minimal prefix such that the SUFFIX's maximum
-    possible contribution to any cosine stays below the threshold.
+    """Exact weighted-cosine all-pairs join over term-frequency
+    vectors: the one body of ``cosine_prefix_pairs`` (a batch with no
+    corpus) and ``cosine_prefix_new_pairs``.  All-pairs prefix bounds
+    per Bayardo, Ma, Srikant (WWW 2007), candidate-time bounds per
+    L2AP (Anastasiu & Karypis, ICDE 2014), in the side-tagged layout
+    of ``_set_prefix_join``.  Output (doc_a, doc_b, cosine), doc_a <
+    doc_b, every batch-involving pair with cosine ≥ threshold.
 
-    Soundness (symmetric prefix form): terms are ranked by one global
-    order (ascending document frequency, ties by term — rarest first,
-    the family convention).  For the normalized vector x̂ = tf/‖tf‖
-    and a suffix S (everything after the prefix), TWO sound upper
-    bounds on S's possible contribution to any cos(x, y):
+    Exact values: dot = Σ tf_a·tf_b and the squared norms are exact
+    longs; the only float ops are two correctly-rounded sqrts, one
+    multiply and one divide, dot / (√nsq_a·√nsq_b) — the same IEEE
+    expression tree on every path here and in the oracle.
 
-      - Cauchy–Schwarz:  Σ_{i∈S} x̂_i·ŷ_i ≤ ‖x̂_S‖·‖ŷ‖ = ‖x̂_S‖
-        = sqrt(tail_sq / nsq)  with integer tail_sq = Σ_{i∈S} tf_i²;
-      - Bayardo's b(x):  Σ_{i∈S} x̂_i·ŷ_i ≤ Σ_{i∈S} x̂_i·maxw(i)
-        where maxw(i) = max over the corpus of ŷ_i (one
-        vocabulary-sized aggregate).
+    Identity collapse: docs with identical tf vectors (md5 of the
+    sorted (term, tf) JSON) collapse to one representative per
+    (side, fingerprint) — reps stay side-pure, so a corpus index is
+    corpus rows only.  Equal vectors share every dot and norm, so a
+    cross pair reuses its rep pair's cosine verbatim, and a
+    same-fingerprint pair gets nsq/(√nsq·√nsq) under the threshold
+    filter — not a literal 1.0, which at t = 1.0 can differ from the
+    oracle's identical expression.  A g-clone group costs g²
+    expansion rows instead of inflating every posting list by g.
 
-    If EITHER bound is < t, no qualifying pair can meet only in S.
-    Both bounds decrease along the order, so the kept positions are a
-    contiguous head (a true prefix).  Let i* be the globally-first
-    SHARED term of a qualifying pair (x, y): if i* were outside x's
-    prefix, every shared term would sit in x's suffix and cos(x, y)
-    would be under a failing bound — contradiction; symmetrically for
-    y.  So every qualifying pair collides inside prefix ⋈ prefix.
+    Prefix rule, per side: terms rank by ``_doc_freq``; x̂ = tf/‖tf‖.
+    A suffix S may be skipped when a bound on its contribution to any
+    cos(x, y) is < t.  Cauchy–Schwarz, Σ_S x̂·ŷ ≤ sqrt(tail_sq/nsq),
+    is partner-free: corpus prefixes use it alone, so they stay valid
+    against any future batch.  Batch prefixes also use Bayardo's
+    Σ_S x̂_i·maxw(i), maxw(i) = max over corpus ∪ batch of ŷ_i.  Both
+    bounds fall along the order, so each kept set is a true prefix,
+    and a qualifying pair's first shared term lies in both prefixes
+    (else every shared term sits in a suffix under a failing bound).
+    Float bounds are relaxed multiplicatively — dropped only below
+    t·(1 − 1e-9) — because long·long products can pass 2⁵³ where the
+    set join's floor() trick loses precision.
 
-    Positional filter (pair-wise sound, OR-ed by the candidate
-    ``distinct``): at the first shared term's 1-based positions
-    (pa, pb), all shared terms lie in both tails, so
-    cos ≤ sqrt(tail_a/nsq_a)·sqrt(tail_b/nsq_b), i.e. candidates need
-    tail_a·tail_b ≥ t²·nsq_a·nsq_b.
+    Candidates (one ``_partner`` arm over prefix ⋈ prefix, corpus
+    partners only at an unequal fingerprint) group per pair into the
+    exact partial dot over shared prefix terms, the first match's tail
+    product (positional filter: tail_a·tail_b ≥ t²·nsq_a·nsq_b) and
+    the tails strictly after the last match (L2AP: pdot +
+    sqrt(ta·tb) ≥ t·‖a‖·‖b‖).  Tails fall on both sides, so these are
+    separable min/max/sum aggregates.  Both tails-after zero means
+    pdot is the dot (no verification); other survivors verify in
+    ``_verify_cosine_candidates``.
 
-    Float-bound convention (the lossless-ward rounding rule, adapted):
-    the integer-vs-float comparisons here multiply two longs whose
-    product can pass 2⁵³, where the repo's floor() trick loses integer
-    precision — so instead every exclusion threshold is relaxed
-    multiplicatively: a position/candidate is dropped only when its
-    bound < t·(1 − 1e-9) (respectively t²·(1 − 1e-9)).  Double
-    arithmetic is correct to ~2⁻⁵³ ≈ 1e-16 relative, so a true
-    ≥-threshold value can never appear below the relaxed cutoff; at
-    worst a few extra candidates survive to exact verification.
-
-    Verification is the family's integer path: Σ tf_a·tf_b and the
-    squared norms are exact longs, the only float ops are two
-    correctly-rounded sqrts, one multiply, one divide — bit-exact vs
-    the oracle, no rounding.  Output (doc_a, doc_b, cosine) with
-    doc_a < doc_b and cosine ≥ threshold.  Pinned equal to
-    ``tf_cosine_pairs(max_doc_freq=None)`` and brute force across a
-    threshold sweep, and shown to differ from the capped path on a
-    stopword-heavy corpus, in tests.
-
-    Verification (r17 verdict #2 — the stage that dominated at 28.3 s
-    per the r17 bench decomposition, ~199 M shared-term join rows on
-    the sf0.1 fixture's 31-term vocabulary): three L2AP-derived pieces
-    (Anastasiu & Karypis, "L2AP: fast cosine similarity search with
-    prefix L-2 norm bounds", ICDE 2014 — the candidate-time
-    partial-dot + suffix-norm machinery, restated for a declarative
-    engine where per-pair early termination can't exist but per-pair
-    BOUNDS can):
-
-    1. Candidate generation GROUP-BYs the prefix⋈prefix matches
-       (replacing a distinct), accumulating per pair the exact-long
-       partial dot ``pdot`` over shared prefix terms plus the tails
-       strictly after the LAST shared prefix term.  Every shared term
-       not in ``pdot`` has global rank > min(prefix boundaries) ≥ the
-       last match's rank, so it lives in both tails-after and
-       Cauchy–Schwarz caps its total contribution by
-       sqrt(ta_after·tb_after); a pair with pdot +
-       sqrt(ta_after·tb_after) < t·(1−1e-9)·‖a‖·‖b‖ can never qualify.
-       All statistics are SEPARABLE scalar aggregates (tails decrease
-       along the order on both sides, so first-match products are
-       max() and last-match tails are per-side min()s that co-occur).
-    2. Exact-complete split: both tails-after ZERO (integer compare)
-       means no uncounted term exists — pdot IS the dot and the pair
-       skips verification (fires for short docs whose prefix is the
-       whole vector).
-    3. Survivors verify against per-doc term MAPS zipped in-row
-       (L2AP's forward file restated: ``map_zip_with`` unions keys
-       hash-based, O(|a|+|b|) per pair) — same exact-long dot, no
-       199 M-row explode.  The map table is semi-joined to candidate
-       docs first, which keeps the join self-balancing: flat
-       vocabulary → many candidates but vocabulary-bounded maps and a
-       tiny doc table (2.5 MB at sf0.1 — AQE broadcasts it, no
-       shuffle ever carries a map); Zipf vocabulary → few candidates
-       shrink the map table to the docs they touch.
-
-    Measured on the sf0.1 fixture (SCALING.md r18 entry): the corpus
-    is adversarial for EVERY published candidate bound — 31 distinct
-    terms make candidates ≈ all pairs (11.89 M of 12.46 M possible;
-    the positional filter passes 11.77 M, +L2AP passes 10.57 M — a
-    10.2% prune where the L2AP paper's Zipfian corpora see orders of
-    magnitude) — so the win here came from the verification rewrite:
-    33.1 s → 21.8 s warm same-box (0.66×; identical 1777 output rows
-    — the full stash-A/B is recorded in the SCALING.md r18 entry).
-    On Zipfian vocabularies the same bounds prune sharply (the
-    threshold-sweep tests include a Zipf corpus).
-
-    Identity collapse (the r17 10× sweep's catch — clone-heavy corpora
-    OOM'd the candidate join the same way the edit join's hot-gram
-    postings did in r16): docs with IDENTICAL tf vectors (exact dups
-    and count-preserving reorderings — exactly what near-dup corpora
-    are full of) are collapsed to one representative per vector
-    fingerprint before the join, and pairs are expanded afterward.
-    Exact by construction: equal vectors share every dot/norm, so
-    every expanded pair's cosine is the SAME IEEE expression the
-    direct join would produce — intra-group pairs get
-    nsq/(sqrt(nsq)·sqrt(nsq)) (NOT a literal 1.0: at t = 1.0 that
-    expression can round a hair below one, and the oracle computes the
-    identical expression, so both engines keep or drop the pair
-    together), cross pairs reuse the representative pair's value
-    verbatim.  A g-clone group costs g² expansion rows instead of
-    inflating every posting list and verification join by g."""
-    if not 0.0 < float(threshold) <= 1.0:
-        raise ValueError(
-            "cosine_prefix_pairs: threshold must be in (0, 1] — the "
-            "prefix bound is vacuous at t <= 0 and cosine never exceeds 1"
-        )
+    Dense regimes, decided by one gate aggregate over the rep tf
+    (n_reps·n_terms ≤ cap and the collected bytes ≤ 8·cap): the dense
+    verify arm, and — when n_reps²·n_terms ≤ _DENSE_GRAM_FLOPS_CAP —
+    no prefix machinery at all: ``_dense_all_pairs_gram`` takes every
+    qualifying rep pair from block Gram products in float64 BLAS.
+    Every accumulated value is an integer ≤ max ‖tf‖², and the kernel
+    declines (the prefix path runs) unless that is < 2⁵³, so each
+    partial sum is exact and the product equals the long dot.
+    ``dense_verify_cells_cap=0`` forces the prefix path with map
+    verification."""
     from pyspark.sql import Window
 
-    t = float(threshold)
+    has_c = corpus is not None
+    t, tagged = _tag_sides(
+        name, corpus, batch, id_col,
+        [F.col(id_col).alias("_id"), F.explode(tokens(text_col)).alias("term")],
+        threshold, at_most=1.0,
+    )
     t_relaxed = t * (1.0 - 1e-9)
     tsq_relaxed = t * t * (1.0 - 1e-9)
     tf_all = (
-        df.select(F.col(id_col).alias("_id"), F.explode(tokens(text_col)).alias("term"))
-        .groupBy("_id", "term")
+        tagged.groupBy("_id", "_side", "term")
         .agg(F.count(F.lit(1)).alias("_tf"))
         .persist()
     )
-    # identity collapse: one representative per exact tf-vector
-    # fingerprint (md5 over the sorted (term, tf) structs — 128-bit,
-    # JSON-encoded so no delimiter can collide)
-    vecfp = tf_all.groupBy("_id").agg(
-        F.md5(
-            F.to_json(F.sort_array(F.collect_list(F.struct("term", "_tf"))))
-        ).alias("_fp"),
-        F.sum(F.col("_tf") * F.col("_tf")).alias("_vnsq"),
-    )
-    groups = vecfp.groupBy("_fp").agg(
-        F.min("_id").alias("_rep"),
-        F.count(F.lit(1)).alias("_g"),
-        F.min("_vnsq").alias("_gnsq"),
-    )
-    members = (
-        vecfp.join(groups.select("_fp", "_rep"), "_fp")
-        .select("_id", "_rep")
-        .persist()
-    )
-    tf = tf_all.join(
-        members.filter(F.col("_id") == F.col("_rep")).select("_id"),
-        "_id",
-        "left_semi",
-    ).persist()
+    caches = [tf_all]
+    bc_sink: list = []
     try:
-        bc_sink: list = []
+        vecfp = tf_all.groupBy("_id").agg(
+            F.min("_side").alias("_side"),
+            F.md5(
+                F.to_json(F.sort_array(F.collect_list(F.struct("term", "_tf"))))
+            ).alias("_fp"),
+            F.sum(F.col("_tf") * F.col("_tf")).alias("_vnsq"),
+        )
+        groups = vecfp.groupBy("_side", "_fp").agg(
+            F.min("_id").alias("_rep"),
+            F.count(F.lit(1)).alias("_g"),
+            F.min("_vnsq").alias("_gnsq"),
+        )
+        members = (
+            vecfp.join(groups.select("_side", "_fp", "_rep"), ["_side", "_fp"])
+            .select("_side", "_fp", "_id", "_rep")
+            .persist()
+        )
+        tf = tf_all.join(
+            members.filter(F.col("_id") == F.col("_rep")).select("_id"),
+            "_id",
+            "left_semi",
+        ).persist()
+        caches += [members, tf]
+        tf3 = tf.select("_id", "term", "_tf")
 
         def _expand(rep_pairs: DataFrame) -> DataFrame:
-            # expansion: every member pair across two matched rep
-            # groups carries the representatives' cosine verbatim...
-            ma = members.select(
-                F.col("_rep").alias("doc_a"), F.col("_id").alias("_ida")
-            )
-            mb = members.select(
-                F.col("_rep").alias("doc_b"), F.col("_id").alias("_idb")
-            )
+            # (_ida batch rep, _idb any rep, cosine) → member pairs
+            mem_n = members.filter(F.col("_side") == 1)
             cross = (
-                rep_pairs.join(ma, "doc_a")
-                .join(mb, "doc_b")
+                rep_pairs.join(
+                    mem_n.select(F.col("_rep").alias("_ida"), F.col("_id").alias("_xa")),
+                    "_ida",
+                )
+                .join(
+                    members.select(F.col("_rep").alias("_idb"), F.col("_id").alias("_xb")),
+                    "_idb",
+                )
                 .select(
-                    F.least("_ida", "_idb").alias("doc_a"),
-                    F.greatest("_ida", "_idb").alias("doc_b"),
+                    F.least("_xa", "_xb").alias("doc_a"),
+                    F.greatest("_xa", "_xb").alias("doc_b"),
                     "cosine",
                 )
             )
-            # ...and intra-group pairs get the identical-vector
-            # expression nsq/(sqrt(nsq)·sqrt(nsq)) under the same
-            # threshold filter the oracle applies
-            g2 = groups.filter(F.col("_g") >= 2).select("_rep", "_gnsq")
-            i1 = members.join(g2, "_rep").select(
-                "_rep", F.col("_id").alias("_ida"), "_gnsq"
+            # same-fingerprint pairs involving a batch member
+            bm = mem_n.select("_fp", F.col("_id").alias("_xa")).join(
+                groups.filter(F.col("_side") == 1).select("_fp", "_gnsq"), "_fp"
             )
-            i2 = members.select("_rep", F.col("_id").alias("_idb"))
+            intra = bm.join(
+                mem_n.select("_fp", F.col("_id").alias("_xb")), "_fp"
+            ).filter(F.col("_xa") < F.col("_xb"))
+            if has_c:
+                intra = intra.unionByName(
+                    bm.join(
+                        members.filter(F.col("_side") == 0).select(
+                            "_fp", F.col("_id").alias("_xb")
+                        ),
+                        "_fp",
+                    )
+                )
             intra = (
-                i1.join(i2, "_rep")
-                .filter(F.col("_ida") < F.col("_idb"))
-                .withColumn(
-                    "cosine",
-                    F.col("_gnsq") / (F.sqrt("_gnsq") * F.sqrt("_gnsq")),
+                intra.withColumn(
+                    "cosine", F.col("_gnsq") / (F.sqrt("_gnsq") * F.sqrt("_gnsq"))
                 )
-                .filter(F.col("cosine") >= threshold)
+                .filter(F.col("cosine") >= t)
                 .select(
-                    F.col("_ida").alias("doc_a"),
-                    F.col("_idb").alias("doc_b"),
+                    F.least("_xa", "_xb").alias("doc_a"),
+                    F.greatest("_xa", "_xb").alias("doc_b"),
                     "cosine",
                 )
             )
-            # localCheckpoint is EAGER, so every cache/broadcast the
-            # lineage needed is safe to drop once this returns
             return cross.unionByName(intra).localCheckpoint(eager=True)
 
-        # Dense ALL-PAIRS regime (r19 — see _DENSE_GRAM_FLOPS_CAP):
-        # when the collapsed reps' tf matrix passes the dense gate AND
-        # the full Gram product is cheap, every qualifying rep pair
-        # comes straight from block-wise exact Gram products and the
-        # prefix/candidate machinery below never runs.  Same gate
-        # aggregate the dense VERIFY arm costs; one extra integer
-        # comparison buys skipping the 38.7 M-row candidate join in
-        # the flat-vocabulary regime where its bounds prune ~10%.
-        cap = (
-            _DENSE_VERIFY_CELLS_CAP
-            if dense_verify_cells_cap is None
-            else int(dense_verify_cells_cap)
-        )
+        cap = dense_verify_cells_cap
+        cap = _DENSE_VERIFY_CELLS_CAP if cap is None else int(cap)
+        dense = gram = False
         if cap > 0:
             dims = tf.agg(
                 F.countDistinct("_id").alias("_nd"),
@@ -1488,503 +1108,22 @@ def cosine_prefix_pairs(
             ).first()
             n_docs, n_terms = int(dims["_nd"] or 0), int(dims["_nt"] or 0)
             est_bytes = int(dims["_tl"] or 0) + 16 * int(dims["_np"] or 0)
-            if (
-                n_docs * n_terms <= cap
-                and est_bytes <= 8 * cap
-                and n_docs * n_docs * n_terms <= _DENSE_GRAM_FLOPS_CAP
-            ):
-                gram = _dense_all_pairs_gram(
-                    tf, threshold, "doc_a", "doc_b", bc_sink
-                )
-                if gram is not None:
-                    try:
-                        return _expand(gram)
-                    finally:
-                        for _bc in bc_sink:
-                            _bc.destroy()
+            dense = n_docs * n_terms <= cap and est_bytes <= 8 * cap
+            gram = dense and n_docs * n_docs * n_terms <= _DENSE_GRAM_FLOPS_CAP
+        reps = groups.select(F.col("_rep").alias("_id"), "_side", "_fp")
+        if gram:
+            pairs = _dense_all_pairs_gram(
+                tf3, t, "_ida", "_idb", bc_sink, rep_meta=reps if has_c else None
+            )
+            if pairs is not None:
+                return _expand(pairs)
         norms = tf.groupBy("_id").agg(F.sum(F.col("_tf") * F.col("_tf")).alias("_nsq"))
         withn = tf.join(norms, "_id")
-        # vocabulary-sized aggregates: document frequency (the global
-        # rank) and Bayardo's maxweight maxw(i) = max_y ŷ_i
         stats = withn.groupBy("term").agg(
-            F.count(F.lit(1)).alias("_df"),
-            F.max(F.col("_tf") / F.sqrt("_nsq")).alias("_maxw"),
+            _doc_freq(has_c), F.max(F.col("_tf") / F.sqrt("_nsq")).alias("_maxw")
         )
         ranked = (
             withn.join(stats, "term")
-            .groupBy("_id")
-            .agg(
-                F.min("_nsq").alias("_nsq"),
-                F.sort_array(
-                    F.collect_list(F.struct("_df", "term", "_tf", "_maxw"))
-                ).alias("_ord"),
-            )
-        )
-        pos = ranked.select(
-            "_id",
-            "_nsq",
-            F.posexplode("_ord").alias("_pos0", "_e"),
-        )
-        # suffix-inclusive running sums along the global order: the
-        # window partitions on _id, which the groupBy above already
-        # hash-distributed — no extra exchange
-        w = (
-            Window.partitionBy("_id")
-            .orderBy("_pos0")
-            .rowsBetween(Window.currentRow, Window.unboundedFollowing)
-        )
-        scanned = pos.select(
-            "_id",
-            "_nsq",
-            F.col("_e.term").alias("term"),
-            F.col("_e._df").alias("_df"),
-            F.col("_e._tf").alias("_tf"),
-            F.sum(F.col("_e._tf") * F.col("_e._tf")).over(w).alias("_tail"),
-            F.sum(
-                (F.col("_e._tf") / F.sqrt("_nsq")) * F.col("_e._maxw")
-            ).over(w).alias("_bsum"),
-        )
-        # prefix = positions where NEITHER bound certifies the suffix
-        # skippable (both decrease along the order → contiguous head).
-        # Persisted: it self-joins as a/b, and without the cache the
-        # stats-join + window lineage re-derives once per alias (the
-        # SCALING.md join-alias lesson)
-        pref = (
-            scanned.filter(
-                (F.col("_tail") >= F.lit(tsq_relaxed) * F.col("_nsq"))
-                & (F.col("_bsum") >= F.lit(t_relaxed))
-            )
-            .select("_id", "_nsq", "term", "_df", "_tf", "_tail")
-            .persist()
-        )
-        cand_cache = None
-        try:
-            a, b = pref.alias("a"), pref.alias("b")
-            # Candidate generation is a GROUP-BY over the prefix⋈prefix
-            # matches (replacing the former distinct), accumulating the
-            # L2AP-style sufficient statistics per pair (r17 verdict
-            # #2; Anastasiu & Karypis, "L2AP: fast cosine similarity
-            # search with prefix L-2 norm bounds", ICDE 2014 — the
-            # candidate-time partial-dot + suffix-norm machinery,
-            # restated for a declarative engine where per-pair early
-            # termination can't exist but per-pair BOUNDS can):
-            #   - _pdot  = Σ tf_a·tf_b over the shared PREFIX terms
-            #     (exact long — the accumulated dot L2AP carries);
-            #   - first (min-rank) match → the positional-filter tails
-            #     (tails decrease along the order, so filtering the
-            #     first match ≡ the former OR-over-matches semantics);
-            #   - last (max-rank) match → the suffix tails STRICTLY
-            #     AFTER it (tail − tf² on each side).
-            # Every shared term NOT counted in _pdot has global rank
-            # > min(prefix boundaries) ≥ the last match's rank, hence
-            # lives in BOTH tails-after, and Cauchy–Schwarz caps its
-            # total contribution by sqrt(ta_after·tb_after).  A
-            # candidate with _pdot + sqrt(ta_after·tb_after)
-            # < t·(1−1e-9)·‖a‖·‖b‖ can never qualify — the bound that
-            # prunes DURING verification instead of only at prefix
-            # build.  (min/max structs order by (_df, term) = the
-            # global rank; the payload fields ride along and are never
-            # consulted because the rank is unique within a pair.)
-            # Every per-pair statistic reduces to SEPARABLE scalar
-            # min/max/sum aggregates — no struct ordering needed:
-            # tails decrease along the global order on BOTH sides, so
-            # the first match carries max(tail_a·tail_b) and the last
-            # match carries min(tail_after) on each side SIMULTANEOUSLY
-            # (the per-side minima co-occur at the last match).  Scalar
-            # rows keep the 38.7 M-row (sf0.1) pre-agg shuffle thin.
-            matched = a.join(
-                b,
-                (F.col("a.term") == F.col("b.term"))
-                & (F.col("a._id") < F.col("b._id")),
-            ).select(
-                F.col("a._id").alias("doc_a"),
-                F.col("b._id").alias("doc_b"),
-                F.col("a._nsq").alias("_nsqa"),
-                F.col("b._nsq").alias("_nsqb"),
-                (F.col("a._tf") * F.col("b._tf")).alias("_pp"),
-                # double on BOTH sides: long*long would evaluate in
-                # int64 and wrap negative once tail_a*tail_b passes
-                # 2^63 (nsq ~3e9 each — a stopword-saturated doc),
-                # silently dropping a qualifying pair (r17 review);
-                # double rounding is covered by the (1-1e-9) slack
-                (F.col("a._tail").cast("double") * F.col("b._tail")).alias(
-                    "_fprod"
-                ),
-                (F.col("a._tail") - F.col("a._tf") * F.col("a._tf")).alias(
-                    "_taa"
-                ),
-                (F.col("b._tail") - F.col("b._tf") * F.col("b._tf")).alias(
-                    "_tab"
-                ),
-            )
-            g = matched.groupBy("doc_a", "doc_b").agg(
-                F.min("_nsqa").alias("_nsqa"),
-                F.min("_nsqb").alias("_nsqb"),
-                F.sum("_pp").alias("_pdot"),
-                F.max("_fprod").alias("_fprod"),
-                F.min("_taa").alias("_lta"),
-                F.min("_tab").alias("_ltb"),
-            )
-            cand = g.filter(
-                # positional filter at the first shared term
-                (
-                    F.col("_fprod")
-                    >= F.lit(tsq_relaxed) * F.col("_nsqa") * F.col("_nsqb")
-                )
-                # L2AP partial-dot bound at the last shared prefix term
-                & (
-                    F.col("_pdot").cast("double")
-                    + F.sqrt(F.col("_lta").cast("double") * F.col("_ltb"))
-                    >= F.lit(t_relaxed)
-                    * F.sqrt(F.col("_nsqa").cast("double") * F.col("_nsqb"))
-                )
-            )
-            # Exact-complete split: when BOTH tails-after are zero
-            # (integer compare — exact) the uncounted-term set is
-            # empty, _pdot IS the full dot, and the pair needs no
-            # verification at all.
-            done = (F.col("_lta") == 0) & (F.col("_ltb") == 0)
-            epilogue = lambda dot: (  # noqa: E731 — ONE IEEE epilogue
-                dot / (F.sqrt("_nsqa") * F.sqrt("_nsqb"))
-            )
-            exact_done = (
-                cand.filter(done)
-                .withColumn("cosine", epilogue(F.col("_pdot")))
-                .filter(F.col("cosine") >= threshold)
-                .select("doc_a", "doc_b", "cosine")
-            )
-            # Survivors verify through _verify_cosine_candidates (the
-            # shared helper, r18 optimization round): a dense numpy
-            # gather+einsum per Arrow batch when the collapsed reps'
-            # tf matrix fits the broadcast cap — profiled 19.8 s → ~2 s
-            # on the sf0.1 flat-vocabulary fixture's 10.57 M candidates
-            # — with L2AP's forward-index map_zip_with join as the
-            # self-balancing fallback for the Zipf/large-vocabulary
-            # regime (few candidates, many reps).  Both arms produce
-            # the identical exact-long dot and the identical IEEE
-            # epilogue (pinned by test).
-            cand = cand_cache = cand.persist()
-            need = cand.filter(~done)
-            verified = _verify_cosine_candidates(
-                need, tf, threshold, "doc_a", "doc_b",
-                cells_cap=dense_verify_cells_cap, bc_sink=bc_sink,
-            )
-            return _expand(exact_done.unionByName(verified))
-        finally:
-            pref.unpersist()
-            if cand_cache is not None:
-                cand_cache.unpersist()
-            # the eager checkpoint above already materialized every
-            # row that needed the dense matrix — destroying the
-            # broadcast here stops it leaking for the session's life
-            # (r18 advisory)
-            for _bc in bc_sink:
-                _bc.destroy()
-    finally:
-        tf.unpersist()
-        members.unpersist()
-        tf_all.unpersist()
-
-
-def cosine_prefix_new_pairs(
-    corpus: DataFrame,
-    new_docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    threshold: float = 0.8,
-    dense_verify_cells_cap: "int | None" = None,
-) -> DataFrame:
-    """Incremental EXACT tf-cosine join (r17 verdict #3): all pairs at
-    cosine ≥ ``threshold`` that INVOLVE a new-batch doc — (new ×
-    corpus) ∪ (new × new) — without the corpus self-join, completing
-    the incremental family Jaccard/containment opened (dedup.py
-    prefix_*_new_pairs).  Output (doc_a, doc_b, cosine), bit-exact vs
-    the full ``cosine_prefix_pairs`` over corpus ∪ batch restricted to
-    batch-involving pairs (pinned in tests).
-
-    The design decision the weighted metric forces (and the set-based
-    twins never faced): Bayardo's maxweight bound b(x) quantifies over
-    the PARTNER's weights (Σ_suffix x̂ᵢ·maxw(i), maxw(i) = max_y ŷᵢ),
-    so a corpus-side prefix built with corpus-only maxw is UNSOUND the
-    moment a new batch carries a heavier ŷᵢ — the bound could certify
-    a suffix skippable that a batch doc then reaches into.  The split
-    that keeps the index persistable:
-
-    - CORPUS-side prefixes use the Cauchy–Schwarz ℓ²-tail bound ONLY
-      (sqrt(tail/nsq) < t ⇒ suffix unreachable) — partner-FREE, hence
-      valid against every future batch forever: (term order = corpus
-      df, per-term df + maxw, per-doc CS prefixes) is the frozen,
-      persistable index artifact, slightly longer prefixes being the
-      price of immortality;
-    - BATCH-side prefixes, recomputed per probe anyway, tighten with
-      the maxweight bound over maxw_union(i) = max(frozen corpus
-      maxw(i), batch maxw(i)) — sound against corpus AND batch
-      partners, and the batch-side statistics cost one pass over the
-      (small) batch.
-
-    Soundness of prefix ⋈ prefix under per-side rules: each side's
-    prefix is individually sound against every possible partner, so a
-    qualifying pair's globally-first shared term lies in BOTH prefixes
-    (the usual contradiction argument per side).  Global term order =
-    (corpus df asc, term), corpus-absent terms df 0 — any ONE
-    consistent order works (the ``_ranked_by_df`` lemma), and tails
-    decrease along it on both sides, so the positional filter and the
-    L2AP partial-dot bound (see ``cosine_prefix_pairs``) apply
-    unchanged — both are tail-based, partner-free.  Candidates come
-    from new-pref × corpus-pref and new-pref × new-pref; corpus ×
-    corpus is structurally absent.  Verification is the same
-    forward-index map path, maps semi-joined to candidate docs.
-
-    Identity collapse, SIDE-AWARE (the r18 10× sweep's catch): the
-    first cut skipped the collapse "by design", arguing candidate
-    volume is batch-bounded — the sweep falsified that argument with
-    exponent 1.55 (18.5 → 663 s at 10× clones), because clone
-    inflation multiplies BOTH sides: ×g batch probes each hitting ×g
-    corpus postings is ×g² candidate rows, the exact square the full
-    join's collapse exists to prevent.  So both frames collapse to
-    one representative per tf-vector fingerprint PER SIDE (reps stay
-    side-pure — the corpus index artifact remains corpus-only rows,
-    preserving persistability), the candidate/verify machinery runs
-    at rep level with same-fingerprint rep pairs EXCLUDED from the
-    join (fp-inequality on the n×c arm, strict fp-order on the n×n
-    arm), and pairs expand afterward: cross-fingerprint pairs carry
-    the rep pair's cosine verbatim (equal vectors share every
-    dot/norm — the same IEEE value the direct join would produce);
-    same-fingerprint pairs (batch×batch within a fp, and batch×corpus
-    across the frames — the clone-of-a-corpus-doc arrival) get the
-    identical-vector expression nsq/(sqrt(nsq)·sqrt(nsq)) under the
-    same threshold filter, exactly as the full join's intra path
-    states it (NOT a literal 1.0 — at t = 1.0 it can round a hair
-    below one, on both engines together).  Ids must be disjoint
-    across the frames (raises otherwise); ``threshold`` must be in
-    (0, 1] (the family guard).
-
-    Single tagged-union pass (r19 optimization round — the r18 close
-    profiled this operator at ~15 jobs / 22 s with NO dominator:
-    tf builds 2.3 s, per-side collapses 3.6 s, prefix builds 5.4 s,
-    candidate agg 4.8 s, dense verify 4.1 s): every per-side pass now
-    runs ONCE over ``union(corpus, batch)`` with a ``_side`` tag
-    (0 = corpus, 1 = batch; ids are disjoint by the guard, so the tag
-    is a function of the id and never mixes rows).  Side semantics are
-    preserved exactly where they are load-bearing:
-
-    - the identity collapse keys on (side, fingerprint), so reps stay
-      SIDE-PURE and the corpus index artifact remains corpus-only rows
-      (the persistability contract);
-    - the term statistics are side-CONDITIONAL aggregates of one
-      groupBy("term"): ``_df`` counts corpus reps only (the frozen
-      corpus order; batch-only terms get df 0 exactly as the former
-      full-outer coalesce produced), ``maxw`` is the greatest of the
-      per-side conditional maxima (= the former maxw_union);
-    - one prefix scan/window pass computes BOTH bounds for every doc
-      and the per-side prefix rules become a conditional filter:
-      corpus rows keep the partner-free Cauchy–Schwarz bound only,
-      batch rows additionally require the maxweight bound;
-    - the two candidate arms (new×corpus, new×new) merge into ONE
-      prefix join whose condition is side-aware: the probe side is
-      always a batch rep, the indexed side takes corpus partners at
-      fp-inequality and batch partners at strict fp order — the same
-      pair set the former unionByName of two joins produced.
-
-    Every downstream value (sufficient statistics, bounds, exact-long
-    dots, the IEEE epilogue) is computed by the identical expressions,
-    so the output stays bit-equal to the full join restricted to
-    batch-involving pairs (the standing differential battery pins
-    this, fixture + maxweight-attack + clone-stress corpora)."""
-    if not 0.0 < float(threshold) <= 1.0:
-        raise ValueError(
-            "cosine_prefix_new_pairs: threshold must be in (0, 1] — the "
-            "prefix bound is vacuous at t <= 0 and cosine never exceeds 1"
-        )
-    overlap = corpus.select(F.col(id_col)).join(
-        new_docs.select(F.col(id_col)), id_col, "left_semi"
-    )
-    if overlap.limit(1).count():
-        raise ValueError(
-            "cosine_prefix_new_pairs: corpus and new_docs share ids — "
-            "pair identity would be ambiguous; re-id the batch"
-        )
-    from pyspark.sql import Window
-
-    t = float(threshold)
-    t_relaxed = t * (1.0 - 1e-9)
-    tsq_relaxed = t * t * (1.0 - 1e-9)
-
-    def _tagged_tf(frame: DataFrame, side: int) -> DataFrame:
-        return frame.select(
-            F.col(id_col).alias("_id"),
-            F.lit(side).alias("_side"),
-            F.explode(tokens(text_col)).alias("term"),
-        )
-
-    # ONE tf pass over the tagged union (ids are disjoint by the guard,
-    # so _side rides the id through every aggregate)
-    tf_all = (
-        _tagged_tf(corpus, 0)
-        .unionByName(_tagged_tf(new_docs, 1))
-        .groupBy("_id", "_side", "term")
-        .agg(F.count(F.lit(1)).alias("_tf"))
-        .persist()
-    )
-    # identity collapse keyed on (side, fingerprint): reps stay
-    # side-pure — the corpus index artifact remains corpus-only rows
-    vecfp = tf_all.groupBy("_id").agg(
-        F.min("_side").alias("_side"),
-        F.md5(
-            F.to_json(F.sort_array(F.collect_list(F.struct("term", "_tf"))))
-        ).alias("_fp"),
-        F.sum(F.col("_tf") * F.col("_tf")).alias("_vnsq"),
-    )
-    groups = vecfp.groupBy("_side", "_fp").agg(
-        F.min("_id").alias("_rep"),
-        F.count(F.lit(1)).alias("_g"),
-        F.min("_vnsq").alias("_gnsq"),
-    )
-    members = (
-        vecfp.join(groups.select("_side", "_fp", "_rep"), ["_side", "_fp"])
-        .select("_side", "_fp", "_id", "_rep")
-        .persist()
-    )
-    tf = tf_all.join(
-        members.filter(F.col("_id") == F.col("_rep")).select("_id"),
-        "_id",
-        "left_semi",
-    ).persist()
-    try:
-        bc_sink: list = []
-
-        def _expand(rep_pairs: DataFrame) -> DataFrame:
-            # expansion: _ida is always a batch rep; _idb is a corpus
-            # rep or a batch rep — ids are globally unique across the
-            # frames (the guard above), so keying by rep id is
-            # unambiguous
-            expand_a = members.filter(F.col("_side") == 1).select(
-                F.col("_rep").alias("_ida"), F.col("_id").alias("_xa")
-            )
-            expand_b = members.select(
-                F.col("_rep").alias("_idb"), F.col("_id").alias("_xb")
-            )
-            cross = (
-                rep_pairs.join(expand_a, "_ida")
-                .join(expand_b, "_idb")
-                .select(
-                    F.least("_xa", "_xb").alias("doc_a"),
-                    F.greatest("_xa", "_xb").alias("doc_b"),
-                    "cosine",
-                )
-            )
-            # intra: same-fingerprint pairs involving a batch member —
-            # batch×batch within a fp (strict id order) plus
-            # batch×corpus across the sides; the identical-vector
-            # cosine expression under the same threshold filter
-            mem_n = members.filter(F.col("_side") == 1)
-            mem_c = members.filter(F.col("_side") == 0)
-            bm = mem_n.select("_fp", F.col("_id").alias("_xa")).join(
-                groups.filter(F.col("_side") == 1).select("_fp", "_gnsq"),
-                "_fp",
-            )
-            intra_pairs = bm.join(
-                mem_n.select("_fp", F.col("_id").alias("_xb")), "_fp"
-            ).filter(F.col("_xa") < F.col("_xb")).unionByName(
-                bm.join(
-                    mem_c.select("_fp", F.col("_id").alias("_xb")), "_fp"
-                )
-            )
-            intra = (
-                intra_pairs.withColumn(
-                    "cosine",
-                    F.col("_gnsq") / (F.sqrt("_gnsq") * F.sqrt("_gnsq")),
-                )
-                .filter(F.col("cosine") >= threshold)
-                .select(
-                    F.least("_xa", "_xb").alias("doc_a"),
-                    F.greatest("_xa", "_xb").alias("doc_b"),
-                    "cosine",
-                )
-            )
-            return cross.unionByName(intra).localCheckpoint(eager=True)
-
-        # Dense ALL-PAIRS regime (r19 — see cosine_prefix_pairs and
-        # _DENSE_GRAM_FLOPS_CAP): under the dense gate the qualifying
-        # batch-involving rep pairs come straight from block-wise
-        # exact Gram products; rep_meta carries (side, fingerprint)
-        # so the kernel keeps exactly the side-aware candidate join's
-        # pair set (batch-involving, fingerprint-unequal) with the
-        # batch rep first, matching the expansion contract.
-        cap = (
-            _DENSE_VERIFY_CELLS_CAP
-            if dense_verify_cells_cap is None
-            else int(dense_verify_cells_cap)
-        )
-        if cap > 0:
-            dims = tf.agg(
-                F.countDistinct("_id").alias("_nd"),
-                F.countDistinct("term").alias("_nt"),
-                F.count(F.lit(1)).alias("_np"),
-                F.sum(F.length("term")).alias("_tl"),
-            ).first()
-            n_docs, n_terms = int(dims["_nd"] or 0), int(dims["_nt"] or 0)
-            est_bytes = int(dims["_tl"] or 0) + 16 * int(dims["_np"] or 0)
-            if (
-                n_docs * n_terms <= cap
-                and est_bytes <= 8 * cap
-                and n_docs * n_docs * n_terms <= _DENSE_GRAM_FLOPS_CAP
-            ):
-                gram = _dense_all_pairs_gram(
-                    tf.select("_id", "term", "_tf"),
-                    threshold,
-                    "_ida",
-                    "_idb",
-                    bc_sink,
-                    rep_meta=groups.select(
-                        F.col("_rep").alias("_id"), "_side", "_fp"
-                    ),
-                )
-                if gram is not None:
-                    try:
-                        return _expand(gram)
-                    finally:
-                        for _bc in bc_sink:
-                            _bc.destroy()
-        # ---- the persistable corpus index statistics over corpus
-        # REPS (clone weights are identical to their rep's, so maxw
-        # and the df-derived order are collapse-invariant in meaning):
-        # term order (corpus df), corpus maxw, per-rep norms — all
-        # side-CONDITIONAL aggregates of ONE pass over the union ----
-        norms = tf.groupBy("_id").agg(
-            F.sum(F.col("_tf") * F.col("_tf")).alias("_nsq")
-        )
-        is_c = F.col("_side") == 0
-        # _df counts corpus reps only (the frozen corpus order;
-        # batch-only terms get 0 exactly as the former full-outer
-        # coalesce produced); maxw_union is the greatest of the
-        # per-side conditional maxima — sound for every partner in
-        # corpus ∪ batch
-        stats = (
-            tf.join(norms, "_id")
-            .groupBy("term")
-            .agg(
-                F.count(F.when(is_c, F.lit(1))).alias("_df"),
-                F.max(
-                    F.when(is_c, F.col("_tf") / F.sqrt("_nsq"))
-                ).alias("_maxw_c"),
-                F.max(
-                    F.when(~is_c, F.col("_tf") / F.sqrt("_nsq"))
-                ).alias("_maxw_n"),
-            )
-            .select(
-                "term",
-                "_df",
-                F.greatest(
-                    F.coalesce(F.col("_maxw_c"), F.lit(0.0)),
-                    F.coalesce(F.col("_maxw_n"), F.lit(0.0)),
-                ).alias("_maxw"),
-            )
-        )
-        # ONE prefix scan/window pass over both sides
-        ranked = (
-            tf.join(norms, "_id")
-            .join(stats, "term")
             .groupBy("_id")
             .agg(
                 F.min("_side").alias("_side"),
@@ -1997,6 +1136,8 @@ def cosine_prefix_new_pairs(
         pos = ranked.select(
             "_id", "_side", "_nsq", F.posexplode("_ord").alias("_pos0", "_e")
         )
+        # suffix-inclusive running sums; the groupBy above already
+        # hash-distributed on _id, so the window adds no exchange
         w = (
             Window.partitionBy("_id")
             .orderBy("_pos0")
@@ -2013,64 +1154,34 @@ def cosine_prefix_new_pairs(
                 (F.col("_e._tf") / F.sqrt("_nsq")) * F.col("_e._maxw")
             ).over(w).alias("_bsum"),
         )
-        cs_ok = F.col("_tail") >= F.lit(tsq_relaxed) * F.col("_nsq")
-        # per-side prefix rules as a conditional filter: corpus rows
-        # keep the partner-free CS bound ONLY (-> persistable); batch
-        # rows additionally require the maxw_union Bayardo bound.
-        # rep -> fingerprint join keeps same-vector rep pairs OUT of
-        # the candidate join (they belong to the intra path)
-        repfp = groups.select(F.col("_rep").alias("_id"), "_fp")
-        pref = (
-            scanned.filter(
-                cs_ok
-                & (
-                    (F.col("_side") == 0)
-                    | (F.col("_bsum") >= F.lit(t_relaxed))
-                )
-            )
-            .join(repfp, "_id")
-            .select("_id", "_side", "_fp", "_nsq", "term", "_tf", "_tail")
-            .persist()
+        pref = scanned.filter(
+            (F.col("_tail") >= F.lit(tsq_relaxed) * F.col("_nsq"))
+            & ((F.col("_side") == 0) | (F.col("_bsum") >= F.lit(t_relaxed)))
         )
-        cand_cache = None
-        try:
-            # ONE side-aware candidate join replacing the former
-            # unionByName of the new×corpus and new×new arms: the
-            # probe side is always a batch rep; corpus partners join
-            # at fp-inequality, batch partners at strict fp order —
-            # the identical pair set
-            a = pref.filter(F.col("_side") == 1).alias("a")
-            b = pref.alias("b")
-            matched = a.join(
-                b,
-                (F.col("a.term") == F.col("b.term"))
-                & (
-                    (
-                        (F.col("b._side") == 0)
-                        & (F.col("a._fp") != F.col("b._fp"))
-                    )
-                    | (
-                        (F.col("b._side") == 1)
-                        & (F.col("a._fp") < F.col("b._fp"))
-                    )
-                ),
-            ).select(
-                F.col("a._id").alias("_ida"),
-                F.col("b._id").alias("_idb"),
-                F.col("a._nsq").alias("_nsqa"),
-                F.col("b._nsq").alias("_nsqb"),
-                (F.col("a._tf") * F.col("b._tf")).alias("_pp"),
-                (
-                    F.col("a._tail").cast("double") * F.col("b._tail")
-                ).alias("_fprod"),
-                (F.col("a._tail") - F.col("a._tf") * F.col("a._tf")).alias(
-                    "_taa"
-                ),
-                (F.col("b._tail") - F.col("b._tf") * F.col("b._tf")).alias(
-                    "_tab"
-                ),
-            )
-            g = matched.groupBy("_ida", "_idb").agg(
+        partner = _partner()
+        if has_c:
+            # same-vector rep pairs across the sides belong to the
+            # intra path of the expansion
+            pref = pref.join(reps.select("_id", "_fp"), "_id")
+            partner = _partner(F.col("a._fp") != F.col("b._fp"))
+        pref = pref.persist()
+        caches.append(pref)
+        a = pref.filter(F.col("_side") == 1).alias("a")
+        b = pref.alias("b")
+        matched = a.join(b, (F.col("a.term") == F.col("b.term")) & partner).select(
+            F.col("a._id").alias("_ida"),
+            F.col("b._id").alias("_idb"),
+            F.col("a._nsq").alias("_nsqa"),
+            F.col("b._nsq").alias("_nsqb"),
+            (F.col("a._tf") * F.col("b._tf")).alias("_pp"),
+            # double on both sides: long*long wraps past 2^63
+            (F.col("a._tail").cast("double") * F.col("b._tail")).alias("_fprod"),
+            (F.col("a._tail") - F.col("a._tf") * F.col("a._tf")).alias("_taa"),
+            (F.col("b._tail") - F.col("b._tf") * F.col("b._tf")).alias("_tab"),
+        )
+        cand = (
+            matched.groupBy("_ida", "_idb")
+            .agg(
                 F.min("_nsqa").alias("_nsqa"),
                 F.min("_nsqb").alias("_nsqb"),
                 F.sum("_pp").alias("_pdot"),
@@ -2078,50 +1189,77 @@ def cosine_prefix_new_pairs(
                 F.min("_taa").alias("_lta"),
                 F.min("_tab").alias("_ltb"),
             )
-            cand = cand_cache = g.filter(
-                (
-                    F.col("_fprod")
-                    >= F.lit(tsq_relaxed) * F.col("_nsqa") * F.col("_nsqb")
-                )
+            .filter(
+                (F.col("_fprod") >= F.lit(tsq_relaxed) * F.col("_nsqa") * F.col("_nsqb"))
                 & (
                     F.col("_pdot").cast("double")
                     + F.sqrt(F.col("_lta").cast("double") * F.col("_ltb"))
                     >= F.lit(t_relaxed)
                     * F.sqrt(F.col("_nsqa").cast("double") * F.col("_nsqb"))
                 )
-            ).persist()
-            done = (F.col("_lta") == 0) & (F.col("_ltb") == 0)
-            epilogue = lambda dot: (  # noqa: E731 — ONE IEEE epilogue
-                dot / (F.sqrt("_nsqa") * F.sqrt("_nsqb"))
             )
-            exact_done = (
-                cand.filter(done)
-                .withColumn("cosine", epilogue(F.col("_pdot")))
-                .filter(F.col("cosine") >= threshold)
-                .select("_ida", "_idb", "cosine")
-            )
-            # shared verification helper (r18 optimization round):
-            # dense numpy path under the cells cap, map_zip_with
-            # forward-index join above it — see cosine_prefix_pairs
-            need = cand.filter(~done)
-            verified = _verify_cosine_candidates(
-                need, tf.select("_id", "term", "_tf"), threshold,
-                "_ida", "_idb", cells_cap=dense_verify_cells_cap,
-                bc_sink=bc_sink,
-            )
-            return _expand(exact_done.unionByName(verified))
-        finally:
-            pref.unpersist()
-            if cand_cache is not None:
-                cand_cache.unpersist()
-            # eager checkpoint done — release the dense-verify
-            # broadcast instead of leaking it (r18 advisory)
-            for _bc in bc_sink:
-                _bc.destroy()
+            .persist()
+        )
+        caches.append(cand)
+        done = (F.col("_lta") == 0) & (F.col("_ltb") == 0)
+        exact_done = (
+            cand.filter(done)
+            .withColumn("cosine", F.col("_pdot") / (F.sqrt("_nsqa") * F.sqrt("_nsqb")))
+            .filter(F.col("cosine") >= t)
+            .select("_ida", "_idb", "cosine")
+        )
+        verified = _verify_cosine_candidates(
+            cand.filter(~done), tf3, t, "_ida", "_idb", dense, bc_sink
+        )
+        return _expand(exact_done.unionByName(verified))
     finally:
-        tf_all.unpersist()
-        members.unpersist()
-        tf.unpersist()
+        # the eager checkpoint has materialized every row that needed
+        # a cache or the dense broadcast
+        for c in caches:
+            c.unpersist()
+        for bc in bc_sink:
+            bc.destroy()
+
+
+def cosine_prefix_pairs(
+    df: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    threshold: float = 0.8,
+    dense_verify_cells_cap: "int | None" = None,
+) -> DataFrame:
+    """EXACT weighted-cosine self-join over term-frequency vectors with
+    no vocabulary cap: (doc_a, doc_b, cosine) with doc_a < doc_b and
+    cosine ≥ ``threshold`` (in (0, 1], else ValueError).  Same contract
+    as ``tf_cosine_pairs(max_doc_freq=None)``, bit-exact, at a
+    candidate-bounded cost.  ``dense_verify_cells_cap`` (default
+    ``_DENSE_VERIFY_CELLS_CAP``; 0 disables) gates the dense paths.
+    See ``_cosine_prefix_join``."""
+    return _cosine_prefix_join(
+        "cosine_prefix_pairs", None, df, id_col, text_col, threshold,
+        dense_verify_cells_cap,
+    )
+
+
+def cosine_prefix_new_pairs(
+    corpus: DataFrame,
+    new_docs: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    threshold: float = 0.8,
+    dense_verify_cells_cap: "int | None" = None,
+) -> DataFrame:
+    """Incremental ``cosine_prefix_pairs``: every pair at cosine ≥
+    ``threshold`` that involves a ``new_docs`` doc, without the corpus
+    self-join; bit-equal to the self-join over corpus ∪ batch
+    restricted to batch-involving pairs.  Corpus prefixes use only the
+    partner-free bound, so a corpus index stays valid for every future
+    batch.  Ids must be disjoint and ``threshold`` in (0, 1]
+    (ValueError otherwise).  See ``_cosine_prefix_join``."""
+    return _cosine_prefix_join(
+        "cosine_prefix_new_pairs", corpus, new_docs, id_col, text_col, threshold,
+        dense_verify_cells_cap,
+    )
 
 
 def edit_distance_pairs(

@@ -8729,3 +8729,127 @@ def test_cosine_dense_gate_bounds_collect_bytes(spark, monkeypatch):
     # strings' lengths being irrelevant to tf vectors): same keys,
     # same values
     assert big == small and len(big) >= 1
+
+
+def test_prefix_self_joins_reject_nonpositive_threshold(spark):
+    """The self-joins share the incremental twins' threshold guard: at
+    t <= 0 shingle-disjoint docs qualify (0.0 >= t) but can never be
+    generated by a prefix join, so a threshold <= 0 raises instead of
+    silently returning no pairs."""
+    from clickstreaming_end_to_end_data_engineering_project_spark.operators.dedup import (
+        prefix_containment_pairs,
+        prefix_jaccard_pairs,
+    )
+
+    df = spark.createDataFrame(
+        [(1, "a b c d"), (2, "e f g h"), (3, "i j k l")], ["doc_id", "text"]
+    )
+    for fn in (prefix_jaccard_pairs, prefix_containment_pairs):
+        for bad in (0.0, -0.1):
+            with pytest.raises(ValueError, match="threshold must be > 0"):
+                fn(df, threshold=bad)
+
+
+def test_cosine_gram_broadcasts_float64_matrix_and_norms(spark):
+    """The Gram kernel's broadcast carries the float64 matrix and the
+    sqrt-norms, converted once on the driver instead of per task; the
+    conversion is exact under the kernel's < 2^53 gate, so the cosines
+    equal the integer-dot expression."""
+    import math
+
+    import numpy as np
+
+    from clickstreaming_end_to_end_data_engineering_project_spark.operators import dedup
+
+    tf = spark.createDataFrame(
+        [(1, "a", 2), (1, "b", 1), (2, "a", 4), (2, "b", 2), (3, "a", 1), (3, "c", 3)],
+        "_id long, term string, _tf long",
+    )
+    sink: list = []
+    pairs = dedup._dense_all_pairs_gram(tf, 0.3, "doc_a", "doc_b", sink)
+    try:
+        got = {(min(a, b), max(a, b)): c for a, b, c in pairs.collect()}
+        (payload,) = [bc.value for bc in sink]
+    finally:
+        for bc in sink:
+            bc.destroy()
+    ids, mat, sq, side, fpc = payload
+    assert mat.dtype == np.float64 and sq.dtype == np.float64
+    assert side is None and fpc is None
+    assert np.array_equal(sq, np.sqrt(np.einsum("ij,ij->i", mat, mat)))
+    vecs = {1: {"a": 2, "b": 1}, 2: {"a": 4, "b": 2}, 3: {"a": 1, "c": 3}}
+
+    def cos(x, y):
+        dot = sum(vecs[x][k] * vecs[y].get(k, 0) for k in vecs[x])
+        return dot / (
+            math.sqrt(sum(v * v for v in vecs[x].values()))
+            * math.sqrt(sum(v * v for v in vecs[y].values()))
+        )
+
+    want = {(x, y): cos(x, y) for x, y in ((1, 2), (1, 3), (2, 3)) if cos(x, y) >= 0.3}
+    assert got == want and (1, 2) in got
+
+
+def test_cosine_prefix_clone_stress_at_one_both_regimes(spark):
+    """Trimmed default-profile copy of the @slow clone-stress battery,
+    at t=1.0 where the identical-vector epilogue decides: corpus clone
+    groups, batch clone groups, a batch clone of a corpus doc and a
+    batch-only fingerprint.  The incremental join must equal brute
+    force through the Gram path (default cap) and through the prefix
+    path with map verification (cap 0), and the self-join over
+    corpus ∪ batch must equal it over all pairs."""
+    import itertools
+    import math
+    import random as _random
+    from collections import Counter
+
+    from clickstreaming_end_to_end_data_engineering_project_spark.operators.dedup import (
+        cosine_prefix_new_pairs,
+        cosine_prefix_pairs,
+    )
+
+    rng = _random.Random(99)
+    vocab = [f"w{i}" for i in range(40)]
+    base_c = [" ".join(rng.choices(vocab, k=rng.choice([3, 8, 20]))) for _ in range(4)]
+    base_n = [" ".join(rng.choices(vocab, k=rng.choice([3, 8]))) for _ in range(2)]
+    crows = [(4 * i + j, txt) for i, txt in enumerate(base_c) for j in range(4)]
+    nrows = [(1000 + 3 * i + j, txt) for i, txt in enumerate(base_n) for j in range(3)]
+    # clones of base_c[1] (nsq 3) score nsq/(sqrt(nsq)·sqrt(nsq)) > 1,
+    # clones of base_c[0] (nsq 8) score just below 1 and drop at t=1.0
+    nrows += [(1100, base_c[1]), (1101, "q q q"), (1102, "q q q"), (1103, base_c[0])]
+    cdf = spark.createDataFrame(crows, ["doc_id", "text"])
+    ndf = spark.createDataFrame(nrows, ["doc_id", "text"])
+
+    def ref_pairs(rows, keep):
+        tfs = {i: Counter(txt.split()) for i, txt in rows}
+        out = {}
+        for (ia, ca), (ib, cb) in itertools.combinations(tfs.items(), 2):
+            dot = sum(ca[w] * cb[w] for w in ca.keys() & cb.keys())
+            if dot and keep(ia, ib):
+                cos = dot / (
+                    math.sqrt(sum(v * v for v in ca.values()))
+                    * math.sqrt(sum(v * v for v in cb.values()))
+                )
+                if cos >= 1.0:
+                    out[(min(ia, ib), max(ia, ib))] = cos
+        return out
+
+    want_new = ref_pairs(crows + nrows, lambda a, b: max(a, b) >= 1000)
+    want_all = ref_pairs(crows + nrows, lambda a, b: True)
+    # the cross-frame clone family and the batch-only clones fire
+    assert (4, 1100) in want_new and (1101, 1102) in want_new
+    assert (0, 1103) not in want_new
+    assert len(want_all) > len(want_new)
+    for cap in (None, 0):
+        got_new = {
+            (r["doc_a"], r["doc_b"]): r["cosine"]
+            for r in cosine_prefix_new_pairs(
+                cdf, ndf, threshold=1.0, dense_verify_cells_cap=cap
+            ).collect()
+        }
+        assert got_new == want_new, f"cap {cap}"
+    got_all = {
+        (r["doc_a"], r["doc_b"]): r["cosine"]
+        for r in cosine_prefix_pairs(cdf.unionByName(ndf), threshold=1.0).collect()
+    }
+    assert got_all == want_all
