@@ -43,11 +43,16 @@ def _qtf_col(query_terms: list[str]):
     as a NULL score rather than a silently wrong one."""
     from collections import Counter
 
+    return _per_term({t: float(n) for t, n in Counter(query_terms).items()}, "_qtf")
+
+
+def _per_term(values: dict, alias: str):
+    """``values[_t]`` as a literal ``CASE _t`` column (no ``otherwise``)."""
     col = None
-    for t, n in Counter(query_terms).items():
+    for t, v in values.items():
         cond = F.col("_t") == t
-        col = F.when(cond, float(n)) if col is None else col.when(cond, float(n))
-    return col.alias("_qtf")
+        col = F.when(cond, v) if col is None else col.when(cond, v)
+    return col.alias(alias)
 
 
 def _empty_bm25_result(ids: DataFrame, id_col: str) -> DataFrame:
@@ -173,13 +178,6 @@ def _score_and_rank(scored: DataFrame, id_col: str, k: int, k1: float, b: float)
     )
 
 
-# fixed sidecar schemas: probes read them with explicit schemas so no
-# footer-inference job runs per query (the probe-latency term that
-# would otherwise grow with segment count)
-_PARAMS_SCHEMA = segstore.LAYOUTS["bm25"].params_schema
-_TERMSTATS_SCHEMA = "_t string, _df long"
-
-
 def _term_bucket(term: str, n_buckets: int) -> int:
     """crc32(term) % n_buckets — computable identically driver-side
     (zlib.crc32) and engine-side (F.crc32), so a probe can name its
@@ -289,51 +287,42 @@ def bm25_topk_indexed(
         id_col = [c for c in dl.columns if c not in ("_dl", "batch")][0]
         return _empty_bm25_result(dl.select(F.col(id_col)), id_col)
 
-    totals = (
-        spark.read.schema(_PARAMS_SCHEMA)
-        .parquet(os.path.join(path, "_bm25_params"))
-        .agg(
-            F.sum("n_docs").alias("n_docs"),
-            F.sum("sum_dl").alias("sum_dl"),
-            F.max("n_buckets").alias("n_buckets"),
-            F.min("n_buckets").alias("n_buckets_min"),
-        )
-        .first()
-    )
-    if totals["n_buckets"] != totals["n_buckets_min"]:
+    idx = segstore.Index("bm25", spark, path)
+    stats = idx.rows("_bm25_params")
+    n_buckets = max(r["n_buckets"] for r in stats)
+    if n_buckets != min(r["n_buckets"] for r in stats):
         raise ValueError(
             f"bm25 index at {path} has segments with differing n_buckets"
         )
-    n_buckets = totals["n_buckets"]
+    n_docs = sum(r["n_docs"] for r in stats)
     # avgdl from the merged integer sums — the same CAST-then-divide as
     # the in-memory operator, so the double is bit-identical no matter
     # how many segments the corpus arrived in
-    avgdl = float(totals["sum_dl"]) / float(totals["n_docs"])
+    avgdl = float(sum(r["sum_dl"] for r in stats)) / float(n_docs)
     terms = list(dict.fromkeys(query_terms))
     buckets = sorted({_term_bucket(t, n_buckets) for t in terms})
-    raw = spark.read.parquet(path)
     id_col = [
-        c for c in raw.columns if c not in ("_t", "_tf", "_dl", "bucket", "batch")
+        c for c in idx.store_schema.names if c not in ("_t", "_tf", "_dl", "bucket", "batch")
     ][0]
-    postings = raw.filter(F.col("bucket").isin(buckets)).filter(
-        F.col("_t").isin(terms)
-    )
-    if eligible_ids is not None:
-        postings = postings.join(
-            eligible_ids.select(F.col(id_col)), id_col, "left_semi"
-        )
-    termstats = (
-        spark.read.schema(_TERMSTATS_SCHEMA)
-        .parquet(os.path.join(path, "_termstats"))
-        .filter(F.col("_t").isin(terms))
-        .groupBy("_t")
-        .agg(F.sum("_df").alias("_df"))
-    )
+    # df over disjoint doc sets ADDS: each query term's slices summed on
+    # the driver (exact integers); a term with no slice has no postings
+    dfs = {
+        t: sum(r["_df"] for r in rows)
+        for t, rows in idx.lookup("_termstats", "_t", terms).items()
+        if rows
+    }
+    postings = idx.scan(buckets).filter(F.col("_t").isin(list(dfs)))
+    postings = segstore.restrict(postings, eligible_ids, id_col)
     # _dl rides in the posting rows — no sidecar join, the probe's
     # only scan is the pruned posting partitions
+    df_col = (
+        _per_term({t: F.lit(v).cast("long") for t, v in dfs.items()}, "_df")
+        if dfs
+        else F.lit(None).cast("long")
+    )
     scored = (
-        postings.join(F.broadcast(termstats), "_t")
-        .withColumn("_N", F.lit(totals["n_docs"]))
+        postings.withColumn("_df", df_col)
+        .withColumn("_N", F.lit(n_docs))
         .withColumn("_avgdl", F.lit(avgdl))
         .withColumn("_qtf", _qtf_col(query_terms))
     )
@@ -419,7 +408,7 @@ def hybrid_topk_indexed(
     semantic leg renames it to ``vec_id`` internally."""
     from pyspark.sql import Window
 
-    from .similarity import ivf_topk_indexed, ivf_topk_indexed_filtered
+    from .similarity import _ivf_probe
 
     lex = bm25_topk_indexed(
         spark, bm25_path, query_terms, k=breadth, k1=k1, b=b,
@@ -432,17 +421,12 @@ def hybrid_topk_indexed(
         .over(Window.orderBy(F.col("bm25_score").desc(), F.col(id_col)))
         .alias("rank"),
     )
-    if eligible_ids is not None:
-        sem = ivf_topk_indexed_filtered(
-            spark, ivf_path, query_vec,
-            eligible_ids.select(F.col(id_col).alias("vec_id")),
-            k=breadth, nprobe=nprobe, exclude_vec_id=exclude_vec_id,
-        )
-    else:
-        sem = ivf_topk_indexed(
-            spark, ivf_path, query_vec, k=breadth, nprobe=nprobe,
-            exclude_vec_id=exclude_vec_id,
-        )
+    sem = _ivf_probe(
+        "ivf_topk_indexed" if eligible_ids is None else "ivf_topk_indexed_filtered",
+        spark, ivf_path, query_vec,
+        None if eligible_ids is None else eligible_ids.select(F.col(id_col).alias("vec_id")),
+        breadth, nprobe, exclude_vec_id, "vec_id", "embedding",
+    )
     sem_r = sem.select(
         F.col("vec_id").alias(id_col),
         F.row_number()

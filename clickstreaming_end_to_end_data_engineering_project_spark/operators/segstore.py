@@ -20,7 +20,26 @@ Every layout is a root directory holding
 two hooks, ``encode`` (increment rows -> store rows, against the
 stored geometry and trained state) and ``derive`` (one segment's store
 rows -> its membership and stat slices), plus, where slices are sums,
-``fold`` (many segments' slices -> one); it keeps its own probe.
+``fold`` (many segments' slices -> one).
+
+Probes read a layout through ``Index``: its sidecar rows and store
+schema come from a driver-side metadata cache, and ``Index.scan`` reads
+the store with that schema (no inference job), partition-pruned and
+restricted by an optional predicate.  Each cache entry is keyed by the
+qualified path of what it holds plus a Hadoop ``listStatus`` of the
+files behind it (name, length, modification time; segmented slices are
+listed one level down, and the store schema is keyed by the store
+root's segment listing together with the params listing).  A listing
+runs no Spark job, every write leaves new part-file names behind, and
+a lookup hits only when the listing is unchanged, so a stale entry is
+never served.  Writers keep the cache warm by one rule: after a build,
+append, delete or compaction, a value the writer already holds and
+knows to be unchanged (params it was given or read, trained sidecars
+a compaction copies, a store schema its rows still carry) is recorded
+under the listing the write left behind (a store schema only while a
+segment is left to infer it from); every other entry under the root is
+dropped, never guessed.  The cache is bounded by a fixed entry
+count and safe to use from pooled threads.
 
 Crash orders (stated once; each verb heals by being re-run):
 
@@ -49,40 +68,280 @@ never run them while an ingest stream writes the same index (see
 
 from __future__ import annotations
 
+import json
+import numbers
 import os
+import threading
+from collections import OrderedDict
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 from functools import cached_property
 from typing import Callable
 
 from pyspark import inheritable_thread_target
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame, Row
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 from pyspark.sql.window import Window
 
 from .. import fsutil
 from ..sources.formats import local_rows_df
 
+_CACHE_ENTRIES = 256
+_LOOKUP_KEYS = 65536
 
-class _Ctx:
-    """What the hooks see: the index root, its geometry (read from the
-    params sidecar on first use unless given) and the caller's columns."""
 
-    def __init__(self, kind, spark, root, id_col=None, col=None, params=None):
+class _MetaCache:
+    """One slot per key (a qualified path): ``(listing, value)``.  A
+    lookup hits only when the caller's listing equals the slot's; values
+    are immutable, so a hit is shared without copying."""
+
+    def __init__(self, entries: int) -> None:
+        self._slots: "OrderedDict[str, tuple]" = OrderedDict()
+        self._entries = entries
+        self._lock = threading.Lock()
+
+    def get(self, key: str, listing):
+        with self._lock:
+            slot = self._slots.get(key)
+            if slot is None or slot[0] != listing:
+                return None
+            self._slots.move_to_end(key)
+            return slot[1]
+
+    def put(self, key: str, listing, value) -> None:
+        with self._lock:
+            self._slots[key] = (listing, value)
+            self._slots.move_to_end(key)
+            while len(self._slots) > self._entries:
+                self._slots.popitem(last=False)
+
+    def drop(self, root: str) -> None:
+        """Drop every entry at or under ``root``."""
+        with self._lock:
+            for key in [k for k in self._slots if k == root or k.startswith(root + "/")]:
+                del self._slots[key]
+
+    def clear(self) -> None:
+        with self._lock:
+            self._slots.clear()
+
+
+_CACHE = _MetaCache(_CACHE_ENTRIES)
+
+
+def doubles_sql(values: list) -> str:
+    """A list of floats, or nested lists of them, as SQL text for ONE
+    typed constant: one JSON string literal parsed by ``from_json``,
+    which constant folding turns into a single array literal.  Python's
+    shortest round-trip repr is parsed back bit-exactly (pinned by
+    test), and the plan carries one node instead of one ``F.lit`` (one
+    py4j call) or one ``CreateArray`` child per element."""
+    def plain(v):
+        return float(v) if isinstance(v, numbers.Real) else [plain(x) for x in v]
+
+    values = plain(values)
+    depth, probe = 0, values
+    while isinstance(probe, list):
+        depth, probe = depth + 1, probe[0] if probe else 0.0
+    return f"from_json('{json.dumps(values)}', '{'array<' * depth}double{'>' * depth}')"
+
+
+def doubles_lit(values: list) -> Column:
+    """``doubles_sql`` as a Column."""
+    return F.expr(doubles_sql(values))
+
+
+def restrict(df: DataFrame, predicate, id_col: str) -> DataFrame:
+    """``df`` restricted by ``predicate``: a Column, a SQL string, or a
+    one-column frame of eligible ids (named ``id_col``), which lands as
+    a semi-join."""
+    if predicate is None:
+        return df
+    if isinstance(predicate, DataFrame):
+        return df.join(predicate.select(F.col(id_col)), id_col, "left_semi")
+    return df.filter(F.expr(predicate) if isinstance(predicate, str) else predicate)
+
+
+class Index:
+    """One verb's view of the index at ``root``: its geometry (from the
+    params sidecar on first use unless given), its sidecar rows and store
+    schema through the metadata cache, its store scan, and the caller's
+    columns (what the encode/derive hooks see as ``ctx``).  Given a
+    ``query``, the query's dims are checked against the params sidecar
+    (error prefixed with ``verb``)."""
+
+    def __init__(self, kind, spark, root, id_col=None, col=None, params=None,
+                 verb=None, query=None):
         self.layout, self.spark, self.root = LAYOUTS[kind], spark, root
         self.id_col, self.col = id_col, col
+        self._listings: dict = {}
         if params is not None:
             self.params = params
+        dims = self.params.get("dims") if query is not None else None
+        if dims is not None and len(query) != dims:
+            raise ValueError(f"{verb}: query has {len(query)} dims, index expects {dims}")
+
+    @cached_property
+    def _fs(self):
+        _, fs, hpath = fsutil.fs_for(self.spark, self.root)
+        qpath = fs.makeQualified(hpath)
+        return fs, qpath, str(qpath.toString()).rstrip("/")
+
+    def key(self, name: str) -> str:
+        """The qualified path of ``name`` under the root ("" = the root)."""
+        root = self._fs[2]
+        return f"{root}/{name}" if name else root
+
+    def listing(self, name: str):
+        """(name, length, mtime) of every entry of ``name``, one level down
+        for segmented slices; None when it does not exist."""
+        if name not in self._listings:
+            fs, qpath, _ = self._fs
+            depth = 1 if name in dict(self.layout.stats) else 0
+
+            def ls(hpath, depth):
+                if not fs.exists(hpath):
+                    return None
+                out = []
+                for st in fs.listStatus(hpath):
+                    child = st.getPath().getName()
+                    if depth and st.isDirectory():
+                        out.append((child, ls(hpath.suffix("/" + child), depth - 1)))
+                    else:
+                        out.append((child, st.getLen(), st.getModificationTime()))
+                return tuple(sorted(out))
+
+            self._listings[name] = ls(qpath.suffix("/" + name) if name else qpath, depth)
+        return self._listings[name]
+
+    def _store_key(self):
+        lay = self.layout
+        return self.key(lay.store) + "/#schema", (self.listing(lay.store), self.listing(lay.params))
 
     @cached_property
     def params(self) -> dict:
+        return self.rows(self.layout.params)[0].asDict()
+
+    def _read(self, name: str, listing) -> "DataFrame | None":
+        """Sidecar ``name`` read with the layout's schema for it: the
+        listed leaf files, None when the listing holds none.  A missing
+        sidecar raises the reader's own missing-path error here."""
         lay = self.layout
-        path = os.path.join(self.root, lay.params)
-        return self.spark.read.schema(lay.params_schema).parquet(path).head().asDict()
+        reader = self.spark.read.schema(
+            {lay.params: lay.params_schema, **dict(lay.stats), **dict(lay.trained)}[name]
+        )
+        if listing is None:
+            return reader.parquet(os.path.join(self.root, name))
+        files = [f"{self.key(name)}/{leaf}" for leaf in _leaves(listing)]
+        return reader.parquet(*files) if files else None
+
+    def rows(self, name: str) -> tuple:
+        """The rows of sidecar ``name``.  A hit runs no Spark job; a miss
+        reads the listed leaf files."""
+        listing = self.listing(name)
+        hit = _CACHE.get(self.key(name), listing)
+        if hit is None:
+            df = self._read(name, listing)
+            hit = () if df is None else tuple(df.collect())
+            _CACHE.put(self.key(name), listing, hit)
+        return hit
+
+    def lookup(self, name: str, col: str, keys: "list") -> dict:
+        """{key: rows of sidecar ``name`` whose ``col`` equals it} for
+        ``keys``.  Keys cached under the current listing cost nothing;
+        the rest are read in one job (an ``isin`` pushed into the scan of
+        the listed leaf files) and added, up to a fixed count per
+        listing."""
+        listing, key = self.listing(name), self.key(name) + "/#lookup"
+        known = _CACHE.get(key, listing) or {}
+        missing = [k for k in keys if k not in known]
+        if missing:
+            got: dict = {k: [] for k in missing}
+            df = self._read(name, listing)
+            for r in [] if df is None else df.filter(F.col(col).isin(missing)).collect():
+                got[r[col]].append(r)
+            keep = known if len(known) + len(missing) <= _LOOKUP_KEYS else {}
+            known = {**keep, **{k: tuple(v) for k, v in got.items()}}
+            _CACHE.put(key, listing, known)
+        return {k: known[k] for k in keys}
 
     def sidecar(self, name: str) -> DataFrame:
         schema = dict(self.layout.trained)[name]
         return self.spark.read.schema(schema).parquet(os.path.join(self.root, name))
+
+    def cached_store_schema(self) -> "StructType | None":
+        return _CACHE.get(*self._store_key())
+
+    @cached_property
+    def store_schema(self) -> StructType:
+        """The store's read schema, inferred by Spark on a miss."""
+        hit = self.cached_store_schema()
+        if hit is None:
+            hit = self.spark.read.parquet(_store_root(self.layout, self.root)).schema
+            _CACHE.put(*self._store_key(), hit)
+        return hit
+
+    def scan(self, partitions=None, predicate=None) -> DataFrame:
+        """The store read with its known schema, pruned to ``partitions``
+        of the layout's partition column (a PartitionFilter) and
+        restricted by ``predicate`` (see ``restrict``) before any rank."""
+        df = self.spark.read.schema(self.store_schema).parquet(_store_root(self.layout, self.root))
+        if partitions is not None:
+            df = df.filter(F.col(self.layout.partition).isin(list(partitions)))
+        return restrict(df, predicate, self.id_col)
+
+    def record(self, held: dict) -> None:
+        """After a write: drop every entry under the root, then record
+        ``held`` (sidecar name -> rows, or ``"#schema"`` -> the store
+        schema) under the listings the write left behind.  A store left
+        with no segment keeps no schema: a cold read has no file to infer
+        one from and raises, so a warm read must too."""
+        _CACHE.drop(self.key(""))
+        fresh = Index(self.layout.kind, self.spark, self.root)
+        if not fsutil.existing_batch_ids(self.spark, _store_root(self.layout, self.root)):
+            held = {**held, "#schema": None}
+        for name, value in held.items():
+            if value is None:
+                continue
+            if name == "#schema":
+                _CACHE.put(*fresh._store_key(), value)
+            elif fresh.listing(name) is not None:
+                _CACHE.put(fresh.key(name), fresh.listing(name), value)
+
+    def held(self, schema: bool = True) -> dict:
+        """The cached values a write of the store leaves unchanged: the
+        flat params and trained sidecar rows and, if ``schema``, the store
+        schema (None where nothing is cached)."""
+        lay = self.layout
+        names = [n for n in (lay.params, *dict(lay.trained)) if n not in dict(lay.stats)]
+        out = {n: _CACHE.get(self.key(n), self.listing(n)) for n in names}
+        out["#schema"] = self.cached_store_schema() if schema else None
+        return out
+
+    def carries(self, rows: DataFrame) -> bool:
+        """Whether store ``rows`` carry the cached store schema's data
+        columns (names and types), so the store schema survives writing
+        them as a segment."""
+        held, part = self.cached_store_schema(), self.layout.partition
+
+        def cols(fields, skip):
+            return [(f.name, f.dataType.simpleString()) for f in fields if f.name not in skip]
+
+        return held is not None and cols(rows.schema.fields, ("_ab", "_dims", part)) == cols(
+            held.fields, ("batch", part)
+        )
+
+
+def _leaves(listing) -> "list[str]":
+    """Data-file paths (relative to the listed directory) of a listing."""
+    out = []
+    for entry in listing:
+        if len(entry) == 2:  # a segment directory and its own listing
+            out += [f"{entry[0]}/{leaf[0]}" for leaf in entry[1] or () if not leaf[0].startswith(("_", "."))]
+        elif not entry[0].startswith(("_", ".")):
+            out.append(entry[0])
+    return out
 
 
 def _bm25_encode(ctx):
@@ -290,7 +549,7 @@ def _run(spark, writes: "list[Callable[[], None]]") -> None:
         fut.result()
 
 
-def _segment(ctx: _Ctx, root: str, batch_id: int, store: DataFrame, slices: "list[str]"):
+def _segment(ctx: Index, root: str, batch_id: int, store: DataFrame, slices: "list[str]"):
     """(slice writes, store write) of segment ``batch_id`` under ``root``."""
     lay, seg = ctx.layout, f"batch={batch_id}"
     frames = lay.derive(store, ctx)
@@ -300,7 +559,7 @@ def _segment(ctx: _Ctx, root: str, batch_id: int, store: DataFrame, slices: "lis
     )
 
 
-def _encode(ctx: _Ctx, increments: "list[DataFrame]") -> DataFrame:
+def _encode(ctx: Index, increments: "list[DataFrame]") -> DataFrame:
     """Every increment encoded into store rows, tagged ``_ab`` with its
     position (and ``_dims`` with its vector size), materialized once —
     the input is fully read before any write, so a replay may lawfully
@@ -323,7 +582,7 @@ def build(kind, path, store, id_col, params, trained=(), batch_id=0) -> None:
     ``path``, with the params row and ``trained`` (name, frame)
     sidecars.  An existing root is replaced through one staged swap."""
     lay, spark = LAYOUTS[kind], store.sparkSession
-    ctx = _Ctx(kind, spark, path, id_col, params=params)
+    ctx = Index(kind, spark, path, id_col, params=params)
     flat = list(trained)
     if lay.params not in dict(lay.stats):
         flat.insert(0, (lay.params, local_rows_df(spark, [tuple(params.values())], lay.params_schema)))
@@ -340,6 +599,11 @@ def build(kind, path, store, id_col, params, trained=(), batch_id=0) -> None:
         fsutil.swap_with_staging(spark, path, write, job="compact")
     else:
         write(path)
+    held = {}
+    if lay.params not in dict(lay.stats):
+        names = [c.split()[0] for c in lay.params_schema.split(",")]
+        held[lay.params] = (Row(**dict(zip(names, params.values()))),)
+    ctx.record(held)
 
 
 def bootstrap(kind, df, path, params, id_col, col, batch_id=0) -> None:
@@ -348,7 +612,7 @@ def bootstrap(kind, df, path, params, id_col, col, batch_id=0) -> None:
     no index (the empty-segment rule: a data-less segment breaks schema
     inference for every later read)."""
     spark = df.sparkSession
-    store = _encode(_Ctx(kind, spark, path, id_col, col, params), [df])
+    store = _encode(Index(kind, spark, path, id_col, col, params), [df])
     if store.isEmpty():
         fsutil.heal_swap_crash(spark, path)
         _, fs, hpath = fsutil.fs_for(spark, path)
@@ -370,7 +634,7 @@ def append(kind, path, increments, id_col, col, batch_id=None, verb=None) -> "li
     existing = fsutil.existing_batch_ids(spark, _store_root(lay, path))
     if not existing:
         raise ValueError(f"{verb}: no index at {path} — build one with write_{kind}_index first")
-    ctx = _Ctx(kind, spark, path, id_col, col)
+    ctx = Index(kind, spark, path, id_col, col)
     enc = _encode(ctx, increments)
     aggs = [F.countDistinct(id_col).alias("n")]
     if lay.dims:
@@ -398,16 +662,19 @@ def append(kind, path, increments, id_col, col, batch_id=None, verb=None) -> "li
     slices = _slices(lay, spark, path)
     other = [b for b in existing if b not in batch_ids]
     if live and other:
-        prior = spark.read.parquet(_thin(lay, path, slices))
+        thin = _thin(lay, path, slices)
+        prior = ctx.scan() if thin == _store_root(lay, path) else spark.read.parquet(thin)
         prior = prior.filter(F.col("batch").isin(other)).select(id_col)
         if enc.select(id_col).join(prior, id_col, "left_semi").limit(1).count():
             raise ValueError(
                 f"{verb}: some new ids already exist in the index — duplicate rows "
                 "would surface in probes; delete them first or rebuild"
             )
+    held = ctx.held(schema=all(ctx.carries(_untag(enc, i)) for i in live))
     writes = [_segment(ctx, path, batch_ids[i], _untag(enc, i), slices) for i in live]
     _run(spark, [w for ws, _ in writes for w in ws])
     _run(spark, [store_write for _, store_write in writes])
+    ctx.record(held)
     n = f"n_{lay.noun}"
     return [
         {"batch_id": batch_ids[i], n: meta[i]["n"] if i in meta else 0}
@@ -439,12 +706,15 @@ def delete(kind, spark, path, ids, id_col) -> "dict[str, int]":
     if not fsutil.existing_batch_ids(spark, store_root):
         raise ValueError(f"delete_from_{kind}_index: no index at {path}")
     slices = _slices(lay, spark, path)
+    ctx = Index(kind, spark, path, id_col)
+    thin = _thin(lay, path, slices)
     hit = (
-        spark.read.parquet(_thin(lay, path, slices)).filter(F.col(id_col).isin(ids))
+        (ctx.scan() if thin == store_root else spark.read.parquet(thin))
+        .filter(F.col(id_col).isin(ids))
         .groupBy("batch").agg(F.countDistinct(id_col).alias("n")).collect()
     )
     out[f"{lay.noun}_deleted"] = sum(int(r["n"]) for r in hit)
-    ctx = _Ctx(kind, spark, path, id_col)
+    held = ctx.held()
     for b in sorted(int(r["batch"]) for r in hit):
         seg = f"batch={b}"
         seg_path = os.path.join(store_root, seg)
@@ -473,6 +743,7 @@ def delete(kind, spark, path, ids, id_col) -> "dict[str, int]":
             _, fs, hpath = fsutil.fs_for(spark, d)
             fs.delete(hpath, True)
         out["segments_removed"] += 1
+    ctx.record(held)
     return out
 
 
@@ -492,10 +763,13 @@ def compact(kind, spark, path) -> None:
 
     def read(name: str, schema: "str | None") -> DataFrame:
         reader = spark.read.schema(schema) if schema else spark.read
-        return reader.parquet(os.path.join(path, name) if name else path)
+        return reader.parquet(os.path.join(path, name))
+
+    ctx = Index(kind, spark, path)
+    held = {**ctx.held(schema=False), "#schema": ctx.store_schema}
 
     def write(staging: str) -> None:
-        rows = read(lay.store, None).drop("batch")
+        rows = ctx.scan().drop("batch")
         _writer(rows, lay.partition)(os.path.join(_store_root(lay, staging), "batch=0"))
         for n in _slices(lay, spark, path):
             rows = read(n, schemas.get(n)).filter(F.col("batch").isin(live)).drop("batch")
@@ -504,6 +778,7 @@ def compact(kind, spark, path) -> None:
             _writer(read(name, schema).coalesce(1))(os.path.join(staging, name))
 
     fsutil.swap_with_staging(spark, path, write, job="compact")
+    ctx.record(held)
 
 
 def detect(spark, root: str) -> "Layout | None":

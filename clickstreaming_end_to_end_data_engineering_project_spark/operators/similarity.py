@@ -19,6 +19,8 @@ Dot products use double math folded left-to-right over the array
 
 from __future__ import annotations
 
+import functools
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, LongType, StructField, StructType
@@ -164,63 +166,26 @@ def ivf_topk_indexed_batch(
     evaluated on the unioned pruned scan BEFORE per-query ranking,
     exactly ``ivf_topk_indexed_filtered``'s rule; per query, results
     equal the single-query filtered probe at the same nprobe."""
-    import os
-
-    cent_rows = sorted(
-        (int(r["cluster"]), [float(x) for x in r["centroid"]])
-        for r in spark.read.schema("cluster int, centroid array<double>")
-        .parquet(os.path.join(path, "_ivf_centroids"))
-        .collect()
-    )
-    params = (
-        spark.read.schema("n_clusters int, dims int")
-        .parquet(os.path.join(path, "_ivf_params"))
-        .head()
-    )
-    import math
-
+    idx = segstore.Index("ivf", spark, path, id_col)
+    cents = _centroids(idx, "_ivf_centroids")
+    dims = idx.params["dims"]
     pairs = []
     qrows = []
     for qid, qv in queries:
-        if len(qv) != params.dims:
+        if len(qv) != dims:
             raise ValueError(
                 f"ivf_topk_indexed_batch: query {qid} has {len(qv)} dims, "
-                f"index expects {params.dims}"
+                f"index expects {dims}"
             )
-        # BIT-identical driver-side fold to ivf_topk_indexed's _cos
-        # (same zip order, same qn*cn association, same zero guard),
-        # so the per-query probe sets — and therefore the results —
-        # match the single-query probe exactly
-        qn = math.sqrt(sum(float(x) * float(x) for x in qv))
-
-        def _cos(c: "list[float]") -> float:
-            cn = math.sqrt(sum(x * x for x in c))
-            if qn == 0.0 or cn == 0.0:
-                return 0.0
-            return sum(float(a) * b for a, b in zip(qv, c)) / (qn * cn)
-
-        probed_q = [
-            c for c, _ in sorted(cent_rows, key=lambda cc: (-_cos(cc[1]), cc[0]))[:nprobe]
-        ]
         qrows.append((int(qid), [float(x) for x in qv]))
-        pairs.extend((int(qid), c) for c in probed_q)
-    probed = sorted({c for _, c in pairs})
-    idx = spark.read.parquet(os.path.join(path, "vectors")).filter(
-        F.col("cluster").isin(probed)
-    )
-    if predicate is not None:
-        if isinstance(predicate, DataFrame):
-            idx = idx.join(predicate.select(F.col(id_col)), id_col, "left_semi")
-        else:
-            idx = idx.filter(
-                F.expr(predicate) if isinstance(predicate, str) else predicate
-            )
+        pairs.extend((int(qid), c) for c in _nearest_clusters(cents, qv, nprobe))
+    rows = idx.scan(sorted({c for _, c in pairs}), predicate)
     pair_df = local_rows_df(spark, pairs, "_qid bigint, cluster int")
     q_df = local_rows_df(spark, qrows, "_qid bigint, _qvec array<double>")
     sim = cosine(F.col(vec_col), F.col("_qvec"))
     w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col(id_col))
     return (
-        idx.join(F.broadcast(pair_df), "cluster")
+        rows.join(F.broadcast(pair_df), "cluster")
         .join(F.broadcast(q_df), "_qid")
         .filter(F.col(id_col) != F.col("_qid"))
         .select(F.col("_qid").alias("query_id"), F.col(id_col), sim.alias("cos_sim"))
@@ -229,18 +194,56 @@ def ivf_topk_indexed_batch(
     )
 
 
+def _nearest_clusters(cents: "list[tuple[int, list[float]]]", query_vec, nprobe: int) -> "list[int]":
+    """The ``nprobe`` centroids nearest ``query_vec`` by cosine, ranked
+    driver-side, ties to the lower cluster id; a zero vector scores 0.
+    The single-query and batched IVF probes both rank through here, so
+    their probe sets are bit-identical."""
+    import math
+
+    qn = math.sqrt(sum(float(x) * float(x) for x in query_vec))
+
+    def _cos(c: "list[float]") -> float:
+        cn = math.sqrt(sum(x * x for x in c))
+        if qn == 0.0 or cn == 0.0:
+            return 0.0
+        return sum(float(a) * b for a, b in zip(query_vec, c)) / (qn * cn)
+
+    return [c for c, _ in sorted(cents, key=lambda cc: (-_cos(cc[1]), cc[0]))[:nprobe]]
+
+
+def _centroids(idx: "segstore.Index", name: str) -> "list[tuple[int, list[float]]]":
+    """A centroid sidecar's rows as sorted (cluster, centroid) pairs."""
+    return sorted((int(r["cluster"]), [float(x) for x in r["centroid"]]) for r in idx.rows(name))
+
+
+def _rank_cos(rows: DataFrame, query_vec, k: int, id_col: str, vec_col: str) -> DataFrame:
+    """Exact cosine rerank of ``rows`` against ``query_vec``: (id,
+    cos_sim) desc, id tiebreak, top ``k``."""
+    sim = cosine(F.col(vec_col), segstore.doubles_lit(query_vec))
+    return (
+        rows.select(F.col(id_col), sim.alias("cos_sim"))
+        .orderBy(F.col("cos_sim").desc(), F.col(id_col))
+        .limit(k)
+    )
+
+
+def _plane_coef(plane: int, i: Column) -> Column:
+    """h_plane[i] = ±1 from xxhash64(plane, i) parity — a deterministic
+    pseudo-random hyperplane."""
+    return F.when(F.xxhash64(F.lit(plane), i).bitwiseAND(F.lit(1)) == 1, F.lit(1.0)).otherwise(F.lit(-1.0))
+
+
 def _hyperplane_proj(vec: Column, plane: int, dims: int) -> Column:
-    """Raw projection <vec, h_plane> where h_plane[i] = ±1 from
-    xxhash64(plane, i) parity — deterministic pseudo-random hyperplane.
-    The sign gives the bucket bit; the MAGNITUDE is how far the vector
-    sits from the plane, which is what query-directed multi-probe
-    ranks perturbations by."""
+    """Raw projection <vec, h_plane> (see ``_plane_coef``).  The
+    sign gives the bucket bit; the MAGNITUDE is how far the vector sits
+    from the plane, which is what query-directed multi-probe ranks
+    perturbations by."""
     return F.aggregate(
         F.zip_with(
             vec,
             F.sequence(F.lit(0), F.lit(dims - 1)),
-            lambda x, i: x.cast("double")
-            * F.when(F.xxhash64(F.lit(plane), i).bitwiseAND(F.lit(1)) == 1, F.lit(1.0)).otherwise(F.lit(-1.0)),
+            lambda x, i: x.cast("double") * _plane_coef(plane, i),
         ),
         F.lit(0.0),
         lambda acc, v: acc + v,
@@ -251,6 +254,22 @@ def _hyperplane_sign(vec: Column, plane: int, dims: int) -> Column:
     """Sign bit of <vec, h_plane> (see ``_hyperplane_proj``)."""
     proj = _hyperplane_proj(vec, plane, dims)
     return F.when(proj >= 0, F.lit(1)).otherwise(F.lit(0))
+
+
+@functools.lru_cache(maxsize=64)
+def _plane_signs(spark, planes: int, dims: int) -> "tuple[tuple[tuple[float, ...], float], ...]":
+    """Per plane: its ±1 coefficients over indices 0..dims-1, and its
+    coefficient past ``dims`` (where ``zip_with`` pads the index with
+    NULL, which the JVM hashes too).  One 1-row job per (session,
+    planes, dims)."""
+    def row(p):
+        return lambda i: _plane_coef(p, i)
+
+    r = spark.range(1).select(
+        *[F.transform(F.sequence(F.lit(0), F.lit(dims - 1)), row(p)) for p in range(planes)],
+        *[_plane_coef(p, F.lit(None).cast("int")) for p in range(planes)],
+    ).head()
+    return tuple((tuple(r[p]), r[planes + p]) for p in range(planes))
 
 
 def lsh_probe_buckets(
@@ -266,20 +285,26 @@ def lsh_probe_buckets(
     The first bucket is always the query's own (cost 0), so
     ``nprobe=1`` is exactly the single-bucket probe.
 
-    Driver-sized: ONE 1-row Spark job computes the per-plane raw
-    projections (the hyperplanes are xxhash64-derived JVM-side, so
-    they cannot be replicated in Python), then the 2^planes candidate
+    Driver-sized: the hyperplanes are xxhash64-derived JVM-side, so
+    ONE 1-row Spark job per (planes, dims) evaluates their ±1 signs
+    (``_plane_signs``, kept for the process).  The per-plane raw
+    projections are then folded driver-side in the JVM's order
+    (0.0 + x_0·h_0 + x_1·h_1 + …; a product with ±1 is exact), so they
+    are bit-equal to ``_hyperplane_proj``.  The 2^planes candidate
     perturbations are enumerated and sorted driver-side — fine for the
     signature widths hyperplane-LSH uses (≤ 16 bits; wider signatures
     want a heap-based generator and are rejected here — but ONLY when
     actually multi-probing: nprobe=1 is the plain bucket computation
-    and works at any width)."""
-    qlit = F.array(*[F.lit(float(x)) for x in query_vec])
-    projs = (
-        spark.range(1)
-        .select(*[_hyperplane_proj(qlit, p, dims).alias(f"p{p}") for p in range(planes)])
-        .head()
-    )
+    and works at any width).  A query shorter than ``dims`` is
+    rejected."""
+    if len(query_vec) < dims:
+        raise ValueError(f"lsh_probe_buckets: query has {len(query_vec)} dims, planes span {dims}")
+    projs = []
+    for h, past in _plane_signs(spark, planes, dims):
+        acc = 0.0
+        for i, x in enumerate(query_vec):
+            acc = acc + float(x) * (h[i] if i < dims else past)
+        projs.append(acc)
     base = sum((1 << p) for p in range(planes) if projs[p] >= 0)
     if nprobe <= 1:
         return [base]
@@ -351,14 +376,10 @@ def lsh_topk_multiprobe(
         for x in df.filter(F.col(id_col) == query_vec_id).head()[vec_col]
     ]
     buckets = lsh_probe_buckets(df.sparkSession, qvals, planes, dims, nprobe)
-    qlit = F.array(*[F.lit(x) for x in qvals])
-    sim = cosine(F.col(vec_col), qlit)
-    return (
+    return _rank_cos(
         df.withColumn("_bucket", lsh_bucket(F.col(vec_col), planes, dims))
-        .filter(F.col("_bucket").isin(buckets) & (F.col(id_col) != query_vec_id))
-        .select(F.col(id_col), sim.alias("cos_sim"))
-        .orderBy(F.col("cos_sim").desc(), F.col(id_col))
-        .limit(k)
+        .filter(F.col("_bucket").isin(buckets) & (F.col(id_col) != query_vec_id)),
+        qvals, k, id_col, vec_col,
     )
 
 
@@ -419,8 +440,9 @@ def lsh_topk_indexed(
 
     Query forms:
     - ``query_vec`` (an out-of-corpus vector, the common ANN-serving
-      case): its bucket is computed with the index's own stored
-      (planes, dims) — one 1-row job, no corpus I/O at all;
+      case): its bucket is computed driver-side with the index's own
+      stored (planes, dims) (``lsh_probe_buckets``), no corpus I/O at
+      all; a query of the wrong dimensionality is rejected;
     - ``query_vec_id`` (corpus vector): bucket from the ``_id_map``
       sidecar (columnar id-pushdown point read), query vector fetched
       from inside the already-pruned bucket.
@@ -453,13 +475,8 @@ def lsh_topk_indexed(
     the matching rows (brute-force-filtered parity)."""
     import os
 
-    params = (
-        spark.read.schema("planes int, dims int")
-        .parquet(os.path.join(path, "_lsh_params"))
-        .head()
-    )
-    planes, dims = int(params.planes), int(params.dims)
-    idx = spark.read.parquet(path)
+    idx = segstore.Index("lsh", spark, path, id_col, verb="lsh_topk_indexed", query=query_vec)
+    planes, dims = int(idx.params["planes"]), int(idx.params["dims"])
     if query_vec is not None:
         qvals = [float(x) for x in query_vec]
         exclude = F.lit(True) if query_vec_id is None else F.col(id_col) != query_vec_id
@@ -471,36 +488,14 @@ def lsh_topk_indexed(
         if brow is None:
             raise ValueError(f"query vector {query_vec_id} not found in index {path}")
         qrow = (
-            idx.filter(
-                (F.col("lsh_bucket") == brow["lsh_bucket"])
-                & (F.col(id_col) == query_vec_id)
-            )
+            idx.scan([brow["lsh_bucket"]]).filter(F.col(id_col) == query_vec_id)
             .select(vec_col)
             .head()
         )
         qvals = [float(x) for x in qrow[0]]
         exclude = F.col(id_col) != query_vec_id
     buckets = lsh_probe_buckets(spark, qvals, planes, dims, nprobe)
-    qlit = F.array(*[F.lit(x) for x in qvals])
-    sim = cosine(F.col(vec_col), qlit)
-    bucket_pred = (
-        F.col("lsh_bucket") == buckets[0]
-        if len(buckets) == 1
-        else F.col("lsh_bucket").isin(buckets)
-    )
-    out = idx.filter(bucket_pred & exclude)
-    if predicate is not None:
-        if isinstance(predicate, DataFrame):
-            out = out.join(predicate.select(F.col(id_col)), id_col, "left_semi")
-        else:
-            out = out.filter(
-                F.expr(predicate) if isinstance(predicate, str) else predicate
-            )
-    return (
-        out.select(F.col(id_col), sim.alias("cos_sim"))
-        .orderBy(F.col("cos_sim").desc(), F.col(id_col))
-        .limit(k)
-    )
+    return _rank_cos(idx.scan(buckets, predicate).filter(exclude), qvals, k, id_col, vec_col)
 
 
 def brute_force_topk_pandas(
@@ -801,44 +796,8 @@ def ivf_topk_indexed(
     desc, id) output contract as ``ivf_topk``/``ivf_topk_learned``;
     centroid ties break on cluster id (deterministic).  Wrong-dims
     queries are rejected via the params sidecar."""
-    import math
-    import os
-
-    params = (
-        spark.read.schema("n_clusters int, dims int")
-        .parquet(os.path.join(path, "_ivf_params"))
-        .head()
-    )
-    if len(query_vec) != params.dims:
-        raise ValueError(
-            f"ivf_topk_indexed: query has {len(query_vec)} dims, "
-            f"index expects {params.dims}"
-        )
-    cents = [
-        (int(r["cluster"]), [float(x) for x in r["centroid"]])
-        for r in spark.read.schema("cluster int, centroid array<double>")
-        .parquet(os.path.join(path, "_ivf_centroids"))
-        .collect()
-    ]
-    qn = math.sqrt(sum(float(x) * float(x) for x in query_vec))
-
-    def _cos(c: "list[float]") -> float:
-        cn = math.sqrt(sum(x * x for x in c))
-        if qn == 0.0 or cn == 0.0:
-            return 0.0
-        return sum(float(a) * b for a, b in zip(query_vec, c)) / (qn * cn)
-
-    probed = [c for c, _ in sorted(cents, key=lambda cc: (-_cos(cc[1]), cc[0]))[:nprobe]]
-    idx = spark.read.parquet(os.path.join(path, "vectors"))
-    qlit = F.array(*[F.lit(float(x)) for x in query_vec])
-    out = idx.filter(F.col("cluster").isin(probed))
-    if exclude_vec_id is not None:
-        out = out.filter(F.col(id_col) != exclude_vec_id)
-    return (
-        out.select(F.col(id_col), cosine(F.col(vec_col), qlit).alias("cos_sim"))
-        .orderBy(F.col("cos_sim").desc(), F.col(id_col))
-        .limit(k)
-    )
+    return _ivf_probe("ivf_topk_indexed", spark, path, query_vec, None, k, nprobe,
+                      exclude_vec_id, id_col, vec_col)
 
 
 def ivf_topk_indexed_filtered(
@@ -877,49 +836,21 @@ def ivf_topk_indexed_filtered(
     predicates living OUTSIDE the index (e.g. a documents-table
     filter); it lands as a semi-join on the pruned cluster scan,
     before ranking, exactly like the column form."""
-    import math
-    import os
+    return _ivf_probe("ivf_topk_indexed_filtered", spark, path, query_vec, predicate, k,
+                      nprobe, exclude_vec_id, id_col, vec_col)
 
-    pred = F.expr(predicate) if isinstance(predicate, str) else predicate
-    params = (
-        spark.read.schema("n_clusters int, dims int")
-        .parquet(os.path.join(path, "_ivf_params"))
-        .head()
-    )
-    if len(query_vec) != params.dims:
-        raise ValueError(
-            f"ivf_topk_indexed_filtered: query has {len(query_vec)} dims, "
-            f"index expects {params.dims}"
-        )
-    cents = [
-        (int(r["cluster"]), [float(x) for x in r["centroid"]])
-        for r in spark.read.schema("cluster int, centroid array<double>")
-        .parquet(os.path.join(path, "_ivf_centroids"))
-        .collect()
-    ]
-    qn = math.sqrt(sum(float(x) * float(x) for x in query_vec))
 
-    def _cos(c: "list[float]") -> float:
-        cn = math.sqrt(sum(x * x for x in c))
-        if qn == 0.0 or cn == 0.0:
-            return 0.0
-        return sum(float(a) * b for a, b in zip(query_vec, c)) / (qn * cn)
-
-    probed = [c for c, _ in sorted(cents, key=lambda cc: (-_cos(cc[1]), cc[0]))[:nprobe]]
-    idx = spark.read.parquet(os.path.join(path, "vectors"))
-    qlit = F.array(*[F.lit(float(x)) for x in query_vec])
-    out = idx.filter(F.col("cluster").isin(probed))
-    if isinstance(pred, DataFrame):
-        out = out.join(pred.select(F.col(id_col)), id_col, "left_semi")
-    else:
-        out = out.filter(pred)
+def _ivf_probe(verb, spark, path, query_vec, predicate, k, nprobe, exclude_vec_id, id_col, vec_col):
+    """The IVF probe both public names wrap: the ``nprobe`` nearest
+    centroids from the cached sidecar, a partition-pruned store scan
+    restricted by ``predicate`` (``segstore.restrict``), exact cosine
+    rerank."""
+    idx = segstore.Index("ivf", spark, path, id_col, verb=verb, query=query_vec)
+    probed = _nearest_clusters(_centroids(idx, "_ivf_centroids"), query_vec, nprobe)
+    out = idx.scan(probed, predicate)
     if exclude_vec_id is not None:
         out = out.filter(F.col(id_col) != exclude_vec_id)
-    return (
-        out.select(F.col(id_col), cosine(F.col(vec_col), qlit).alias("cos_sim"))
-        .orderBy(F.col("cos_sim").desc(), F.col(id_col))
-        .limit(k)
-    )
+    return _rank_cos(out, query_vec, k, id_col, vec_col)
 
 
 def pairwise_above_threshold(
@@ -1184,7 +1115,7 @@ def pq_topk_adc(
     for s, c, cv in codebooks:
         q = query_vec[s * d : (s + 1) * d]
         table[s][c] = float(sum((float(a) - float(b)) ** 2 for a, b in zip(q, cv)))
-    tlit = F.array(*[F.array(*[F.lit(x) for x in row]) for row in table])
+    tlit = segstore.doubles_lit(table)
     dist = F.aggregate(
         F.sequence(F.lit(0), F.lit(m - 1)),
         F.lit(0.0),
@@ -1227,10 +1158,9 @@ def pq_topk_rerank(
     from .kmeans import _sq_dist
 
     cand = pq_topk_adc(codes_df, codebooks, query_vec, shortlist, id_col).select(id_col)
-    qlit = F.array(*[F.lit(float(x)) for x in query_vec])
     return (
         df.join(F.broadcast(cand), id_col, "left_semi")
-        .select(F.col(id_col), _sq_dist(F.col(vec_col), qlit).alias("l2_dist"))
+        .select(F.col(id_col), _sq_dist(F.col(vec_col), segstore.doubles_lit(query_vec)).alias("l2_dist"))
         .orderBy(F.col("l2_dist").asc(), F.col(id_col))
         .limit(k)
     )
@@ -1456,23 +1386,12 @@ def ivfpq_topk(
             sub = qr[s * d : (s + 1) * d]
             t[s][c] = float(sum((a - float(b)) ** 2 for a, b in zip(sub, cv)))
         tables.append(t)
-    # ONE SQL-parsed literal instead of nprobe*m*k py4j Column builds
-    # (up to thousands of gateway round-trips at bench config — the
-    # pq_adc_report literal-assembly lesson); repr(x)+'D' is the
-    # shortest-round-trip double literal Spark parses back BIT-exactly
-    # (pinned by test_sql_double_literals_roundtrip)
-    tlit = F.expr(
-        "array("
-        + ",".join(
-            "array("
-            + ",".join(
-                "array(" + ",".join(repr(x) + "D" for x in row) + ")" for row in t
-            )
-            + ")"
-            for t in tables
-        )
-        + ")"
-    )
+    # ONE folded constant (segstore.doubles_lit) for the nprobe*m*k
+    # tables: py4j F.lit builds cost one gateway round-trip each, and a
+    # SQL-parsed array(...) saves those calls but still hands the
+    # analyzer one CreateArray child per value — analysing 4,096 of them
+    # costs most of a second
+    tlit = segstore.doubles_lit(tables)
     # cluster id → probe position (literal when-chain; nprobe is tiny)
     pos = F.when(F.col("cluster") == probed[0][0], F.lit(0))
     for i, (cid, _) in enumerate(probed[1:], start=1):
@@ -1506,10 +1425,9 @@ def ivfpq_topk(
         .limit(shortlist)
         .select(id_col)
     )
-    qlit = F.array(*[F.lit(float(x)) for x in query_vec])
     return (
         df.join(F.broadcast(cand), id_col, "left_semi")
-        .select(F.col(id_col), _sq_dist(F.col(vec_col), qlit).alias("l2_dist"))
+        .select(F.col(id_col), _sq_dist(F.col(vec_col), segstore.doubles_lit(query_vec)).alias("l2_dist"))
         .orderBy(F.col("l2_dist").asc(), F.col(id_col))
         .limit(k)
     )
@@ -1582,38 +1500,8 @@ def ivfpq_topk_indexed(
     vector table.  Results are identical to ``ivfpq_topk`` over the
     same build (same ADC tables, same (l2_dist, id) ordering).  A
     query of the wrong dimensionality is rejected up front."""
-    import os
-
-    params = (
-        spark.read.schema("n_clusters int, m int, k int, dims int, assign_n int")
-        .parquet(os.path.join(path, "_ivfpq_params"))
-        .head()
-    )
-    if len(query_vec) != params.dims:
-        raise ValueError(
-            f"ivfpq_topk_indexed: query has {len(query_vec)} dims, "
-            f"index expects {params.dims}"
-        )
-    cent_rows = sorted(
-        (int(r["cluster"]), [float(x) for x in r["centroid"]])
-        for r in spark.read.schema("cluster int, centroid array<double>")
-        .parquet(os.path.join(path, "_ivfpq_centroids"))
-        .collect()
-    )
-    books = read_pq_codebooks(spark, path)
-    codes = spark.read.parquet(os.path.join(path, "codes"))
-    return ivfpq_topk(
-        df,
-        codes,
-        cent_rows,
-        books,
-        query_vec,
-        k=k,
-        nprobe=nprobe,
-        shortlist=shortlist,
-        id_col=id_col,
-        vec_col=vec_col,
-    )
+    return _adc_probe("ivfpq", "ivfpq_topk_indexed", spark, path, df, query_vec, None, k,
+                      shortlist, id_col, vec_col, nprobe)
 
 
 def ivfpq_topk_indexed_filtered(
@@ -1644,42 +1532,27 @@ def ivfpq_topk_indexed_filtered(
     serving settings, oversample shortlist by ~1/selectivity relative
     to the unfiltered configuration.  Output contract is
     ``ivfpq_topk_indexed``'s: (id, l2_dist) ascending, id tiebreak."""
-    import os
+    return _adc_probe("ivfpq", "ivfpq_topk_indexed_filtered", spark, path, df, query_vec,
+                      predicate, k, shortlist, id_col, vec_col, nprobe)
 
-    pred = F.expr(predicate) if isinstance(predicate, str) else predicate
-    params = (
-        spark.read.schema("n_clusters int, m int, k int, dims int, assign_n int")
-        .parquet(os.path.join(path, "_ivfpq_params"))
-        .head()
-    )
-    if len(query_vec) != params.dims:
-        raise ValueError(
-            f"ivfpq_topk_indexed_filtered: query has {len(query_vec)} dims, "
-            f"index expects {params.dims}"
-        )
-    cent_rows = sorted(
-        (int(r["cluster"]), [float(x) for x in r["centroid"]])
-        for r in spark.read.schema("cluster int, centroid array<double>")
-        .parquet(os.path.join(path, "_ivfpq_centroids"))
-        .collect()
-    )
-    books = read_pq_codebooks(spark, path)
-    matching = df.filter(pred)
-    codes = spark.read.parquet(os.path.join(path, "codes")).join(
-        matching.select(F.col(id_col)), id_col, "left_semi"
-    )
-    return ivfpq_topk(
-        matching,
-        codes,
-        cent_rows,
-        books,
-        query_vec,
-        k=k,
-        nprobe=nprobe,
-        shortlist=shortlist,
-        id_col=id_col,
-        vec_col=vec_col,
-    )
+
+def _adc_probe(kind, verb, spark, path, df, query_vec, predicate, k, shortlist, id_col, vec_col,
+               nprobe=None):
+    """The PQ and IVFPQ probe the four public names wrap: codebooks (and
+    IVFPQ's coarse centroids) from the cached sidecars, the codes store
+    read with its known schema, and the exact rerank over ``df``.  The
+    codes carry no metadata, so ``predicate`` (``segstore.restrict``)
+    filters ``df`` and the codes are semi-joined to the matching ids
+    BEFORE the ADC shortlist is cut."""
+    idx = segstore.Index(kind, spark, path, id_col, verb=verb, query=query_vec)
+    books = _books(idx)
+    rows = segstore.restrict(df, predicate, id_col)
+    codes = idx.scan(predicate=None if predicate is None else rows.select(F.col(id_col)))
+    if kind == "pq":
+        return pq_topk_rerank(rows, codes, books, query_vec, k=k, shortlist=shortlist,
+                              id_col=id_col, vec_col=vec_col)
+    return ivfpq_topk(rows, codes, _centroids(idx, "_ivfpq_centroids"), books, query_vec, k=k,
+                      nprobe=nprobe, shortlist=shortlist, id_col=id_col, vec_col=vec_col)
 
 
 def append_ivfpq_index(
@@ -1756,16 +1629,16 @@ def write_pq_index(
 
 
 def read_pq_codebooks(spark, path: str) -> "list[tuple[int, int, list[float]]]":
-    """The index's codebooks, driver-side (m·k·dims floats — a few KB),
-    in canonical (subspace, code) order."""
-    import os
+    """The codebooks of the PQ or IVFPQ index at ``path``, driver-side
+    (m·k·dims floats — a few KB), in canonical (subspace, code) order.
+    They come through segstore's metadata cache, keyed by the sidecar's
+    file listing: a warm call runs no Spark job, and any rewrite of the
+    sidecar is a miss."""
+    return _books(segstore.Index("pq", spark, path))
 
-    rows = (
-        spark.read.schema("s int, c int, cv array<double>")
-        .parquet(os.path.join(path, "_pq_codebooks"))
-        .collect()
-    )
-    return sorted((r["s"], r["c"], [float(x) for x in r["cv"]]) for r in rows)
+
+def _books(idx: "segstore.Index") -> "list[tuple[int, int, list[float]]]":
+    return sorted((r["s"], r["c"], [float(x) for x in r["cv"]]) for r in idx.rows("_pq_codebooks"))
 
 
 def pq_topk_indexed(
@@ -1787,23 +1660,8 @@ def pq_topk_indexed(
     dimensionality is rejected rather than silently mis-sliced.
     Results are identical to ``pq_topk_rerank`` with the same
     codebooks (same ADC table, same (l2_dist, id) ordering)."""
-    import os
-
-    params = (
-        spark.read.schema("m int, k int, dims int")
-        .parquet(os.path.join(path, "_pq_params"))
-        .head()
-    )
-    if len(query_vec) != params.dims:
-        raise ValueError(
-            f"pq_topk_indexed: query has {len(query_vec)} dims, index expects {params.dims}"
-        )
-    books = read_pq_codebooks(spark, path)
-    codes = spark.read.parquet(os.path.join(path, "codes"))
-    return pq_topk_rerank(
-        df, codes, books, query_vec, k=k, shortlist=shortlist,
-        id_col=id_col, vec_col=vec_col,
-    )
+    return _adc_probe("pq", "pq_topk_indexed", spark, path, df, query_vec, None, k, shortlist,
+                      id_col, vec_col)
 
 
 def pq_topk_indexed_filtered(
@@ -1826,32 +1684,8 @@ def pq_topk_indexed_filtered(
     slot goes to a returnable row.  With shortlist ≥ the filtered
     corpus the result is exact over the matching rows (pinned); at
     serving shortlist, oversample by ~1/selectivity."""
-    import os
-
-    params = (
-        spark.read.schema("m int, k int, dims int")
-        .parquet(os.path.join(path, "_pq_params"))
-        .head()
-    )
-    if len(query_vec) != params.dims:
-        raise ValueError(
-            f"pq_topk_indexed_filtered: query has {len(query_vec)} dims, "
-            f"index expects {params.dims}"
-        )
-    if isinstance(predicate, DataFrame):
-        matching = df.join(predicate.select(F.col(id_col)), id_col, "left_semi")
-    else:
-        matching = df.filter(
-            F.expr(predicate) if isinstance(predicate, str) else predicate
-        )
-    books = read_pq_codebooks(spark, path)
-    codes = spark.read.parquet(os.path.join(path, "codes")).join(
-        matching.select(F.col(id_col)), id_col, "left_semi"
-    )
-    return pq_topk_rerank(
-        matching, codes, books, query_vec, k=k, shortlist=shortlist,
-        id_col=id_col, vec_col=vec_col,
-    )
+    return _adc_probe("pq", "pq_topk_indexed_filtered", spark, path, df, query_vec, predicate, k,
+                      shortlist, id_col, vec_col)
 
 
 def append_pq_index(

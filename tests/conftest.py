@@ -2,6 +2,8 @@ from __future__ import annotations
 
 import os
 import sys
+import uuid
+from contextlib import contextmanager
 
 import pytest
 
@@ -50,6 +52,39 @@ def pytest_terminal_summary(terminalreporter):
     terminalreporter.write_line(
         f"{len(slow)} @slow tests skipped (run them with SPARK_GRAFT_FULL_SUITE=1)"
     )
+
+
+_GROUP_PROPS = ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel")
+
+
+@contextmanager
+def job_group(spark, label: str):
+    """Run the body under a fresh Spark job group (pooled threads that
+    inherit it included) and yield the group id; the caller's group
+    properties are restored afterwards."""
+    sc = spark.sparkContext
+    group = f"{label}-{uuid.uuid4().hex}"
+    saved = [(k, sc.getLocalProperty(k)) for k in _GROUP_PROPS]
+    sc.setJobGroup(group, label, False)
+    try:
+        yield group
+    finally:
+        for key, value in saved:
+            sc.setLocalProperty(key, value)
+
+
+def group_jobs(spark, group: str) -> int:
+    """Spark jobs launched so far under job group ``group``."""
+    sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def count_jobs(spark, action) -> int:
+    """Spark jobs ``action()`` launches."""
+    with job_group(spark, "counted") as group:
+        action()
+    return group_jobs(spark, group)
 
 
 @pytest.fixture(scope="session")

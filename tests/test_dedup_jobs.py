@@ -14,12 +14,13 @@ timing."""
 from __future__ import annotations
 
 import random
-import uuid
 
 import pytest
 from pyspark.sql import functions as F
 
 from clickstreaming_end_to_end_data_engineering_project_spark.operators import dedup as D
+
+from .conftest import count_jobs
 
 # jobs per call now, and the same fixture when each of the six joins
 # had its own body (the cosine joins then ran the dense-gate aggregate
@@ -36,23 +37,6 @@ PINS = {
     "cosine_prefix_new_pairs/cap0": (51, 51),
     "cosine_prefix_new_pairs/cap40": (53, 56),
 }
-
-_GROUP_PROPS = ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel")
-
-
-def _jobs(spark, action) -> int:
-    sc = spark.sparkContext
-    group = f"dedup-{uuid.uuid4().hex}"
-    saved = [(k, sc.getLocalProperty(k)) for k in _GROUP_PROPS]
-    sc.setJobGroup(group, "dedup join", False)
-    try:
-        action()
-    finally:
-        for key, value in saved:
-            sc.setLocalProperty(key, value)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
 
 def _frames(spark):
     """(all docs, corpus, batch): 120 Zipf-vocabulary docs plus 20
@@ -91,6 +75,6 @@ def no_broadcast_joins(spark):
 @pytest.mark.parametrize("name", list(PINS))
 def test_dedup_join_job_counts(spark, no_broadcast_joins, name):
     action = _case(name, *_frames(spark))
-    got = _jobs(spark, action)
+    got = count_jobs(spark, action)
     assert got == PINS[name][0]
     assert PINS[name][0] <= PINS[name][1]

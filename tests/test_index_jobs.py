@@ -7,10 +7,7 @@ job group, so they are counted too."""
 
 from __future__ import annotations
 
-import uuid
-
 import pytest
-from pyspark.sql import functions as F
 
 from clickstreaming_end_to_end_data_engineering_project_spark.operators import (
     retrieval as R,
@@ -20,13 +17,17 @@ from clickstreaming_end_to_end_data_engineering_project_spark.operators.maintena
     maintain_index,
 )
 
-# (append, maintain_index(max_segments=1), delete) jobs per layout
+from .conftest import count_jobs
+
+# (append, maintain_index(max_segments=1), delete) jobs per layout; the
+# build records the params it was given in segstore's metadata cache,
+# and PQ/IVFPQ verbs share the store schema their first read infers
 PINS = {
     "bm25": (18, 8, 17),
-    "lsh": (10, 5, 10),
-    "ivf": (12, 6, 10),
-    "pq": (14, 4, 8),
-    "ivfpq": (16, 5, 8),
+    "lsh": (9, 5, 10),
+    "ivf": (11, 6, 10),
+    "pq": (13, 3, 7),
+    "ivfpq": (15, 4, 7),
 }
 # the same fixture when each layout kept its own copy of every verb:
 # no pin may rise above these
@@ -37,23 +38,6 @@ PER_LAYOUT_VERBS = {
     "pq": (15, 4, 8),
     "ivfpq": (20, 5, 8),
 }
-
-_GROUP_PROPS = ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel")
-
-
-def _jobs(spark, action) -> int:
-    sc = spark.sparkContext
-    group = f"verb-{uuid.uuid4().hex}"
-    saved = [(k, sc.getLocalProperty(k)) for k in _GROUP_PROPS]
-    sc.setJobGroup(group, "index verb", False)
-    try:
-        action()
-    finally:
-        for key, value in saved:
-            sc.setLocalProperty(key, value)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
 
 def _layout(spark, kind: str, path: str):
     """(build, append, delete) callables over the layout at ``path``."""
@@ -95,9 +79,9 @@ def test_index_verb_job_counts(spark, tmp_path, kind):
     build, append, delete = _layout(spark, kind, str(tmp_path / kind))
     build()
     got = (
-        _jobs(spark, append),
-        _jobs(spark, lambda: maintain_index(spark, str(tmp_path / kind), max_segments=1)),
-        _jobs(spark, delete),
+        count_jobs(spark, append),
+        count_jobs(spark, lambda: maintain_index(spark, str(tmp_path / kind), max_segments=1)),
+        count_jobs(spark, delete),
     )
     assert got == PINS[kind]
     assert all(p <= q for p, q in zip(PINS[kind], PER_LAYOUT_VERBS[kind]))

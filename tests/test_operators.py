@@ -1906,6 +1906,55 @@ def test_sql_double_literals_roundtrip(spark):
         assert _struct.pack("d", v) == _struct.pack("d", g), (v, g)
 
 
+def test_doubles_lit_roundtrips_bit_exactly_as_one_constant(spark):
+    """Query vectors and ADC tables enter probe plans through
+    ``segstore.doubles_lit``: one JSON string literal parsed by
+    ``from_json``.  Every double must come back bit-exactly (compared by
+    repr, so -0.0 and the subnormals count), flat and nested, and the
+    optimizer must fold the parse into one constant."""
+    import math
+    import struct as _struct
+
+    from clickstreaming_end_to_end_data_engineering_project_spark.operators.segstore import (
+        doubles_lit,
+    )
+
+    vals = [0.0, -0.0, 5e-324, 2.2250738585072014e-308, 1.7976931348623157e308, 0.1, 1 / 3]
+    rng = random.Random(20261018)
+    while len(vals) < 7 + 10_000:
+        x = _struct.unpack("d", _struct.pack("Q", rng.getrandbits(64)))[0]
+        if math.isfinite(x):
+            vals.append(x)
+    df = spark.range(1).select(doubles_lit(vals).alias("a"))
+    assert [repr(g) for g in df.first()["a"]] == [repr(v) for v in vals]
+    assert "from_json" not in df._jdf.queryExecution().optimizedPlan().toString()
+    nested = [[vals[:3], vals[3:7]], [vals[7:9], vals[9:11]]]
+    got = spark.range(1).select(doubles_lit(nested).alias("a")).first()["a"]
+    assert [[[repr(x) for x in r] for r in t] for t in got] == [
+        [[repr(x) for x in r] for r in t] for t in nested
+    ]
+
+
+def test_lsh_indexed_probe_rejects_wrong_dims_query(spark, tmp_path):
+    """Like the IVF, PQ and IVFPQ probes, the LSH probe rejects a query
+    whose length differs from the index's dims (a longer one used to
+    return rows with NULL cos_sim, a shorter one a TypeError)."""
+    from clickstreaming_end_to_end_data_engineering_project_spark.operators import (
+        similarity as S,
+    )
+
+    vecs = spark.createDataFrame(
+        [(i, [float(i % 5), float(i % 3), 1.0, float(i) / 7.0]) for i in range(12)],
+        "vec_id long, embedding array<double>",
+    )
+    path = str(tmp_path / "lsh")
+    S.write_lsh_index(vecs, path, planes=2, dims=4)
+    assert len(S.lsh_topk_indexed(spark, path, query_vec=[0.5] * 4, k=3).collect()) == 3
+    for n in (3, 5, 6):
+        with pytest.raises(ValueError, match=f"lsh_topk_indexed: query has {n} dims, index expects 4"):
+            S.lsh_topk_indexed(spark, path, query_vec=[0.5] * n, k=3).collect()
+
+
 def test_pq_adc_report_matches_pq_encode_assignments(spark, sf_dir):
     """The oracle-backed anchor-codebook report and the production
     encode path share assignment semantics: decoding code_key must

@@ -29,6 +29,8 @@ from clickstreaming_end_to_end_data_engineering_project_spark.streaming.sinks im
     Sink,
 )
 
+from .conftest import count_jobs, group_jobs, job_group
+
 EVENTS_DDL = "event_id long, ts timestamp, user_id long, event_type string, value double"
 T0 = dt.datetime(2024, 3, 1)
 
@@ -60,30 +62,21 @@ def _write_files(spark, src: str, files: list[list[tuple]]) -> None:
         os.utime(path, (base + i, base + i))
 
 
-_GROUP_PROPS = ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel")
-
-
 class _JobGroups:
     """foreachBatch wrapper (deliberately not a ``Sink``) that runs each
     call under its own job group, so jobs can be counted per batch."""
 
     def __init__(self, spark, sink):
-        self.sc, self.sink = spark.sparkContext, sink
+        self.spark, self.sink = spark, sink
         self.groups: dict[int, str] = {}
 
     def __call__(self, df, batch_id):
-        group = self.groups[batch_id] = f"sink-{uuid.uuid4().hex}"
-        saved = [(k, self.sc.getLocalProperty(k)) for k in _GROUP_PROPS]
-        self.sc.setJobGroup(group, "sink call", False)
-        try:
+        with job_group(self.spark, "sink") as group:
+            self.groups[batch_id] = group
             self.sink(df, batch_id)
-        finally:
-            for key, value in saved:
-                self.sc.setLocalProperty(key, value)
 
     def jobs(self, batch_id: int) -> int:
-        self.sc._jsc.sc().listenerBus().waitUntilEmpty()
-        return len(self.sc.statusTracker().getJobIdsForGroup(self.groups[batch_id]))
+        return group_jobs(self.spark, self.groups[batch_id])
 
 
 def _run(spark, tmp_path, name: str, stream_df, sink, mode: str):
@@ -192,12 +185,6 @@ def test_sessions_state_executes_once_per_batch(spark, tmp_path, few_state_parti
     assert emitted > 0
 
 
-def _jobs(spark, action) -> int:
-    counted = _JobGroups(spark, lambda _df, _batch_id: action())
-    counted(None, 0)
-    return counted.jobs(0)
-
-
 @pytest.fixture
 def micro_batch_regime(spark):
     """Batch frames with adaptive execution off, as Structured Streaming
@@ -212,17 +199,17 @@ def test_sink_call_job_counts(spark, tmp_path, micro_batch_regime):
     df = spark.createDataFrame([("a", 1), ("b", 2), ("a", 3)], "k string, n long")
     parquet = IdempotentParquetSink(str(tmp_path / "out"))
     composite = CompositeSink(parquet, MetricsSink("k", "n"))
-    assert _jobs(spark, lambda: composite(df, 0)) == 3  # count, write, delta
+    assert count_jobs(spark, lambda: composite(df, 0)) == 3  # count, write, delta
     assert composite.sinks[1].counters == {"page_views:a": 4, "page_views:b": 2}
-    assert _jobs(spark, lambda: parquet(df, 1)) == 2  # count, write
+    assert count_jobs(spark, lambda: parquet(df, 1)) == 2  # count, write
 
     class NoWrite(Sink):
         def write(self, df, batch_id):
             raise AssertionError("write called on an empty batch")
 
     empty = df.filter("n > 9")
-    assert _jobs(spark, lambda: CompositeSink(NoWrite(), NoWrite())(empty, 2)) == 1
-    assert _jobs(spark, lambda: NoWrite()(empty, 3)) == 1
+    assert count_jobs(spark, lambda: CompositeSink(NoWrite(), NoWrite())(empty, 2)) == 1
+    assert count_jobs(spark, lambda: NoWrite()(empty, 3)) == 1
 
 
 def test_batch_delta_null_rule(spark):
