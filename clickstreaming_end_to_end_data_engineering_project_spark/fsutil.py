@@ -233,19 +233,24 @@ def existing_batch_ids(spark, path: str) -> "list[int]":
     return sorted(out)
 
 
-def read_store_or_empty(spark, path: str, schema):
-    """Read a written summary/sketch store, degrading ONLY a missing
-    path to an empty frame of ``schema``.  Any other read failure —
-    corrupted files, a mixed files+dirs layout — must raise, not
-    silently report an empty store (the r12 advisory rule; previously
-    duplicated verbatim in sketch_ingest and hh_ingest, where a Spark
-    error-string change could have been fixed in one copy and kept
-    masking in the other)."""
+def read_or_none(spark, path: str, schema):
+    """Read the parquet dataset at ``path`` with ``schema``, or None
+    when ONLY the path is missing.  Any other read failure — corrupted
+    files, a mixed files+dirs layout — must raise, not silently report
+    an empty store (the r12 advisory rule, kept in this one copy so a
+    Spark error-string change is fixed once)."""
     from pyspark.errors import AnalysisException
 
     try:
         return spark.read.schema(schema).parquet(path)
     except AnalysisException as exc:
         if "PATH_NOT_FOUND" in str(exc):
-            return spark.createDataFrame([], schema)
+            return None
         raise
+
+
+def read_store_or_empty(spark, path: str, schema):
+    """Read a written summary/sketch store, a missing path as an empty
+    frame of ``schema`` (``read_or_none``'s rule)."""
+    found = read_or_none(spark, path, schema)
+    return spark.createDataFrame([], schema) if found is None else found

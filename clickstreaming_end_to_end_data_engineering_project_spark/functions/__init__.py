@@ -59,11 +59,6 @@ def sum_money(c: str | Column) -> Column:
     return F.sum(money(c)).cast("double")
 
 
-def sum_expr_exact(expr: Column) -> Column:
-    """Exact decimal sum of an already-decimal expression, as double."""
-    return F.sum(expr).cast("double")
-
-
 def avg_money(c: str | Column) -> Column:
     """Order-independent average of a 2-dp money column: exact decimal
     sum cast to double, divided by count (identical division on both

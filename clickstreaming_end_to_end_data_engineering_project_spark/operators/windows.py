@@ -37,13 +37,3 @@ def tumbling_count(
         )
     )
 
-
-def tumbling_agg(df: DataFrame, ts_col: str, duration: str, keys: list, aggs: list) -> DataFrame:
-    """General tumbling-window aggregation; aggs are pre-aliased Columns."""
-    return (
-        df.groupBy(F.window(ts_col, duration).alias("w"), *keys)
-        .agg(*aggs)
-        .withColumn("window_start", F.col("w.start"))
-        .withColumn("window_end", F.col("w.end"))
-        .drop("w")
-    )

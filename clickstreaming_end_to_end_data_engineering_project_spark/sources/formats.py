@@ -51,14 +51,6 @@ def read_json_lines(spark: SparkSession, path: str, schema: StructType) -> DataF
     return spark.read.schema(schema).option("mode", "PERMISSIVE").json(path)
 
 
-def stream_csv(spark: SparkSession, path: str, schema: StructType, header: bool = True) -> DataFrame:
-    return spark.readStream.schema(schema).option("header", str(header).lower()).csv(path)
-
-
-def stream_json_lines(spark: SparkSession, path: str, schema: StructType) -> DataFrame:
-    return spark.readStream.schema(schema).json(path)
-
-
 def write_partitioned_parquet(
     df: DataFrame, path: str, partition_cols: list[str], mode: str = "overwrite"
 ) -> None:

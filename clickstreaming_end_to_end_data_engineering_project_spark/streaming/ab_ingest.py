@@ -13,9 +13,8 @@ bounded by DAU x experiment-days — independent of raw event volume.
 Unlike the attribution/sequence sinks, this family has NO ordering
 contract: the per-unit merge is ``bool_or`` — commutative, idempotent,
 monotone — so batches may arrive in any order and replays are
-semantically harmless (the hwm discipline is kept anyway so a replayed
-batch never rewrites history with a LATER state's readout: out-write
-precedes the state swap, ``batch_id <= hwm`` skips whole).  The pin
+semantically harmless (``StatefulSink``'s hwm rule applies anyway, so a
+replayed batch never rewrites history with a LATER state's readout).  The pin
 test streams SHUFFLED batches and still matches the batch operator
 bit-for-bit — a property the order-contracted sinks cannot offer.
 
@@ -29,7 +28,7 @@ Per batch:
    ``scd2_apply`` discipline: streaming-vs-batch equality cannot drift
    between two copies);
 4. swap the merged units in as the new state
-   (streaming/_state.py contract).
+   (``StatefulSink``, streaming/_state.py).
 """
 
 from __future__ import annotations
@@ -40,9 +39,10 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.stats import two_proportion_ztest
+from ._state import StatefulSink
 
 
-class ABTestSink:
+class ABTestSink(StatefulSink):
     """foreachBatch callable: micro-batch of raw events → running
     z-test readout under ``store_dir/out/batch=<id>/`` + per-unit
     state under ``store_dir/state/``.
@@ -74,26 +74,16 @@ class ABTestSink:
             .withColumn("in_treatment", self.treatment_expr)
         )
 
-    def __call__(self, batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        from ._state import read_state, write_state
+    def init_state(self, batch: DataFrame) -> DataFrame:
+        return self._units(batch).limit(0)
 
-        spark = batch.sparkSession
-        state_dir = os.path.join(self.store_dir, "state")
-        out_dir = os.path.join(self.store_dir, "out", f"batch={batch_id}")
-        units = self._units(batch)
-        state, have_state, hwm = read_state(spark, state_dir, units.limit(0))
-        if batch_id <= hwm:
-            return  # fully-applied replay (see module docstring)
+    def step(self, batch: DataFrame, state: DataFrame):
         merged = (
-            state.unionByName(units)
+            state.unionByName(self._units(batch))
             .groupBy(*self.unit_cols, "in_treatment")
             .agg(F.max("converted").alias("converted"))
         )
-        readout = two_proportion_ztest(merged, "in_treatment", "converted")
-        readout.write.mode("overwrite").parquet(out_dir)
-        write_state(spark, state_dir, merged, have_state, batch_id=batch_id)
+        return two_proportion_ztest(merged, "in_treatment", "converted"), merged
 
 
 def latest_readout_from_store(spark, store_dir: str) -> DataFrame:

@@ -19,15 +19,13 @@ unreachable by any future conversion.  Each micro-batch therefore:
 3. advances the state to the per-entity latest touch of seed ∪ batch
    under the staged-swap crash contract (``fsutil.swap_with_staging``).
 
-Crash/replay safety via the state-borne high-water mark
+Crash/replay safety is ``StatefulSink``'s state-borne high-water mark
 (streaming/_state.py; r17 review — a CONFIRMED bug in the first cut):
 replaying against an already-advanced state is NOT exact here, because
 the advanced state REPLACES the pre-batch seed touch rather than
 adding rows — a replayed conversion whose credit was the old seed
-would re-attribute to NULL.  The out write precedes the state swap, so
-``batch_id <= hwm`` means "output landed AND state advanced": the
-replay is skipped whole; a crash BEFORE the swap leaves the pre-batch
-state and the rerun recomputes exactly, rewriting its own out dir.
+would re-attribute to NULL, so ``batch_id <= hwm`` replays are
+skipped whole.
 
 Ordering contract (the standard streaming-attribution caveat, shared
 with ``scd2_apply``): batches must arrive in nondecreasing event-time
@@ -44,10 +42,22 @@ import os
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..operators.attribution import last_touch_attribution
+from ..operators.attribution import last_touch_attribution, multi_touch_attribution
+from ._state import StatefulSink
 
 
-class LastTouchAttributionSink:
+def _seeded(state: DataFrame, batch: DataFrame, conversion_filter: Column):
+    """-> (seed ∪ batch tagged ``_is_seed``, the conversion mask).  Seed
+    rows are touches from PRIOR batches, never this batch's conversions
+    — without the mask a row that is both touch and conversion would
+    re-emit on every later batch."""
+    merged = state.withColumn("_is_seed", F.lit(True)).unionByName(
+        batch.withColumn("_is_seed", F.lit(False))
+    )
+    return merged, conversion_filter & ~F.col("_is_seed")
+
+
+class LastTouchAttributionSink(StatefulSink):
     """foreachBatch callable: micro-batch → attributed conversions
     under ``store_dir/out/batch=<id>/`` + per-entity last-touch state
     under ``store_dir/state/`` (staged swap)."""
@@ -72,34 +82,21 @@ class LastTouchAttributionSink:
         self.lookback = lookback
         self.tiebreak_cols = list(tiebreak_cols or [])
 
-    def __call__(self, batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        from ._state import read_state, write_state
+    def init_state(self, batch: DataFrame) -> DataFrame:
+        return batch.limit(0)
 
-        spark = batch.sparkSession
-        state_dir = os.path.join(self.store_dir, "state")
-        out_dir = os.path.join(self.store_dir, "out", f"batch={batch_id}")
-        state, have_state, hwm = read_state(spark, state_dir, batch.limit(0))
-        if batch_id <= hwm:
-            return  # fully-applied replay (see docstring)
-        merged = state.withColumn("_is_seed", F.lit(True)).unionByName(
-            batch.withColumn("_is_seed", F.lit(False))
-        )
+    def step(self, batch: DataFrame, state: DataFrame):
+        merged, conversions = _seeded(state, batch, self.conversion_filter)
         conv = last_touch_attribution(
             merged,
             self.entity_col,
             self.ts_col,
             touch_filter=self.touch_filter,
             touch_col=self.touch_col,
-            # seed rows are touches from PRIOR batches, never this
-            # batch's conversions — without the mask a row that is both
-            # touch and conversion would re-emit on every later batch
-            conversion_filter=self.conversion_filter & ~F.col("_is_seed"),
+            conversion_filter=conversions,
             lookback=self.lookback,
             tiebreak_cols=self.tiebreak_cols,
         ).drop("_is_seed")
-        conv.write.mode("overwrite").parquet(out_dir)
         order = [F.col(self.ts_col).desc()] + [
             F.col(c).desc() for c in self.tiebreak_cols
         ]
@@ -111,7 +108,7 @@ class LastTouchAttributionSink:
             .filter(F.col("_rn") == 1)
             .drop("_rn")
         )
-        write_state(spark, state_dir, new_state, have_state, batch_id=batch_id)
+        return conv, new_state
 
 
 def attributed_conversions_from_store(spark, store_dir: str) -> DataFrame:
@@ -120,13 +117,13 @@ def attributed_conversions_from_store(spark, store_dir: str) -> DataFrame:
     return spark.read.parquet(os.path.join(store_dir, "out")).drop("batch")
 
 
-class MultiTouchAttributionSink:
+class MultiTouchAttributionSink(StatefulSink):
     """foreachBatch callable: the live half of
     ``operators/attribution.multi_touch_attribution`` (r17 verdict #4)
     — micro-batch → fractional-credit rows under
     ``store_dir/out/batch=<id>/`` + per-entity touch-set state under
     ``store_dir/state/`` (staged swap via streaming/_state.py, the
-    shared scaffold).
+    shared ``StatefulSink`` core).
 
     State design: unlike last-touch (one row per entity), EVERY touch
     inside the lookback of the entity's latest seen event time is
@@ -140,12 +137,9 @@ class MultiTouchAttributionSink:
     when unbounded windows are truly wanted).
 
     Same batch-seeding, hwm-replay-skip and ordering contract as
-    ``LastTouchAttributionSink`` (see its docstring): seeds are prior
-    touches marked ``_is_seed`` so they can never re-emit as
-    conversions; ``batch_id <= hwm`` replays are skipped whole
-    (re-running against the advanced state would double the replayed
-    batch's own touches in every window); out precedes the swap so
-    the skip is safe."""
+    ``LastTouchAttributionSink`` (see the module docstring): a replay
+    against the advanced state would double the replayed batch's own
+    touches in every window, so it is skipped whole."""
 
     def __init__(
         self,
@@ -178,35 +172,24 @@ class MultiTouchAttributionSink:
         self.half_life_seconds = half_life_seconds
         self.endpoint_weight = endpoint_weight
 
-    def __call__(self, batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        from ..operators.attribution import multi_touch_attribution
-        from ._state import read_state, write_state
+    def init_state(self, batch: DataFrame) -> DataFrame:
+        return batch.limit(0)
 
-        spark = batch.sparkSession
-        state_dir = os.path.join(self.store_dir, "state")
-        out_dir = os.path.join(self.store_dir, "out", f"batch={batch_id}")
-        state, have_state, hwm = read_state(spark, state_dir, batch.limit(0))
-        if batch_id <= hwm:
-            return  # fully-applied replay (see docstring)
-        merged = state.withColumn("_is_seed", F.lit(True)).unionByName(
-            batch.withColumn("_is_seed", F.lit(False))
-        )
+    def step(self, batch: DataFrame, state: DataFrame):
+        merged, conversions = _seeded(state, batch, self.conversion_filter)
         conv = multi_touch_attribution(
             merged,
             self.entity_col,
             self.ts_col,
             touch_filter=self.touch_filter,
             touch_col=self.touch_col,
-            conversion_filter=self.conversion_filter & ~F.col("_is_seed"),
+            conversion_filter=conversions,
             model=self.model,
             lookback=self.lookback,
             tiebreak_cols=self.tiebreak_cols,
             half_life_seconds=self.half_life_seconds,
             endpoint_weight=self.endpoint_weight,
         ).drop("_is_seed")
-        conv.write.mode("overwrite").parquet(out_dir)
         # prune: touches older than (entity's latest seen ts − lookback)
         # can never enter a future conversion's window under the
         # per-entity ordering contract; the boundary keeps >= (a touch
@@ -224,4 +207,4 @@ class MultiTouchAttributionSink:
             )
             .drop("_maxts", "_is_seed")
         )
-        write_state(spark, state_dir, new_state, have_state, batch_id=batch_id)
+        return conv, new_state

@@ -22,7 +22,7 @@ Scale notes:
   the RocksDB state store provider (spills to local disk); Spark's
   DEFAULT provider is heap-backed and would OOM on a large corpus —
   pass ``rocksdb=True`` to ``start_corpus_ingest`` (applies
-  ``stateful_v2.rocksdb_session_conf`` to the session) or set
+  ``rocksdb_session_conf`` to the session) or set
   ``spark.sql.streaming.stateStore.providerClass`` yourself.
   Pass ``dedup_horizon`` to bound state instead: an ingest-time
   watermark lets the store evict fingerprints older than the horizon,
@@ -54,6 +54,16 @@ from pyspark.sql.types import (
 
 from ..operators import text
 from ..operators.sampling import train_test_split
+
+ROCKSDB_PROVIDER = (
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+)
+
+
+def rocksdb_session_conf() -> dict[str, str]:
+    """Session confs for the RocksDB state store provider (spills state
+    to local disk; recommended for any large-state deployment)."""
+    return {"spark.sql.streaming.stateStore.providerClass": ROCKSDB_PROVIDER}
 
 DOCUMENT_SCHEMA = StructType(
     [
@@ -141,8 +151,6 @@ def start_corpus_ingest(
     the module docstring for why exact-forever dedup state needs it
     at corpus scale)."""
     if rocksdb:
-        from .stateful_v2 import rocksdb_session_conf
-
         for key, value in rocksdb_session_conf().items():
             spark.conf.set(key, value)
     curated = curate_stream(

@@ -25,7 +25,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
     LongType,
@@ -34,6 +34,8 @@ from pyspark.sql.types import (
     StructType,
     TimestampType,
 )
+
+from .sinks import Sink
 
 _STORE_SCHEMA = StructType(
     [
@@ -44,9 +46,18 @@ _STORE_SCHEMA = StructType(
 )
 
 
-class HeavyHitterSink:
+class HeavyHitterSink(Sink):
     """foreachBatch callable: micro-batch → ≤ k+1 summary rows →
-    ``store_dir/batch=<id>/`` (overwrite: replay-idempotent)."""
+    ``store_dir/batch=<id>/`` (overwrite: replay-idempotent).
+
+    The one Misra–Gries reduction, shared with the windowed sink: per
+    group (``_keys``; none here, so the whole batch), a rank window over
+    the batch's item counts finds the (k+1)-th largest count and
+    subtracts it — no driver collect.  Without a window column the rank
+    runs over the batch's distinct items in one partition, which the
+    per-batch vocabulary bounds."""
+
+    _keys: "tuple[str, ...]" = ()
 
     def __init__(self, store_dir: str, item_col: str = "item", k: int = 100) -> None:
         if int(k) < 1:
@@ -55,38 +66,43 @@ class HeavyHitterSink:
         self.item_col = item_col
         self.k = int(k)
 
-    def __call__(self, batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        items = batch.select(
+    def _items(self, batch: DataFrame) -> DataFrame:
+        """The batch as (``*_keys``, item) rows, NULLs dropped."""
+        return batch.select(
             F.col(self.item_col).cast("string").alias("item")
         ).filter(F.col("item").isNotNull())
-        # counts feeds the top-(k+1) collect, the summary write, AND
-        # the batch total (sum of w == non-null item count) — persist
-        # so the micro-batch source is scanned once, not three times
-        counts = items.groupBy("item").agg(F.count(F.lit(1)).alias("w")).persist()
-        try:
-            # the (k+1)-th largest batch count is the MG decrement; the
-            # collect is k+1 rows — driver-bounded by construction
-            top = counts.orderBy(F.desc("w"), "item").limit(self.k + 1).collect()
-            delta = int(top[self.k]["w"]) if len(top) > self.k else 0
-            summ = counts.filter(F.col("w") > delta).select(
-                "item", (F.col("w") - delta).alias("w")
+
+    def write(self, batch: DataFrame, batch_id: int) -> None:
+        keys = list(self._keys)
+        counts = self._items(batch).groupBy(*keys, "item").agg(
+            F.count(F.lit(1)).alias("w")
+        )
+        group = Window.partitionBy(*keys)
+        # per group, the (k+1)-th largest count is the MG decrement
+        delta = F.coalesce(
+            F.max(F.when(F.col("_rk") == self.k + 1, F.col("w"))).over(group),
+            F.lit(0),
+        )
+        summ = (
+            counts.withColumn(
+                "_rk", F.row_number().over(group.orderBy(F.desc("w"), "item"))
             )
-            total = (
-                counts.groupBy()
-                # coalesce: an all-null-items batch has empty counts
-                .agg(F.coalesce(F.sum("w"), F.lit(0)).cast("long").alias("w"))
-                .select(F.lit(None).cast("string").alias("item"), "w")
-            )
-            (
-                summ.unionByName(total)
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(os.path.join(self.store_dir, f"batch={batch_id}"))
-            )
-        finally:
-            counts.unpersist()
+            .withColumn("_d", delta)
+            .filter(F.col("w") > F.col("_d"))
+            .select(*keys, "item", (F.col("w") - F.col("_d")).alias("w"))
+        )
+        total = (
+            counts.groupBy(*keys)
+            # coalesce: an all-null-items batch has empty counts
+            .agg(F.coalesce(F.sum("w"), F.lit(0)).cast("long").alias("w"))
+            .select(*keys, F.lit(None).cast("string").alias("item"), "w")
+        )
+        (
+            summ.unionByName(total)
+            .coalesce(1)
+            .write.mode("overwrite")
+            .parquet(os.path.join(self.store_dir, f"batch={batch_id}"))
+        )
 
 
 _WINDOWED_STORE_SCHEMA = StructType(
@@ -99,19 +115,20 @@ _WINDOWED_STORE_SCHEMA = StructType(
 )
 
 
-class WindowedHeavyHitterSink:
+class WindowedHeavyHitterSink(HeavyHitterSink):
     """foreachBatch callable for PER-WINDOW heavy hitters (r15 verdict
     directive #7): each micro-batch is reduced to one MG summary PER
     TUMBLING EVENT-TIME WINDOW it touches (≤ k+1 rows per window) and
     lands under ``store_dir/batch=<id>/`` with mode=overwrite (replay-
-    idempotent, the sink-family discipline).  The per-window decrement
-    is computed with a rank window over the per-batch counts — no
-    driver collect at all, unlike the global sink's k+1-row collect.
+    idempotent, the sink-family discipline) — ``HeavyHitterSink``'s
+    reduction grouped by ``window_start``.
     Merge guarantee: the global proof per window — an item with
     freq_w > N_w/k keeps a positive merged counter for window w, so
     ``windowed_heavy_hitters_from_store`` recounts a guaranteed
     superset (pinned bit-equal to the batch operator in tests,
     replay included)."""
+
+    _keys = ("window_start",)
 
     def __init__(
         self,
@@ -122,67 +139,23 @@ class WindowedHeavyHitterSink:
         window: str = "1 hour",
         slide: "str | None" = None,
     ) -> None:
-        if int(k) < 1:
-            raise ValueError("k must be >= 1")
-        self.store_dir = store_dir
+        super().__init__(store_dir, item_col, k)
         self.ts_col = ts_col
-        self.item_col = item_col
-        self.k = int(k)
         self.window = window
         self.slide = slide
 
-    def __call__(self, batch: DataFrame, batch_id: int) -> None:
-        from pyspark.sql import Window as W
-
-        if batch.isEmpty():
-            return
+    def _items(self, batch: DataFrame) -> DataFrame:
         win = (
             F.window(self.ts_col, self.window, self.slide)
             if self.slide
             else F.window(self.ts_col, self.window)
         )
-        items = batch.filter(
+        return batch.filter(
             F.col(self.ts_col).isNotNull() & F.col(self.item_col).isNotNull()
         ).select(
             win.start.alias("window_start"),
             F.col(self.item_col).cast("string").alias("item"),
         )
-        counts = (
-            items.groupBy("window_start", "item")
-            .agg(F.count(F.lit(1)).alias("w"))
-            .persist()
-        )
-        try:
-            rk = W.partitionBy("window_start").orderBy(F.desc("w"), "item")
-            # per-window (k+1)-th largest count = the MG decrement
-            deltas = (
-                counts.withColumn("_rk", F.row_number().over(rk))
-                .filter(F.col("_rk") == self.k + 1)
-                .select("window_start", F.col("w").alias("_delta"))
-            )
-            summ = (
-                counts.join(deltas, "window_start", "left")
-                .withColumn("_d", F.coalesce("_delta", F.lit(0)))
-                .filter(F.col("w") > F.col("_d"))
-                .select(
-                    "window_start", "item", (F.col("w") - F.col("_d")).alias("w")
-                )
-            )
-            total = (
-                counts.groupBy("window_start")
-                .agg(F.sum("w").cast("long").alias("w"))
-                .select(
-                    "window_start", F.lit(None).cast("string").alias("item"), "w"
-                )
-            )
-            (
-                summ.unionByName(total)
-                .coalesce(1)
-                .write.mode("overwrite")
-                .parquet(os.path.join(self.store_dir, f"batch={batch_id}"))
-            )
-        finally:
-            counts.unpersist()
 
 
 def windowed_heavy_hitters_from_store(

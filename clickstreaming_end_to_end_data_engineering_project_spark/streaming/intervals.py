@@ -13,16 +13,10 @@ scd2_apply / attribution-sink discipline), appends the newly-closed
 islands under ``store_dir/out/batch=<id>/`` and keeps the still-open
 last island per key under ``store_dir/state/`` (staged swap).
 
-Crash/replay safety — unlike the attribution/sequence sinks, the
-``n_intervals`` COUNT is not an idempotent fold (re-merging a batch
-into a state that already absorbed it would double-count rows), so
-this sink carries a batch high-water mark inside the swapped state
-(``_hwm`` constant column) and orders writes out-then-swap:
-  - replay with hwm < id (crash before the swap): the state is the
-    PRE-batch one, recomputation is exact, the out dir is rewritten;
-  - replay with hwm ≥ id (crash after the swap, or a plain replay):
-    skipped entirely — the out dir was written before the swap, so
-    "state advanced" implies "closed rows landed".
+Crash/replay safety is ``StatefulSink``'s state-borne high-water mark
+(streaming/_state.py): the ``n_intervals`` COUNT is not an idempotent
+fold (re-merging a batch into a state that already absorbed it would
+double-count rows), so a ``batch_id <= hwm`` replay is skipped whole.
 
 Ordering contract: batches arrive in nondecreasing ``start`` order
 per key (the family's event-time-ordered delivery assumption; the pin
@@ -36,9 +30,10 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..operators.intervals import merge_intervals
+from ._state import StatefulSink
 
 
-class IntervalMergeSink:
+class IntervalMergeSink(StatefulSink):
     """foreachBatch callable: micro-batch of (key, start, end) rows →
     newly-closed islands under ``out/batch=<id>/`` + the open last
     island per key under ``state/``.  Read the merged table with
@@ -53,23 +48,16 @@ class IntervalMergeSink:
         self.start_col = start_col
         self.end_col = end_col
 
-    def __call__(self, batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        from ._state import read_state, write_state
-
-        spark = batch.sparkSession
-        state_dir = os.path.join(self.store_dir, "state")
-        out_dir = os.path.join(self.store_dir, "out", f"batch={batch_id}")
+    def init_state(self, batch: DataFrame) -> DataFrame:
         k, s, e = self.key_col, self.start_col, self.end_col
-        init = (
+        return (
             batch.select(k, s, e)
             .limit(0)
             .withColumn("n_intervals", F.lit(0).cast("long"))
         )
-        state, have_state, hwm = read_state(spark, state_dir, init)
-        if batch_id <= hwm:
-            return  # replay of a fully-applied batch (see docstring)
+
+    def step(self, batch: DataFrame, state: DataFrame):
+        k, s, e = self.key_col, self.start_col, self.end_col
         # seed: the open island re-enters as one weighted interval row;
         # merge_intervals counts rows, so the seed's absorbed count is
         # re-added after the merge to keep n_intervals exact
@@ -104,9 +92,7 @@ class IntervalMergeSink:
         w = Window.partitionBy(k).orderBy(F.col(s).desc())
         ranked = adj.withColumn("_rn", F.row_number().over(w))
         closed = ranked.filter(F.col("_rn") > 1).drop("_rn")
-        open_isl = ranked.filter(F.col("_rn") == 1).drop("_rn")
-        closed.write.mode("overwrite").parquet(out_dir)
-        write_state(spark, state_dir, open_isl, have_state, batch_id=batch_id)
+        return closed, ranked.filter(F.col("_rn") == 1).drop("_rn")
 
 
 def islands_from_store(spark, store_dir: str) -> DataFrame:

@@ -70,8 +70,10 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 from pyspark.sql.window import Window
 
+from .. import fsutil
 from ..operators.dedup import minhash_bands
 from ..sources.formats import local_rows_df
+from .sinks import Sink
 
 _STORE_SCHEMA = StructType(
     [
@@ -83,7 +85,7 @@ _STORE_SCHEMA = StructType(
 )
 
 
-class NearDedupIngest:
+class NearDedupIngest(Sink):
     """foreachBatch callable: batch → LSH band keys → drop docs whose
     buckets were seen (in the store or earlier in the batch by id
     order) → write survivors → append the batch's buckets to the store.
@@ -184,22 +186,7 @@ class NearDedupIngest:
         self._run_id = row.run_id
         return self._run_id
 
-    def _store(self, spark) -> DataFrame:
-        """The band store, empty if nothing has been written yet.  The
-        existence probe is Spark's own read (works on any filesystem a
-        cluster mounts — s3a/hdfs/local — unlike a driver-local
-        os.path check, which would silently disable cross-batch dedup
-        on remote stores)."""
-        from pyspark.errors import AnalysisException
-
-        try:
-            return spark.read.schema(_STORE_SCHEMA).parquet(self.store_dir)
-        except AnalysisException:  # path does not exist yet
-            return spark.createDataFrame([], _STORE_SCHEMA)
-
-    def __call__(self, batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
+    def write(self, batch: DataFrame, batch_id: int) -> None:
         spark = batch.sparkSession
         run_id = self._resolve_run_id(spark)
         band_keys = minhash_bands(
@@ -209,7 +196,8 @@ class NearDedupIngest:
         try:
             # hide ONLY this run's replayed append (>= current batch);
             # other runs' history over the shared store stays visible
-            seen = self._store(spark).filter(
+            store = fsutil.read_store_or_empty(spark, self.store_dir, _STORE_SCHEMA)
+            seen = store.filter(
                 (F.col("run_id") != F.lit(run_id))
                 | (F.col("batch_id") < F.lit(batch_id))
             )
@@ -311,26 +299,6 @@ def compact_band_store(spark, store_dir: str, target_file_mb: int = 128) -> int:
     return spark.read.schema(_STORE_SCHEMA).parquet(store_dir).count()
 
 
-def _fs_for(spark, path: str):
-    from ..fsutil import fs_for
-
-    return fs_for(spark, path)
-
-
-def _heal_compact_crash(spark, path: str) -> None:
-    """Restore ``path`` from any job's swap backup if a prior
-    staging+rename job crashed between its two renames.  MUST run
-    before any read of ``path`` (an eager read of the missing dir
-    would throw before the heal inside _compact_dir could run — r10
-    review finding).  Delegates to the shared
-    ``fsutil.heal_swap_crash`` — the r10 round fixed the same
-    crash-window bug in three hand-rolled copies, so the discipline
-    now has exactly one implementation."""
-    from ..fsutil import heal_swap_crash
-
-    heal_swap_crash(spark, path)
-
-
 def _compact_dir(spark, path: str, frame_fn, target_file_mb: int, ratio_counts=None) -> None:
     """Rewrite ``path`` with the DataFrame ``frame_fn()`` in
     ~``target_file_mb`` files under the shared crash-safe
@@ -391,7 +359,7 @@ def compact_survivors(
     from ..fsutil import newest_mtime_ms
 
     run_dir = f"{out_dir.rstrip('/')}/run_id={run_id}"
-    jvm, fs, hroot = _fs_for(spark, run_dir)
+    jvm, fs, hroot = fsutil.fs_for(spark, run_dir)
     if min_idle_minutes > 0 and fs.exists(hroot):
         idle_ms = time.time() * 1000 - newest_mtime_ms(spark, run_dir)
         if idle_ms < min_idle_minutes * 60_000:
@@ -413,7 +381,7 @@ def compact_survivors(
     # files inside the dot-prefixed staging dir, which parquet readers
     # ignore — a rerun would then recompact the REMAINING subset and
     # delete the stranded rows with .compact_old.  Move them back first.
-    _heal_compact_crash(spark, run_dir)
+    fsutil.heal_swap_crash(spark, run_dir)
     if fs.exists(tmp):
         for st in fs.listStatus(tmp):
             p = st.getPath()

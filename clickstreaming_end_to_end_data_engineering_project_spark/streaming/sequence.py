@@ -8,16 +8,20 @@ greedy-earliest semantics fix each tⱼ permanently the first time a
 qualifying event arrives (under per-entity event-time-ordered batch
 delivery, an earlier qualifying event would have arrived in an
 earlier batch), so a batch can only FILL NULL tail slots, never
-revise filled ones.  Each micro-batch runs the step cascade gated on
-coalesce(state tⱼ₋₁, batch-derived tⱼ₋₁): a batch may complete any
+revise filled ones.  Each micro-batch folds every entity's batch
+events, in time order, into its stored step timestamps — one full
+outer join of the state with the per-entity event arrays, where the
+batch operator's cascade joins once per step: a batch may complete any
 number of consecutive steps at once, including starting brand-new
 entities.  The horizon gate re-derives from the (fixed) t_<step1> +
 within, exactly the batch operator's whole-pattern bound.
 
-Crash/replay safety: the state advances under the staged-swap
-contract; replaying the most recent batch against an already-advanced
-state is exact because a min-fixpoint is idempotent — re-offering the
-same events can only re-derive the same minima.
+Crash/replay safety is ``StatefulSink``'s state-borne high-water mark
+(streaming/_state.py): a ``batch_id <= hwm`` replay is skipped.  The
+skip leaves the very state a rerun would produce, because a min-fixpoint
+is idempotent — re-offering the same events can only re-derive the same
+minima — so a state stored before the hwm existed (read as hwm -1) is
+safe too.
 
 Ordering contract (shared with LastTouchAttributionSink /
 scd2_apply): batches arrive in nondecreasing event-time order per
@@ -33,8 +37,10 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ._state import StatefulSink
 
-class SequenceMatchSink:
+
+class SequenceMatchSink(StatefulSink):
     """foreachBatch callable: micro-batch → per-entity step-timestamp
     state under ``store_dir/state/`` (staged swap).  Read the match
     table with ``matches_from_store`` — one row per entity that has
@@ -59,84 +65,73 @@ class SequenceMatchSink:
         self.ts_col = ts_col
         self.steps = list(steps)
         self.within = within
+        self._cols = [f"t_{n}" for n in names]
 
-    def __call__(self, batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
-        from ._state import read_state, write_state
-
-        spark = batch.sparkSession
-        state_dir = os.path.join(self.store_dir, "state")
-        first = f"t_{self.steps[0][0]}"
-        cols = [f"t_{n}" for n, _ in self.steps]
+    def init_state(self, batch: DataFrame) -> DataFrame:
         ts_type = batch.schema[self.ts_col].dataType
-        init = (
+        return (
             batch.select(F.col(self.entity_col))
             .limit(0)
             .select(
                 self.entity_col,
-                *[F.lit(None).cast(ts_type).alias(c) for c in cols],
+                *[F.lit(None).cast(ts_type).alias(c) for c in self._cols],
             )
         )
-        # no hwm: the state is a pure min-fixpoint (coalesce keeps
-        # filled slots), so replaying any batch against any later state
-        # re-derives the identical state — idempotent by construction
-        state, have_state, _ = read_state(spark, state_dir, init)
-        # entities this batch touches, left-joined to their state rows
-        # (new entities appear with an all-NULL state tail; untouched
-        # entities stay OUT of cur and pass through via the anti-join
-        # below — a full outer here would duplicate them)
-        touched = batch.select(self.entity_col).distinct()
-        cur = touched.join(state, self.entity_col, "left")
-        prev: "str | None" = None
-        for name, pred in self.steps:
-            col = f"t_{name}"
-            if prev is None:
-                cand = (
-                    batch.filter(pred)
-                    .groupBy(self.entity_col)
-                    .agg(F.min(self.ts_col).alias("_cand"))
-                )
-                cur = cur.join(cand, self.entity_col, "left").withColumn(
-                    col, F.coalesce(F.col(col), F.col("_cand"))
-                ).drop("_cand")
-            else:
-                # gate on the (possibly just-filled) previous step and
-                # the fixed horizon from step 1; the min over
-                # qualifying batch rows needs the per-entity gate, so
-                # join the gate columns onto the batch rows first.
-                # dict.fromkeys dedups prev == first at step 2 (the
-                # batch operator's identical guard)
-                gate_cols = cur.select(
-                    *dict.fromkeys([self.entity_col, prev, first])
-                )
-                gated = batch.filter(pred).join(gate_cols, self.entity_col)
-                cond = F.col(self.ts_col) > F.col(prev)
-                if self.within is not None:
-                    cond = cond & (
-                        F.col(self.ts_col)
-                        <= F.col(first) + F.expr(f"INTERVAL {self.within}")
+
+    def step(self, batch: DataFrame, state: DataFrame):
+        cols, first = self._cols, self._cols[0]
+        # per entity, this batch's events in time order with their step
+        # flags (a NULL predicate or timestamp never matches, as in the
+        # batch operator's filters)
+        events = (
+            batch.filter(F.col(self.ts_col).isNotNull())
+            .groupBy(self.entity_col)
+            .agg(
+                F.array_sort(
+                    F.collect_list(
+                        F.struct(
+                            F.col(self.ts_col).alias("ts"),
+                            *[
+                                F.coalesce(pred, F.lit(False)).alias(c)
+                                for (_, pred), c in zip(self.steps, cols)
+                            ],
+                        )
                     )
-                cand = (
-                    gated.filter(cond)
-                    .groupBy(self.entity_col)
-                    .agg(F.min(self.ts_col).alias("_cand"))
-                )
-                cur = cur.join(cand, self.entity_col, "left").withColumn(
-                    col, F.coalesce(F.col(col), F.col("_cand"))
-                ).drop("_cand")
-            prev = col
-        new_state = cur.select(self.entity_col, *cols).filter(
+                ).alias("_ev")
+            )
+        )
+
+        def fold(acc: Column, ev: Column) -> Column:
+            # an event fills step j's empty slot when it matches step j,
+            # falls strictly after t_{j-1} and within the horizon from
+            # t_1 — in time order that is the cascade's min over those
+            # rows; filled slots never change (the min-fixpoint)
+            slots = []
+            for j, c in enumerate(cols):
+                ok = ev[c] & acc[c].isNull()
+                if j:
+                    ok = ok & (ev["ts"] > acc[cols[j - 1]])
+                    if self.within is not None:
+                        ok = ok & (
+                            ev["ts"]
+                            <= acc[first] + F.expr(f"INTERVAL {self.within}")
+                        )
+                slots.append(F.when(ok, ev["ts"]).otherwise(acc[c]).alias(c))
+            return F.struct(*slots)
+
+        # entities without events this batch keep their state (a NULL
+        # event array folds to NULL, so coalesce back to the state row)
+        stored = F.struct(*cols)
+        matched = state.join(events, self.entity_col, "full").select(
+            self.entity_col,
+            F.coalesce(F.aggregate("_ev", stored, fold), stored).alias("_m"),
+        )
+        return None, matched.select(self.entity_col, "_m.*").filter(
             F.col(first).isNotNull()
         )
-        # untouched entities pass through; touched rows were rebuilt
-        merged = state.join(touched, self.entity_col, "left_anti").unionByName(
-            new_state
-        )
-        write_state(spark, state_dir, merged, have_state)
 
 
 def matches_from_store(spark, store_dir: str) -> DataFrame:
     """The per-entity match table streamed into the store — the batch
     operator's exact output contract."""
-    return spark.read.parquet(os.path.join(store_dir, "state"))
+    return spark.read.parquet(os.path.join(store_dir, "state")).drop("_hwm")

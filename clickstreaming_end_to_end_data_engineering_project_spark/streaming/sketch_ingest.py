@@ -36,6 +36,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from .sinks import Sink
+
 _STORE_SCHEMA = StructType(
     [
         StructField("period", TimestampType()),
@@ -44,7 +46,7 @@ _STORE_SCHEMA = StructType(
 )
 
 
-class SketchRollupSink:
+class SketchRollupSink(Sink):
     """foreachBatch callable: micro-batch → per-period HLL sketches →
     ``store_dir/batch=<id>/`` (overwrite: replay-idempotent)."""
 
@@ -60,9 +62,7 @@ class SketchRollupSink:
         self.ts_col = ts_col
         self.fine = fine
 
-    def __call__(self, batch: DataFrame, batch_id: int) -> None:
-        if batch.isEmpty():
-            return
+    def write(self, batch: DataFrame, batch_id: int) -> None:
         (
             batch.groupBy(
                 F.date_trunc(self.fine, F.col(self.ts_col)).alias("period")
@@ -114,8 +114,6 @@ def compact_sketch_store(spark, store_dir: str) -> None:
     swap-based maintenance job here, run it only while no stream is
     actively writing the store (the near_dedup compactor's
     terminal-runs-only rule)."""
-    import os
-
     from ..fsutil import swap_with_staging
 
     def _write(staging: str) -> None:

@@ -488,43 +488,11 @@ def test_state_skew_surfaces_hot_shard(spark):
         shutil.rmtree(ckpt, ignore_errors=True)
 
 
-def _protobuf_available() -> bool:
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def test_stateful_v2_plan_construction(spark):
-    """transformWithStateInPandas wiring: the v2 operator must build a
-    streaming plan with the exact v1 output schema even where the
-    execution leg is environment-gated (no protobuf in sandbox)."""
-    from clickstreaming_end_to_end_data_engineering_project_spark.streaming.stateful import (
-        USER_PROFILE_SCHEMA,
-    )
-    from clickstreaming_end_to_end_data_engineering_project_spark.streaming.stateful_v2 import (
-        user_engagement_profiles_v2,
-    )
-
-    tmp = tempfile.mkdtemp(prefix="state2_plan_")
-    try:
-        spark.createDataFrame([], EVENTS_SCHEMA).write.mode("overwrite").parquet(tmp)
-        src = read_file_stream(spark, tmp, EVENTS_SCHEMA)
-        out = user_engagement_profiles_v2(src, watermark="1 minute")
-        assert out.isStreaming
-        assert out.schema == USER_PROFILE_SCHEMA
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
 def test_stateful_ts_micros_unit_derived_from_dtype():
-    """Both stateful operators convert event timestamps via _ts_micros,
+    """The stateful operator converts event timestamps via _ts_micros,
     which derives the epoch scale from the pandas dtype.  A
-    datetime64[us] delivery (possible under transformWithStateInPandas,
-    whose execution leg is env-gated here) must NOT be divided by 1000
-    as if it were ns — that was a latent 1000× timer skew."""
+    datetime64[us] delivery must NOT be divided by 1000 as if it were
+    ns — that was a latent 1000× timer skew."""
     import pandas as pd
 
     from clickstreaming_end_to_end_data_engineering_project_spark.streaming.stateful import (
@@ -539,65 +507,6 @@ def test_stateful_ts_micros_unit_derived_from_dtype():
     assert _ts_micros(ns_series).tolist() == [want]
     assert _ts_micros(us_series).tolist() == [want]
     assert _ts_micros(raw_ns).tolist() == [want]
-
-
-@pytest.mark.skipif(
-    not _protobuf_available(),
-    reason="transformWithState execution needs protobuf (state-server protocol); "
-    "not shipped in this sandbox — see stateful_v2.py docstring",
-)
-def test_stateful_user_profiles_v2_transform_with_state(spark):
-    """Spark 4.x transformWithStateInPandas twin must emit the same
-    timeout profile as the v1 applyInPandasWithState operator on the
-    same fixture (requires the RocksDB state store provider)."""
-    from clickstreaming_end_to_end_data_engineering_project_spark.streaming.stateful_v2 import (
-        rocksdb_session_conf,
-        user_engagement_profiles_v2,
-    )
-
-    tmp = tempfile.mkdtemp(prefix="state2_src_")
-    base = dt.datetime(2024, 1, 1, 9, 0, 0)
-    batch1 = [
-        (1, base, 1, "view", 1.0, "{}"),
-        (2, base + dt.timedelta(minutes=1), 1, "purchase", 50.0, "{}"),
-        (3, base + dt.timedelta(minutes=2), 2, "view", 1.0, "{}"),
-    ]
-    batch2 = [
-        (4, base + dt.timedelta(hours=2), 2, "purchase", 10.0, "{}"),
-    ]
-    spark.createDataFrame(batch1, EVENTS_SCHEMA).coalesce(1).write.mode("append").parquet(tmp)
-    spark.createDataFrame(batch2, EVENTS_SCHEMA).coalesce(1).write.mode("append").parquet(tmp)
-
-    conf_key, provider = next(iter(rocksdb_session_conf().items()))
-    prev = spark.conf.get(conf_key)
-    spark.conf.set(conf_key, provider)
-    sink = MemorySink(key_cols=None)
-    ckpt = tempfile.mkdtemp(prefix="ckpt_state2_")
-    try:
-        src = read_file_stream(spark, tmp, EVENTS_SCHEMA).coalesce(1)
-        q = (
-            user_engagement_profiles_v2(src, watermark="1 minute")
-            .writeStream.outputMode("append")
-            .foreachBatch(sink)
-            .option("checkpointLocation", ckpt)
-            .option("maxFilesPerTrigger", 1)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-    finally:
-        spark.conf.set(conf_key, prev)
-        shutil.rmtree(ckpt, ignore_errors=True)
-        shutil.rmtree(tmp, ignore_errors=True)
-
-    profiles = {r["user_id"]: r for r in sink.result}
-    assert 1 in profiles, f"user 1 profile should emit on timeout, got {sink.result}"
-    p1 = profiles[1]
-    assert p1["event_count"] == 2
-    assert p1["purchase_count"] == 1
-    assert p1["total_value"] == 50.0
-    assert p1["emit_reason"] == "timeout"
-    assert p1["first_ts"] == base and p1["last_ts"] == base + dt.timedelta(minutes=1)
 
 
 def test_stream_static_enrichment(spark, sf_dir, events_dir):
