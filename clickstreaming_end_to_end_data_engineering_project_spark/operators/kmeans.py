@@ -2,9 +2,9 @@
 of an ITERATIVE algorithm (driver-side loop over cached DataFrames;
 not expressible as one SQL statement, hence rows-only checked).
 
-Everything per-iteration is built-ins: cosine/euclidean distance via
-array expressions, assignment via array_position of the min distance,
-centroid update via posexplode + avg.  Iterations are fixed-count
+Everything per-iteration is built-ins: squared euclidean distance as a
+``vecexpr`` fold, assignment via min_by over (distance, cluster),
+centroid update via ``vecexpr.mean_vectors`` (posexplode + avg).  Iterations are fixed-count
 (deterministic); initial centroids are the k lowest ids — reproducible
 without RNG.
 
@@ -19,13 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _sq_dist(a, b) -> F.Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x.cast("double") - y.cast("double")) ** 2),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
+from . import vecexpr
 
 
 def kmeans_fit(
@@ -62,7 +56,7 @@ def kmeans_fit(
             points.sparkSession, centroid_rows, "_c bigint, _cv array<double>"
         )
         dists = points.crossJoin(F.broadcast(cdf)).select(
-            "_id", "_v", "_c", _sq_dist(F.col("_v"), F.col("_cv")).alias("_d")
+            "_id", "_v", "_c", F.expr(vecexpr.sq_dist("_v", "_cv")).alias("_d")
         )
         # carry the vector THROUGH the argmin aggregate (r19: _v is
         # constant within the _id group, so first(_v) is exact) — the
@@ -72,18 +66,7 @@ def kmeans_fit(
             F.min_by(F.col("_c"), F.struct(F.col("_d"), F.col("_c"))).alias("cluster"),
             F.first("_v").alias("_v"),
         )
-        new_centroids = (
-            assigned.select("cluster", F.posexplode("_v").alias("_dim", "_x"))
-            .groupBy("cluster", "_dim")
-            .agg(F.avg(F.col("_x").cast("double")).alias("_m"))
-            .groupBy("cluster")
-            .agg(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("_dim", "_m"))), lambda s: s["_m"]
-                ).alias("_cv")
-            )
-            .collect()
-        )
+        new_centroids = vecexpr.mean_vectors(assigned, ["cluster"], "_v", "_cv").collect()
         centroid_rows = [(r["cluster"], [float(x) for x in r["_cv"]]) for r in new_centroids]
 
     # materialize the assignment BEFORE unpersisting its cached input —

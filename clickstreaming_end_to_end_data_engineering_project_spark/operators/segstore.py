@@ -79,13 +79,14 @@ from functools import cached_property
 from typing import Callable
 
 from pyspark import inheritable_thread_target
-from pyspark.sql import Column, DataFrame, Row
+from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 from pyspark.sql.window import Window
 
 from .. import fsutil
 from ..sources.formats import local_rows_df
+from . import vecexpr
 
 _CACHE_ENTRIES = 256
 _LOOKUP_KEYS = 65536
@@ -145,11 +146,6 @@ def doubles_sql(values: list) -> str:
     while isinstance(probe, list):
         depth, probe = depth + 1, probe[0] if probe else 0.0
     return f"from_json('{json.dumps(values)}', '{'array<' * depth}double{'>' * depth}')"
-
-
-def doubles_lit(values: list) -> Column:
-    """``doubles_sql`` as a Column."""
-    return F.expr(doubles_sql(values))
 
 
 def restrict(df: DataFrame, predicate, id_col: str) -> DataFrame:
@@ -392,19 +388,17 @@ def _lsh_encode(ctx):
     from .similarity import lsh_bucket
 
     planes, dims = ctx.params["planes"], ctx.params["dims"]
-    return lambda vecs: vecs.withColumn("lsh_bucket", lsh_bucket(F.col(ctx.col), planes, dims))
+    return lambda vecs: vecs.withColumn("lsh_bucket", lsh_bucket(ctx.col, planes, dims))
 
 
 def _nearest(vecs, cents, id_col, vec_col, n):
     """``vecs`` crossed with their ``n`` nearest ``cents`` rows by
     squared euclidean distance, ties to the lower cluster id — the
     build's own k-means rule."""
-    from .kmeans import _sq_dist
-
     w = Window.partitionBy(id_col).orderBy(F.col("_d").asc(), F.col("cluster"))
     return (
         vecs.crossJoin(F.broadcast(cents))
-        .withColumn("_d", _sq_dist(F.col(vec_col), F.col("_cent")))
+        .withColumn("_d", F.expr(vecexpr.sq_dist(vecexpr.ref(vec_col), "_cent")))
         .withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") <= n)
         .drop("_d", "_rn")
@@ -448,7 +442,7 @@ def _ivfpq_encode(ctx):
         vecs = vecs.select(F.col(ctx.id_col).alias("_id"), F.col(ctx.col).alias("_v"), "_dims")
         resid = _nearest(vecs, cents, "_id", "_v", ctx.params["assign_n"]).select(
             F.struct("_id", "cluster", "_dims").alias("_ek"),
-            F.zip_with("_v", "_cent", lambda x, c: x.cast("double") - c).alias("_r"),
+            F.expr(vecexpr.residual("_v", "_cent")).alias("_r"),
         )
         return pq_encode(resid, books, "_ek", "_r").select(
             "codes", F.col("_ek._id").alias(ctx.id_col), "_ek.cluster", "_ek._dims"

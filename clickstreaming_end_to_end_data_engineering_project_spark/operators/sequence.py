@@ -16,7 +16,10 @@ within t₁ + horizon when given, and within tₖ₋₁ + max_gap when given)
 maximizes the number of completed steps (taking any later qualifying
 event can only shrink the room for later steps).  Same-instant events
 do not chain (ts is strictly increasing across steps; ties inside one
-step resolve by min() being instant-exact).
+step resolve by min() being instant-exact).  A NULL predicate or
+timestamp never matches: an event with a NULL ts takes no step and
+blocks none, so an entity whose step-1 events all lack a timestamp has
+no row (the streaming ``SequenceMatchSink`` keeps the same rule).
 
 Absence semantics (STRICT, the nested-min-expressible form): with an
 absence predicate between steps k-1 and k, the match fails at step k
@@ -80,7 +83,7 @@ def match_sequence(
         )
     first_name, first_pred = steps[0]
     result = (
-        events.filter(first_pred)
+        events.filter(first_pred & F.col(ts_col).isNotNull())
         .groupBy(entity_col)
         .agg(F.min(ts_col).alias(f"t_{first_name}"))
     )

@@ -13,8 +13,9 @@ xxhash64(plane, dim) so the whole thing is reproducible with no stored
 model (swap in trained centroids for a real IVF index; plan shape is
 identical: bucket-id equi-join then rerank).
 
-Dot products use double math folded left-to-right over the array
-(``F.aggregate``) so the DuckDB oracle can reproduce values bit-for-bit.
+Every dot product, cosine and distance is a fold from ``vecexpr``:
+double math folded left-to-right over the array, rendered once as SQL
+text, so the DuckDB oracle can reproduce values bit-for-bit.
 """
 
 from __future__ import annotations
@@ -27,24 +28,7 @@ from pyspark.sql.types import DoubleType, LongType, StructField, StructType
 from pyspark.sql.window import Window
 
 from ..sources.formats import local_rows_df
-from . import segstore
-
-
-def dot(a: Column, b: Column) -> Column:
-    """Sequential-order double-precision dot product."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
-def norm(a: Column) -> Column:
-    return F.sqrt(dot(a, a))
-
-
-def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (norm(a) * norm(b))
+from . import segstore, vecexpr
 
 
 def brute_force_topk(
@@ -57,7 +41,7 @@ def brute_force_topk(
     """Exact cosine top-k neighbors of one corpus vector.
     Output: (vec_id, cos_sim) ordered desc, id tiebreak."""
     q = df.filter(F.col(id_col) == query_vec_id).select(F.col(vec_col).alias("_qvec"))
-    sim = cosine(F.col(vec_col), F.col("_qvec"))
+    sim = F.expr(vecexpr.cosine(vecexpr.ref(vec_col), "_qvec"))
     return (
         df.filter(F.col(id_col) != query_vec_id)
         .crossJoin(F.broadcast(q))
@@ -90,7 +74,7 @@ def brute_force_topk_filtered(
     contract over the filtered corpus."""
     pred = F.expr(predicate) if isinstance(predicate, str) else predicate
     q = df.filter(F.col(id_col) == query_vec_id).select(F.col(vec_col).alias("_qvec"))
-    sim = cosine(F.col(vec_col), F.col("_qvec"))
+    sim = F.expr(vecexpr.cosine(vecexpr.ref(vec_col), "_qvec"))
     return (
         df.filter(F.col(id_col) != query_vec_id)
         .filter(pred)
@@ -123,7 +107,7 @@ def brute_force_topk_batch(
     q = queries.select(
         F.col(query_id_col).alias("_qid"), F.col(vec_col).alias("_qvec")
     )
-    sim = cosine(F.col(vec_col), F.col("_qvec"))
+    sim = F.expr(vecexpr.cosine(vecexpr.ref(vec_col), "_qvec"))
     w = Window.partitionBy(query_id_col).orderBy(
         F.col("cos_sim").desc(), F.col(id_col)
     )
@@ -182,7 +166,7 @@ def ivf_topk_indexed_batch(
     rows = idx.scan(sorted({c for _, c in pairs}), predicate)
     pair_df = local_rows_df(spark, pairs, "_qid bigint, cluster int")
     q_df = local_rows_df(spark, qrows, "_qid bigint, _qvec array<double>")
-    sim = cosine(F.col(vec_col), F.col("_qvec"))
+    sim = F.expr(vecexpr.cosine(vecexpr.ref(vec_col), "_qvec"))
     w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col(id_col))
     return (
         rows.join(F.broadcast(pair_df), "cluster")
@@ -201,15 +185,13 @@ def _nearest_clusters(cents: "list[tuple[int, list[float]]]", query_vec, nprobe:
     their probe sets are bit-identical."""
     import math
 
-    qn = math.sqrt(sum(float(x) * float(x) for x in query_vec))
-
-    def _cos(c: "list[float]") -> float:
-        cn = math.sqrt(sum(x * x for x in c))
-        if qn == 0.0 or cn == 0.0:
-            return 0.0
-        return sum(float(a) * b for a, b in zip(query_vec, c)) / (qn * cn)
-
-    return [c for c, _ in sorted(cents, key=lambda cc: (-_cos(cc[1]), cc[0]))[:nprobe]]
+    qn = math.sqrt(vecexpr.py_dot(query_vec, query_vec))
+    ranked = []
+    for cid, c in cents:
+        cn = math.sqrt(vecexpr.py_dot(c, c))
+        cos = 0.0 if qn == 0.0 or cn == 0.0 else vecexpr.py_dot(query_vec, c) / (qn * cn)
+        ranked.append((-cos, cid))
+    return [cid for _, cid in sorted(ranked)[:nprobe]]
 
 
 def _centroids(idx: "segstore.Index", name: str) -> "list[tuple[int, list[float]]]":
@@ -220,7 +202,7 @@ def _centroids(idx: "segstore.Index", name: str) -> "list[tuple[int, list[float]
 def _rank_cos(rows: DataFrame, query_vec, k: int, id_col: str, vec_col: str) -> DataFrame:
     """Exact cosine rerank of ``rows`` against ``query_vec``: (id,
     cos_sim) desc, id tiebreak, top ``k``."""
-    sim = cosine(F.col(vec_col), segstore.doubles_lit(query_vec))
+    sim = F.expr(vecexpr.cosine(vecexpr.ref(vec_col), segstore.doubles_sql(query_vec)))
     return (
         rows.select(F.col(id_col), sim.alias("cos_sim"))
         .orderBy(F.col("cos_sim").desc(), F.col(id_col))
@@ -228,46 +210,14 @@ def _rank_cos(rows: DataFrame, query_vec, k: int, id_col: str, vec_col: str) -> 
     )
 
 
-def _plane_coef(plane: int, i: Column) -> Column:
-    """h_plane[i] = ±1 from xxhash64(plane, i) parity — a deterministic
-    pseudo-random hyperplane."""
-    return F.when(F.xxhash64(F.lit(plane), i).bitwiseAND(F.lit(1)) == 1, F.lit(1.0)).otherwise(F.lit(-1.0))
-
-
-def _hyperplane_proj(vec: Column, plane: int, dims: int) -> Column:
-    """Raw projection <vec, h_plane> (see ``_plane_coef``).  The
-    sign gives the bucket bit; the MAGNITUDE is how far the vector sits
-    from the plane, which is what query-directed multi-probe ranks
-    perturbations by."""
-    return F.aggregate(
-        F.zip_with(
-            vec,
-            F.sequence(F.lit(0), F.lit(dims - 1)),
-            lambda x, i: x.cast("double") * _plane_coef(plane, i),
-        ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
-def _hyperplane_sign(vec: Column, plane: int, dims: int) -> Column:
-    """Sign bit of <vec, h_plane> (see ``_hyperplane_proj``)."""
-    proj = _hyperplane_proj(vec, plane, dims)
-    return F.when(proj >= 0, F.lit(1)).otherwise(F.lit(0))
-
-
 @functools.lru_cache(maxsize=64)
 def _plane_signs(spark, planes: int, dims: int) -> "tuple[tuple[tuple[float, ...], float], ...]":
     """Per plane: its ±1 coefficients over indices 0..dims-1, and its
-    coefficient past ``dims`` (where ``zip_with`` pads the index with
-    NULL, which the JVM hashes too).  One 1-row job per (session,
-    planes, dims)."""
-    def row(p):
-        return lambda i: _plane_coef(p, i)
-
-    r = spark.range(1).select(
-        *[F.transform(F.sequence(F.lit(0), F.lit(dims - 1)), row(p)) for p in range(planes)],
-        *[_plane_coef(p, F.lit(None).cast("int")) for p in range(planes)],
+    coefficient past ``dims`` (``vecexpr.hyperplane_proj``).  One 1-row
+    job per (session, planes, dims)."""
+    r = spark.range(1).selectExpr(
+        *[f"transform(sequence(0, {dims - 1}), i -> {vecexpr.plane_coef(p, 'i')})" for p in range(planes)],
+        *[vecexpr.plane_coef(p, "CAST(NULL AS INT)") for p in range(planes)],
     ).head()
     return tuple((tuple(r[p]), r[planes + p]) for p in range(planes))
 
@@ -289,8 +239,9 @@ def lsh_probe_buckets(
     ONE 1-row Spark job per (planes, dims) evaluates their ±1 signs
     (``_plane_signs``, kept for the process).  The per-plane raw
     projections are then folded driver-side in the JVM's order
-    (0.0 + x_0·h_0 + x_1·h_1 + …; a product with ±1 is exact), so they
-    are bit-equal to ``_hyperplane_proj``.  The 2^planes candidate
+    (``vecexpr.py_dot``; a product with ±1 is exact), so they are
+    bit-equal to ``vecexpr.hyperplane_proj``, whose MAGNITUDE is how far
+    the query sits from each plane.  The 2^planes candidate
     perturbations are enumerated and sorted driver-side — fine for the
     signature widths hyperplane-LSH uses (≤ 16 bits; wider signatures
     want a heap-based generator and are rejected here — but ONLY when
@@ -299,12 +250,8 @@ def lsh_probe_buckets(
     rejected."""
     if len(query_vec) < dims:
         raise ValueError(f"lsh_probe_buckets: query has {len(query_vec)} dims, planes span {dims}")
-    projs = []
-    for h, past in _plane_signs(spark, planes, dims):
-        acc = 0.0
-        for i, x in enumerate(query_vec):
-            acc = acc + float(x) * (h[i] if i < dims else past)
-        projs.append(acc)
+    pad = len(query_vec) - dims
+    projs = [vecexpr.py_dot(query_vec, h + (past,) * pad) for h, past in _plane_signs(spark, planes, dims)]
     base = sum((1 << p) for p in range(planes) if projs[p] >= 0)
     if nprobe <= 1:
         return [base]
@@ -317,15 +264,14 @@ def lsh_probe_buckets(
     return [base ^ mask for _, mask in ranked[:nprobe]]
 
 
-def lsh_bucket(vec: Column, planes: int, dims: int) -> Column:
-    """Random-hyperplane LSH bucket id: `planes`-bit sign signature."""
-    bits = [
-        _hyperplane_sign(vec, p, dims) * F.lit(2**p) for p in range(planes)
-    ]
-    out = bits[0]
-    for b in bits[1:]:
-        out = out + b
-    return out
+def lsh_bucket(vec: "Column | str", planes: int, dims: int) -> Column:
+    """Random-hyperplane LSH bucket id: `planes`-bit sign signature of
+    the vector column ``vec`` (a name or a plain column reference)."""
+    a = vecexpr.ref(vec)
+    return F.expr(" + ".join(
+        f"CASE WHEN {vecexpr.hyperplane_proj(a, p, dims)} >= 0 THEN 1 ELSE 0 END * {2**p}"
+        for p in range(planes)
+    ))
 
 
 def lsh_topk(
@@ -341,11 +287,11 @@ def lsh_topk(
     the query's, exact cosine rerank inside the bucket.  At scale the
     corpus is pre-bucketed (written partitioned by bucket) so the probe
     is a partition-pruned scan."""
-    bucketed = df.withColumn("_bucket", lsh_bucket(F.col(vec_col), planes, dims))
+    bucketed = df.withColumn("_bucket", lsh_bucket(vec_col, planes, dims))
     q = bucketed.filter(F.col(id_col) == query_vec_id).select(
         F.col(vec_col).alias("_qvec"), F.col("_bucket").alias("_qbucket")
     )
-    sim = cosine(F.col(vec_col), F.col("_qvec"))
+    sim = F.expr(vecexpr.cosine(vecexpr.ref(vec_col), "_qvec"))
     return (
         bucketed.crossJoin(F.broadcast(q))
         .filter((F.col("_bucket") == F.col("_qbucket")) & (F.col(id_col) != query_vec_id))
@@ -377,7 +323,7 @@ def lsh_topk_multiprobe(
     ]
     buckets = lsh_probe_buckets(df.sparkSession, qvals, planes, dims, nprobe)
     return _rank_cos(
-        df.withColumn("_bucket", lsh_bucket(F.col(vec_col), planes, dims))
+        df.withColumn("_bucket", lsh_bucket(vec_col, planes, dims))
         .filter(F.col("_bucket").isin(buckets) & (F.col(id_col) != query_vec_id)),
         qvals, k, id_col, vec_col,
     )
@@ -559,17 +505,7 @@ def build_ivf_centroids(
     built-ins, two narrow shuffles on small keys.  With a learned
     k-means assignment the plan is identical — the cluster column is
     the only input."""
-    return (
-        df.select(cluster_col, F.posexplode(vec_col).alias("_dim", "_v"))
-        .groupBy(cluster_col, "_dim")
-        .agg(F.avg(F.col("_v").cast("double")).alias("_mean"))
-        .groupBy(cluster_col)
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("_dim", "_mean"))), lambda s: s["_mean"]
-            ).alias("centroid")
-        )
-    )
+    return vecexpr.mean_vectors(df, [cluster_col], vec_col, "centroid")
 
 
 def ivf_topk(
@@ -589,7 +525,7 @@ def ivf_topk(
     q = df.filter(F.col(id_col) == query_vec_id).select(F.col(vec_col).alias("_qvec"))
     probe = (
         centroids.crossJoin(F.broadcast(q))
-        .select(cluster_col, cosine(F.col("centroid"), F.col("_qvec")).alias("_csim"))
+        .select(cluster_col, F.expr(vecexpr.cosine("centroid", "_qvec")).alias("_csim"))
         # cluster id tiebreak: an exact cosine tie between centroids must
         # not make the probe set nondeterministic (ivf_topk_indexed uses
         # the same tiebreak, and the two probes are pinned BIT-equal)
@@ -597,7 +533,7 @@ def ivf_topk(
         .limit(nprobe)
         .select(cluster_col)
     )
-    sim = cosine(F.col(vec_col), F.col("_qvec"))
+    sim = F.expr(vecexpr.cosine(vecexpr.ref(vec_col), "_qvec"))
     return (
         df.join(F.broadcast(probe), cluster_col)
         .filter(F.col(id_col) != query_vec_id)
@@ -865,7 +801,7 @@ def pairwise_above_threshold(
     label at scale)."""
     a = df.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("va"), F.col(block_col).alias("blk"))
     b = df.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vb"), F.col(block_col).alias("blk"))
-    sim = cosine(F.col("va"), F.col("vb"))
+    sim = F.expr(vecexpr.cosine("va", "vb"))
     return (
         a.join(b, "blk")
         .filter(F.col("id_a") < F.col("id_b"))
@@ -932,18 +868,15 @@ def int8_quant_error(
                 ),
             ),
         )
-        .withColumn(
-            "_err", F.zip_with("_v", "_q", lambda x, qi: F.abs(x - qi * F.col("_sdiv")))
-        )
+        .withColumn("_err", F.expr(vecexpr.residual("_v", "transform(_q, q -> q * _sdiv)")))
     )
     zero = F.col("_mx") == F.lit(0.0)
+    max_abs = F.expr("array_max(transform(_err, e -> abs(e)))")
     return base.select(
         F.col(id_col),
         F.when(zero, F.lit(0.0)).otherwise(F.col("_scale")).alias("qscale"),
-        F.when(zero, F.lit(0.0)).otherwise(F.array_max("_err")).alias("max_abs_err"),
-        F.when(zero, F.lit(0.0))
-        .otherwise(F.aggregate("_err", F.lit(0.0), lambda acc, e: acc + e * e))
-        .alias("sse"),
+        F.when(zero, F.lit(0.0)).otherwise(max_abs).alias("max_abs_err"),
+        F.when(zero, F.lit(0.0)).otherwise(F.expr(vecexpr.sum_sq("_err"))).alias("sse"),
     )
 
 
@@ -979,8 +912,6 @@ def train_pq_codebooks(
     is m*k*dims floats (a few KB), the ONE intentionally driver-sized
     artifact of the PQ family; encode/probe broadcast it back as
     literals."""
-    from .kmeans import _sq_dist
-
     dims = len(df.select(vec_col).first()[0])
     if dims % m:
         raise ValueError(f"dims {dims} not divisible by m={m}")
@@ -1014,28 +945,14 @@ def train_pq_codebooks(
             cdf = local_rows_df(subs.sparkSession, rows, "_s bigint, _c bigint, _cv array<double>")
             best = (
                 subs.join(F.broadcast(cdf), "_s")
-                .select(
-                    "_id", "_s", "_v", "_c", _sq_dist(F.col("_v"), F.col("_cv")).alias("_d")
-                )
+                .select("_id", "_s", "_v", "_c", F.expr(vecexpr.sq_dist("_v", "_cv")).alias("_d"))
                 .groupBy("_id", "_s")
                 .agg(
                     F.min_by(F.col("_c"), F.struct(F.col("_d"), F.col("_c"))).alias("_c"),
                     F.first("_v").alias("_v"),
                 )
             )
-            new = (
-                best.select("_s", "_c", F.posexplode("_v").alias("_dim", "_x"))
-                .groupBy("_s", "_c", "_dim")
-                .agg(F.avg(F.col("_x").cast("double")).alias("_mean"))
-                .groupBy("_s", "_c")
-                .agg(
-                    F.transform(
-                        F.array_sort(F.collect_list(F.struct("_dim", "_mean"))),
-                        lambda st: st["_mean"],
-                    ).alias("_cv")
-                )
-                .collect()
-            )
+            new = vecexpr.mean_vectors(best, ["_s", "_c"], "_v", "_cv").collect()
             # empty clusters keep their previous centroid (classic Lloyd fix)
             prev = {(s, c): cv for s, c, cv in rows}
             got = {(r["_s"], r["_c"]): [float(x) for x in r["_cv"]] for r in new}
@@ -1056,8 +973,6 @@ def pq_encode(
     code, assembled into an m-int array (the 8-16x-compressed index a
     100 TB ANN deployment actually stores).  The codebook enters as a
     broadcast literal; one narrow pass + one id-keyed shuffle."""
-    from .kmeans import _sq_dist
-
     m = max(s for s, _, _ in codebooks) + 1
     d = len(codebooks[0][2])
     cdf = local_rows_df(df.sparkSession, codebooks, "_s bigint, _c bigint, _cv array<double>")
@@ -1077,7 +992,7 @@ def pq_encode(
     ).select("_id", "_sv._s", "_sv._v")
     best = (
         subs.join(F.broadcast(cdf), "_s")
-        .select("_id", "_s", "_c", _sq_dist(F.col("_v"), F.col("_cv")).alias("_d"))
+        .select("_id", "_s", "_c", F.expr(vecexpr.sq_dist("_v", "_cv")).alias("_d"))
         .groupBy("_id", "_s")
         .agg(F.min_by(F.col("_c"), F.struct(F.col("_d"), F.col("_c"))).alias("_c"))
     )
@@ -1108,25 +1023,8 @@ def pq_topk_adc(
     serves ANN from an index 8-16x smaller than the vectors.
 
     Output: (id, approx_dist) ascending, id tiebreak."""
-    m = max(s for s, _, _ in codebooks) + 1
-    kk = max(c for _, c, _ in codebooks) + 1
-    d = len(codebooks[0][2])
-    table = [[0.0] * kk for _ in range(m)]
-    for s, c, cv in codebooks:
-        q = query_vec[s * d : (s + 1) * d]
-        table[s][c] = float(sum((float(a) - float(b)) ** 2 for a, b in zip(q, cv)))
-    tlit = segstore.doubles_lit(table)
-    dist = F.aggregate(
-        F.sequence(F.lit(0), F.lit(m - 1)),
-        F.lit(0.0),
-        lambda acc, s: acc
-        + F.element_at(
-            F.element_at(tlit, (s + F.lit(1)).cast("int")),
-            (F.element_at(F.col("codes"), (s + F.lit(1)).cast("int")) + F.lit(1)).cast(
-                "int"
-            ),
-        ),
-    )
+    table = vecexpr.adc_table(codebooks, query_vec)
+    dist = F.expr(vecexpr.adc(segstore.doubles_sql(table), "codes", len(table)))
     return (
         codes_df.select(F.col(id_col), dist.alias("approx_dist"))
         .orderBy(F.col("approx_dist").asc(), F.col(id_col))
@@ -1155,12 +1053,17 @@ def pq_topk_rerank(
     vector and the rerank reads ~50 full vectors.
 
     Output: (id, l2_dist) ascending, id tiebreak."""
-    from .kmeans import _sq_dist
-
     cand = pq_topk_adc(codes_df, codebooks, query_vec, shortlist, id_col).select(id_col)
+    return _l2_rerank(df, cand, query_vec, k, id_col, vec_col)
+
+
+def _l2_rerank(df: DataFrame, cand: DataFrame, query_vec, k: int, id_col: str, vec_col: str) -> DataFrame:
+    """Exact squared-L2 rerank of the rows of ``df`` whose id is in
+    ``cand``: (id, l2_dist) ascending, id tiebreak, top ``k``."""
+    dist = vecexpr.sq_dist(vecexpr.ref(vec_col), segstore.doubles_sql(query_vec))
     return (
         df.join(F.broadcast(cand), id_col, "left_semi")
-        .select(F.col(id_col), _sq_dist(F.col(vec_col), segstore.doubles_lit(query_vec)).alias("l2_dist"))
+        .select(F.col(id_col), F.expr(dist).alias("l2_dist"))
         .orderBy(F.col("l2_dist").asc(), F.col(id_col))
         .limit(k)
     )
@@ -1182,16 +1085,11 @@ def unit_normalize(
     tmp = "_unit_norm_tmp"
     while tmp in df.columns:
         tmp += "_"
-    n = F.col(tmp)
+    a, n = vecexpr.ref(vec_col), vecexpr.ref(tmp)
     return (
-        df.withColumn(tmp, norm(F.col(vec_col)))
-        .withColumn(
-            out_col,
-            F.when(
-                n == F.lit(0.0),
-                F.transform(F.col(vec_col), lambda x: x.cast("double")),
-            ).otherwise(F.transform(F.col(vec_col), lambda x: x.cast("double") / n)),
-        )
+        df.withColumn(tmp, F.expr(vecexpr.norm(a)))
+        # x / 1.0 is x exactly: a zero vector passes through as doubles
+        .withColumn(out_col, F.expr(vecexpr.scale(a, f"CASE WHEN {n} = 0D THEN 1D ELSE {n} END")))
         .drop(tmp)
     )
 
@@ -1239,7 +1137,7 @@ def ivfpq_build(
     driver-sized part of the family.  All stages are deterministic
     (fixed-iteration k-means with hash-spread init), so the probe is
     reproducible run to run."""
-    from .kmeans import _sq_dist, kmeans_fit
+    from .kmeans import kmeans_fit
 
     # kmeans_fit hands back the final-assignment means directly — the
     # r11 build paid an extra join + eager localCheckpoint +
@@ -1264,7 +1162,7 @@ def ivfpq_build(
                 "_av",
                 "cluster",
                 "_cent",
-                _sq_dist(F.col("_av"), F.col("_cent")).alias("_ad"),
+                F.expr(vecexpr.sq_dist("_av", "_cent")).alias("_ad"),
             )
             .withColumn("_rn", F.row_number().over(w))
             .filter(F.col("_rn") <= assign_n)
@@ -1282,9 +1180,7 @@ def ivfpq_build(
         assigned.select(
             id_col,
             "cluster",
-            F.zip_with(
-                F.col(vec_col), F.col("_cent"), lambda x, c: x.cast("double") - c
-            ).alias("_resid"),
+            F.expr(vecexpr.residual(vecexpr.ref(vec_col), "_cent")).alias("_resid"),
         )
         .localCheckpoint(eager=True)
     )
@@ -1296,9 +1192,7 @@ def ivfpq_build(
     # multi-assign the per-id minimum-norm residual IS the primary.
     if assign_n > 1:
         train_src = (
-            resid.withColumn(
-                "_rnorm", F.aggregate("_resid", F.lit(0.0), lambda a, x: a + x * x)
-            )
+            resid.withColumn("_rnorm", F.expr(vecexpr.sum_sq("_resid")))
             .withColumn(
                 "_trn",
                 F.row_number().over(
@@ -1367,50 +1261,23 @@ def ivfpq_topk(
     Output: (id, l2_dist) ascending, id tiebreak.  For cosine serving,
     build over ``unit_normalize``-d vectors — L2 order on the unit
     sphere is cosine order."""
-    from .kmeans import _sq_dist
-
-    def _l2(a: "list[float]", b: "list[float]") -> float:
-        return float(sum((float(x) - float(y)) ** 2 for x, y in zip(a, b)))
-
-    probed = sorted(centroid_rows, key=lambda cc: (_l2(query_vec, cc[1]), cc[0]))[
-        :nprobe
+    probed = sorted(centroid_rows, key=lambda cc: (vecexpr.py_sq_dist(query_vec, cc[1]), cc[0]))[:nprobe]
+    tables = [
+        vecexpr.adc_table(codebooks, [float(q) - float(c) for q, c in zip(query_vec, cent)])
+        for _, cent in probed
     ]
-    m = max(s for s, _, _ in codebooks) + 1
-    kk = max(c for _, c, _ in codebooks) + 1
-    d = len(codebooks[0][2])
-    tables = []
-    for _cid, cent in probed:
-        qr = [float(q) - float(c) for q, c in zip(query_vec, cent)]
-        t = [[0.0] * kk for _ in range(m)]
-        for s, c, cv in codebooks:
-            sub = qr[s * d : (s + 1) * d]
-            t[s][c] = float(sum((a - float(b)) ** 2 for a, b in zip(sub, cv)))
-        tables.append(t)
-    # ONE folded constant (segstore.doubles_lit) for the nprobe*m*k
+    # ONE folded constant (segstore.doubles_sql) for the nprobe*m*k
     # tables: py4j F.lit builds cost one gateway round-trip each, and a
     # SQL-parsed array(...) saves those calls but still hands the
     # analyzer one CreateArray child per value — analysing 4,096 of them
     # costs most of a second
-    tlit = segstore.doubles_lit(tables)
+    tlit = segstore.doubles_sql(tables)
     # cluster id → probe position (literal when-chain; nprobe is tiny)
     pos = F.when(F.col("cluster") == probed[0][0], F.lit(0))
     for i, (cid, _) in enumerate(probed[1:], start=1):
         pos = pos.when(F.col("cluster") == cid, F.lit(i))
     probe_ids = [cid for cid, _ in probed]
-    dist = F.aggregate(
-        F.sequence(F.lit(0), F.lit(m - 1)),
-        F.lit(0.0),
-        lambda acc, s: acc
-        + F.element_at(
-            F.element_at(
-                F.element_at(tlit, (F.col("_p") + F.lit(1)).cast("int")),
-                (s + F.lit(1)).cast("int"),
-            ),
-            (F.element_at(F.col("codes"), (s + F.lit(1)).cast("int")) + F.lit(1)).cast(
-                "int"
-            ),
-        ),
-    )
+    dist = F.expr(vecexpr.adc(f"element_at({tlit}, _p + 1)", "codes", len(tables[0])))
     cand = (
         codes_df.filter(F.col("cluster").isin(probe_ids))
         .withColumn("_p", pos)
@@ -1425,12 +1292,7 @@ def ivfpq_topk(
         .limit(shortlist)
         .select(id_col)
     )
-    return (
-        df.join(F.broadcast(cand), id_col, "left_semi")
-        .select(F.col(id_col), _sq_dist(F.col(vec_col), segstore.doubles_lit(query_vec)).alias("l2_dist"))
-        .orderBy(F.col("l2_dist").asc(), F.col(id_col))
-        .limit(k)
-    )
+    return _l2_rerank(df, cand, query_vec, k, id_col, vec_col)
 
 
 def write_ivfpq_index(
@@ -1804,10 +1666,9 @@ def pq_adc_report(
     whole report is ONE narrow projection over the corpus — no join,
     no shuffle, embarrassingly parallel at any size (contrast the
     trained-PQ encode path, which shuffles on id to assemble codes).
-    Every float is a deterministic left-to-right double fold built
-    from subtract/multiply only (no pow — Java's Math.pow is not
-    correctly rounded, C libms are; multiplication is exact in both),
-    so the SQL oracle replays it bit-for-bit."""
+    Every float is a ``vecexpr`` left-to-right double fold built from
+    subtract/multiply only (no pow), so the SQL oracle replays it
+    bit-for-bit."""
     rows = _anchor_rows(df, k, id_col, vec_col)
     dims = len(rows[0][vec_col])
     if dims % m:
@@ -1829,66 +1690,21 @@ def pq_adc_report(
         if qrow is None:
             raise ValueError(f"pq_adc_report: query id {query_vec_id} not found")
         qvec = [float(x) for x in qrow[0]]
-    v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-
-    def dlit(x: float) -> str:
-        # repr is Python's shortest round-trip form; Spark's parser is
-        # correctly rounded, so the same double comes back bit-exactly
-        # (pinned by test_sql_double_literals_roundtrip)
-        return repr(float(x)) + "D"
-
-    def fold_sq(arr: Column, lit_vals: "list[float]") -> Column:
-        lit_arr = F.expr("array(" + ",".join(dlit(x) for x in lit_vals) + ")")
-        return F.aggregate(
-            F.zip_with(arr, lit_arr, lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, t: acc + t,
-        )
-
-    def py_sq(a: "list[float]", b: "list[float]") -> float:
-        acc = 0.0
-        for x, y in zip(a, b):
-            acc = acc + (x - y) * (x - y)
-        return acc
-
+    a = vecexpr.ref(vec_col)
+    adcs = vecexpr.adc_table([(s, c, cv) for (s, c), cv in sub_of.items()], qvec)
     best = []
     for s in range(m):
-        sub = F.slice(v, s * d + 1, d)
-        qsub = qvec[s * d : (s + 1) * d]
-        # ONE literal array of (centroid, code, adc) per subspace —
-        # assembled as a single SQL expression string, not k*d F.lit
-        # Columns (py4j Column construction dominated the runtime:
-        # ~3 s of driver-side tree building for 128 candidate HOFs) —
-        # with the row-to-centroid distance computed inside one
-        # transform lambda, so the plan holds m transform+aggregate
-        # trees instead of m*k separate aggregates.  Identical
-        # per-candidate arithmetic → bit-equal results.  The "adc"
-        # member is the query-to-centroid distance: literal vs
-        # literal, computed driver-side (Python floats ARE IEEE
-        # doubles, same left-to-right fold the oracle replays).
-        cents = F.expr(
-            "array("
-            + ",".join(
-                "named_struct('cv',array("
-                + ",".join(dlit(x) for x in sub_of[(s, c)])
-                + f"),'c',{c},'adc',{dlit(py_sq(qsub, sub_of[(s, c)]))})"
-                for c in range(k)
-            )
-            + ")"
-        )
-        cands = F.transform(
-            cents,
-            lambda st: F.struct(
-                F.aggregate(
-                    F.zip_with(sub, st["cv"], lambda x, y: (x - y) * (x - y)),
-                    F.lit(0.0),
-                    lambda acc, t: acc + t,
-                ).alias("d"),
-                st["c"].alias("c"),
-                st["adc"].alias("adc"),
-            ),
-        )
-        best.append(F.array_min(cands))  # struct min: (dist, code) lexicographic
+        # ONE literal per subspace for the k centroids and ONE for their
+        # query distances (``adc``, folded driver-side), and the
+        # row-to-centroid distances in one transform lambda: the plan
+        # holds m transform+aggregate trees instead of m*k separate
+        # aggregates.  The struct min is (distance, code) lexicographic.
+        cents = segstore.doubles_sql([sub_of[(s, c)] for c in range(k)])
+        best.append(F.expr(
+            f"array_min(transform({cents}, (cv, c) -> named_struct("
+            f"'d', {vecexpr.sq_dist(f'slice({a}, {s * d + 1}, {d})', 'cv')}, "
+            f"'c', c, 'adc', element_at({segstore.doubles_sql(adcs[s])}, c + 1))))"
+        ))
     code_key = F.lit(0).cast("long")
     approx = F.lit(0.0)
     for s, b in enumerate(best):
@@ -1898,5 +1714,5 @@ def pq_adc_report(
         F.col(id_col),
         code_key.alias("code_key"),
         approx.alias("approx_dist"),
-        fold_sq(v, qvec).alias("l2_dist"),
+        F.expr(vecexpr.sq_dist(a, segstore.doubles_sql(qvec))).alias("l2_dist"),
     )

@@ -23,6 +23,7 @@ from ..operators import (
     similarity,
     sketches,
     text,
+    vecexpr,
 )
 from ..sources.tables import load
 from .registry import QuerySpec
@@ -310,7 +311,7 @@ def hybrid_search_rrf_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(q))
         .select(
             "vec_id",
-            similarity.cosine(F.col("embedding"), F.col("_qvec")).alias("cos_sim"),
+            F.expr(vecexpr.cosine("embedding", "_qvec")).alias("cos_sim"),
         )
         .orderBy(F.col("cos_sim").desc(), F.col("vec_id"))
         .limit(20)
@@ -832,7 +833,7 @@ def embedding_topk_doc_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(q))
         .select(
             "vec_id",
-            similarity.cosine(F.col("embedding"), F.col("_qvec")).alias("cos_sim"),
+            F.expr(vecexpr.cosine("embedding", "_qvec")).alias("cos_sim"),
         )
         .orderBy(F.col("cos_sim").desc(), F.col("vec_id"))
         .limit(10)
@@ -857,7 +858,7 @@ def embedding_topk_per_label(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "label",
             "vec_id",
-            similarity.cosine(F.col("embedding"), F.col("_qvec")).alias("cos_sim"),
+            F.expr(vecexpr.cosine("embedding", "_qvec")).alias("cos_sim"),
         )
         .withColumn("rnk", F.row_number().over(w).cast("int"))
         .filter(F.col("rnk") <= 3)
@@ -1199,10 +1200,12 @@ FROM reach GROUP BY node
 """
 
 def _cosine_sql(a: str, b: str) -> str:
-    """Bit-exact SQL twin of similarity.cosine for two table aliases —
+    """Bit-exact DuckDB twin of ``vecexpr.cosine`` for two table aliases —
     left-to-right double fold, dot/(sqrt(aa)*sqrt(bb)) association.
     ONE definition so every oracle that compares cosines stays in
-    lockstep with the Spark-side fold."""
+    lockstep with the Spark-side fold; written by hand, not rendered
+    from ``vecexpr``, so a fold bug cannot show on both sides of the
+    oracle gate at once."""
 
     def dot(x: str, y: str) -> str:
         return (
@@ -1545,7 +1548,7 @@ def text_embedding_disagreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     embs = _embs(spark, sf_dir)
     e1 = embs.select(F.col("vec_id").alias("doc_a"), F.col("embedding").alias("_ea"))
     e2 = embs.select(F.col("vec_id").alias("doc_b"), F.col("embedding").alias("_eb"))
-    cos = similarity.cosine(F.col("_ea"), F.col("_eb"))
+    cos = F.expr(vecexpr.cosine("_ea", "_eb"))
     return (
         pairs.join(e1, "doc_a")
         .join(e2, "doc_b")

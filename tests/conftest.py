@@ -1,9 +1,12 @@
 from __future__ import annotations
 
+import gc
 import os
 import sys
+import time
 import uuid
 from contextlib import contextmanager
+from types import SimpleNamespace
 
 import pytest
 
@@ -85,6 +88,39 @@ def count_jobs(spark, action) -> int:
     with job_group(spark, "counted") as group:
         action()
     return group_jobs(spark, group)
+
+
+def count_py4j(spark, action) -> int:
+    """py4j gateway commands ``action()`` sends.  Python's ``gc`` is off
+    while counting: collected JVM proxies send release commands at
+    whatever moment the collector runs."""
+    client = spark.sparkContext._gateway._gateway_client
+    send, sent = client.send_command, [0]
+
+    def counted(*args, **kwargs):
+        sent[0] += 1
+        return send(*args, **kwargs)
+
+    enabled = gc.isenabled()
+    gc.collect()
+    gc.disable()
+    client.send_command = counted
+    try:
+        action()
+    finally:
+        del client.send_command
+        if enabled:
+            gc.enable()
+    return sent[0]
+
+
+def no_backoff(monkeypatch) -> None:
+    """Stub the sink retry backoff in the sinks module only: a no-op
+    global ``time.sleep`` turns Spark's Python polling threads into
+    busy loops."""
+    from clickstreaming_end_to_end_data_engineering_project_spark.streaming import sinks
+
+    monkeypatch.setattr(sinks, "time", SimpleNamespace(sleep=lambda s: None, time=time.time))
 
 
 @pytest.fixture(scope="session")

@@ -1717,20 +1717,18 @@ def test_pq_rerank_recovers_exact_neighbors(spark, sf_dir):
     from clickstreaming_end_to_end_data_engineering_project_spark.operators import (
         similarity as S,
     )
-    from clickstreaming_end_to_end_data_engineering_project_spark.operators.kmeans import (
-        _sq_dist,
-    )
+    from clickstreaming_end_to_end_data_engineering_project_spark.operators import segstore, vecexpr
     from clickstreaming_end_to_end_data_engineering_project_spark.sources.tables import load
     from pyspark.sql import functions as F
 
     embs = load(spark, sf_dir, "embeddings").persist()
     try:
         qvec = [float(x) for x in embs.filter(F.col("vec_id") == 0).head()["embedding"]]
-        qlit = F.array(*[F.lit(x) for x in qvec])
+        qlit = segstore.doubles_sql(qvec)
         corpus = embs.filter(F.col("vec_id") != 0)
         exact = [
             r["vec_id"]
-            for r in corpus.select("vec_id", _sq_dist(F.col("embedding"), qlit).alias("d"))
+            for r in corpus.select("vec_id", F.expr(vecexpr.sq_dist("embedding", qlit)).alias("d"))
             .orderBy(F.col("d").asc(), F.col("vec_id"))
             .limit(10)
             .collect()
@@ -1744,7 +1742,7 @@ def test_pq_rerank_recovers_exact_neighbors(spark, sf_dir):
         direct = {
             r["vec_id"]: r["d"]
             for r in corpus.select(
-                "vec_id", _sq_dist(F.col("embedding"), qlit).alias("d")
+                "vec_id", F.expr(vecexpr.sq_dist("embedding", qlit)).alias("d")
             ).collect()
         }
         for r in got:
@@ -1908,7 +1906,7 @@ def test_sql_double_literals_roundtrip(spark):
 
 def test_doubles_lit_roundtrips_bit_exactly_as_one_constant(spark):
     """Query vectors and ADC tables enter probe plans through
-    ``segstore.doubles_lit``: one JSON string literal parsed by
+    ``segstore.doubles_sql``: one JSON string literal parsed by
     ``from_json``.  Every double must come back bit-exactly (compared by
     repr, so -0.0 and the subnormals count), flat and nested, and the
     optimizer must fold the parse into one constant."""
@@ -1916,7 +1914,7 @@ def test_doubles_lit_roundtrips_bit_exactly_as_one_constant(spark):
     import struct as _struct
 
     from clickstreaming_end_to_end_data_engineering_project_spark.operators.segstore import (
-        doubles_lit,
+        doubles_sql,
     )
 
     vals = [0.0, -0.0, 5e-324, 2.2250738585072014e-308, 1.7976931348623157e308, 0.1, 1 / 3]
@@ -1925,11 +1923,11 @@ def test_doubles_lit_roundtrips_bit_exactly_as_one_constant(spark):
         x = _struct.unpack("d", _struct.pack("Q", rng.getrandbits(64)))[0]
         if math.isfinite(x):
             vals.append(x)
-    df = spark.range(1).select(doubles_lit(vals).alias("a"))
+    df = spark.range(1).select(F.expr(doubles_sql(vals)).alias("a"))
     assert [repr(g) for g in df.first()["a"]] == [repr(v) for v in vals]
     assert "from_json" not in df._jdf.queryExecution().optimizedPlan().toString()
     nested = [[vals[:3], vals[3:7]], [vals[7:9], vals[9:11]]]
-    got = spark.range(1).select(doubles_lit(nested).alias("a")).first()["a"]
+    got = spark.range(1).select(F.expr(doubles_sql(nested)).alias("a")).first()["a"]
     assert [[[repr(x) for x in r] for r in t] for t in got] == [
         [[repr(x) for x in r] for r in t] for t in nested
     ]
@@ -2014,9 +2012,7 @@ def test_unit_normalize_cosine_becomes_l2(spark):
     from clickstreaming_end_to_end_data_engineering_project_spark.operators import (
         similarity as S,
     )
-    from clickstreaming_end_to_end_data_engineering_project_spark.operators.kmeans import (
-        _sq_dist,
-    )
+    from clickstreaming_end_to_end_data_engineering_project_spark.operators import segstore, vecexpr
     from pyspark.sql import functions as F
 
     rows = [(i, [float(((i * 7 + j * 5) % 17) - 8) for j in range(6)]) for i in range(30)]
@@ -2037,11 +2033,11 @@ def test_unit_normalize_cosine_becomes_l2(spark):
         float(x)
         for x in normed.filter(F.col("vec_id") == 0).head()["embedding"]
     ]
-    qlit = F.array(*[F.lit(x) for x in qn])
+    qlit = segstore.doubles_sql(qn)
     l2_order = [
         r["vec_id"]
         for r in normed.filter("vec_id != 99 and vec_id != 0")
-        .select("vec_id", _sq_dist(F.col("embedding"), qlit).alias("d"))
+        .select("vec_id", F.expr(vecexpr.sq_dist("embedding", qlit)).alias("d"))
         .orderBy(F.col("d").asc(), F.col("vec_id"))
         .collect()
     ]
@@ -2057,9 +2053,7 @@ def test_ivfpq_exhaustive_matches_bruteforce(spark):
     from clickstreaming_end_to_end_data_engineering_project_spark.operators import (
         similarity as S,
     )
-    from clickstreaming_end_to_end_data_engineering_project_spark.operators.kmeans import (
-        _sq_dist,
-    )
+    from clickstreaming_end_to_end_data_engineering_project_spark.operators import segstore, vecexpr
     from pyspark.sql import functions as F
 
     rows = [
@@ -2075,9 +2069,9 @@ def test_ivfpq_exhaustive_matches_bruteforce(spark):
     got = S.ivfpq_topk(
         body, codes, cents, books, q, k=10, nprobe=4, shortlist=200
     ).collect()
-    qlit = F.array(*[F.lit(x) for x in q])
+    qlit = segstore.doubles_sql(q)
     want = (
-        body.select("vec_id", _sq_dist(F.col("embedding"), qlit).alias("l2_dist"))
+        body.select("vec_id", F.expr(vecexpr.sq_dist("embedding", qlit)).alias("l2_dist"))
         .orderBy(F.col("l2_dist").asc(), F.col("vec_id"))
         .limit(10)
         .collect()
@@ -2130,9 +2124,7 @@ def test_ivfpq_recall_floor_on_fixture(spark, sf_dir):
     from clickstreaming_end_to_end_data_engineering_project_spark.operators import (
         similarity as S,
     )
-    from clickstreaming_end_to_end_data_engineering_project_spark.operators.kmeans import (
-        _sq_dist,
-    )
+    from clickstreaming_end_to_end_data_engineering_project_spark.operators import segstore, vecexpr
     from clickstreaming_end_to_end_data_engineering_project_spark.sources.tables import load
     from pyspark.sql import functions as F
 
@@ -2141,10 +2133,10 @@ def test_ivfpq_recall_floor_on_fixture(spark, sf_dir):
     ).localCheckpoint(eager=True)
     q = [float(x) for x in embs.filter(F.col("vec_id") == 0).head()["embedding"]]
     body = embs.filter(F.col("vec_id") != 0)
-    qlit = F.array(*[F.lit(x) for x in q])
+    qlit = segstore.doubles_sql(q)
     exact = [
         r["vec_id"]
-        for r in body.select("vec_id", _sq_dist(F.col("embedding"), qlit).alias("d"))
+        for r in body.select("vec_id", F.expr(vecexpr.sq_dist("embedding", qlit)).alias("d"))
         .orderBy(F.col("d").asc(), F.col("vec_id"))
         .limit(10)
         .collect()
@@ -2161,7 +2153,7 @@ def test_ivfpq_recall_floor_on_fixture(spark, sf_dir):
     direct = {
         r["vec_id"]: r["d"]
         for r in body.select(
-            "vec_id", _sq_dist(F.col("embedding"), qlit).alias("d")
+            "vec_id", F.expr(vecexpr.sq_dist("embedding", qlit)).alias("d")
         ).collect()
     }
     for r in got:
@@ -2287,9 +2279,6 @@ def test_ivfpq_written_index_probe_matches_in_memory(spark, sf_dir, tmp_path):
 
     from clickstreaming_end_to_end_data_engineering_project_spark.operators import (
         similarity as S,
-    )
-    from clickstreaming_end_to_end_data_engineering_project_spark.operators.kmeans import (
-        _sq_dist,
     )
     from clickstreaming_end_to_end_data_engineering_project_spark.sources.tables import load
     from pyspark.sql import functions as F
@@ -5199,15 +5188,13 @@ def test_lsh_and_pq_filtered_probes_match_filtered_brute_force(spark, sf_dir, tm
     # PQ ranks by exact L2 after the rerank — the ground truth is the
     # exact L2 top-10 over the filtered corpus (cosine order need not
     # coincide on non-normalized vectors)
-    from clickstreaming_end_to_end_data_engineering_project_spark.operators.kmeans import (
-        _sq_dist,
-    )
+    from clickstreaming_end_to_end_data_engineering_project_spark.operators import segstore, vecexpr
 
-    qlit = F.array(*[F.lit(float(x)) for x in q])
+    qlit = segstore.doubles_sql(q)
     want_l2 = [
         r["vec_id"]
         for r in body.filter("label = 3")
-        .select("vec_id", _sq_dist(F.col("embedding"), qlit).alias("_d"))
+        .select("vec_id", F.expr(vecexpr.sq_dist("embedding", qlit)).alias("_d"))
         .orderBy(F.col("_d").asc(), F.col("vec_id"))
         .limit(10)
         .collect()

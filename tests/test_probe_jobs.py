@@ -1,6 +1,7 @@
 """Indexed-probe pins: each of the six written-index probes launches a
 fixed number of Spark jobs on a tiny two-segment fixture, once with an
-empty metadata cache and once warm; and no write can leave the cache
+empty metadata cache and once warm, and its warm frame build sends a
+fixed number of py4j calls; and no write can leave the cache
 serving something stale — after an append, ``forget_ids``, a
 ``maintain_index`` compaction and a rebuild with different geometry, a
 warm probe equals a cold probe and a probe of a fresh rebuild over the
@@ -22,7 +23,7 @@ from clickstreaming_end_to_end_data_engineering_project_spark.operators.maintena
     maintain_index,
 )
 
-from .conftest import count_jobs
+from .conftest import count_jobs, count_py4j
 
 # (cold, warm) jobs per probe.  When every probe read its sidecars and
 # inferred its store schema itself, the same fixture launched bm25 7,
@@ -34,6 +35,18 @@ PINS = {
     "ivf_filtered": (4, 1),
     "pq": (5, 2),
     "ivfpq": (7, 3),
+}
+# py4j gateway calls of one warm probe's frame build (the least of
+# three builds): a count no box speed moves.  With the vector folds
+# built as Column lambdas the same builds made bm25 961, lsh 518, ivf
+# 519, ivf_filtered 523, pq 518 and ivfpq 712 calls.
+PY4J_PINS = {
+    "bm25": 961,
+    "lsh": 186,
+    "ivf": 187,
+    "ivf_filtered": 191,
+    "pq": 247,
+    "ivfpq": 400,
 }
 Q = [1.0, 2.0, 1.0, 0.5]
 
@@ -112,6 +125,19 @@ def test_probe_job_counts_cold_and_warm(spark, tmp_path, probe):
     cold = count_jobs(spark, lambda: _probe(spark, probe, path, rows).collect())
     warm = count_jobs(spark, lambda: _probe(spark, probe, path, rows).collect())
     assert (cold, warm) == PINS[probe]
+
+
+@pytest.mark.parametrize("probe", sorted(PY4J_PINS))
+def test_warm_probe_build_py4j_calls(spark, tmp_path, probe):
+    kind = "ivf" if probe == "ivf_filtered" else probe
+    rows, id_col = _frames(spark, kind)
+    path = str(tmp_path / kind)
+    _build(spark, kind, rows.filter(F.col(id_col) < 30), path)
+    append = R.append_bm25_index if kind == "bm25" else getattr(S, f"append_{kind}_index")
+    append(rows.filter(F.col(id_col) >= 30), path)
+    _probe(spark, probe, path, rows).collect()
+    calls = min(count_py4j(spark, lambda: _probe(spark, probe, path, rows)) for _ in range(3))
+    assert calls == PY4J_PINS[probe]
 
 
 def _served_equals_fresh(spark, kind: str, path: str) -> None:

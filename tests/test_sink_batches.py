@@ -29,7 +29,7 @@ from clickstreaming_end_to_end_data_engineering_project_spark.streaming.sinks im
     Sink,
 )
 
-from .conftest import count_jobs, group_jobs, job_group
+from .conftest import count_jobs, group_jobs, job_group, no_backoff
 
 EVENTS_DDL = "event_id long, ts timestamp, user_id long, event_type string, value double"
 T0 = dt.datetime(2024, 3, 1)
@@ -240,7 +240,7 @@ def test_sink_cache_ownership(spark, monkeypatch):
     exit path; a frame the caller cached stays cached and is still
     checked for emptiness; a sibling that succeeded is not re-run when
     a later one fails."""
-    monkeypatch.setattr(sinks_mod.time, "sleep", lambda s: None)
+    no_backoff(monkeypatch)
     spark.catalog.clearCache()
     cm = spark._jsparkSession.sharedState().cacheManager()
     df = spark.createDataFrame([(1,), (2,)], "x long")

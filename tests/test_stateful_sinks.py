@@ -11,14 +11,12 @@ import importlib
 import inspect
 import os
 import pkgutil
-from types import SimpleNamespace
 
 import pytest
 from pyspark.sql import functions as F
 
 from clickstreaming_end_to_end_data_engineering_project_spark import fsutil, streaming
 from clickstreaming_end_to_end_data_engineering_project_spark.operators.segstore import IngestSink
-from clickstreaming_end_to_end_data_engineering_project_spark.streaming import sinks as sinks_mod
 from clickstreaming_end_to_end_data_engineering_project_spark.streaming.ab_ingest import ABTestSink
 from clickstreaming_end_to_end_data_engineering_project_spark.streaming.attribution import (
     LastTouchAttributionSink,
@@ -42,7 +40,7 @@ from clickstreaming_end_to_end_data_engineering_project_spark.streaming.sketch_i
     SketchRollupSink,
 )
 
-from .conftest import count_jobs
+from .conftest import count_jobs, no_backoff
 from .test_sink_batches import micro_batch_regime  # noqa: F401  (fixture)
 
 DDL = (
@@ -150,9 +148,7 @@ def test_fault_in_state_swap_is_healed_by_retry(
     the retry heals and recomputes; after the swap the retry finds the
     batch applied and skips.  Either way ``out/`` and ``state/`` equal an
     uninjected run's — ``n_intervals`` would double-count otherwise."""
-    # stub the retry backoff in the sinks module only: a no-op global
-    # time.sleep turns Spark's polling threads into busy loops
-    monkeypatch.setattr(sinks_mod, "time", SimpleNamespace(sleep=lambda s: None))
+    no_backoff(monkeypatch)
     run, clean = interval_runs
     swap, faults = fsutil.swap_with_staging, []
 

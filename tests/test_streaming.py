@@ -37,6 +37,8 @@ from clickstreaming_end_to_end_data_engineering_project_spark.streaming.sinks im
     MetricsSink,
 )
 
+from .conftest import no_backoff
+
 EVENTS_SCHEMA = StructType(
     [
         StructField("event_id", LongType()),
@@ -642,11 +644,9 @@ def test_device_stats_streaming_equals_batch_on_wire_schema(spark):
 def test_sink_retry_policy(spark, monkeypatch):
     """Sink retries 3x with backoff (reference stream_processor.py:305-324)
     then surfaces the error; empty batches short-circuit before write."""
-    import time as _time
-
     from clickstreaming_end_to_end_data_engineering_project_spark.streaming.sinks import Sink
 
-    monkeypatch.setattr(_time, "sleep", lambda s: None)
+    no_backoff(monkeypatch)
 
     class Flaky(Sink):
         def __init__(self, fail_times):
@@ -1091,14 +1091,12 @@ def test_metrics_sink_retry_is_idempotent(spark, monkeypatch):
     untouched so the retry in Sink.__call__ counts each batch exactly
     once; a NULL aggregate (sum of all-NULL counts) is dropped, not a
     crash (shared _batch_delta semantics across all metrics sinks)."""
-    import time as _time
-
     from clickstreaming_end_to_end_data_engineering_project_spark.streaming import sinks as sinks_mod
     from clickstreaming_end_to_end_data_engineering_project_spark.streaming.sinks import (
         MetricsSink,
     )
 
-    monkeypatch.setattr(_time, "sleep", lambda s: None)
+    no_backoff(monkeypatch)
     sink = MetricsSink(key_col="page", count_col="cnt")
     good = spark.createDataFrame([("home", 3), ("cart", 2)], ["page", "cnt"])
     sink(good, 0)
@@ -1491,9 +1489,7 @@ def test_trending_sink_decay_and_ranking(spark, monkeypatch):
     # replay safety: Sink.__call__ retry on a failing first attempt
     # (sleep stubbed and write patched via monkeypatch — self-cleaning,
     # no real backoff delay, same pattern as the sibling retry tests)
-    import clickstreaming_end_to_end_data_engineering_project_spark.streaming.sinks as _sinks
-
-    monkeypatch.setattr(_sinks.time, "sleep", lambda s: None)
+    no_backoff(monkeypatch)
 
     class Boom(Exception):
         pass
@@ -2800,6 +2796,56 @@ def test_streaming_sequence_match_equals_batch(spark, sf_dir):
     sink(parts[2], 2)  # replay the last batch against advanced state
     assert served() == want
     shutil.rmtree(os.path.dirname(store), ignore_errors=True)
+
+
+@pytest.mark.parametrize("seed", [4, 11])
+def test_streaming_sequence_match_equals_batch_with_null_ts(spark, tmp_path, seed):
+    """Seeded random differential with NULL timestamps and NULL event
+    types: three chronological micro-batches (a NULL-ts event lands in
+    any of them) into SequenceMatchSink serve exactly match_sequence's
+    rows over all the events.  On both sides an event with a NULL ts
+    takes no step, so an entity whose views all lack a timestamp has no
+    row."""
+    import random
+
+    from clickstreaming_end_to_end_data_engineering_project_spark.operators.sequence import (
+        match_sequence,
+    )
+    from clickstreaming_end_to_end_data_engineering_project_spark.streaming.sequence import (
+        SequenceMatchSink,
+        matches_from_store,
+    )
+
+    rng = random.Random(seed)
+    t0 = dt.datetime(2024, 1, 1)
+    parts = [[], [], []]
+    for user in range(40):
+        for _ in range(rng.randint(1, 8)):
+            minute = rng.randint(0, 299)
+            ts = None if rng.random() < 0.25 else t0 + dt.timedelta(minutes=minute)
+            row = (user, ts, rng.choice(["view", "click", "buy", None]))
+            parts[rng.randint(0, 2) if ts is None else minute // 100].append(row)
+    schema = "user_id long, ts timestamp, event_type string"
+    rows = [r for p in parts for r in p]
+    views = {}
+    for user, ts, kind in rows:
+        if kind == "view":
+            views.setdefault(user, set()).add(ts is None)
+    assert any(v == {True} for v in views.values()), "fixture lost its NULL-ts-only viewer"
+
+    steps = [(n, F.col("event_type") == n) for n in ("view", "click", "buy")]
+    sink = SequenceMatchSink(str(tmp_path / "store"), "user_id", "ts", steps, within="1 hour")
+    for i, p in enumerate(parts):
+        sink(spark.createDataFrame(p, schema), i)
+    cols = ["user_id", "t_view", "t_click", "t_buy"]
+    got = {tuple(r) for r in matches_from_store(spark, str(tmp_path / "store")).select(cols).collect()}
+    all_events = spark.createDataFrame(rows, schema)
+    want = {
+        tuple(r)
+        for r in match_sequence(all_events, "user_id", "ts", steps, within="1 hour").select(cols).collect()
+    }
+    assert got == want
+    assert any(r[2] is not None for r in want)
 
 
 def test_streaming_interval_merge_equals_batch(spark, sf_dir):
