@@ -15,7 +15,6 @@ Run:  python -m clickstreaming_end_to_end_data_engineering_project_spark.app --d
 from __future__ import annotations
 
 import argparse
-import tempfile
 import time
 
 from pyspark.sql import functions as F

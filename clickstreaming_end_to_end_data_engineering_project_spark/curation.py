@@ -1,230 +1,10 @@
-"""End-to-end training-corpus curation — the documents-table twin of
-etl.py's bronze/silver/gold: score → filter → dedup → split → write,
-each stage an already-tested operator from ``operators/``, composed the
-way a corpus-scale curation job runs.
-
-Stage shapes (why this survives a 100 TB corpus):
-  1. score   — quality + language-ID are pure projections (codegen
-               expressions, no shuffle); the two feature frames join
-               back on doc_id (AQE picks the strategy).  The optional
-               perplexity gate (max_perplexity) adds the CCNet-style
-               corpus-unigram LM pass: one vocab-bounded count shuffle
-               + a semi-join of survivors — the only stage-1 path that
-               shuffles, and only when asked for.
-  2. filter  — quality/lang predicates run before anything expensive;
-               at scale they also prune whole partitions when the
-               corpus is written bucketed/partitioned by those keys.
-  3. dedup   — exact first (one shuffle on the md5 fingerprint; keeps
-               min doc_id per group), THEN near-dup on the survivors
-               (inverted-index Jaccard with the hot-shingle cap +
-               connected components; non-canonical cluster members
-               dropped).  Ordering matters: exact dedup shrinks the
-               expensive candidate join's input for free.
-  4. trim    — optional span excision (trim_span_n): cross-document
-               duplicated n-gram spans are cut out of the SURVIVORS
-               (operators/text.trim_dup_spans — the Lee et al. 2021
-               action; doc-level dedup removes whole near-dup docs,
-               this removes the boilerplate that remains inside kept
-               docs).  After near-dedup on purpose: the gram index is
-               built over the smallest surviving set, and trimming
-               first would perturb the near-dup signatures.  Docs
-               trimmed to zero tokens are dropped.
-  5. scrub   — PII redaction (chained regexp_replace, pure codegen
-               expressions).  AFTER dedup on purpose: placeholders
-               would otherwise make distinct documents byte-identical
-               and merge unrelated dedup clusters; and running it on
-               the survivors only does least work.  Fused into the
-               same stage as the split projection — zero extra passes.
-  6. split   — id-hash train/test (engine/partitioning-stable; keyed
-               on doc_id, so membership is identical whether or not
-               scrubbing is enabled).
-  7. write   — parquet partitioned by split, so training readers scan
-               only their slice.
-
-Counts are computed from the WRITTEN output (one scan), so the result
-reports what a downstream consumer actually sees.
-"""
+"""Corpus intake validation: one-pass counts of named violations over a
+documents frame, run on a new crawl drop before it is admitted."""
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from .operators import components, dedup, pii, sampling, text
-from .sources.tables import load
-
-
-@dataclass(frozen=True)
-class CurationResult:
-    input_docs: int
-    after_filter: int
-    after_exact_dedup: int
-    after_near_dedup: int
-    train_docs: int
-    test_docs: int
-
-
-def score_and_filter(
-    docs: DataFrame,
-    min_quality: float = 0.75,
-    langs: tuple[str, ...] | None = None,
-    max_perplexity: float | None = None,
-) -> DataFrame:
-    """Attach quality_score + predicted_lang, keep rows passing both
-    gates.  Both features are pure column expressions, so this whole
-    stage is one NARROW projection+filter — attaching per-doc features
-    must never shuffle the corpus (the join formulation would shuffle
-    it twice).
-
-    ``max_perplexity`` additionally applies the CCNet-style unigram-LM
-    gate (drop docs whose perplexity under the corpus's own unigram
-    distribution exceeds the cap — repetitive junk scores LOW, rare-
-    token noise scores HIGH).  Implemented as an ANTI-join against the
-    over-cap id set, so docs the LM cannot score at all (zero tokens —
-    they produce no unigram_logprob row) pass through rather than being
-    silently dropped by a gate that never evaluated them; corpus rows
-    pass through unwidened either way."""
-    # one materialized token array shared by both feature expressions
-    # (tokens() is codegen-excluded: composed from raw text the pair
-    # re-splits each doc ~8×; see quality_score_col's ``toks`` note)
-    kept = (
-        docs.withColumn("_toks", text.tokens("text"))
-        .withColumn("quality_score", text.quality_score_col("text", toks=F.col("_toks")))
-        .withColumn("predicted_lang", text.predicted_lang_col(toks=F.col("_toks")))
-        .drop("_toks")
-        .filter(F.col("quality_score") >= min_quality)
-    )
-    if langs:
-        kept = kept.filter(F.col("predicted_lang").isin(list(langs)))
-    if max_perplexity is not None:
-        # materialize the over-cap id set ONCE (eager localCheckpoint —
-        # same discipline as dedup's loser sets): curate_corpus triggers
-        # several actions downstream (counts, dedup's collects, the
-        # write), and without this each one would re-run the full
-        # corpus-wide unigram-LM subplan embedded in the anti-join
-        too_perplexed = (
-            text.unigram_logprob(kept)
-            .filter(F.col("perplexity") > max_perplexity)
-            .select("doc_id")
-            .localCheckpoint(eager=True)
-        )
-        kept = kept.join(too_perplexed, "doc_id", "left_anti")
-    return kept
-
-
-def drop_exact_dups(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """Keep the smallest id per byte-identical text — delegates to the
-    shared ``dedup.keep_first_per_fingerprint`` (groupBy+semi-join on
-    the md5 fingerprint; NULL texts are never duplicates)."""
-    return dedup.keep_first_per_fingerprint(df, id_col, text_col)
-
-
-def drop_near_dups(
-    df: DataFrame,
-    threshold: float = 0.2,
-    max_doc_freq: int | None = 50,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    method: str = "jaccard",
-) -> DataFrame:
-    """Drop non-canonical members of near-dup clusters (cluster minimum
-    survives).  ``method="jaccard"`` computes exact capped-Jaccard pairs
-    (the default; exact similarities, still hot-shingle-safe);
-    ``method="minhash"`` routes candidates through banded MinHash LSH
-    and thresholds the signature-agreement estimate — the sub-quadratic
-    path for corpora where even the capped inverted-index join is too
-    wide.  Anti-join against the loser set — tiny relative to the
-    corpus, but NOT broadcast-hinted: at corpus scale its size is
-    data-dependent, so AQE decides."""
-    if method == "jaccard":
-        pairs = dedup.ngram_jaccard_pairs(
-            df, id_col=id_col, text_col=text_col, threshold=threshold, max_doc_freq=max_doc_freq
-        )
-    elif method == "minhash":
-        pairs = dedup.minhash_lsh_candidates(df, id_col=id_col, text_col=text_col).filter(
-            F.col("est_jaccard") >= threshold
-        )
-    else:
-        raise ValueError(f"unknown near-dup method: {method!r} (jaccard|minhash)")
-    losers = (
-        components.dup_clusters(pairs)
-        .filter(~F.col("is_canonical"))
-        .select(F.col("doc_id").alias(id_col))
-    )
-    return df.join(losers, id_col, "left_anti")
-
-
-def curate_corpus(
-    spark: SparkSession,
-    sf_dir: str,
-    out_dir: str,
-    min_quality: float = 0.75,
-    langs: tuple[str, ...] | None = None,
-    jaccard_threshold: float = 0.2,
-    max_doc_freq: int | None = 50,
-    train_frac: float = 0.8,
-    scrub: bool = True,
-    max_perplexity: float | None = None,
-    trim_span_n: int | None = None,
-) -> CurationResult:
-    docs = load(spark, sf_dir, "documents")
-    input_docs = docs.count()
-
-    kept = score_and_filter(docs, min_quality, langs, max_perplexity)
-    after_filter = kept.count()
-
-    exact = drop_exact_dups(kept)
-    after_exact = exact.count()
-
-    deduped = drop_near_dups(exact, jaccard_threshold, max_doc_freq)
-    survivors = None
-    if trim_span_n is not None:
-        # persist the near-dedup survivors first: the trim stage
-        # consumes them THREE times (dup_islands' eager gram pass, the
-        # token posexplode, the doc universe) and the write a fourth —
-        # unpersisted, the Jaccard pair join + connected components
-        # (the costliest stages) would re-execute for each (the
-        # repo-wide persist discipline; r9 review finding)
-        survivors = deduped.persist()
-        # excise cross-doc duplicated spans from the survivors; docs
-        # trimmed to nothing drop out; n_chars tracks the new text
-        trimmed = text.trim_dup_spans(survivors, n=trim_span_n)
-        deduped = survivors.drop("text").join(
-            trimmed.filter(F.col("kept_tokens") > 0).select(
-                "doc_id", F.col("text_clean").alias("text")
-            ),
-            "doc_id",
-        )
-    if scrub:
-        deduped = pii.scrub_pii(deduped)
-    if (trim_span_n is not None or scrub) and "n_chars" in deduped.columns:
-        # recompute AFTER the last text rewrite: both trim and scrub
-        # replace `text`, and n_chars must track the final written
-        # value (the r9 advisory caught the trim-then-scrub order
-        # recomputing too early, so a scrubbed doc shipped with
-        # n_chars != length(text))
-        deduped = deduped.withColumn("n_chars", F.length("text").cast("long"))
-
-    split = sampling.train_test_split(deduped, "doc_id", train_frac)
-    try:
-        split.write.mode("overwrite").partitionBy("split").parquet(f"{out_dir}/corpus")
-    finally:
-        if survivors is not None:
-            survivors.unpersist()
-
-    out = spark.read.parquet(f"{out_dir}/corpus")
-    per_split = {r["split"]: r["cnt"] for r in out.groupBy("split").agg(F.count(F.lit(1)).alias("cnt")).collect()}
-    return CurationResult(
-        input_docs=input_docs,
-        after_filter=after_filter,
-        after_exact_dedup=after_exact,
-        after_near_dedup=sum(per_split.values()),
-        train_docs=per_split.get("train", 0),
-        test_docs=per_split.get("test", 0),
-    )
-
 
 KNOWN_LANGS = ("en", "es", "fr", "de", "zh")
 
@@ -249,8 +29,7 @@ def _violation_checks() -> "dict[str, F.Column]":
 
 
 def validation_report(docs: DataFrame) -> DataFrame:
-    """Corpus intake validation — the documents twin of etl.py's
-    bronze→silver quarantine gate, as a ONE-PASS report: per named
+    """Corpus intake validation as a ONE-PASS report: per named
     check the violation count, plus total rows and distinct ids (their
     difference is the duplicate-id count).  Conditional sums + a
     distinct count, stack()-unpivoted; at 100 TB this is the scan you
@@ -276,20 +55,3 @@ def validation_report(docs: DataFrame) -> DataFrame:
             f"{n + 1}, 'distinct_ids', _ids) AS (check_idx, check_name, n)"
         )
     )
-
-
-def validate_and_quarantine(docs: DataFrame) -> "tuple[DataFrame, DataFrame]":
-    """Split a document frame into (valid, quarantined) — quarantined
-    rows carry a ``reasons`` CSV of every failed check (not just the
-    first: an operator triaging a bad crawl wants the full diagnosis).
-    Pure projections + one filter each; duplicate-id detection is a
-    REPORT-level concern (validation_report) because row-level dedup
-    is the dedup family's job."""
-    checks = _violation_checks()
-    reasons = F.concat_ws(
-        ",", *[F.when(pred, F.lit(name)) for name, pred in checks.items()]
-    )
-    tagged = docs.withColumn("reasons", reasons)
-    valid = tagged.filter(F.col("reasons") == "").drop("reasons")
-    quarantined = tagged.filter(F.col("reasons") != "")
-    return valid, quarantined

@@ -1,206 +1,29 @@
-"""Batch ETL orchestration — the bounded twin of the streaming app.
-
-The reference is an end-to-end pipeline (generate → transport →
-process → store); its batch equivalent is the classic bronze/silver/
-gold layering, expressed here as three idempotent stages over
-partitioned parquet:
-
-  bronze: raw events landed as-is, partitioned by event date
-          (partition pruning for every later stage)
-  silver: typed/cleaned — props JSON parsed to columns, exact
-          duplicates dropped, late/invalid rows quarantined
-  gold:   the serving aggregates (daily per-type stats, user
-          engagement rollup) — what the reference stored in Postgres
-
-Each stage reads only the previous layer, writes with deterministic
-content, and can be re-run safely (overwrite-by-partition semantics).
-At 100 TB the same code runs with a date predicate per run
-(incremental loads) — the layering, not the volume, is the design.
-"""
+"""Batch rewrites of a parquet dataset, each through ``fsutil``'s
+crash-safe staged swap: right-to-be-forgotten deletion and MERGE INTO
+(the reference's Postgres upserts over immutable parquet)."""
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-from .schema import EVENTS_PROPS_SCHEMA
-from .sources.tables import load
-
-
-@dataclass(frozen=True)
-class EtlResult:
-    bronze_rows: int
-    silver_rows: int
-    quarantined_rows: int
-    gold_daily_rows: int
-    gold_user_rows: int
-
-
-def bronze_land(spark: SparkSession, sf_dir: str, out_dir: str) -> DataFrame:
-    """Land raw events partitioned by date."""
-    ev = load(spark, sf_dir, "events").withColumn("event_date", F.to_date("ts"))
-    ev.write.mode("overwrite").partitionBy("event_date").parquet(f"{out_dir}/bronze/events")
-    return spark.read.parquet(f"{out_dir}/bronze/events")
-
-
-def silver_refine(spark: SparkSession, out_dir: str, event_date: str | None = None) -> DataFrame:
-    """Parse, type, dedup; quarantine rows that fail invariants
-    (null ts / negative value) instead of dropping silently.
-
-    ``event_date`` scopes an incremental run to one bronze partition;
-    dynamic partition overwrite is then applied PER-WRITE (never on the
-    shared session conf, which would leak into every later partitioned
-    overwrite in the session) so both silver and the quarantine rewrite
-    ONLY that date — other dates' rows (including quarantined ones)
-    survive.  A full refresh (no ``event_date``) keeps static mode: the
-    whole layer is truncated and rewritten, so partitions absent from
-    the new input do not silently survive.  Caveat of dynamic mode: an
-    incremental rerun that produces zero quarantine rows for the date
-    leaves the date's old quarantine partition in place (untouched
-    partitions are never deleted)."""
-    overwrite_mode = "dynamic" if event_date is not None else "static"
-    bronze = spark.read.parquet(f"{out_dir}/bronze/events")
-    if event_date is not None:
-        bronze = bronze.filter(F.col("event_date") == F.lit(event_date).cast("date"))
-    parsed = bronze.withColumn("props_k", F.from_json("props", EVENTS_PROPS_SCHEMA)["k"])
-    # null-safe partition of rows: a NULL value must land in quarantine,
-    # not vanish into three-valued-logic limbo (neither filter matching)
-    ok = F.coalesce(F.col("ts").isNotNull() & (F.col("value") >= 0), F.lit(False))
-    valid = parsed.filter(ok)
-    invalid = parsed.filter(~ok)
-    deduped = valid.dropDuplicates(["event_id"])
-    deduped.drop("props").write.mode("overwrite").option(
-        "partitionOverwriteMode", overwrite_mode
-    ).partitionBy("event_date").parquet(f"{out_dir}/silver/events")
-    # partitioned like silver: a plain overwrite would wipe OTHER
-    # dates' quarantined rows on every incremental rerun
-    invalid.write.mode("overwrite").option(
-        "partitionOverwriteMode", overwrite_mode
-    ).partitionBy("event_date").parquet(f"{out_dir}/silver/_quarantine")
-    return spark.read.parquet(f"{out_dir}/silver/events")
-
-
-def read_quarantine(spark: SparkSession, out_dir: str) -> DataFrame | None:
-    """Quarantined rows across all dates, or None when nothing has ever
-    been quarantined: a partitioned write of an empty DataFrame lays
-    down no parquet files, so there is no schema to infer from."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        return spark.read.parquet(f"{out_dir}/silver/_quarantine")
-    except AnalysisException as e:
-        if "UNABLE_TO_INFER_SCHEMA" in str(e):
-            return None
-        raise
-
-
-def gold_publish(spark: SparkSession, out_dir: str) -> tuple[DataFrame, DataFrame]:
-    """Serving aggregates from silver only (never rescans bronze)."""
-    from .functions import sum_money
-
-    silver = spark.read.parquet(f"{out_dir}/silver/events")
-    daily = (
-        silver.groupBy("event_date", "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("event_cnt"),
-            sum_money("value").alias("total_value"),
-            F.count_distinct("user_id").alias("unique_users"),
-        )
-    )
-    daily.write.mode("overwrite").partitionBy("event_date").parquet(f"{out_dir}/gold/daily_stats")
-    users = (
-        silver.groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).alias("event_cnt"),
-            F.min("ts").alias("first_seen"),
-            F.max("ts").alias("last_seen"),
-            sum_money("value").alias("lifetime_value"),
-        )
-    )
-    users.write.mode("overwrite").parquet(f"{out_dir}/gold/user_rollup")
-    return (
-        spark.read.parquet(f"{out_dir}/gold/daily_stats"),
-        spark.read.parquet(f"{out_dir}/gold/user_rollup"),
-    )
-
-
-def run_events_etl(spark: SparkSession, sf_dir: str, out_dir: str) -> EtlResult:
-    # a full refresh: every layer is rewritten whole under static
-    # overwrite (the default).  Dynamic partition overwrite is applied
-    # per-write inside silver_refine for event_date-scoped incremental
-    # runs only — never set on the shared session conf.
-    bronze = bronze_land(spark, sf_dir, out_dir)
-    silver = silver_refine(spark, out_dir)
-    daily, users = gold_publish(spark, out_dir)
-    quarantine = read_quarantine(spark, out_dir)
-    return EtlResult(
-        bronze_rows=bronze.count(),
-        silver_rows=silver.count(),
-        quarantined_rows=0 if quarantine is None else quarantine.count(),
-        gold_daily_rows=daily.count(),
-        gold_user_rows=users.count(),
-    )
-
-
-def compact_parquet(
-    spark: SparkSession,
-    path: str,
-    target_file_mb: int = 128,
-    partition_cols: tuple[str, ...] = (),
-) -> int:
-    """Small-file compaction — the maintenance job every streaming
-    parquet sink needs: micro-batches write one-file-per-trigger-per-
-    partition, and a month of 10 s triggers leaves millions of tiny
-    files whose open/footer costs dominate reads.  Rewrites the
-    dataset into ``ceil(bytes / target_file_mb)`` files (per the whole
-    dataset; partition columns are preserved in the layout when
-    given), via the shared crash-safe staging+rename discipline
-    (``fsutil.swap_with_staging``: heal-any-suffix, debris cleanup,
-    write to staging, two renames).  Returns the new file count.
-
-    Scale notes: the rewrite is one shuffle-free coalesce when
-    shrinking file counts (coalesce narrows; repartition is only
-    needed to GROW parallelism, which compaction never does); sizing
-    comes from the filesystem, not a sample — and every filesystem
-    operation goes through the Hadoop FS API resolved from the path,
-    so the same call compacts a local, HDFS, or s3a dataset (the
-    os/shutil copy this replaced was local-only — r10 ADVICE)."""
-    import math
-
-    from . import fsutil
-
-    def _write(staging: str) -> None:
-        src_bytes = fsutil.dataset_bytes(spark, path)
-        n_files = max(1, math.ceil(src_bytes / (target_file_mb * 1024 * 1024)))
-        writer = spark.read.parquet(path).coalesce(n_files).write.mode("overwrite")
-        if partition_cols:
-            writer = writer.partitionBy(*partition_cols)
-        writer.parquet(staging)
-
-    fsutil.swap_with_staging(spark, path, _write, job="compact")
-    return fsutil.parquet_file_count(spark, path)
 
 
 def delete_user_data(
     spark: SparkSession, path: str, user_ids: "list[int]", user_col: str = "user_id"
 ) -> int:
     """Right-to-be-forgotten rewrite: remove every row belonging to
-    ``user_ids`` from a parquet dataset, via the same shared
-    staging+rename discipline as ``compact_parquet``
-    (``fsutil.swap_with_staging`` with the ``erase`` suffix pair).
-    Rows with a NULL ``user_col`` are PRESERVED — three-valued logic
-    would otherwise silently delete every anonymous row (the
-    silver_refine coalesce rule).  Returns the number of rows
-    removed.
+    ``user_ids`` from a parquet dataset, via the shared staging+rename
+    discipline (``fsutil.swap_with_staging`` with the ``erase`` suffix
+    pair).  Rows with a NULL ``user_col`` are PRESERVED — three-valued
+    logic would otherwise silently delete every anonymous row.  Returns
+    the number of rows removed.
 
     Scale notes: the anti-filter is a pushed-down IN over the id list
     (broadcast join it instead past ~thousands of ids); with the
     dataset partitioned/bucketed on ``user_col`` only the touched
     partitions need rewriting — this whole-dataset rewrite is the
     unpartitioned fallback.  Erasure must also cover derived sinks
-    (gold rollups, metrics stores) — compose per-layer calls."""
+    (rollups, metrics stores) — compose per-layer calls."""
     from . import fsutil
 
     counts: dict[str, int] = {}

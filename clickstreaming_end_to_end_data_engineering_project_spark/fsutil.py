@@ -1,9 +1,8 @@
 """The ONE copy of the crash-safe staging+rename swap discipline.
 
-Every offline maintenance job that rewrites a dataset in place —
-``etl.compact_parquet``, ``etl.delete_user_data``,
-``streaming.near_dedup.compact_band_store`` / ``compact_survivors`` —
-follows the same four-step discipline:
+Every job that rewrites a dataset in place — ``etl.delete_user_data``,
+``etl.merge_upsert`` and the ``operators.segstore`` verbs — follows the
+same four-step discipline:
 
 1. **heal** any prior crash: if the dataset path is missing and a
    backup directory from ANY job (``<path>.compact_old`` /
@@ -146,36 +145,6 @@ def swap_with_staging(spark, path: str, write_fn, job: str = "compact") -> None:
     invalidate_schema_cache(path)
 
 
-def dataset_bytes(spark, path: str) -> int:
-    """Total bytes under ``path`` via the filesystem (metadata-only,
-    no data scan) — the sizing input for file-count targets."""
-    _, fs, hpath = fs_for(spark, path)
-    return fs.getContentSummary(hpath).getLength()
-
-
-def parquet_file_count(spark, path: str) -> int:
-    """Number of ``*.parquet`` data files under ``path`` (recursive)."""
-    _, fs, hpath = fs_for(spark, path)
-    it = fs.listFiles(hpath, True)
-    n = 0
-    while it.hasNext():
-        if it.next().getPath().getName().endswith(".parquet"):
-            n += 1
-    return n
-
-
-def newest_mtime_ms(spark, path: str) -> int:
-    """Most recent modification time (epoch ms) of any file under
-    ``path`` — the liveness signal the terminal-only maintenance jobs
-    use to refuse runs that still look active.  0 for an empty dir."""
-    _, fs, hpath = fs_for(spark, path)
-    it = fs.listFiles(hpath, True)
-    newest = 0
-    while it.hasNext():
-        newest = max(newest, it.next().getModificationTime())
-    return newest
-
-
 # Characters Spark's ExternalCatalogUtils.escapePathName (inherited
 # from Hive's FileUtils) percent-encodes in partition directory names
 # on non-Windows platforms: ASCII control chars, DEL, and the shell/
@@ -231,26 +200,3 @@ def existing_batch_ids(spark, path: str) -> "list[int]":
                 # heal_segment_debris job owns cleaning it up)
                 continue
     return sorted(out)
-
-
-def read_or_none(spark, path: str, schema):
-    """Read the parquet dataset at ``path`` with ``schema``, or None
-    when ONLY the path is missing.  Any other read failure — corrupted
-    files, a mixed files+dirs layout — must raise, not silently report
-    an empty store (the r12 advisory rule, kept in this one copy so a
-    Spark error-string change is fixed once)."""
-    from pyspark.errors import AnalysisException
-
-    try:
-        return spark.read.schema(schema).parquet(path)
-    except AnalysisException as exc:
-        if "PATH_NOT_FOUND" in str(exc):
-            return None
-        raise
-
-
-def read_store_or_empty(spark, path: str, schema):
-    """Read a written summary/sketch store, a missing path as an empty
-    frame of ``schema`` (``read_or_none``'s rule)."""
-    found = read_or_none(spark, path, schema)
-    return spark.createDataFrame([], schema) if found is None else found

@@ -2,5 +2,5 @@
 
 Each module composes built-in ``pyspark.sql.functions`` (JVM-side,
 whole-stage-codegen friendly); Python/pandas UDFs appear only where the
-built-ins genuinely cannot express the semantics (see multimodal.py).
+built-ins genuinely cannot express the semantics (see groupedmap.py).
 """

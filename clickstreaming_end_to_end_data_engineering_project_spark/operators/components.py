@@ -125,7 +125,7 @@ def extend_dup_clusters(
     """Incremental cluster maintenance (r13 verdict #8): extend an
     existing ``dup_clusters`` labeling with NEW candidate pairs (an
     ingested increment's near-dup hits — new↔corpus and new↔new edges
-    from ``dedup_new_against_corpus``-style matching) WITHOUT
+    from the ``*_new_pairs`` joins) WITHOUT
     re-clustering the corpus.  Output is the full (doc_id, cluster_id,
     is_canonical) labeling over old ∪ new vertices, EQUAL to
     ``dup_clusters(old_pairs ∪ new_pairs)`` recomputed from scratch

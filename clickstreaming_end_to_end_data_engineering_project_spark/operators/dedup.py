@@ -634,7 +634,6 @@ def tf_cosine_pairs(
         tf_all.unpersist()
 
 
-
 def _tag_sides(
     name: str,
     corpus: "DataFrame | None",
@@ -1399,127 +1398,6 @@ def edit_distance_pairs(
         s.unpersist()
 
 
-def keep_first_per_fingerprint(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """Exact dedup: keep the smallest id per byte-identical text (md5
-    of the bytes) via groupBy+semi-join — map-side partial agg on the
-    16-byte fingerprint, no window over the corpus.  NULL texts are
-    never duplicates of anything (SQL equality semantics: md5(NULL) is
-    NULL, and NULL ≠ NULL), so they all pass through.  Shared by
-    ``curation.drop_exact_dups`` and ``dedup_new_against_corpus``."""
-    fp = df.select(F.col(id_col), F.md5(F.col(text_col).cast("binary")).alias("_fp"))
-    keep = (
-        fp.filter(F.col("_fp").isNotNull())
-        .groupBy("_fp")
-        .agg(F.min(id_col).alias(id_col))
-        .select(id_col)
-        .unionByName(fp.filter(F.col("_fp").isNull()).select(id_col))
-    )
-    return df.join(keep, id_col, "left_semi")
-
-
-def dedup_new_against_corpus(
-    new_docs: DataFrame,
-    corpus: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    threshold: float = 0.2,
-    max_doc_freq: int | None = 50,
-) -> DataFrame:
-    """Incremental-ingestion dedup: the production path for appending a
-    crawl increment to an existing corpus.  Returns the rows of
-    ``new_docs`` that survive BOTH gates:
-
-    1. exact — drop docs byte-identical to any corpus doc (md5
-       anti-join against the corpus fingerprint set) or to an earlier
-       doc in the same batch (keep min id per fingerprint);
-    2. near — drop docs whose word-``n``-gram Jaccard vs ANY corpus
-       doc ≥ ``threshold``, via an ASYMMETRIC inverted-index join
-       (new-batch index ⋈ corpus index on the shingle hash) — never a
-       corpus self-join, so the cost is |batch index| ⋈ |corpus
-       index|, linear in the corpus for a bounded batch.
-
-    ``max_doc_freq`` caps hot shingles by their CORPUS doc-frequency
-    (boilerplate lives in the corpus): shingles above the cap are
-    anti-joined out of both sides before the candidate join, same
-    skew-safety story as ``ngram_jaccard_pairs``.  Near-dups WITHIN
-    the new batch are out of scope here — run the batch through
-    ``ngram_jaccard_pairs``/clustering first if that matters; at
-    ingestion scale the corpus side dominates and this operator keeps
-    its plan to the asymmetric join only.
-
-    At 100 TB the corpus fingerprint set and shingle index are the
-    reusable artifacts: persist both as parquet once per corpus
-    version and hand them in here instead of ``corpus`` (the operator
-    only derives them when given raw text).  Within one call the two
-    capped indexes are cached — the corpus index feeds the hot-shingle
-    agg, the sizes agg and the candidate join, and re-deriving it per
-    consumer would re-tokenize the corpus three times (the same rule
-    ``ngram_jaccard_pairs`` documents); the loser id set is
-    materialized eagerly so no cache entry outlives the call."""
-    fp = F.md5(F.col(text_col).cast("binary"))
-    corpus_fps = corpus.select(fp.alias("_fp")).distinct()
-    batch_fp = new_docs.select(F.col(id_col), fp.alias("_fp"))
-    # vs-corpus: NULL fingerprints never equi-join, so NULL-text docs
-    # survive this anti-join; keep_first_per_fingerprint applies the
-    # matching NULL-is-never-a-dup rule within the batch
-    not_in_corpus = (
-        batch_fp.join(corpus_fps, "_fp", "left_anti").select(id_col)
-    )
-    exact_ok = keep_first_per_fingerprint(
-        new_docs.join(not_in_corpus, id_col, "left_semi"), id_col, text_col
-    )
-
-    # NULL texts are never near-dups of anything (matching the exact
-    # gate's NULL rule): excluded from BOTH indexes — otherwise the
-    # short-doc fallback shingle of a NULL (hash of '') would collide
-    # with empty/whitespace corpus docs and silently drop the batch doc
-    new_idx = _doc_shingles(
-        exact_ok.filter(F.col(text_col).isNotNull()), id_col, text_col, n
-    )
-    corp_idx = _doc_shingles(
-        corpus.filter(F.col(text_col).isNotNull()), id_col, text_col, n
-    )
-    if max_doc_freq is not None:
-        hot = (
-            corp_idx.groupBy("shingle")
-            .agg(F.count(F.lit(1)).alias("_df"))
-            .filter(F.col("_df") > max_doc_freq)
-            .select("shingle")
-        )
-        new_idx = new_idx.join(F.broadcast(hot), "shingle", "left_anti")
-        corp_idx = corp_idx.join(F.broadcast(hot), "shingle", "left_anti")
-    new_idx = new_idx.persist()
-    corp_idx = corp_idx.persist()
-    try:
-        new_sizes = new_idx.groupBy("_id").agg(F.count(F.lit(1)).alias("_n_new"))
-        corp_sizes = corp_idx.groupBy("_id").agg(F.count(F.lit(1)).alias("_n_corp"))
-        inter = (
-            new_idx.alias("a")
-            .join(corp_idx.alias("b"), F.col("a.shingle") == F.col("b.shingle"))
-            .groupBy(F.col("a._id").alias("_new_id"), F.col("b._id").alias("_corp_id"))
-            .agg(F.count(F.lit(1)).alias("_inter"))
-        )
-        near_losers = (
-            inter.join(new_sizes.withColumnRenamed("_id", "_new_id"), "_new_id")
-            .join(corp_sizes.withColumnRenamed("_id", "_corp_id"), "_corp_id")
-            .withColumn(
-                "_jaccard",
-                F.col("_inter") / (F.col("_n_new") + F.col("_n_corp") - F.col("_inter")),
-            )
-            .filter(F.col("_jaccard") >= threshold)
-            .select(F.col("_new_id").alias(id_col))
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        new_idx.unpersist()
-        corp_idx.unpersist()
-    return exact_ok.join(near_losers, id_col, "left_anti")
-
-
 def ngram_contamination(
     train: DataFrame,
     eval_df: DataFrame,
@@ -1582,11 +1460,8 @@ def minhash_bands(
     bands: int = 8,
 ) -> DataFrame:
     """LSH band keys per doc — (_id, signature, band, bucket), one row
-    per (doc, band), bucket = hash of the band's signature rows.  The
-    ONE copy of the banding expression, shared by the batch candidate
-    join (``minhash_lsh_candidates``) and the streaming near-dedup
-    stage (streaming/near_dedup.py), so band keys computed at ingest
-    time match keys computed in a batch sweep bit-for-bit."""
+    per (doc, band), bucket = hash of the band's signature rows (the
+    banding of ``minhash_lsh_candidates``)."""
     rows = k // bands
     sigs = minhash_signatures(df, id_col, text_col, n, k)
     return sigs.select(

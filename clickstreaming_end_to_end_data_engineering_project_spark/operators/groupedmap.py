@@ -1,5 +1,4 @@
-"""Grouped-map transforms via ``applyInPandas`` (stateless cousin of
-the stateful operator in streaming/stateful.py).
+"""Grouped-map transforms via ``applyInPandas``.
 
 Use case shape: per-group numeric transforms that need the WHOLE group
 in one pandas frame — normalization, per-group model scoring, rank

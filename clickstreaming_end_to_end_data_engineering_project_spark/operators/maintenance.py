@@ -14,20 +14,12 @@ restore it").
 appendable layouts (BM25 / LSH / IVF / PQ / IVFPQ — self-identified by
 their params sidecars, so there is no layout argument to get wrong),
 and it compacts IFF the segment count exceeds ``max_segments``.
-Compaction is a staged swap of the whole root, so the helper inherits
-the terminal-runs-only rule: never run it while an ingest stream is
-writing the index — and NOT from inside the stream's own foreachBatch
-either, even though batches run serially.  The reason is replay
-idempotence, not concurrency: the ingest sinks' exactly-once story is
-"a replayed batch id overwrites its own segment", but compaction
-FOLDS every segment into ``batch=0`` — if the stream crashes after an
-in-batch compaction but before the checkpoint commits that batch, the
-replay finds no segment under its own id, takes the append path, and
-the overlap check sees its rows already folded into ``batch=0``: the
-stream wedges permanently on the (correct!) duplicate-id error, and a
-layout without overlap validation would double-count instead.  Safe
-cadences: a scheduled job while the stream is stopped, or any moment
-the checkpoint is known to be committed past the newest segment.
+Compaction is a staged swap of the whole root that FOLDS every segment
+into ``batch=0``, so the helper inherits the terminal-runs-only rule:
+never run it while another job writes the index, nor between an append
+and an explicit same-id replay of it — the replay would find no segment
+under its own id, take the append path, and stop on the (correct!)
+duplicate-id error for rows already folded into ``batch=0``.
 
 No reference counterpart: the reference
 (salmansajidsattar/ClickStreaming_End_to_End_Data_Engineering_Project)
@@ -114,8 +106,6 @@ def forget_ids(
     awaited (no store is left mid-swap by an abandoned future — each
     either finished its swaps or never started them), then the first
     failure in input order is re-raised."""
-    from concurrent.futures import ThreadPoolExecutor
-
     # validate BEFORE the first delete verb runs: a duplicate or nested
     # target must fail with zero side effects, not after earlier stores
     # were already irreversibly erased.  Roots compare QUALIFIED: "p"
@@ -161,27 +151,8 @@ def forget_ids(
         removed = delete_user_data(spark, path, ids, user_col=id_col)
         return ("dataset", path), {"kind": "dataset", "rows_removed": removed}
 
-    def _drain(pool_jobs, runner) -> "list":
-        """Run jobs through a bounded pool; await EVERY future, then
-        re-raise the first failure in input order."""
-        if not pool_jobs:
-            return []
-        workers = min(3, len(pool_jobs))
-        with ThreadPoolExecutor(max_workers=workers) as pool:
-            futures = [pool.submit(runner, j) for j in pool_jobs]
-            results, first_err = [], None
-            for fut in futures:  # input order; await all before raising
-                try:
-                    results.append(fut.result())
-                except BaseException as exc:  # noqa: BLE001
-                    if first_err is None:
-                        first_err = exc
-            if first_err is not None:
-                raise first_err
-            return results
-
     report: "dict[tuple[str, str], dict]" = {}
-    report.update(_drain(index_jobs, _run_index))
+    report.update(segstore._run(spark, [lambda j=j: _run_index(j) for j in index_jobs]))
     # barrier: datasets start only after every index delete finished
-    report.update(_drain(list(datasets), _run_dataset))
+    report.update(segstore._run(spark, [lambda d=d: _run_dataset(d) for d in datasets]))
     return report

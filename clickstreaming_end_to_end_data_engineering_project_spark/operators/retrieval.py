@@ -341,14 +341,6 @@ def delete_from_bm25_index(
     return segstore.delete("bm25", spark, path, doc_ids, id_col)
 
 
-def compact_bm25_index(spark, path: str) -> None:
-    """Collapse a segmented BM25 index to one segment
-    (``segstore.compact``): postings move unchanged and the statistics
-    are recomputed from them, so probes are bit-identical before and
-    after."""
-    segstore.compact("bm25", spark, path)
-
-
 def rrf_fuse(
     rankings: list[DataFrame],
     id_col: str = "doc_id",
@@ -374,63 +366,3 @@ def rrf_fuse(
         .orderBy(F.col("rrf_score").desc(), F.col(id_col))
         .limit(k)
     )
-
-
-def hybrid_topk_indexed(
-    spark,
-    bm25_path: str,
-    ivf_path: str,
-    query_terms: list[str],
-    query_vec: "list[float]",
-    k: int = 10,
-    breadth: int = 20,
-    nprobe: int = 4,
-    exclude_vec_id: "int | None" = None,
-    k1: float = 1.2,
-    b: float = 0.75,
-    c: int = 60,
-    eligible_ids: "DataFrame | None" = None,
-) -> DataFrame:
-    """The SERVING shape of hybrid retrieval: both legs probe WRITTEN
-    indexes (BM25 bucket-pruned postings + IVF cluster-pruned
-    vectors), so a query touches |query-term buckets| + nprobe
-    cluster dirs and never the corpus.  At nprobe = n_clusters the
-    semantic leg is exhaustive and the fused output is pinned equal to
-    the in-memory ``hybrid_search_rrf`` composition (tests); at the
-    serving nprobe it trades the written-ANN family's measured recall
-    for the same I/O bound as every other indexed probe.
-
-    ``eligible_ids`` (r15, the r16 queue): an optional one-column
-    (doc-id-named) frame restricting BOTH legs before their per-leg
-    ranking — the filtered-search form (BM25 stats stay
-    collection-wide; the IVF leg semi-joins the pruned cluster scan).
-    The id column must carry the BM25 layout's doc-id name; the
-    semantic leg renames it to ``vec_id`` internally."""
-    from pyspark.sql import Window
-
-    from .similarity import _ivf_probe
-
-    lex = bm25_topk_indexed(
-        spark, bm25_path, query_terms, k=breadth, k1=k1, b=b,
-        eligible_ids=eligible_ids,
-    )
-    id_col = [c_ for c_ in lex.columns if c_ not in ("n_matched_terms", "bm25_score")][0]
-    lex_r = lex.select(
-        id_col,
-        F.row_number()
-        .over(Window.orderBy(F.col("bm25_score").desc(), F.col(id_col)))
-        .alias("rank"),
-    )
-    sem = _ivf_probe(
-        "ivf_topk_indexed" if eligible_ids is None else "ivf_topk_indexed_filtered",
-        spark, ivf_path, query_vec,
-        None if eligible_ids is None else eligible_ids.select(F.col(id_col).alias("vec_id")),
-        breadth, nprobe, exclude_vec_id, "vec_id", "embedding",
-    )
-    sem_r = sem.select(
-        F.col("vec_id").alias(id_col),
-        F.row_number()
-        .over(Window.orderBy(F.col("cos_sim").desc(), F.col("vec_id")))
-        .alias("rank"),
-    )
-    return rrf_fuse([lex_r, sem_r], id_col=id_col, k=k, c=c)

@@ -1,6 +1,6 @@
 """The segmented-store core of the five written-index layouts (BM25,
 LSH, IVF, PQ, IVFPQ): one build, append, delete and compaction path,
-the debris heal, the segment-count policy and the ingest sink.
+the debris heal and the segment-count policy.
 
 Every layout is a root directory holding
 
@@ -49,7 +49,7 @@ Crash orders (stated once; each verb heals by being re-run):
   retry replays the same batch id and ``mode("overwrite")`` replaces
   every slice.  A crash after it leaves a discoverable, validated
   segment: a default-id retry raises the duplicate-id error, and an
-  explicit same-id replay (the ingest sinks' exactly-once) heals.
+  explicit same-id replay heals.
 - **delete** rewrites each touched store segment first, then its stat
   slices, and its membership slice last.  Membership is where the
   delete discovers touched segments, so until the last swap the deleted
@@ -62,8 +62,8 @@ Crash orders (stated once; each verb heals by being re-run):
 Every rewrite of live data goes through ``fsutil.swap_with_staging``;
 a build over an existing root swaps the whole root, so a failed rebuild
 leaves the old index live.  Swap-based verbs are terminal-runs-only:
-never run them while an ingest stream writes the same index (see
-``operators/maintenance.py`` for why not even from its foreachBatch).
+never run them while another writer appends to the same index (see
+``operators/maintenance.py``).
 """
 
 from __future__ import annotations
@@ -530,17 +530,15 @@ def _writer(df: DataFrame, partition: "str | None" = None):
     return write
 
 
-def _run(spark, writes: "list[Callable[[], None]]") -> None:
-    """Run independent writes, overlapped in a small pool whose threads
-    keep the caller's job group; await all, then raise the first error."""
-    if len(writes) <= 1:
-        for w in writes:
-            w()
-        return
-    with ThreadPoolExecutor(max_workers=min(3, len(writes))) as pool:
-        futures = [pool.submit(inheritable_thread_target(spark)(w)) for w in writes]
-    for fut in futures:
-        fut.result()
+def _run(spark, jobs: "list[Callable[[], object]]") -> list:
+    """Run independent jobs, overlapped in a small pool whose threads
+    keep the caller's job group; await all, then raise the first error
+    in input order, or return the results in input order."""
+    if len(jobs) <= 1:
+        return [j() for j in jobs]
+    with ThreadPoolExecutor(max_workers=min(3, len(jobs))) as pool:
+        futures = [pool.submit(inheritable_thread_target(spark)(j)) for j in jobs]
+    return [fut.result() for fut in futures]
 
 
 def _segment(ctx: Index, root: str, batch_id: int, store: DataFrame, slices: "list[str]"):
@@ -571,8 +569,8 @@ def _untag(df: DataFrame, i: int) -> DataFrame:
     return df.filter(F.col("_ab") == i).drop("_ab", "_dims")
 
 
-def build(kind, path, store, id_col, params, trained=(), batch_id=0) -> None:
-    """Write ``store`` rows as segment ``batch_id`` of a fresh index at
+def build(kind, path, store, id_col, params, trained=()) -> None:
+    """Write ``store`` rows as segment 0 of a fresh index at
     ``path``, with the params row and ``trained`` (name, frame)
     sidecars.  An existing root is replaced through one staged swap."""
     lay, spark = LAYOUTS[kind], store.sparkSession
@@ -584,7 +582,7 @@ def build(kind, path, store, id_col, params, trained=(), batch_id=0) -> None:
     def write(root: str) -> None:
         for name, frame in flat:
             _writer(frame.coalesce(1))(os.path.join(root, name))
-        slices, store_write = _segment(ctx, root, batch_id, store, _slices(lay, spark, root, True))
+        slices, store_write = _segment(ctx, root, 0, store, _slices(lay, spark, root, True))
         _run(spark, slices)
         store_write()
 
@@ -600,7 +598,7 @@ def build(kind, path, store, id_col, params, trained=(), batch_id=0) -> None:
     ctx.record(held)
 
 
-def bootstrap(kind, df, path, params, id_col, col, batch_id=0) -> None:
+def bootstrap(kind, df, path, params, id_col, col) -> None:
     """``build`` for the untrained layouts (BM25, LSH): encode ``df``
     with the given geometry.  An input that encodes to nothing leaves
     no index (the empty-segment rule: a data-less segment breaks schema
@@ -612,7 +610,7 @@ def bootstrap(kind, df, path, params, id_col, col, batch_id=0) -> None:
         _, fs, hpath = fsutil.fs_for(spark, path)
         fs.delete(hpath, True)
         return
-    build(kind, path, _untag(store, 0), id_col, params, batch_id=batch_id)
+    build(kind, path, _untag(store, 0), id_col, params)
 
 
 def append(kind, path, increments, id_col, col, batch_id=None, verb=None) -> "list[dict]":
@@ -805,29 +803,3 @@ def maintain(spark, root: str, max_segments: int) -> "dict[str, object]":
         "segments_after": count(),
         "compacted": before > max_segments,
     }
-
-
-class IngestSink:
-    """foreachBatch callable: each micro-batch becomes one segment
-    under its own micro-batch id, so a replayed batch overwrites its
-    own segment (exactly-once at the file level).  Layouts constructed
-    with geometry (BM25, LSH) bootstrap the index from their first
-    batch, and also when the only segment is this batch's own and the
-    params sidecar is missing (a bootstrap that crashed before params
-    landed); trained layouts require an existing index."""
-
-    kind = ""
-
-    def __init__(self, index_dir: str, id_col: str, col: str, **params) -> None:
-        self.index_dir, self.id_col, self.col, self.params = index_dir, id_col, col, params
-
-    def __call__(self, batch: DataFrame, batch_id: int) -> None:
-        lay, spark = LAYOUTS[self.kind], batch.sparkSession
-        existing = fsutil.existing_batch_ids(spark, _store_root(lay, self.index_dir))
-        if self.params and (
-            not existing
-            or (existing == [batch_id] and not _exists(spark, os.path.join(self.index_dir, lay.params)))
-        ):
-            bootstrap(self.kind, batch, self.index_dir, self.params, self.id_col, self.col, batch_id)
-        else:
-            append(self.kind, self.index_dir, [batch], self.id_col, self.col, batch_id)

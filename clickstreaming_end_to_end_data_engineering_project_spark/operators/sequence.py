@@ -19,7 +19,7 @@ do not chain (ts is strictly increasing across steps; ties inside one
 step resolve by min() being instant-exact).  A NULL predicate or
 timestamp never matches: an event with a NULL ts takes no step and
 blocks none, so an entity whose step-1 events all lack a timestamp has
-no row (the streaming ``SequenceMatchSink`` keeps the same rule).
+no row.
 
 Absence semantics (STRICT, the nested-min-expressible form): with an
 absence predicate between steps k-1 and k, the match fails at step k

@@ -26,7 +26,6 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 DEFAULT_GAP = "30 minutes"
-_GAP_SECONDS = {"30 minutes": 1800}
 
 
 def sessionize(

@@ -120,64 +120,6 @@ def brute_force_topk_batch(
     )
 
 
-def ivf_topk_indexed_batch(
-    spark,
-    path: str,
-    queries: "list[tuple[int, list[float]]]",
-    k: int = 10,
-    nprobe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    predicate=None,
-) -> DataFrame:
-    """Batched probe of a ``write_ivf_index`` layout: rank the stored
-    centroids per query DRIVER-side (Q × n_clusters dot products over
-    driver-sized artifacts), then scan the UNION of all probed
-    ``cluster=`` dirs ONCE — the isin over that union is a partition
-    filter, so I/O is bounded by the distinct probed clusters, shared
-    across the whole batch.  Membership (which query probes which
-    cluster) is a broadcast (query, cluster) pair join, and per-query
-    top-k is WindowGroupLimit, exactly ``brute_force_topk_batch``'s
-    shuffle bound.  Per query, results are IDENTICAL to the
-    single-query ``ivf_topk_indexed`` at the same nprobe (pinned in
-    tests).
-
-    ``queries``: [(query_id, vector)] — the serving batch, driver-sized
-    by definition.  Output: (query_id, vec_id, cos_sim, rnk).
-
-    ``predicate`` (r15): a Column, SQL string, or one-column id frame
-    shared by the whole batch (the per-tenant batch-serving shape) —
-    evaluated on the unioned pruned scan BEFORE per-query ranking,
-    exactly ``ivf_topk_indexed_filtered``'s rule; per query, results
-    equal the single-query filtered probe at the same nprobe."""
-    idx = segstore.Index("ivf", spark, path, id_col)
-    cents = _centroids(idx, "_ivf_centroids")
-    dims = idx.params["dims"]
-    pairs = []
-    qrows = []
-    for qid, qv in queries:
-        if len(qv) != dims:
-            raise ValueError(
-                f"ivf_topk_indexed_batch: query {qid} has {len(qv)} dims, "
-                f"index expects {dims}"
-            )
-        qrows.append((int(qid), [float(x) for x in qv]))
-        pairs.extend((int(qid), c) for c in _nearest_clusters(cents, qv, nprobe))
-    rows = idx.scan(sorted({c for _, c in pairs}), predicate)
-    pair_df = local_rows_df(spark, pairs, "_qid bigint, cluster int")
-    q_df = local_rows_df(spark, qrows, "_qid bigint, _qvec array<double>")
-    sim = F.expr(vecexpr.cosine(vecexpr.ref(vec_col), "_qvec"))
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col(id_col))
-    return (
-        rows.join(F.broadcast(pair_df), "cluster")
-        .join(F.broadcast(q_df), "_qid")
-        .filter(F.col(id_col) != F.col("_qid"))
-        .select(F.col("_qid").alias("query_id"), F.col(id_col), sim.alias("cos_sim"))
-        .withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= k)
-    )
-
-
 def _nearest_clusters(cents: "list[tuple[int, list[float]]]", query_vec, nprobe: int) -> "list[int]":
     """The ``nprobe`` centroids nearest ``query_vec`` by cosine, ranked
     driver-side, ties to the lower cluster id; a zero vector scores 0.
@@ -662,18 +604,6 @@ def delete_from_ivfpq_index(
     ``write_ivfpq_index`` layout (``segstore.delete``); an exhaustive
     probe afterwards equals brute force over the survivors."""
     return segstore.delete("ivfpq", spark, path, vec_ids, id_col)
-
-
-def compact_lsh_index(spark, path: str) -> None:
-    """Collapse a segmented LSH index to one segment (``segstore.compact``);
-    probes are identical before and after."""
-    segstore.compact("lsh", spark, path)
-
-
-def compact_ivf_index(spark, path: str) -> None:
-    """Collapse a segmented IVF vector store to one segment
-    (``segstore.compact``); centroids are copied, never retrained."""
-    segstore.compact("ivf", spark, path)
 
 
 def append_ivf_index(
@@ -1362,58 +1292,20 @@ def ivfpq_topk_indexed(
     vector table.  Results are identical to ``ivfpq_topk`` over the
     same build (same ADC tables, same (l2_dist, id) ordering).  A
     query of the wrong dimensionality is rejected up front."""
-    return _adc_probe("ivfpq", "ivfpq_topk_indexed", spark, path, df, query_vec, None, k,
-                      shortlist, id_col, vec_col, nprobe)
+    return _adc_probe("ivfpq", spark, path, df, query_vec, k, shortlist, id_col, vec_col, nprobe)
 
 
-def ivfpq_topk_indexed_filtered(
-    spark,
-    path: str,
-    df: DataFrame,
-    query_vec: "list[float]",
-    predicate,
-    k: int = 10,
-    nprobe: int = 4,
-    shortlist: int = 200,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Metadata-filtered IVFADC probe (r14 verdict, missing #2): the
-    codes table stores no metadata (it is m bytes per vector by
-    design), so the predicate is evaluated on ``df`` — the
-    full-precision table that already serves the exact rerank — and
-    the probed clusters' codes are SEMI-JOINED against the matching
-    ids BEFORE the ADC shortlist is cut.  Filtering earlier keeps
-    every shortlist slot for a row that can actually be returned
-    (post-shortlist filtering burns slots on non-matching rows: at 10%
-    selectivity a 200-slot shortlist would carry ~20 usable
-    candidates); filtering after top-k would return <k rows outright.
-
-    At nprobe = n_clusters and shortlist ≥ the FILTERED corpus the
-    result is exact over the matching rows (pinned by test).  At
-    serving settings, oversample shortlist by ~1/selectivity relative
-    to the unfiltered configuration.  Output contract is
-    ``ivfpq_topk_indexed``'s: (id, l2_dist) ascending, id tiebreak."""
-    return _adc_probe("ivfpq", "ivfpq_topk_indexed_filtered", spark, path, df, query_vec,
-                      predicate, k, shortlist, id_col, vec_col, nprobe)
-
-
-def _adc_probe(kind, verb, spark, path, df, query_vec, predicate, k, shortlist, id_col, vec_col,
-               nprobe=None):
-    """The PQ and IVFPQ probe the four public names wrap: codebooks (and
+def _adc_probe(kind, spark, path, df, query_vec, k, shortlist, id_col, vec_col, nprobe=None):
+    """The PQ and IVFPQ probe both public names wrap: codebooks (and
     IVFPQ's coarse centroids) from the cached sidecars, the codes store
-    read with its known schema, and the exact rerank over ``df``.  The
-    codes carry no metadata, so ``predicate`` (``segstore.restrict``)
-    filters ``df`` and the codes are semi-joined to the matching ids
-    BEFORE the ADC shortlist is cut."""
-    idx = segstore.Index(kind, spark, path, id_col, verb=verb, query=query_vec)
+    read with its known schema, and the exact rerank over ``df``."""
+    idx = segstore.Index(kind, spark, path, id_col, verb=f"{kind}_topk_indexed", query=query_vec)
     books = _books(idx)
-    rows = segstore.restrict(df, predicate, id_col)
-    codes = idx.scan(predicate=None if predicate is None else rows.select(F.col(id_col)))
+    codes = idx.scan()
     if kind == "pq":
-        return pq_topk_rerank(rows, codes, books, query_vec, k=k, shortlist=shortlist,
+        return pq_topk_rerank(df, codes, books, query_vec, k=k, shortlist=shortlist,
                               id_col=id_col, vec_col=vec_col)
-    return ivfpq_topk(rows, codes, _centroids(idx, "_ivfpq_centroids"), books, query_vec, k=k,
+    return ivfpq_topk(df, codes, _centroids(idx, "_ivfpq_centroids"), books, query_vec, k=k,
                       nprobe=nprobe, shortlist=shortlist, id_col=id_col, vec_col=vec_col)
 
 
@@ -1433,12 +1325,6 @@ def append_ivfpq_index(
     semantics, overlap check (the codes table) and write order:
     ``segstore.append``."""
     return segstore.append("ivfpq", path, [new_vecs], id_col, vec_col, batch_id)[0]
-
-
-def compact_ivfpq_index(spark, path: str) -> None:
-    """Collapse a segmented IVFPQ codes table to one segment
-    (``segstore.compact``); centroids and codebooks are copied."""
-    segstore.compact("ivfpq", spark, path)
 
 
 def write_pq_index(
@@ -1522,32 +1408,7 @@ def pq_topk_indexed(
     dimensionality is rejected rather than silently mis-sliced.
     Results are identical to ``pq_topk_rerank`` with the same
     codebooks (same ADC table, same (l2_dist, id) ordering)."""
-    return _adc_probe("pq", "pq_topk_indexed", spark, path, df, query_vec, None, k, shortlist,
-                      id_col, vec_col)
-
-
-def pq_topk_indexed_filtered(
-    spark,
-    path: str,
-    df: DataFrame,
-    query_vec: "list[float]",
-    predicate,
-    k: int = 10,
-    shortlist: int = 100,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Metadata-filtered PQ probe — the plain-PQ member of the r15
-    filtered-ANN family (``ivfpq_topk_indexed_filtered``'s discipline
-    without the coarse quantizer): codes carry no metadata, so the
-    predicate (Column, SQL string, or one-column id frame) is
-    evaluated on ``df`` and the codes table is SEMI-JOINED against the
-    matching ids BEFORE the ADC shortlist is cut — every shortlist
-    slot goes to a returnable row.  With shortlist ≥ the filtered
-    corpus the result is exact over the matching rows (pinned); at
-    serving shortlist, oversample by ~1/selectivity."""
-    return _adc_probe("pq", "pq_topk_indexed_filtered", spark, path, df, query_vec, predicate, k,
-                      shortlist, id_col, vec_col)
+    return _adc_probe("pq", spark, path, df, query_vec, k, shortlist, id_col, vec_col)
 
 
 def append_pq_index(
@@ -1563,12 +1424,6 @@ def append_pq_index(
     semantics, overlap check (the codes table) and write order:
     ``segstore.append``."""
     return segstore.append("pq", path, [new_vecs], id_col, vec_col, batch_id)[0]
-
-
-def compact_pq_index(spark, path: str) -> None:
-    """Collapse a segmented PQ codes table to one segment
-    (``segstore.compact``); codebooks are copied."""
-    segstore.compact("pq", spark, path)
 
 
 def anchor_pq_codebooks(

@@ -182,9 +182,8 @@ def heavy_hitters(
     only the pass-1 summary, not the input).  A nondeterministic source
     (``sample()`` without a seed, ``rand()``-derived columns, a file
     listing mutating mid-job) can make the recount disagree with N and
-    silently void the exactness guarantee — the same same-stream
-    requirement streaming/hh_ingest.py documents for its micro-batches.
-    Persist or checkpoint such inputs before calling."""
+    silently void the exactness guarantee.  Persist or checkpoint such
+    inputs before calling."""
     import pandas as pd
 
     m = int(k)
@@ -272,11 +271,8 @@ def windowed_heavy_hitters(
     NULL items are excluded from both N_w and candidacy; rows with
     NULL timestamps carry no window and are excluded with them.
     Output: (window_start, <item_col>, freq) —
-    partitioning-independent, pinned in tests, and pinned equal to
-    the streaming ingest twin
-    (streaming/hh_ingest.WindowedHeavyHitterSink) through a real
-    file-stream.  Shares the determinism contract of
-    ``heavy_hitters``: the input lineage is evaluated twice."""
+    partitioning-independent, pinned in tests.  Shares the determinism
+    contract of ``heavy_hitters``: the input lineage is evaluated twice."""
     import pandas as pd
 
     m = int(k)

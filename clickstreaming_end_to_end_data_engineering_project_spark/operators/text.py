@@ -203,8 +203,8 @@ def length_quantiles_approx(
 
 def quality_score_col(text_col: str = "text", toks: Column | None = None) -> Column:
     """quality_score as a pure COLUMN over the text — composable into a
-    projection with zero joins (what curation.score_and_filter uses:
-    attaching per-doc features must never shuffle the corpus).
+    projection with zero joins (attaching per-doc features must never
+    shuffle the corpus).
 
     ``toks``: pass an ALREADY-MATERIALIZED token-array column (an
     attribute from a prior projection, not a fresh ``tokens()``
@@ -552,11 +552,9 @@ def dup_islands(
     (_id, _ntok, _start, _end), one row per maximal covered run of
     tokens.  This is the shared substrate of ``dup_span_stats`` (the
     signal: sums coverage) and ``trim_dup_spans`` (the action:
-    anti-joins token positions): compute it ONCE and pass it to both
-    via their ``islands=`` parameter and the expensive gram index
-    materializes once instead of twice.  Merged intervals also keep
-    the trim join O(tokens × islands) per doc instead of
-    O(tokens × gram positions) on boilerplate-heavy docs.
+    anti-joins token positions).  Merged intervals keep the trim join
+    O(tokens × islands) per doc instead of O(tokens × gram positions)
+    on boilerplate-heavy docs.
 
     The returned frame is EAGERLY MATERIALIZED via localCheckpoint —
     the gram index persist below must not outlive this call, and the
@@ -611,7 +609,6 @@ def trim_dup_spans(
     text_col: str = "text",
     n: int = 8,
     min_docs: int = 2,
-    islands: DataFrame | None = None,
 ) -> DataFrame:
     """The ACTION paired with ``dup_span_stats``'s signal: rewrite each
     document with every cross-document duplicated ``n``-gram span
@@ -627,20 +624,15 @@ def trim_dup_spans(
     Scale shape: token positions anti-join the span intervals per
     document (equi on doc id + range predicate — never a cross-doc
     pair join), then one ordered re-assembly per doc via
-    sort-by-position array fold; all shuffles key on the doc id.
-
-    ``islands``: a precomputed ``dup_islands(df, ...)`` frame — pass
-    the same one to ``dup_span_stats`` to pay for the gram index once
-    when running the signal and the action together (the curation
-    story; see ``dup_span_signal_and_trim``)."""
+    sort-by-position array fold; all shuffles key on the doc id."""
     toks = tokens(text_col)
     base = df.select(
         F.col(id_col).alias("_id"),
         F.posexplode(toks).alias("_tpos", "_tok"),
     )
-    if islands is None:
-        islands = dup_islands(df, id_col, text_col, n, min_docs)
-    islands = islands.select(F.col("_id").alias("_sid"), "_start", "_end")
+    islands = dup_islands(df, id_col, text_col, n, min_docs).select(
+        F.col("_id").alias("_sid"), "_start", "_end"
+    )
     kept = base.join(
         islands,
         (F.col("_id") == F.col("_sid"))
@@ -674,7 +666,6 @@ def dup_span_stats(
     text_col: str = "text",
     n: int = 8,
     min_docs: int = 2,
-    islands: DataFrame | None = None,
 ) -> DataFrame:
     """Per-document duplicated-span coverage — the word-level
     approximation of exact-substring train-set dedup (Lee et al. 2021,
@@ -695,16 +686,10 @@ def dup_span_stats(
     pre-agg) is a gram-keyed semi-joinable frame, NOT a collect; the
     interval union is gaps-and-islands over a per-document window —
     partitions bounded by document length, embarrassingly parallel
-    across docs, no global sort.  No pair joins anywhere.
-
-    ``islands``: a precomputed ``dup_islands(df, ...)`` frame — pass
-    the same one to ``trim_dup_spans`` to pay for the gram index once
-    when running the signal and the action together."""
+    across docs, no global sort.  No pair joins anywhere."""
     from ..functions import dround
 
-    if islands is None:
-        islands = dup_islands(df, id_col, text_col, n, min_docs)
-    per_island = islands.select(
+    per_island = dup_islands(df, id_col, text_col, n, min_docs).select(
         "_id", "_ntok", (F.col("_end") - F.col("_start") + 1).alias("_cov")
     )
     return (
@@ -778,26 +763,6 @@ def ngram_novelty(
                 F.col("novel_grams").cast("double") / F.col("n_grams").cast("double"), 6
             ).alias("novelty"),
         )
-    )
-
-
-def dup_span_signal_and_trim(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 8,
-    min_docs: int = 2,
-) -> "tuple[DataFrame, DataFrame]":
-    """The curation pairing: (``dup_span_stats`` signal,
-    ``trim_dup_spans`` action) computed off ONE shared
-    ``dup_islands`` materialization — the gram index (the expensive
-    leg: tokenize → posexplode → doc-freq agg → probe join) runs once
-    instead of once per output.  Outputs are identical to calling the
-    two functions standalone (pinned by test)."""
-    isl = dup_islands(df, id_col, text_col, n, min_docs)
-    return (
-        dup_span_stats(df, id_col, text_col, n, min_docs, islands=isl),
-        trim_dup_spans(df, id_col, text_col, n, min_docs, islands=isl),
     )
 
 

@@ -125,9 +125,7 @@ def hourly_page_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     operators/sketches.windowed_heavy_hitters (per-window Misra-Gries
     screen with O(k·windows) state per task, then an exact recount of
     surviving (window, page) candidates; the oracle states the plain
-    per-window groupBy + HAVING, integer threshold so engine-exact).
-    The streaming twin (streaming/hh_ingest.WindowedHeavyHitterSink)
-    is pinned bit-equal through a real file-stream in tests."""
+    per-window groupBy + HAVING, integer threshold so engine-exact)."""
     from ..operators.sketches import windowed_heavy_hitters
 
     pages = _events(spark, sf_dir).select(
@@ -146,8 +144,7 @@ def sliding_page_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     key on (window, page), so every per-window guarantee carries over
     verbatim).  The oracle expands each event to its 4 epoch-aligned
     window starts via generate_series — integer threshold, engine-
-    exact.  The streaming twin (hh_ingest.WindowedHeavyHitterSink with
-    slide) is pinned bit-equal through a real file-stream in tests."""
+    exact."""
     from ..operators.sketches import windowed_heavy_hitters
 
     pages = _events(spark, sf_dir).select(
@@ -180,8 +177,7 @@ def json_props_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def daily_event_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Daily per-type serving aggregate (the ETL gold layer's daily
-    table as a registry query — etl.py gold_publish)."""
+    """Daily per-type serving aggregate (event_date × event_type)."""
     ev = _events(spark, sf_dir)
     return (
         # midnight TIMESTAMP, not DATE (driver-gate dtype discipline)

@@ -268,9 +268,7 @@ def user_page_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
     [valid_from, valid_to) intervals — one row per RUN of consecutive
     visits to the same page, open interval (NULL valid_to) for the
     current version.  The warehouse shape that answers "what was X at
-    time t" with a plain key+interval join; the as-of compose against
-    purchases is pinned equal to the direct last-value-window as-of in
-    tests (operators/scd.asof_join_scd2).  Two per-user windows, no
+    time t" with a plain key+interval join.  Two per-user windows, no
     global sort — see operators/scd.scd2_from_changelog."""
     ev = load(spark, sf_dir, "events")
     pg = _page_events(ev)

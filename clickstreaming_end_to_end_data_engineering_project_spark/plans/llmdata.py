@@ -284,9 +284,7 @@ def hybrid_search_rrf_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     filtered-query semantics (collection-wide N/avgdl/df — an eligible
     doc scores identically with and without the filter; only the
     ranking pool shrinks, via a semi-join BEFORE the top-k), and the
-    semantic leg reuses the embedding_topk_doc_filtered shape.  The
-    serving twin is ``hybrid_topk_indexed(eligible_ids=...)``, pinned
-    equal at exhaustive nprobe in tests."""
+    semantic leg reuses the embedding_topk_doc_filtered shape."""
     from pyspark.sql import Window
 
     docs = _docs(spark, sf_dir)
@@ -1302,8 +1300,7 @@ def lang_confusion_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     label (token array materialized once — quality_score_col's sharing
     note), then the tiny (lang, predicted_lang) agg.  The r9 version
     joined lang_id_heuristic back on doc_id — two corpus-wide
-    exchanges for a per-row feature, exactly what curation.
-    score_and_filter's no-join rule forbids."""
+    exchanges for a per-row feature."""
     return (
         _docs(spark, sf_dir)
         .select("lang", text.tokens("text").alias("_toks"))
@@ -1351,10 +1348,8 @@ def cross_source_dup_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
 def curation_funnel_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Survivor counts per curation stage (input → quality ≥ 0.75 →
     predicted-lang en → exact dedup) in ONE pass: conditional sums plus
-    a distinct-fingerprint count, unpivoted with stack().  The
-    pipeline-observability twin of ``curation.curate_corpus`` (whose
-    near-dup and write stages are e2e-tested in test_curation): at
-    100 TB you run THIS to size each stage before paying for the run.
+    a distinct-fingerprint count, unpivoted with stack(): at 100 TB you
+    run THIS to size each curation stage before paying for the run.
 
     The token array is materialized ONCE and shared by the quality and
     lang expressions (r9: 1.55× — tokens() is codegen-excluded, so its

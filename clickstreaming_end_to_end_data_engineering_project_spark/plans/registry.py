@@ -169,9 +169,7 @@ class QuerySpec:
 # doubly-verified rows per the standing policy.
 # r14 rotation queue (added in r12 after the r13 trio):
 # embedding_topk_batch (plans/llmdata.py: batched exact ANN — one
-# corpus pass serves 5 queries via WindowGroupLimit per-query top-k;
-# its written-index twin ivf_topk_indexed_batch is pinned
-# per-query-bit-equal to the single-query probe in tests) and
+# corpus pass serves 5 queries via WindowGroupLimit per-query top-k) and
 # user_inter_event_gap_quantiles (plans/funnel.py: per-user
 # inter-event gap distribution — the sessionization-timeout input).
 # Both oracle-backed, locally green at sf0.001/sf0.01.
@@ -284,9 +282,7 @@ class QuerySpec:
 # filtered-query semantics (collection-wide stats, eligibility
 # semi-join BEFORE the top-k; operators/retrieval.bm25_topk(eligible=)
 # + bm25_topk_indexed(eligible_ids=)) fused with English-filtered
-# cosine top-20 by RRF; serving twin
-# hybrid_topk_indexed(eligible_ids=...) pinned equal at exhaustive
-# nprobe) and doc_decontaminated_corpus (plans/llmdata.py: the
+# cosine top-20 by RRF) and doc_decontaminated_corpus (plans/llmdata.py: the
 # eval-set decontamination ACTION — the SURVIVING train corpus after
 # dropping docs whose TEST-vocab 8-gram overlap exceeds 0.5; 8-grams
 # not trigrams because short-shingle vocabularies saturate as the
@@ -324,16 +320,14 @@ class QuerySpec:
 #     PPJoin filters, all float bounds rounded lossless-ward);
 #   bigram_heavy_hitters (operators/sketches.heavy_hitters:
 #     Misra-Gries candidate screen + exact recount, integer threshold
-#     freq*k > N; streaming twin streaming/hh_ingest.py pinned
-#     bit-equal through a real file-stream);
+#     freq*k > N);
 #   part_price_size_skyline (operators/skyline.skyline_2d: grid-pruned
 #     two-phase Pareto frontier, same-bucket-only residual anti-join);
 #   page_triangle_stats (operators/components.triangle_stats:
 #     degree-ordered oriented wedge join — triangles/wedges/global
 #     clustering, all-integer until one final division);
 #   user_page_scd2 (operators/scd.scd2_from_changelog: SCD Type-2
-#     dimension build, two windows on one exchange; asof_join_scd2
-#     compose pinned equal to the direct window as-of).
+#     dimension build, two windows on one exchange).
 # Rotate in at r16+ as slots free up, demoting doubly-verified rows
 # per the standing policy.
 # Round-16 rotation (executed): the r15 verdict #1 directive — the
@@ -387,9 +381,7 @@ class QuerySpec:
 #     differential + grid invariance pinned);
 #   hourly_page_heavy_hitters (operators/sketches.
 #     windowed_heavy_hitters: exact per-tumbling-window heavy hitters,
-#     per-window MG screen + recount — r15 verdict directive #7;
-#     streaming twin hh_ingest.WindowedHeavyHitterSink pinned
-#     bit-equal through a real file-stream);
+#     per-window MG screen + recount — r15 verdict directive #7);
 #   doc_tf_cosine_dups (operators/dedup.tf_cosine_pairs: weighted
 #     cosine similarity join over term-frequency vectors, NEW family —
 #     integer dot/norm accumulation makes the float output bit-exact
@@ -461,9 +453,7 @@ class QuerySpec:
 #   purchase_attribution_position (attribution.multi_touch_attribution:
 #     position-based / linear / time-decay credit — r17 verdict #4;
 #     micro-unit integer credit snapping makes the weighted revenue
-#     sum order-independent and engine-exact; streaming twin
-#     streaming/attribution.MultiTouchAttributionSink pinned bit-equal
-#     over chronological micro-batches);
+#     sum order-independent and engine-exact);
 #   coverage_order_overlap_join (rangejoin.interval_overlap_join:
 #     binned interval×interval overlap with the canonical meeting-bin
 #     dedup rule (credit the pair to max(start_bins) — exactly-once,

@@ -38,8 +38,8 @@ def get_spark(app_name: str = "clickstream-engine", cpus: str | None = None) -> 
         # write timestamps as TIMESTAMP_MICROS, not legacy INT96: INT96
         # columns carry NO parquet min/max statistics, which silently
         # disables row-group/file skipping on event time — the single
-        # most valuable pruning axis for an events table (caught in r9
-        # by the z-order ts-stats test: 0 of 16 files had ts stats)
+        # most valuable pruning axis for an events table (found in r9:
+        # 0 of 16 written files had ts stats)
         .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
         .config("spark.sql.shuffle.partitions", str(int(cpus)))
         .config("spark.sql.adaptive.enabled", "true")

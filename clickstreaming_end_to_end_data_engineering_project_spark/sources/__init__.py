@@ -1,1 +1,1 @@
-from .tables import load, load_all  # noqa: F401
+from .tables import load  # noqa: F401

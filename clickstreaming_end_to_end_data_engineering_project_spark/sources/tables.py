@@ -16,8 +16,6 @@ from pyspark.sql import functions as F
 from ..schema import TABLE_NAMES
 from ..session import ensure_session_defaults
 
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 # Catalog-style schema cache: (abspath(sf_dir), table) → raw read
 # schema.  ``spark.read.parquet`` pays ~85 ms of JVM file-listing +
 # footer schema inference PER CALL even for a 5-row dim table (measured
@@ -33,15 +31,10 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 # at the same local path is picked up automatically; rewrite jobs that
 # go through ``fsutil.swap_with_staging`` additionally invalidate
 # explicitly (covers remote filesystems where stat is unavailable and
-# the signature is None).  ``clear_schema_cache()`` stays as the manual
-# big hammer.  Nanos-layout tables (the guarded fallback below) are
+# the signature is None).  Nanos-layout tables (the guarded fallback below) are
 # never cached — their load path rewrites columns and must re-inspect
 # the footer each time.
 _SCHEMA_CACHE: dict = {}
-
-
-def clear_schema_cache() -> None:
-    _SCHEMA_CACHE.clear()
 
 
 def invalidate_schema_cache(path: str) -> None:
@@ -180,13 +173,9 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return normalize_ntz(df)
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load(spark, sf_dir, name) for name in TABLE_NAMES}
-
-
 def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every table as a temp view so ``spark.sql`` works —
     the engine's raw-SQL read surface (reference: arbitrary SELECT via
     storage/postgres_connector.py:44-55)."""
-    for name, df in load_all(spark, sf_dir).items():
-        df.createOrReplaceTempView(name)
+    for name in TABLE_NAMES:
+        load(spark, sf_dir, name).createOrReplaceTempView(name)

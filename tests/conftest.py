@@ -1,6 +1,5 @@
 from __future__ import annotations
 
-import gc
 import os
 import sys
 import time
@@ -9,6 +8,7 @@ from contextlib import contextmanager
 from types import SimpleNamespace
 
 import pytest
+from py4j import protocol as py4j_protocol
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -91,26 +91,22 @@ def count_jobs(spark, action) -> int:
 
 
 def count_py4j(spark, action) -> int:
-    """py4j gateway commands ``action()`` sends.  Python's ``gc`` is off
-    while counting: collected JVM proxies send release commands at
-    whatever moment the collector runs."""
+    """py4j gateway commands ``action()`` sends, not counting memory
+    release commands: freed JVM proxies send those whenever Python
+    drops them, often in a batch during a later, unrelated action."""
     client = spark.sparkContext._gateway._gateway_client
     send, sent = client.send_command, [0]
 
-    def counted(*args, **kwargs):
-        sent[0] += 1
-        return send(*args, **kwargs)
+    def counted(command, *args, **kwargs):
+        if not command.startswith(py4j_protocol.MEMORY_COMMAND_NAME):
+            sent[0] += 1
+        return send(command, *args, **kwargs)
 
-    enabled = gc.isenabled()
-    gc.collect()
-    gc.disable()
     client.send_command = counted
     try:
         action()
     finally:
         del client.send_command
-        if enabled:
-            gc.enable()
     return sent[0]
 
 

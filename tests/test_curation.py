@@ -1,190 +1,8 @@
-"""End-to-end corpus-curation pipeline tests (score → filter → dedup →
-split → write)."""
+"""Corpus intake validation report tests."""
 
 from __future__ import annotations
 
-import io
-from contextlib import redirect_stdout
-
 from pyspark.sql import functions as F
-
-from clickstreaming_end_to_end_data_engineering_project_spark.curation import (
-    curate_corpus,
-    drop_exact_dups,
-    drop_near_dups,
-)
-
-
-def test_curation_end_to_end(spark, sf_dir, tmp_path):
-    out = str(tmp_path / "curated")
-    res = curate_corpus(spark, sf_dir, out, min_quality=0.75, langs=("en",))
-
-    # each stage only removes rows, never invents them
-    assert res.input_docs >= res.after_filter >= res.after_exact_dedup >= res.after_near_dedup
-    assert res.after_filter > 0
-    assert res.after_near_dedup == res.train_docs + res.test_docs
-    assert res.train_docs > 0 and res.test_docs > 0
-
-    curated = spark.read.parquet(f"{out}/corpus")
-    # every surviving doc passed the gates
-    assert curated.filter(F.col("quality_score") < 0.75).count() == 0
-    assert curated.filter(F.col("predicted_lang") != "en").count() == 0
-    # no byte-identical texts survive
-    assert curated.groupBy(F.md5(F.col("text").cast("binary"))).count().filter("count > 1").count() == 0
-
-    # split-partitioned layout prunes on the split predicate
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        curated.filter(F.col("split") == "train").explain("formatted")
-    assert "PartitionFilters" in buf.getvalue()
-
-    # deterministic: rerun produces identical counts
-    res2 = curate_corpus(spark, sf_dir, out, min_quality=0.75, langs=("en",))
-    assert res2 == res
-
-
-def test_curation_dedup_stages_on_synthetic_dups(spark):
-    rows = [
-        (1, "the quick brown fox jumps over the lazy dog again and again"),
-        (2, "the quick brown fox jumps over the lazy dog again and again"),  # exact dup of 1
-        (3, "the quick brown fox jumps over the lazy dog again and again today"),  # near dup
-        (4, "an entirely distinct document about completely different topics and words"),
-    ]
-    df = spark.createDataFrame(rows, ["doc_id", "text"])
-    exact = drop_exact_dups(df)
-    assert {r["doc_id"] for r in exact.collect()} == {1, 3, 4}
-    deduped = drop_near_dups(exact, threshold=0.2)
-    assert {r["doc_id"] for r in deduped.collect()} == {1, 4}
-    # the sub-quadratic MinHash path finds the same clusters here
-    via_minhash = drop_near_dups(exact, threshold=0.2, method="minhash")
-    assert {r["doc_id"] for r in via_minhash.collect()} == {1, 4}
-
-
-def test_curation_trim_stage_excises_boilerplate_spans(spark, sf_dir, tmp_path):
-    """trim_span_n wires the span-excision ACTION into the pipeline:
-    the written corpus must contain no cross-document duplicated
-    n-gram span, keep n_chars consistent with the rewritten text, and
-    drop docs trimmed to nothing — while the untrimmed run over the
-    same input keeps its counts."""
-    from clickstreaming_end_to_end_data_engineering_project_spark.operators import (
-        text as t,
-    )
-
-    out = str(tmp_path / "trimmed")
-    res = curate_corpus(
-        spark, sf_dir, out, min_quality=0.75, langs=("en",), trim_span_n=8
-    )
-    curated = spark.read.parquet(f"{out}/corpus")
-    n_written = curated.count()
-    assert n_written == res.after_near_dedup == res.train_docs + res.test_docs
-    # no duplicated 8-gram span survives in the written corpus
-    assert t.dup_span_stats(curated, n=8, min_docs=2).isEmpty()
-    # n_chars tracks the rewritten text
-    assert curated.filter(F.col("n_chars") != F.length("text")).count() == 0
-    # nothing empty survives
-    assert curated.filter(F.length("text") == 0).count() == 0
-    # trimming can only keep or shrink the survivor set vs untrimmed
-    res_plain = curate_corpus(
-        spark, sf_dir, str(tmp_path / "plain"), min_quality=0.75, langs=("en",)
-    )
-    assert res.after_near_dedup <= res_plain.after_near_dedup
-
-
-def test_curation_scrubs_pii_from_written_corpus(spark, sf_dir, tmp_path):
-    """The scrub stage redacts PII from the WRITTEN corpus (a synthetic
-    sf_dir whose documents carry emails/phones), and scrub=False
-    bypasses it — with identical split membership either way (split
-    hashes doc_id, not text)."""
-    import shutil
-
-    from clickstreaming_end_to_end_data_engineering_project_spark.operators.pii import (
-        pii_audit,
-    )
-
-    # synthetic sf_dir: the driver corpus is digit-free, so seed PII
-    # into copies of real docs to keep quality/lang gates passable
-    syn = str(tmp_path / "sfpii")
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(40)
-    seeded = docs.withColumn(
-        "text", F.concat(F.col("text"), F.lit(" contact bob@example.com or 415-555-2671"))
-    )
-    seeded.write.mode("overwrite").parquet(f"{syn}/documents.parquet")
-
-    out = str(tmp_path / "curated_pii")
-    res = curate_corpus(spark, syn, out, min_quality=0.0, langs=None)
-    assert res.train_docs + res.test_docs > 0
-    written = spark.read.parquet(f"{out}/corpus")
-    audit = pii_audit(written).collect()[0].asDict()
-    assert all(v == 0 for v in audit.values()), f"PII survived curation: {audit}"
-    assert written.filter(F.col("text").contains("|||EMAIL|||")).count() == written.count()
-
-    shutil.rmtree(out, ignore_errors=True)
-    res_raw = curate_corpus(spark, syn, out, min_quality=0.0, langs=None, scrub=False)
-    raw = spark.read.parquet(f"{out}/corpus")
-    assert raw.filter(F.col("text").contains("bob@example.com")).count() == raw.count()
-    assert (res_raw.train_docs, res_raw.test_docs) == (res.train_docs, res.test_docs)
-
-
-def test_curation_nchars_tracks_scrubbed_text(spark, sf_dir, tmp_path):
-    """n_chars must track the FINAL written text when scrub rewrites
-    PII-carrying docs — with and without the trim stage.  The r9
-    advisory caught trim+scrub recomputing n_chars BEFORE the scrub
-    rewrite; the earlier test missed it because its survivors carried
-    no PII."""
-    syn = str(tmp_path / "sfpii2")
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(40)
-    seeded = docs.withColumn(
-        "text",
-        F.concat(F.col("text"), F.lit(" contact bob@example.com or 415-555-2671")),
-    ).withColumn("n_chars", F.length("text").cast("long"))
-    seeded.write.mode("overwrite").parquet(f"{syn}/documents.parquet")
-
-    for trim in (None, 8):
-        out = str(tmp_path / f"curated_nchars_{trim}")
-        res = curate_corpus(
-            spark, syn, out, min_quality=0.0, langs=None, trim_span_n=trim
-        )
-        assert res.train_docs + res.test_docs > 0
-        written = spark.read.parquet(f"{out}/corpus")
-        # every doc was rewritten by scrub, so a stale n_chars would
-        # mismatch on every row
-        assert written.filter(F.col("text").contains("|||EMAIL|||")).count() > 0
-        assert written.filter(F.col("n_chars") != F.length("text")).count() == 0
-
-
-def test_curation_perplexity_gate_drops_rare_token_noise(spark):
-    """The CCNet-style max_perplexity gate keeps docs made of common
-    corpus tokens and drops rare-token noise (every token unique to the
-    doc → minimal unigram probability → maximal perplexity)."""
-    from clickstreaming_end_to_end_data_engineering_project_spark.curation import (
-        score_and_filter,
-    )
-    from clickstreaming_end_to_end_data_engineering_project_spark.operators.text import (
-        unigram_logprob,
-    )
-
-    common = "the cat sat on the mat and the dog sat on the rug near the door"
-    rows = [(i, common) for i in range(9)]
-    rows.append((99, "zyx qwv jkl pqr stu vwx abc def ghi mno zzz yyy xxx www vvv uuu"))
-    df = spark.createDataFrame(rows, ["doc_id", "text"])
-
-    ppl = {r["doc_id"]: r["perplexity"] for r in unigram_logprob(df).collect()}
-    assert ppl[99] > ppl[0], "rare-token doc must score higher perplexity"
-
-    cap = (ppl[0] + ppl[99]) / 2
-    kept = score_and_filter(df, min_quality=0.0, max_perplexity=cap)
-    assert {r["doc_id"] for r in kept.collect()} == set(range(9))
-    # without the gate everything passes
-    assert score_and_filter(df, min_quality=0.0).count() == 10
-
-    # zero-token docs produce no unigram_logprob row; the gate must
-    # pass them through (anti-join shape), not silently drop them
-    with_empty = df.union(spark.createDataFrame([(50, ""), (51, "   ")], ["doc_id", "text"]))
-    kept_e = {
-        r["doc_id"]
-        for r in score_and_filter(with_empty, min_quality=0.0, max_perplexity=cap).collect()
-    }
-    assert {50, 51} <= kept_e, "unscorable docs must not be dropped by the perplexity cap"
 
 
 def test_validation_report_counts_planted_violations(spark):
@@ -218,25 +36,3 @@ def test_validation_report_counts_planted_violations(spark):
     assert got["total_rows"] == 9
     # distinct counts ignore the NULL id; 1 appears twice → 6 distinct
     assert got["distinct_ids"] == 7
-
-
-def test_validate_and_quarantine_splits_with_full_reasons(spark):
-    """Quarantined rows carry EVERY failed check (CSV), valid rows
-    carry none, and the two partitions tile the input."""
-    from clickstreaming_end_to_end_data_engineering_project_spark import curation
-
-    rows = [
-        (1, "good text here", "en", 14),
-        (2, None, "zz", 0),  # null_text + unknown_lang (+nchars can't eval on NULL)
-        (3, "abc", "xx", 9),  # nchars_mismatch + unknown_lang
-    ]
-    df = spark.createDataFrame(
-        rows, "doc_id long, text string, lang string, n_chars long"
-    )
-    valid, quarantined = curation.validate_and_quarantine(df)
-    assert [r.doc_id for r in valid.collect()] == [1]
-    bad = {r.doc_id: r.reasons for r in quarantined.collect()}
-    assert set(bad) == {2, 3}
-    assert "null_text" in bad[2] and "unknown_lang" in bad[2]
-    assert bad[3] == "nchars_mismatch,unknown_lang"
-    assert valid.count() + quarantined.count() == df.count()

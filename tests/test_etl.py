@@ -1,142 +1,8 @@
-"""Bronze→silver→gold batch ETL tests."""
+"""Batch dataset rewrites: right-to-be-forgotten deletion and MERGE upsert."""
 
 from __future__ import annotations
 
-import io
-from contextlib import redirect_stdout
-
 from pyspark.sql import functions as F
-
-from clickstreaming_end_to_end_data_engineering_project_spark.etl import run_events_etl
-from clickstreaming_end_to_end_data_engineering_project_spark.sources.tables import load
-
-
-def test_etl_end_to_end(spark, sf_dir, tmp_path):
-    out = str(tmp_path / "lake")
-    res = run_events_etl(spark, sf_dir, out)
-    n = load(spark, sf_dir, "events").count()
-    assert res.bronze_rows == n
-    assert res.silver_rows == n  # testdata has no invalid rows or dupes
-    assert res.quarantined_rows == 0
-    assert res.gold_user_rows == load(spark, sf_dir, "events").select("user_id").distinct().count()
-
-    # gold daily stats agree with a direct aggregation of the source
-    daily = spark.read.parquet(f"{out}/gold/daily_stats")
-    direct = (
-        load(spark, sf_dir, "events")
-        .groupBy(F.to_date("ts").alias("event_date"), "event_type")
-        .agg(F.count(F.lit(1)).alias("event_cnt"))
-    )
-    got = {(r["event_date"], r["event_type"]): r["event_cnt"] for r in daily.collect()}
-    exp = {(r["event_date"], r["event_type"]): r["event_cnt"] for r in direct.collect()}
-    assert got == exp
-
-    # date-partitioned layers prune on date predicates
-    one_day = daily.filter(F.col("event_date") == "2024-01-05")
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        one_day.explain("formatted")
-    assert "PartitionFilters" in buf.getvalue()
-
-    # idempotent: re-running produces identical layer contents
-    res2 = run_events_etl(spark, sf_dir, out)
-    assert res2 == res
-
-
-def test_quarantine_survives_incremental_rerun(spark, tmp_path):
-    """The quarantine is date-partitioned with dynamic overwrite: a
-    rerun scoped to one date must rewrite only that date's quarantined
-    rows, never wiping other dates' history (the pre-fix behavior of a
-    plain overwrite)."""
-    from clickstreaming_end_to_end_data_engineering_project_spark.etl import (
-        read_quarantine,
-        silver_refine,
-    )
-
-    out = str(tmp_path / "lake")
-    rows = [
-        # (event_id, user_id, event_type, ts, value, props) — one valid
-        # and one invalid (negative value) row on each of two dates
-        ("e1", 1, "view", "2024-01-01 10:00:00", 1.0, '{"k":"a"}'),
-        ("e2", 2, "view", "2024-01-01 11:00:00", -5.0, '{"k":"b"}'),
-        ("e3", 3, "view", "2024-01-02 10:00:00", 2.0, '{"k":"c"}'),
-        ("e4", 4, "view", "2024-01-02 11:00:00", -7.0, '{"k":"d"}'),
-    ]
-    df = (
-        spark.createDataFrame(
-            rows, "event_id string, user_id bigint, event_type string, ts_s string, value double, props string"
-        )
-        .withColumn("ts", F.to_timestamp("ts_s"))
-        .drop("ts_s")
-        .withColumn("event_date", F.to_date("ts"))
-    )
-    # deliberately NO session-level partitionOverwriteMode: the
-    # incremental path must work through the per-write option alone
-    # (a session-level set would leak into every later partitioned
-    # overwrite in the shared session — the round-3 advice finding)
-    mode_before = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-    df.write.mode("overwrite").partitionBy("event_date").parquet(f"{out}/bronze/events")
-
-    silver_refine(spark, out)
-    q1 = {r["event_id"] for r in read_quarantine(spark, out).collect()}
-    assert q1 == {"e2", "e4"}
-
-    # incremental rerun scoped to 2024-01-02: day 1's quarantine survives
-    silver_refine(spark, out, event_date="2024-01-02")
-    q2 = {r["event_id"] for r in read_quarantine(spark, out).collect()}
-    assert q2 == {"e2", "e4"}
-    assert spark.conf.get("spark.sql.sources.partitionOverwriteMode") == mode_before
-
-    # and silver itself still holds both dates' valid rows
-    silver = spark.read.parquet(f"{out}/silver/events")
-    assert {r["event_id"] for r in silver.collect()} == {"e1", "e3"}
-
-
-def test_compact_parquet_shrinks_file_count(spark, tmp_path):
-    """Many tiny files → one (dataset ≪ target size); data identical
-    byte-for-byte (same rows); partition layout preserved when asked."""
-    import os
-
-    from clickstreaming_end_to_end_data_engineering_project_spark.etl import compact_parquet
-
-    path = str(tmp_path / "frag")
-    df = spark.range(0, 10_000).withColumn("k", F.col("id") % 7)
-    df.repartition(40).write.parquet(path)
-    n_before = sum(1 for f in os.listdir(path) if f.endswith(".parquet"))
-    assert n_before >= 30, "fixture must actually be fragmented"
-    expected = sorted(r.id for r in spark.read.parquet(path).collect())
-
-    n_after = compact_parquet(spark, path, target_file_mb=128)
-    assert n_after == 1
-    assert sorted(r.id for r in spark.read.parquet(path).collect()) == expected
-    assert not os.path.exists(path + ".compact_staging")
-    assert not os.path.exists(path + ".compact_old")
-
-    # partitioned layout: preserved through compaction, one file per
-    # partition directory afterwards
-    ppath = str(tmp_path / "part_frag")
-    df.repartition(20).write.partitionBy("k").parquet(ppath)
-    expected_k = sorted(
-        (r.id, r.k) for r in spark.read.parquet(ppath).collect()
-    )
-    compact_parquet(spark, ppath, target_file_mb=128, partition_cols=("k",))
-    got = spark.read.parquet(ppath)
-    assert sorted((r.id, r.k) for r in got.collect()) == expected_k
-    kdirs = [d for d in os.listdir(ppath) if d.startswith("k=")]
-    assert len(kdirs) == 7, "partition directories must survive compaction"
-
-    # crash recovery: a stale .compact_old must not wedge the next run
-    os.makedirs(path + ".compact_old/leftover", exist_ok=True)
-    assert compact_parquet(spark, path, target_file_mb=128) == 1
-
-    # crash recovery, rename window: died between the two renames —
-    # dataset stranded in .compact_old, path missing.  The rerun must
-    # restore it BEFORE sizing/reading (r10 review: without the heal,
-    # the walk sized 0 bytes and the read threw, data stranded)
-    os.rename(path, path + ".compact_old")
-    assert compact_parquet(spark, path, target_file_mb=128) == 1
-    assert sorted(r.id for r in spark.read.parquet(path).collect()) == expected
-    assert not os.path.exists(path + ".compact_old")
 
 
 def test_delete_user_data_removes_only_target_rows(spark, tmp_path):
@@ -171,18 +37,17 @@ def test_delete_user_data_removes_only_target_rows(spark, tmp_path):
     assert delete_user_data(spark, path, [2]) == 20
     assert spark.read.parquet(path).count() == 41
 
-    # cross-job heal: a crashed COMPACTION must not block a subsequent
-    # erasure on the same path (each job heals every known backup
-    # suffix), and vice versa
+    # cross-job heal: a crashed "compact"-suffix rewrite must not block
+    # a subsequent erasure on the same path (each job heals every known
+    # backup suffix), and vice versa
     os.rename(path, path + ".compact_old")
     assert delete_user_data(spark, path, [4]) == 20
     assert spark.read.parquet(path).count() == 21
-    from clickstreaming_end_to_end_data_engineering_project_spark.etl import (
-        compact_parquet,
-    )
+    from clickstreaming_end_to_end_data_engineering_project_spark.etl import merge_upsert
 
     os.rename(path, path + ".erase_old")
-    assert compact_parquet(spark, path, target_file_mb=128) == 1
+    anon = spark.createDataFrame([(1000, None, "anon2")], "event_id long, user_id long, t string")
+    assert merge_upsert(spark, path, anon, ["event_id"]) == {"inserted": 0, "updated": 1, "deleted": 0}
     assert spark.read.parquet(path).count() == 21
 
 

@@ -1,5 +1,5 @@
-"""Operator-level tests: differential sessionization, UDF surface,
-lang-id sanity, LSH recall vs brute force."""
+"""Operator-level tests: differential sessionization, lang-id sanity,
+LSH recall vs brute force."""
 
 from __future__ import annotations
 
@@ -10,7 +10,6 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from clickstreaming_end_to_end_data_engineering_project_spark.functions.udfs import register_udfs
 from clickstreaming_end_to_end_data_engineering_project_spark.operators.sessions import (
     sessionize,
     sessionize_via_lag,
@@ -44,64 +43,6 @@ def test_sessionize_equals_lag_formulation_random(spark):
     native = {tuple(r) for r in sessionize(df, "ts", "user_id").collect()}
     viasql = {tuple(r) for r in sessionize_via_lag(df, "ts", "user_id", 1800, "event_id").collect()}
     assert native == viasql
-
-
-def test_udf_registration_and_sql_call(spark, sf_dir):
-    register_udfs(spark)
-    load(spark, sf_dir, "documents").createOrReplaceTempView("_docs_udf")
-    row = spark.sql(
-        "SELECT max(token_count(text)) AS mx, count(*) AS n FROM _docs_udf"
-    ).collect()[0]
-    assert row["mx"] > 0 and row["n"] > 0
-    load(spark, sf_dir, "embeddings").createOrReplaceTempView("_emb_udf")
-    norms = spark.sql("SELECT vector_norm(embedding) AS nrm FROM _emb_udf LIMIT 5").collect()
-    assert all(r["nrm"] > 0 for r in norms)
-
-
-def test_grouped_agg_pandas_udf_matches_expression_twin(spark, sf_dir):
-    """UDAF tier: geo_mean (grouped-agg pandas UDF) vs the pure
-    expression formulation exp(avg(ln(x))) — numpy and JVM accumulate
-    in different orders, so compare to 1e-9 relative tolerance."""
-    import math
-
-    from clickstreaming_end_to_end_data_engineering_project_spark.functions.udfs import geo_mean
-
-    docs = load(spark, sf_dir, "documents")
-    got = {
-        r["lang"]: r["gm"]
-        for r in docs.groupBy("lang").agg(geo_mean("n_chars").alias("gm")).collect()
-    }
-    exp = {
-        r["lang"]: r["gm"]
-        for r in docs.groupBy("lang")
-        .agg(F.exp(F.avg(F.log(F.col("n_chars").cast("double")))).alias("gm"))
-        .collect()
-    }
-    assert set(got) == set(exp) and len(got) > 1
-    for lang, g in got.items():
-        assert math.isclose(g, exp[lang], rel_tol=1e-9), (lang, g, exp[lang])
-
-
-def test_udtf_lateral_join(spark):
-    """UDTF tier: split_sentences drives a LATERAL join from SQL."""
-    from clickstreaming_end_to_end_data_engineering_project_spark.functions.udfs import (
-        register_udfs,
-    )
-
-    register_udfs(spark)
-    spark.createDataFrame(
-        [(1, "first sentence. second one. "), (2, ""), (3, "only one")],
-        ["doc_id", "text"],
-    ).createOrReplaceTempView("_docs_udtf")
-    rows = spark.sql(
-        "SELECT doc_id, s.pos, s.sentence FROM _docs_udtf, "
-        "LATERAL split_sentences(text) s ORDER BY doc_id, s.pos"
-    ).collect()
-    assert [(r["doc_id"], r["pos"], r["sentence"]) for r in rows] == [
-        (1, 0, "first sentence"),
-        (1, 1, "second one"),
-        (3, 0, "only one"),
-    ]
 
 
 def test_lang_id_runs_and_is_deterministic(spark, sf_dir):
@@ -252,61 +193,6 @@ def test_lsh_multiprobe_recall_and_exhaustive_parity(spark, sf_dir, tmp_path):
         assert abs(a["cos_sim"] - b["cos_sim"]) < 1e-12
 
 
-def test_salted_join_equals_plain_join(spark, sf_dir):
-    from clickstreaming_end_to_end_data_engineering_project_spark.operators.skew import salted_join
-
-    li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_extendedprice")
-    orders = load(spark, sf_dir, "orders").select(
-        F.col("o_orderkey").alias("l_orderkey"), "o_totalprice"
-    )
-    plain = li.join(orders, "l_orderkey").groupBy().agg(
-        F.count(F.lit(1)), F.sum(F.col("l_extendedprice").cast("decimal(12,2)"))
-    ).collect()
-    salted = salted_join(li, orders, "l_orderkey", n_salts=4).groupBy().agg(
-        F.count(F.lit(1)), F.sum(F.col("l_extendedprice").cast("decimal(12,2)"))
-    ).collect()
-    assert plain == salted
-
-
-def test_bucketed_join_has_no_shuffle(spark, sf_dir):
-    """Tables bucketed on the join key join with zero Exchange nodes."""
-    import io
-    from contextlib import redirect_stdout
-
-    from clickstreaming_end_to_end_data_engineering_project_spark.operators.skew import (
-        write_bucketed,
-    )
-
-    write_bucketed(
-        load(spark, sf_dir, "lineitem"), "li_bkt", "l_orderkey", 8, sort_col="l_orderkey"
-    )
-    write_bucketed(
-        load(spark, sf_dir, "orders"), "ord_bkt", "o_orderkey", 8, sort_col="o_orderkey"
-    )
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        li = spark.table("li_bkt")
-        orders = spark.table("ord_bkt")
-        joined = li.join(orders, li.l_orderkey == orders.o_orderkey).groupBy(
-            "o_orderpriority"
-        ).count()
-        buf = io.StringIO()
-        with redirect_stdout(buf):
-            joined.explain("formatted")
-        plan = buf.getvalue()
-        # children print BELOW their parent: nothing under the join node
-        # (i.e., between it and the scans) may be an Exchange
-        tree = plan.split("\n\n")[0]
-        below_join = tree.split("SortMergeJoin")[1]
-        assert "Exchange" not in below_join, f"bucketed join must not shuffle:\n{plan}"
-        assert "Bucketed: true" in plan
-        assert joined.count() > 0
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        spark.sql("DROP TABLE IF EXISTS li_bkt")
-        spark.sql("DROP TABLE IF EXISTS ord_bkt")
-
-
 def test_ivf_topk_matches_bruteforce_on_probed_clusters(spark, sf_dir):
     """IVF results are exact within the probed clusters: every returned
     neighbor's cosine matches brute force, and with nprobe=all the
@@ -325,37 +211,6 @@ def test_ivf_topk_matches_bruteforce_on_probed_clusters(spark, sf_dir):
     full = ivf_topk(embs, 0, k=10, nprobe=n_clusters).collect()
     brute = brute_force_topk(embs, 0, k=10).collect()
     assert [r["vec_id"] for r in full] == [r["vec_id"] for r in brute]
-
-
-def test_format_roundtrips_and_partition_pruning(spark, sf_dir, tmp_path):
-    """CSV and NDJSON roundtrips preserve values under explicit schema;
-    partitioned parquet write prunes partitions on read."""
-    import io
-    from contextlib import redirect_stdout
-
-    from clickstreaming_end_to_end_data_engineering_project_spark.sources import formats
-
-    ev = load(spark, sf_dir, "events").withColumn("day", F.to_date("ts"))
-    n = ev.count()
-
-    csv_dir, json_dir, part_dir = (str(tmp_path / d) for d in ("csv", "json", "part"))
-    flat = ev.select("event_id", "user_id", "event_type", "value")
-    flat.write.mode("overwrite").option("header", "true").csv(csv_dir)
-    back_csv = formats.read_csv(spark, csv_dir, flat.schema)
-    assert sorted(back_csv.collect()) == sorted(flat.collect())
-
-    flat.write.mode("overwrite").json(json_dir)
-    back_json = formats.read_json_lines(spark, json_dir, flat.schema)
-    assert sorted(back_json.collect()) == sorted(flat.collect())
-
-    formats.write_partitioned_parquet(ev, part_dir, ["day"])
-    pruned = formats.read_parquet(spark, part_dir).filter(F.col("day") == "2024-01-05")
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        pruned.explain("formatted")
-    plan = buf.getvalue()
-    assert "PartitionFilters" in plan and "day" in plan.split("PartitionFilters")[1][:120]
-    assert 0 < pruned.count() < n
 
 
 def test_jaccard_matches_pure_python(spark):
@@ -677,10 +532,6 @@ def test_dedup_operators_leave_no_cached_dataframes(spark, sf_dir):
     )
     from clickstreaming_end_to_end_data_engineering_project_spark.sources.tables import load
 
-    from clickstreaming_end_to_end_data_engineering_project_spark.operators.dedup import (
-        dedup_new_against_corpus,
-    )
-
     spark.catalog.clearCache()
     cm = spark._jsparkSession.sharedState().cacheManager()
     docs = load(spark, sf_dir, "documents")
@@ -696,8 +547,6 @@ def test_dedup_operators_leave_no_cached_dataframes(spark, sf_dir):
     assert cm.isEmpty(), "capped ngram_jaccard_pairs leaked the pre-rebind cache entry"
     assert minhash_lsh_candidates(docs).count() >= 0
     assert cm.isEmpty(), "minhash_lsh_candidates leaked a cached DataFrame"
-    assert dedup_new_against_corpus(hot_docs, docs.limit(50)).count() >= 0
-    assert cm.isEmpty(), "dedup_new_against_corpus leaked a cached DataFrame"
     embs = load(spark, sf_dir, "embeddings")
     assert kmeans_assign(embs, k=4, iterations=2).count() > 0
     assert cm.isEmpty(), "kmeans_assign leaked a cached DataFrame"
@@ -969,165 +818,6 @@ def test_grouped_map_custom_group_col(spark, sf_dir):
     assert out.count() == docs.count()
 
 
-def test_pii_scrub_matches_duckdb_oracle(spark, tmp_path):
-    """PII scrubbing differential: the identical patterns run through
-    Spark (java.util.regex) and DuckDB (RE2, 'g' flag) on the same
-    parquet fixture must produce byte-identical scrubbed text — the
-    patterns are deliberately restricted to the two engines' common
-    dialect (operators/pii.py).  The driver corpus contains no digits,
-    so this synthetic fixture is the family's evidence (COVERAGE.md)."""
-    import duckdb
-
-    from clickstreaming_end_to_end_data_engineering_project_spark.operators.pii import (
-        PII_PATTERNS,
-        PII_REPLACEMENTS,
-        pii_audit,
-        scrub_pii,
-    )
-
-    docs = [
-        (0, "contact jane.doe+spam@example.co.uk or call 415-555-2671 today"),
-        (1, "host 10.0.254.3 served https://internal.example.com/u?id=5&mail=a@b.io fine"),
-        (2, "leak: ssn 123-45-6789 beside (415) 555-2671 and +1 212.555.0100"),
-        (3, "clean text, bare integers 1234567890 and a1b2c3 must survive"),
-        (4, "sentence-final email@domain.io. and permissive quad 999.999.999.999"),
-        (5, ""),
-        (6, None),
-    ]
-    df = spark.createDataFrame(docs, "doc_id long, text string")
-    path = str(tmp_path / "pii.parquet")
-    df.coalesce(1).write.mode("overwrite").parquet(path)
-    src = spark.read.parquet(path)
-
-    got = {r["doc_id"]: r["text"] for r in scrub_pii(src).collect()}
-
-    expr = "text"
-    for name, pat in PII_PATTERNS.items():
-        expr = f"regexp_replace({expr}, '{pat}', '{PII_REPLACEMENTS[name]}', 'g')"
-    con = duckdb.connect()
-    try:
-        exp = dict(
-            con.execute(
-                f"SELECT doc_id, {expr} FROM read_parquet('{path}/*.parquet') ORDER BY doc_id"
-            ).fetchall()
-        )
-    finally:
-        con.close()
-    assert got == exp
-
-    # semantic spot checks, independent of both engines
-    assert "|||EMAIL|||" in got[0] and "|||PHONE|||" in got[0]
-    assert "|||IPV4|||" in got[1] and "|||URL|||" in got[1]
-    assert "a@b.io" not in got[1], "URL rule must consume embedded address"
-    assert "|||SSN|||" in got[2] and got[2].count("|||PHONE|||") == 2
-    assert got[3] == docs[3][1], "bare integers and clean text untouched"
-    assert got[5] == "" and got[6] is None
-
-    # post-condition: nothing matches after scrubbing (idempotent pass)
-    after = pii_audit(scrub_pii(src)).collect()[0].asDict()
-    assert all(v == 0 for v in after.values()), after
-
-    # audit on the raw fixture: exact per-type totals.  Unlike the
-    # scrub (sequential, URL consumes its embedded address), the audit
-    # counts each pattern independently on the raw text, so doc1's
-    # URL-embedded address counts as an email here.
-    audit = pii_audit(src).collect()[0].asDict()
-    assert audit["email_matches"] == 3  # doc0, doc1 (inside URL), doc4
-    assert audit["phone_matches"] == 3 and audit["phone_docs"] == 2
-    assert audit["ssn_matches"] == 1 and audit["ipv4_matches"] == 2
-    assert audit["url_matches"] == 1
-
-
-def test_pii_scrub_on_driver_corpus_is_noop(spark, sf_dir):
-    """The driver documents corpus is digit-free word salad: scrubbing
-    must be a byte-for-byte no-op there (why this family has no gate
-    row), and the audit must report zero matches for every type."""
-    from clickstreaming_end_to_end_data_engineering_project_spark.operators.pii import (
-        pii_audit,
-        scrub_pii,
-    )
-
-    docs = load(spark, sf_dir, "documents")
-    audit = pii_audit(docs).collect()[0].asDict()
-    assert all(v == 0 for v in audit.values()), audit
-    changed = (
-        scrub_pii(docs, out_col="scrubbed")
-        .filter(F.col("scrubbed") != F.col("text"))
-        .count()
-    )
-    assert changed == 0
-
-
-def test_pii_custom_patterns_and_empty_corpus(spark):
-    """scrub_pii with a custom pattern set derives matching placeholder
-    tokens (no KeyError against the built-in replacement table), and
-    pii_audit over an empty corpus reports zeros, not NULLs."""
-    from clickstreaming_end_to_end_data_engineering_project_spark.operators.pii import (
-        pii_audit,
-        scrub_pii,
-    )
-
-    df = spark.createDataFrame(
-        [(0, "pay to DE44500105175407324931 today")], "doc_id long, text string"
-    )
-    iban = {"iban": r"\b[A-Z]{2}[0-9]{2}[A-Z0-9]{11,30}\b"}
-    out = scrub_pii(df, patterns=iban).collect()[0]["text"]
-    assert out == "pay to |||IBAN||| today"
-
-    empty = spark.createDataFrame([], "doc_id long, text string")
-    audit = pii_audit(empty).collect()[0].asDict()
-    assert all(v == 0 for v in audit.values()), audit
-    audit_iban = pii_audit(empty, patterns=iban).collect()[0].asDict()
-    assert audit_iban == {"iban_matches": 0, "iban_docs": 0}
-
-
-def test_dedup_new_against_corpus(spark):
-    """Incremental-ingestion dedup: exact corpus dup, within-batch
-    exact dup, and near-dup-of-corpus all drop; distinct docs and a
-    within-batch NEAR-dup (out of scope by contract — doc 15 is a
-    non-identical near-dup of doc 12 with no corpus counterpart)
-    survive.  NULL-text docs are never duplicates of anything."""
-    from clickstreaming_end_to_end_data_engineering_project_spark.operators.dedup import (
-        dedup_new_against_corpus,
-    )
-
-    corpus = spark.createDataFrame(
-        [
-            (1, "alpha beta gamma delta epsilon zeta eta theta iota kappa"),
-            (2, "one two three four five six seven eight nine ten eleven twelve"),
-        ],
-        ["doc_id", "text"],
-    )
-    new = spark.createDataFrame(
-        [
-            (10, "alpha beta gamma delta epsilon zeta eta theta iota kappa"),  # exact corpus dup
-            (11, "one two three four five six seven eight nine ten eleven thirteen"),  # near-dup of 2
-            (12, "completely different words about entirely unrelated topics here now"),  # keep
-            (13, "completely different words about entirely unrelated topics here now"),  # batch EXACT dup of 12
-            (14, "fresh unique content with no overlap whatsoever anywhere in sight"),  # keep
-            (15, "completely different words about entirely unrelated topics here today"),  # batch NEAR dup of 12: kept by contract
-            (16, None),  # NULL text: never a dup
-            (17, None),  # NULL text: not a dup of 16 either
-        ],
-        ["doc_id", "text"],
-    )
-    kept = {r["doc_id"] for r in dedup_new_against_corpus(new, corpus, threshold=0.2).collect()}
-    assert kept == {12, 14, 15, 16, 17}
-
-    # threshold=1.01 disables the near gate; only exact dups drop
-    kept_exact_only = {
-        r["doc_id"] for r in dedup_new_against_corpus(new, corpus, threshold=1.01).collect()
-    }
-    assert kept_exact_only == {11, 12, 14, 15, 16, 17}
-
-    # empty corpus: only within-batch exact dedup applies
-    empty = spark.createDataFrame([], "doc_id long, text string")
-    kept_no_corpus = {
-        r["doc_id"] for r in dedup_new_against_corpus(new, empty, threshold=0.2).collect()
-    }
-    assert kept_no_corpus == {10, 11, 12, 14, 15, 16, 17}
-
-
 def test_cluster_aware_split_keeps_near_dups_together(spark):
     """Every member of a dup cluster must land in the SAME split (the
     anti-leakage contract), across many clusters so both train and test
@@ -1359,25 +1049,6 @@ def test_dau_wau_smear_matches_naive_rolling_distinct(spark):
     assert set(out) == set(daily), "every observed day appears exactly once"
 
 
-def test_dedup_new_against_corpus_null_text_survives_near_gate(spark):
-    """Code-review regression: a NULL-text batch doc must survive BOTH
-    gates even when the corpus contains an empty/whitespace doc (the
-    short-doc fallback shingle of NULL is hash('') and used to collide
-    with them, silently dropping the batch doc at the near gate)."""
-    from clickstreaming_end_to_end_data_engineering_project_spark.operators import dedup
-
-    corpus = spark.createDataFrame(
-        [(1, "alpha beta gamma delta epsilon"), (2, ""), (3, "   ")],
-        "doc_id long, text string",
-    )
-    batch = spark.createDataFrame(
-        [(10, None), (11, "totally novel words here now")],
-        "doc_id long, text string",
-    )
-    kept = {r.doc_id for r in dedup.dedup_new_against_corpus(batch, corpus, threshold=0.2).collect()}
-    assert kept == {10, 11}
-
-
 def test_winnow_fingerprints_guarantee(spark):
     """Winnowing guarantee (Schleimer et al. 2003): two documents
     sharing a substring of length >= k+w-1 (= 8 chars at k=5, w=4)
@@ -1536,31 +1207,6 @@ def test_trim_dup_spans_excises_exactly_the_covered_tokens(spark):
     assert trimmed[4]["text_clean"] == "" and trimmed[4]["kept_tokens"] == 0
     # kept tokens preserve original order
     assert trimmed[2]["text_clean"] == "x y q"
-
-
-def test_dup_span_shared_islands_outputs_unchanged(spark):
-    """dup_span_signal_and_trim (one shared dup_islands materialization)
-    must produce byte-identical outputs to the standalone
-    dup_span_stats / trim_dup_spans calls — the sharing is a cost
-    optimization, never a semantic one."""
-    from clickstreaming_end_to_end_data_engineering_project_spark.operators import text as t
-
-    docs = [
-        (1, "a b c d e f"),
-        (2, "x y a b c q"),
-        (3, "zz ww qq vv uu"),
-        (4, "a b c d a b c"),
-        (5, "a b c"),
-        (6, "pq"),
-    ]
-    df = spark.createDataFrame(docs, ["doc_id", "text"])
-    sig, act = t.dup_span_signal_and_trim(df, n=3, min_docs=2)
-    assert sorted(map(tuple, sig.collect())) == sorted(
-        map(tuple, t.dup_span_stats(df, n=3, min_docs=2).collect())
-    )
-    assert sorted(map(tuple, act.collect())) == sorted(
-        map(tuple, t.trim_dup_spans(df, n=3, min_docs=2).collect())
-    )
 
 
 def test_winnow_fingerprints_unicode_ord_parity(spark):
@@ -2551,45 +2197,6 @@ def test_topk_batch_matches_per_query_and_windowgrouplimit(spark, sf_dir):
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan
 
 
-def test_ivf_indexed_batch_matches_single_query(spark, sf_dir, tmp_path):
-    """ivf_topk_indexed_batch over a written index: per query,
-    bit-identical to the single-query ivf_topk_indexed at the same
-    nprobe, and the batch scan's partition filter covers only the
-    UNION of probed clusters."""
-    from clickstreaming_end_to_end_data_engineering_project_spark.operators import (
-        similarity as S,
-    )
-    from clickstreaming_end_to_end_data_engineering_project_spark.sources.tables import load
-
-    embs = load(spark, sf_dir, "embeddings").localCheckpoint(eager=True)
-    path = str(tmp_path / "ivf")
-    S.write_ivf_index(embs, path, n_clusters=6, iterations=2)
-    qs = [
-        (int(r["vec_id"]), [float(x) for x in r["embedding"]])
-        for r in embs.filter(F.col("vec_id") < 3).collect()
-    ]
-    batch = S.ivf_topk_indexed_batch(spark, path, qs, k=10, nprobe=2)
-    got = {}
-    for r in batch.collect():
-        got.setdefault(r["query_id"], []).append((r["rnk"], r["vec_id"], r["cos_sim"]))
-    for qid, qv in qs:
-        want = S.ivf_topk_indexed(
-            spark, path, qv, k=10, nprobe=2, exclude_vec_id=qid
-        ).collect()
-        rows = sorted(got.get(qid, []))
-        assert [v for _, v, _ in rows] == [r["vec_id"] for r in want], f"query {qid}"
-        for (_, _, a), r in zip(rows, want):
-            assert a == r["cos_sim"]
-
-    plan = batch._jdf.queryExecution().executedPlan().toString()
-    seg = plan.split("PartitionFilters", 1)[1][:200]
-    assert "cluster" in seg, f"probed-cluster union must be a partition filter: {seg}"
-    import pytest
-
-    with pytest.raises(ValueError, match="dims"):
-        S.ivf_topk_indexed_batch(spark, path, [(0, [1.0, 2.0])], k=5)
-
-
 def test_pagerank_matches_python_reference_and_conserves_mass(spark):
     """Differential: operators/components.pagerank vs a pure-Python
     power iteration on a random weighted digraph WITH dangling
@@ -3137,103 +2744,6 @@ def test_new_operator_families_handle_empty_input(spark):
     assert len(row) == 1 and row[0]["n_periods"] == 0
 
 
-def test_hybrid_indexed_matches_in_memory_when_exhaustive(spark, sf_dir, tmp_path):
-    """hybrid_topk_indexed with nprobe = n_clusters (exhaustive
-    semantic leg) must return exactly what the in-memory
-    hybrid_search_rrf plan computes — both legs' written layouts
-    compose without moving a single fused score."""
-    from clickstreaming_end_to_end_data_engineering_project_spark.operators.retrieval import (
-        hybrid_topk_indexed,
-        write_bm25_index,
-    )
-    from clickstreaming_end_to_end_data_engineering_project_spark.operators.similarity import (
-        write_ivf_index,
-    )
-    from clickstreaming_end_to_end_data_engineering_project_spark.plans.llmdata import (
-        hybrid_search_rrf,
-    )
-    from clickstreaming_end_to_end_data_engineering_project_spark.sources.tables import load
-
-    docs = load(spark, sf_dir, "documents")
-    embs = load(spark, sf_dir, "embeddings")
-    bm25_path = str(tmp_path / "bm25")
-    ivf_path = str(tmp_path / "ivf")
-    write_bm25_index(docs, bm25_path, n_buckets=64)
-    write_ivf_index(embs, ivf_path, n_clusters=8, iterations=2)
-    qvec = [float(x) for x in embs.filter(F.col("vec_id") == 0).head()["embedding"]]
-
-    got = [
-        (r["doc_id"], r["n_lists"], r["rrf_score"])
-        for r in hybrid_topk_indexed(
-            spark, bm25_path, ivf_path, ["spark", "stream", "hash", "dup"],
-            qvec, k=10, breadth=20, nprobe=8, exclude_vec_id=0,
-        ).collect()
-    ]
-    want = [
-        (r["doc_id"], r["n_lists"], r["rrf_score"])
-        for r in hybrid_search_rrf(spark, sf_dir).collect()
-    ]
-    assert got == want and len(got) == 10
-
-
-@pytest.mark.slow
-def test_hybrid_indexed_pin_holds_with_multi_segment_stores(spark, sf_dir, tmp_path):
-    """r13 verdict #7: the hybrid serving pin must survive BOTH
-    underlying stores being multi-segment post-append — the
-    compose-point most likely to regress silently.  Build each store
-    on a corpus subset, append the rest (two segments each), and the
-    exhaustive-settings hybrid probe must still equal the in-memory
-    hybrid_search_rrf composition over the full corpus: the BM25
-    append is bit-equal to a rebuild, and the IVF append's centroids
-    don't matter at nprobe = n_clusters."""
-    import os
-
-    from clickstreaming_end_to_end_data_engineering_project_spark.operators.retrieval import (
-        append_bm25_index,
-        hybrid_topk_indexed,
-        write_bm25_index,
-    )
-    from clickstreaming_end_to_end_data_engineering_project_spark.operators.similarity import (
-        append_ivf_index,
-        write_ivf_index,
-    )
-    from clickstreaming_end_to_end_data_engineering_project_spark.plans.llmdata import (
-        hybrid_search_rrf,
-    )
-    from clickstreaming_end_to_end_data_engineering_project_spark.sources.tables import load
-
-    docs = load(spark, sf_dir, "documents")
-    embs = load(spark, sf_dir, "embeddings")
-    bm25_path = str(tmp_path / "bm25_seg")
-    ivf_path = str(tmp_path / "ivf_seg")
-    write_bm25_index(docs.filter(F.col("doc_id") % 4 != 0), bm25_path, n_buckets=64)
-    append_bm25_index(docs.filter(F.col("doc_id") % 4 == 0), bm25_path)
-    write_ivf_index(
-        embs.filter(F.col("vec_id") % 4 != 0), ivf_path, n_clusters=8, iterations=2
-    )
-    append_ivf_index(embs.filter(F.col("vec_id") % 4 == 0), ivf_path)
-    for p, sub in ((bm25_path, ""), (ivf_path, "vectors")):
-        segs = sorted(
-            d for d in os.listdir(os.path.join(p, sub) if sub else p)
-            if d.startswith("batch=")
-        )
-        assert segs == ["batch=0", "batch=1"], (p, segs)
-
-    qvec = [float(x) for x in embs.filter(F.col("vec_id") == 0).head()["embedding"]]
-    got = [
-        (r["doc_id"], r["n_lists"], r["rrf_score"])
-        for r in hybrid_topk_indexed(
-            spark, bm25_path, ivf_path, ["spark", "stream", "hash", "dup"],
-            qvec, k=10, breadth=20, nprobe=8, exclude_vec_id=0,
-        ).collect()
-    ]
-    want = [
-        (r["doc_id"], r["n_lists"], r["rrf_score"])
-        for r in hybrid_search_rrf(spark, sf_dir).collect()
-    ]
-    assert got == want and len(got) == 10
-
-
 def test_weighted_reservoir_favors_weight_and_is_exact_k(spark):
     """Statistical sanity for the A-Res sampler: with weights 1 vs
     1000 the heavy rows must dominate the fixed-size sample (each
@@ -3512,11 +3022,9 @@ def test_bm25_append_probe_equals_full_rebuild(spark, sf_dir, tmp_path):
     # one batch=0 segment left, appends still work afterwards
     import os
 
-    from clickstreaming_end_to_end_data_engineering_project_spark.operators.retrieval import (
-        compact_bm25_index,
-    )
+    from clickstreaming_end_to_end_data_engineering_project_spark.operators import segstore
 
-    compact_bm25_index(spark, inc)
+    segstore.compact("bm25", spark, inc)
     assert [
         tuple(r) for r in bm25_topk_indexed(spark, inc, terms, k=10).collect()
     ] == want
@@ -3630,6 +3138,7 @@ def test_ivfpq_append_exhaustive_probe_equals_brute_force(spark, sf_dir, tmp_pat
     import pytest
 
     from clickstreaming_end_to_end_data_engineering_project_spark.operators import (
+        segstore,
         similarity as S,
     )
     from clickstreaming_end_to_end_data_engineering_project_spark.sources.tables import load
@@ -3676,7 +3185,7 @@ def test_ivfpq_append_exhaustive_probe_equals_brute_force(spark, sf_dir, tmp_pat
     # empty append writes nothing
     assert S.append_ivfpq_index(body.limit(0), idx)["n_vectors"] == 0
 
-    S.compact_ivfpq_index(spark, idx)
+    segstore.compact("ivfpq", spark, idx)
     segs = sorted(
         d
         for d in os.listdir(os.path.join(idx, "codes"))
@@ -3700,6 +3209,7 @@ def test_pq_append_matches_same_codebook_rebuild(spark, sf_dir, tmp_path):
     import pytest
 
     from clickstreaming_end_to_end_data_engineering_project_spark.operators import (
+        segstore,
         similarity as S,
     )
     from clickstreaming_end_to_end_data_engineering_project_spark.sources.tables import load
@@ -3744,7 +3254,7 @@ def test_pq_append_matches_same_codebook_rebuild(spark, sf_dir, tmp_path):
         tuple(r)
         for r in S.pq_topk_indexed(spark, inc, body, q, k=10, shortlist=50).collect()
     ]
-    S.compact_pq_index(spark, inc)
+    segstore.compact("pq", spark, inc)
     after = [
         tuple(r)
         for r in S.pq_topk_indexed(spark, inc, body, q, k=10, shortlist=50).collect()
@@ -3770,6 +3280,7 @@ def test_ivf_id_map_sidecar_bounds_append_validation(spark, tmp_path):
     import pytest
 
     from clickstreaming_end_to_end_data_engineering_project_spark.operators import (
+        segstore,
         similarity as S,
     )
 
@@ -3808,7 +3319,7 @@ def test_ivf_id_map_sidecar_bounds_append_validation(spark, tmp_path):
     assert spark.read.parquet(os.path.join(idx, "_id_map")).count() == 24
 
     # compaction collapses the sidecar with the vectors
-    S.compact_ivf_index(spark, idx)
+    segstore.compact("ivf", spark, idx)
     segs = sorted(
         d for d in os.listdir(os.path.join(idx, "_id_map")) if d.startswith("batch=")
     )
@@ -3825,12 +3336,13 @@ def test_ivf_id_map_sidecar_bounds_append_validation(spark, tmp_path):
 
 @pytest.mark.slow
 def test_lsh_and_ivf_compaction_preserve_probes(spark, sf_dir, tmp_path):
-    """compact_lsh_index / compact_ivf_index: after build + append,
+    """LSH and IVF ``segstore.compact``: after build + append,
     compaction collapses to one batch=0 segment, probes are identical
     before/after, and further appends still work."""
     import os
 
     from clickstreaming_end_to_end_data_engineering_project_spark.operators import (
+        segstore,
         similarity as S,
     )
     from clickstreaming_end_to_end_data_engineering_project_spark.sources.tables import load
@@ -3847,7 +3359,7 @@ def test_lsh_and_ivf_compaction_preserve_probes(spark, sf_dir, tmp_path):
         tuple(r)
         for r in S.lsh_topk_indexed(spark, lsh, query_vec=qvec, k=10, nprobe=4).collect()
     ]
-    S.compact_lsh_index(spark, lsh)
+    segstore.compact("lsh", spark, lsh)
     after = [
         tuple(r)
         for r in S.lsh_topk_indexed(spark, lsh, query_vec=qvec, k=10, nprobe=4).collect()
@@ -3866,7 +3378,7 @@ def test_lsh_and_ivf_compaction_preserve_probes(spark, sf_dir, tmp_path):
             spark, ivf, qvec, k=10, nprobe=6, exclude_vec_id=0
         ).collect()
     ]
-    S.compact_ivf_index(spark, ivf)
+    segstore.compact("ivf", spark, ivf)
     after = [
         tuple(r)
         for r in S.ivf_topk_indexed(
@@ -4837,123 +4349,6 @@ def test_filtered_ann_probe_matches_filtered_brute_force(spark, sf_dir, tmp_path
     assert {r["vec_id"] for r in serving} <= label3
 
 
-def test_ivfpq_filtered_probe_exact_at_exhaustive_settings(spark, sf_dir, tmp_path):
-    """The IVFADC member of the filtered-ANN surface: the codes table
-    carries no metadata, so the probe semi-joins the probed clusters'
-    codes against the predicate-matching ids BEFORE the ADC shortlist
-    is cut.  At nprobe = n_clusters and shortlist ≥ the filtered corpus
-    the result equals brute-force cosine over the matching rows
-    (unit-norm corpus: L2 rank == cosine rank); at serving settings
-    every returned row satisfies the predicate."""
-    from clickstreaming_end_to_end_data_engineering_project_spark.operators import (
-        similarity as S,
-    )
-    from clickstreaming_end_to_end_data_engineering_project_spark.sources.tables import load
-
-    embs = S.unit_normalize(load(spark, sf_dir, "embeddings")).localCheckpoint(
-        eager=True
-    )
-    q = [float(x) for x in embs.filter(F.col("vec_id") == 0).head()["embedding"]]
-    body = embs.filter(F.col("vec_id") != 0)
-    path = str(tmp_path / "ivfpq_filtered")
-    S.write_ivfpq_index(
-        body, path, n_clusters=6, m=4, codes_k=8,
-        coarse_iterations=2, pq_iterations=1, assign_n=2,
-    )
-    n_match = body.filter("label = 3").count()
-    got = [
-        r["vec_id"]
-        for r in S.ivfpq_topk_indexed_filtered(
-            spark, path, body, q, "label = 3", k=10, nprobe=6, shortlist=n_match
-        ).collect()
-    ]
-    want = [
-        r["vec_id"]
-        for r in S.brute_force_topk_filtered(embs, 0, "label = 3", k=10).collect()
-    ]
-    assert got == want and len(got) == 10
-
-    label3 = {r["vec_id"] for r in body.filter("label = 3").collect()}
-    serving_df = S.ivfpq_topk_indexed_filtered(
-        spark, path, body, q, F.col("label") == 3, k=10, nprobe=3, shortlist=40
-    )
-    serving = serving_df.collect()
-    assert 0 < len(serving) <= 10
-    assert {r["vec_id"] for r in serving} <= label3
-    # the eligibility semi-join must NOT defeat cluster partition
-    # pruning: Catalyst pushes the isin through the join, so the codes
-    # scan still reads nprobe/n_clusters of the directories
-    plan = serving_df._jdf.queryExecution().executedPlan().toString()
-    pf = [l for l in plan.splitlines() if "PartitionFilters" in l and "codes" in l]
-    assert pf and all("cluster" in l.split("PartitionFilters:")[1][:60] for l in pf), (
-        "codes scan lost its cluster PartitionFilter under the filtered probe"
-    )
-
-
-@pytest.mark.slow
-def test_hybrid_indexed_pin_survives_deletes_on_both_stores(spark, sf_dir, tmp_path):
-    """r14 verdict #5: the CRUD compose-point most likely to regress
-    silently — docs deleted from the BM25 store AND vectors deleted
-    from the IVF store (on multi-segment layouts, partial-segment
-    rewrites on both sides), then the exhaustive-settings hybrid probe
-    must equal the in-memory RRF composition over the SURVIVING corpus:
-    BM25 per-segment stats recompute exactly, and IVF centroid
-    staleness cannot matter at nprobe = n_clusters."""
-    from pyspark.sql import Window
-
-    from clickstreaming_end_to_end_data_engineering_project_spark.operators import (
-        retrieval as R,
-        similarity as S,
-    )
-    from clickstreaming_end_to_end_data_engineering_project_spark.sources.tables import load
-
-    docs = load(spark, sf_dir, "documents")
-    embs = load(spark, sf_dir, "embeddings").localCheckpoint(eager=True)
-    bm25_path = str(tmp_path / "bm25_del")
-    ivf_path = str(tmp_path / "ivf_del")
-    R.write_bm25_index(docs.filter(F.col("doc_id") % 4 != 0), bm25_path, n_buckets=64)
-    R.append_bm25_index(docs.filter(F.col("doc_id") % 4 == 0), bm25_path)
-    S.write_ivf_index(
-        embs.filter(F.col("vec_id") % 4 != 0), ivf_path, n_clusters=8, iterations=2
-    )
-    S.append_ivf_index(embs.filter(F.col("vec_id") % 4 == 0), ivf_path)
-
-    # victims span BOTH segments of each store (ids 8,16 in batch=1;
-    # ids 7,9,15 in batch=0), and both deletes partially rewrite
-    victims = [7, 8, 9, 15, 16]
-    out_b = R.delete_from_bm25_index(spark, bm25_path, victims)
-    out_v = S.delete_from_ivf_index(spark, ivf_path, victims)
-    assert out_b["docs_deleted"] == 5 and out_v["vectors_deleted"] == 5
-    assert out_b["segments_rewritten"] == 2 and out_v["segments_rewritten"] == 2
-
-    terms = ["spark", "stream", "hash", "dup"]
-    qvec = [float(x) for x in embs.filter(F.col("vec_id") == 0).head()["embedding"]]
-    got = [
-        tuple(r)
-        for r in R.hybrid_topk_indexed(
-            spark, bm25_path, ivf_path, terms, qvec,
-            k=10, breadth=20, nprobe=8, exclude_vec_id=0,
-        ).collect()
-    ]
-
-    surviving_docs = docs.filter(~F.col("doc_id").isin(victims))
-    surviving_embs = embs.filter(~F.col("vec_id").isin(victims))
-    lex_r = R.bm25_topk(surviving_docs, terms, k=20).select(
-        "doc_id",
-        F.row_number()
-        .over(Window.orderBy(F.col("bm25_score").desc(), F.col("doc_id")))
-        .alias("rank"),
-    )
-    sem_r = S.brute_force_topk(surviving_embs, query_vec_id=0, k=20).select(
-        F.col("vec_id").alias("doc_id"),
-        F.row_number()
-        .over(Window.orderBy(F.col("cos_sim").desc(), F.col("vec_id")))
-        .alias("rank"),
-    )
-    want = [tuple(r) for r in R.rrf_fuse([lex_r, sem_r], k=10).collect()]
-    assert got == want and len(got) == 10
-
-
 def test_filtered_ann_probes_return_empty_on_no_matching_rows(spark, tmp_path):
     """A predicate matching nothing returns an EMPTY frame with the
     standard probe schema — never an error, never unfiltered rows
@@ -4973,17 +4368,6 @@ def test_filtered_ann_probes_return_empty_on_no_matching_rows(spark, tmp_path):
     S.write_ivf_index(vecs, ivf, n_clusters=2, iterations=1)
     out = S.ivf_topk_indexed_filtered(spark, ivf, q, "label = 99", k=5, nprobe=2)
     assert out.columns == ["vec_id", "cos_sim"] and out.count() == 0
-
-    ivfpq = str(tmp_path / "ivfpq_nomatch")
-    normed = S.unit_normalize(vecs)
-    S.write_ivfpq_index(
-        normed, ivfpq, n_clusters=2, m=2, codes_k=4,
-        coarse_iterations=1, pq_iterations=1,
-    )
-    out = S.ivfpq_topk_indexed_filtered(
-        spark, ivfpq, normed, q, "label = 99", k=5, nprobe=2, shortlist=20
-    )
-    assert out.columns == ["vec_id", "l2_dist"] and out.count() == 0
 
 
 def test_bm25_eligible_filter_keeps_collection_stats(spark, sf_dir, tmp_path):
@@ -5036,42 +4420,6 @@ def test_bm25_eligible_filter_keeps_collection_stats(spark, sf_dir, tmp_path):
             docs, terms, k=10, eligible=F.col("lang") == "en"
         ).collect()
     ]
-    assert got == want and len(got) == 10
-
-
-def test_hybrid_indexed_filtered_matches_in_memory(spark, sf_dir, tmp_path):
-    """r15 (r16 queue): the filtered hybrid serving path —
-    ``hybrid_topk_indexed(eligible_ids=...)`` routes the id set into
-    BOTH written-index legs (BM25 semi-join on the pruned postings,
-    IVF semi-join on the pruned cluster scan) and must equal the
-    in-memory ``hybrid_search_rrf_filtered`` composition at exhaustive
-    nprobe."""
-    from clickstreaming_end_to_end_data_engineering_project_spark.operators import (
-        retrieval as R,
-        similarity as S,
-    )
-    from clickstreaming_end_to_end_data_engineering_project_spark.plans.llmdata import (
-        hybrid_search_rrf_filtered,
-    )
-    from clickstreaming_end_to_end_data_engineering_project_spark.sources.tables import load
-
-    docs = load(spark, sf_dir, "documents")
-    embs = load(spark, sf_dir, "embeddings")
-    bm25_path = str(tmp_path / "bm25_hf")
-    ivf_path = str(tmp_path / "ivf_hf")
-    R.write_bm25_index(docs, bm25_path, n_buckets=64)
-    S.write_ivf_index(embs, ivf_path, n_clusters=8, iterations=2)
-    qvec = [float(x) for x in embs.filter(F.col("vec_id") == 0).head()["embedding"]]
-    en_ids = docs.filter("lang = 'en'").select("doc_id")
-    got = [
-        tuple(r)
-        for r in R.hybrid_topk_indexed(
-            spark, bm25_path, ivf_path, ["spark", "stream", "hash", "dup"],
-            qvec, k=10, breadth=20, nprobe=8, exclude_vec_id=0,
-            eligible_ids=en_ids,
-        ).collect()
-    ]
-    want = [tuple(r) for r in hybrid_search_rrf_filtered(spark, sf_dir).collect()]
     assert got == want and len(got) == 10
 
 
@@ -5137,13 +4485,11 @@ def test_lsh_bm25_ivf_rebuild_failure_preserves_old_index(spark, tmp_path):
     ] == before
 
 
-def test_lsh_and_pq_filtered_probes_match_filtered_brute_force(spark, sf_dir, tmp_path):
-    """The remaining two members of the r15 filtered-ANN family: the
-    LSH probe's predicate is evaluated inside the bucket-pruned scan
-    (full rows ride in the layout; exact at nprobe = 2^planes), and
-    the PQ probe semi-joins the codes against the matching ids before
-    the ADC shortlist (exact at shortlist ≥ the filtered corpus).
-    Both the Column and the id-frame predicate forms are exercised."""
+def test_lsh_filtered_probe_matches_filtered_brute_force(spark, sf_dir, tmp_path):
+    """A member of the r15 filtered-ANN family: the LSH probe's
+    predicate is evaluated inside the bucket-pruned scan (full rows
+    ride in the layout; exact at nprobe = 2^planes).  Both the SQL and
+    the id-frame predicate forms are exercised."""
     from clickstreaming_end_to_end_data_engineering_project_spark.operators import (
         similarity as S,
     )
@@ -5174,38 +4520,6 @@ def test_lsh_and_pq_filtered_probes_match_filtered_brute_force(spark, sf_dir, tm
     ).collect()
     assert {r["vec_id"] for r in serving} <= label3
 
-    pq = str(tmp_path / "pq_filtered")
-    books = S.anchor_pq_codebooks(embs, m=8, k=16)
-    S.write_pq_index(embs, pq, codebooks=books)
-    body = embs.filter(F.col("vec_id") != 0)
-    n_match = body.filter("label = 3").count()
-    got = [
-        r["vec_id"]
-        for r in S.pq_topk_indexed_filtered(
-            spark, pq, body, q, F.col("label") == 3, k=10, shortlist=n_match
-        ).collect()
-    ]
-    # PQ ranks by exact L2 after the rerank — the ground truth is the
-    # exact L2 top-10 over the filtered corpus (cosine order need not
-    # coincide on non-normalized vectors)
-    from clickstreaming_end_to_end_data_engineering_project_spark.operators import segstore, vecexpr
-
-    qlit = segstore.doubles_sql(q)
-    want_l2 = [
-        r["vec_id"]
-        for r in body.filter("label = 3")
-        .select("vec_id", F.expr(vecexpr.sq_dist("embedding", qlit)).alias("_d"))
-        .orderBy(F.col("_d").asc(), F.col("vec_id"))
-        .limit(10)
-        .collect()
-    ]
-    assert got == want_l2 and len(got) == 10
-    serving = S.pq_topk_indexed_filtered(
-        spark, pq, body, q, "label = 3", k=10, shortlist=30
-    ).collect()
-    assert 0 < len(serving) <= 10
-    assert {r["vec_id"] for r in serving} <= label3
-
 
 def test_ivf_compaction_heals_orphaned_id_map_slice(spark, tmp_path):
     """r15 follow-through on the id_map-FIRST append ordering: a crash
@@ -5219,6 +4533,7 @@ def test_ivf_compaction_heals_orphaned_id_map_slice(spark, tmp_path):
     import shutil
 
     from clickstreaming_end_to_end_data_engineering_project_spark.operators import (
+        segstore,
         similarity as S,
     )
 
@@ -5233,7 +4548,7 @@ def test_ivf_compaction_heals_orphaned_id_map_slice(spark, tmp_path):
     S.append_ivf_index(part_b, idx)
     # crash window: id_map slice landed, vectors batch=1 did not
     shutil.rmtree(os.path.join(idx, "vectors", "batch=1"))
-    S.compact_ivf_index(spark, idx)
+    segstore.compact("ivf", spark, idx)
     im = spark.read.parquet(os.path.join(idx, "_id_map"))
     assert im.count() == 16  # phantom ids NOT folded in
     # the once-crashed increment appends cleanly after compaction
@@ -5269,6 +4584,7 @@ def test_lsh_append_crash_before_vectors_write_retries_clean(spark, tmp_path):
     import shutil
 
     from clickstreaming_end_to_end_data_engineering_project_spark.operators import (
+        segstore,
         similarity as S,
     )
 
@@ -5308,7 +4624,7 @@ def test_lsh_append_crash_before_vectors_write_retries_clean(spark, tmp_path):
     S.write_lsh_index(part_a, idx2, planes=2, dims=4)
     S.append_lsh_index(part_b, idx2)
     shutil.rmtree(os.path.join(idx2, "batch=1"))
-    S.compact_lsh_index(spark, idx2)
+    segstore.compact("lsh", spark, idx2)
     assert spark.read.parquet(os.path.join(idx2, "_id_map")).count() == 16
     assert S.append_lsh_index(part_b, idx2)["n_vectors"] == 8
 
@@ -5366,6 +4682,7 @@ def test_bm25_compaction_heals_orphaned_append_slice(spark, tmp_path):
 
     from clickstreaming_end_to_end_data_engineering_project_spark.operators import (
         retrieval as R,
+        segstore,
     )
 
     docs = spark.createDataFrame(
@@ -5379,7 +4696,7 @@ def test_bm25_compaction_heals_orphaned_append_slice(spark, tmp_path):
     R.append_bm25_index(part_b, idx)
     shutil.rmtree(os.path.join(idx, "batch=1"))
     shutil.rmtree(os.path.join(idx, "_termstats", "batch=1"))
-    R.compact_bm25_index(spark, idx)
+    segstore.compact("bm25", spark, idx)
 
     def params(root):
         p = spark.read.parquet(os.path.join(root, "_bm25_params"))
@@ -5442,42 +4759,6 @@ def test_filtered_probe_composes_with_append_and_delete(spark, tmp_path):
     assert got == want and len(got) == len(
         [v for v in range(40) if v % 3 == 0 and v not in victims][:8]
     ) == 8
-
-
-def test_ivf_batch_filtered_matches_single_query_filtered(spark, sf_dir, tmp_path):
-    """r15: the batched probe's shared predicate (the per-tenant
-    batch-serving shape) must equal the single-query filtered probe
-    per query at the same nprobe — and every returned row satisfies
-    the predicate."""
-    from clickstreaming_end_to_end_data_engineering_project_spark.operators import (
-        similarity as S,
-    )
-    from clickstreaming_end_to_end_data_engineering_project_spark.sources.tables import load
-
-    embs = load(spark, sf_dir, "embeddings").localCheckpoint(eager=True)
-    qs = [
-        (int(r["vec_id"]), [float(x) for x in r["embedding"]])
-        for r in embs.filter(F.col("vec_id") < 3).collect()
-    ]
-    idx = str(tmp_path / "ivf_batch_filtered")
-    S.write_ivf_index(embs, idx, n_clusters=6, iterations=2)
-    batch = S.ivf_topk_indexed_batch(
-        spark, idx, qs, k=10, nprobe=6, predicate="label = 3"
-    )
-    got = {}
-    for r in batch.collect():
-        got.setdefault(r["query_id"], []).append((r["rnk"], r["vec_id"], r["cos_sim"]))
-    label3 = {r["vec_id"] for r in embs.filter("label = 3").collect()}
-    assert set(got) == {0, 1, 2}
-    for qid, qv in qs:
-        single = S.ivf_topk_indexed_filtered(
-            spark, idx, qv, "label = 3", k=10, nprobe=6, exclude_vec_id=qid
-        ).collect()
-        rows = sorted(got[qid])
-        assert [v for _, v, _ in rows] == [r["vec_id"] for r in single]
-        assert {v for _, v, _ in rows} <= label3
-        for (_, _, a), r in zip(rows, single):
-            assert abs(a - r["cos_sim"]) < 1e-12
 
 
 def test_prefix_jaccard_matches_uncapped_inverted_index(spark, sf_dir):
@@ -6845,55 +6126,6 @@ def test_scd2_from_changelog_matches_python_reference(spark):
     assert (2, "y", 10, None) in got
 
 
-def test_scd2_asof_compose_matches_direct_window_asof(spark, sf_dir):
-    """The point of the dimension: joining purchases against the
-    user_page_scd2 intervals must give exactly the page the direct
-    last-value window as-of computes at each purchase timestamp."""
-    from clickstreaming_end_to_end_data_engineering_project_spark.operators.scd import (
-        asof_join_scd2,
-        scd2_from_changelog,
-    )
-    from clickstreaming_end_to_end_data_engineering_project_spark.sources.tables import load
-
-    ev = load(spark, sf_dir, "events")
-    pg = ev.select(
-        "user_id", "ts", "event_id",
-        F.get_json_object("props", "$.k").cast("int").alias("page"),
-    ).filter(F.col("page").isNotNull())
-    dim = scd2_from_changelog(pg, "user_id", "ts", ["page"], tiebreak_cols=["event_id"])
-    purchases = ev.filter(F.col("event_type") == "purchase").select(
-        "event_id", F.col("user_id").alias("p_user"), F.col("ts").alias("p_ts")
-    )
-    joined = asof_join_scd2(
-        purchases, dim.withColumnRenamed("user_id", "p_user"), "p_user", "p_ts"
-    )
-    got = {(r["event_id"], r["page"]) for r in joined.collect()}
-    # direct as-of: page of the latest page-event at or before the purchase
-    from pyspark.sql import Window
-
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "order_rank")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    merged = pg.select(
-        "user_id", "ts", F.lit(0).alias("order_rank"), F.lit(None).alias("event_id"), "page"
-    ).unionByName(
-        ev.filter(F.col("event_type") == "purchase").select(
-            "user_id", "ts", F.lit(1).alias("order_rank"), "event_id",
-            F.lit(None).cast("int").alias("page"),
-        )
-    )
-    direct = (
-        merged.withColumn("asof_page", F.last("page", ignorenulls=True).over(w))
-        .filter(F.col("event_id").isNotNull() & F.col("asof_page").isNotNull())
-        .select("event_id", "asof_page")
-    )
-    want = {(r["event_id"], r["asof_page"]) for r in direct.collect()}
-    assert len(got) > 0
-    assert got == want
-
-
 @pytest.mark.slow
 def test_scd2_apply_sequential_batches_equal_full_rebuild(spark):
     """The r15 verdict #3 contract: applying changelog batches
@@ -7090,64 +6322,6 @@ def test_scd2_apply_rejects_all_closed_key(spark):
     }
     assert (1, "a", 10, 20) in out          # closed history untouched
     assert (2, "x", 10, 30) in out and (2, "y", 30, None) in out
-
-
-def test_scd2_apply_table_staged_swap_and_replay(spark, tmp_path):
-    """The written-dimension verb: applies under the staged-swap crash
-    discipline (heals a crash-between-renames state on entry), and
-    REPLAYING the same batch is a no-op (idempotent apply — the
-    run-to-completion-or-re-run contract the index appends follow)."""
-    import os
-
-    from clickstreaming_end_to_end_data_engineering_project_spark.operators.scd import (
-        scd2_apply_table,
-        scd2_from_changelog,
-    )
-
-    schema = "k long, ts long, seq long, status string"
-    path = str(tmp_path / "dim")
-    scd2_from_changelog(
-        spark.createDataFrame([(1, 10, 1, "a"), (2, 10, 2, "x")], schema),
-        "k", "ts", ["status"], tiebreak_cols=["seq"],
-    ).write.parquet(path)
-    batch = spark.createDataFrame([(1, 20, 3, "b"), (3, 5, 4, "m")], schema)
-    scd2_apply_table(spark, path, batch, "k", "ts", ["status"], ["seq"])
-    after = {tuple(r) for r in spark.read.parquet(path).collect()}
-    assert (1, "a", 10, 20) in after and (1, "b", 20, None) in after
-    assert (3, "m", 5, None) in after
-    # replay: same batch again — a no-op (entries collapse against the
-    # versions they created)
-    scd2_apply_table(spark, path, batch, "k", "ts", ["status"], ["seq"])
-    assert {tuple(r) for r in spark.read.parquet(path).collect()} == after
-    # crash simulation: data stranded at <path>.compact_old, path gone —
-    # the next apply heals first, then applies
-    os.rename(path, path + ".compact_old")
-    batch2 = spark.createDataFrame([(2, 30, 5, "y")], schema)
-    scd2_apply_table(spark, path, batch2, "k", "ts", ["status"], ["seq"])
-    healed = {tuple(r) for r in spark.read.parquet(path).collect()}
-    assert (2, "x", 10, 30) in healed and (2, "y", 30, None) in healed
-    assert after - {(2, "x", 10, None)} <= healed
-
-
-def test_scd2_asof_rejects_lossy_join_sides(spark):
-    """asof_join_scd2 drops dim's key column, so right/full joins would
-    strip dim-only rows of their only non-null key — they must raise;
-    left and semi/anti stay accepted."""
-    import pytest
-
-    from clickstreaming_end_to_end_data_engineering_project_spark.operators.scd import (
-        asof_join_scd2,
-    )
-
-    facts = spark.createDataFrame([(1, 10)], "k long, ts long")
-    dim = spark.createDataFrame(
-        [(1, "a", 0, None)], "k long, v string, valid_from long, valid_to long"
-    )
-    for bad in ("right", "full", "outer", "full_outer", "cross"):
-        with pytest.raises(ValueError, match="asof_join_scd2"):
-            asof_join_scd2(facts, dim, "k", "ts", how=bad)
-    assert asof_join_scd2(facts, dim, "k", "ts", how="left").count() == 1
-    assert asof_join_scd2(facts, dim, "k", "ts", how="left_semi").count() == 1
 
 
 def test_heavy_hitters_k2_majority_element(spark):
@@ -7548,8 +6722,8 @@ def test_match_sequence_semantics_and_guards(spark):
     """The sequence-pattern contract: greedy earliest completion,
     strictly-after chaining (same-instant events don't chain), horizon
     from step 1 bounds every later step, NULL from the first unmatched
-    step onward, entities isolated; duplicate step names and empty
-    step lists raise."""
+    step onward, a NULL-ts event takes no step, entities isolated;
+    duplicate step names and empty step lists raise."""
     import datetime as _dt
 
     import pytest
@@ -7572,6 +6746,10 @@ def test_match_sequence_semantics_and_guards(spark):
         (3, at(0), "a"), (3, at(10), "b"), (3, at(70), "c"),
         # user 4: never does a -> no row at all
         (4, at(0), "b"), (4, at(1), "c"),
+        # user 5: its only a lacks a timestamp -> no row either
+        (5, None, "a"), (5, at(3), "b"),
+        # user 6: a NULL-ts b takes no step; the timed b does
+        (6, at(0), "a"), (6, None, "b"), (6, at(9), "b"),
     ]
     df = spark.createDataFrame(rows, "user_id long, ts timestamp, et string")
     steps = [(n, F.col("et") == n) for n in ("a", "b", "c")]
@@ -7582,7 +6760,8 @@ def test_match_sequence_semantics_and_guards(spark):
     assert got[1] == (at(0), at(10), at(20))
     assert got[2] == (at(0), at(30), None)
     assert got[3] == (at(0), at(10), None)   # horizon expired for c
-    assert 4 not in got
+    assert 4 not in got and 5 not in got
+    assert got[6] == (at(0), at(9), None)
     # without a horizon user 3 completes
     got_free = {
         r["user_id"]: r["t_c"]

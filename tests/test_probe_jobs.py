@@ -136,8 +136,7 @@ def test_warm_probe_build_py4j_calls(spark, tmp_path, probe):
     append = R.append_bm25_index if kind == "bm25" else getattr(S, f"append_{kind}_index")
     append(rows.filter(F.col(id_col) >= 30), path)
     _probe(spark, probe, path, rows).collect()
-    calls = min(count_py4j(spark, lambda: _probe(spark, probe, path, rows)) for _ in range(3))
-    assert calls == PY4J_PINS[probe]
+    assert count_py4j(spark, lambda: _probe(spark, probe, path, rows)) == PY4J_PINS[probe]
 
 
 def _served_equals_fresh(spark, kind: str, path: str) -> None:

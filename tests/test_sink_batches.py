@@ -5,13 +5,17 @@ call launches a fixed number of Spark jobs (count, then one per write)."""
 from __future__ import annotations
 
 import datetime as dt
+import importlib
+import inspect
 import os
+import pkgutil
 import random
 import time
 import uuid
 
 import pytest
 
+from clickstreaming_end_to_end_data_engineering_project_spark import streaming
 from clickstreaming_end_to_end_data_engineering_project_spark.streaming import sinks as sinks_mod
 from clickstreaming_end_to_end_data_engineering_project_spark.streaming.monitoring import (
     attach_monitor,
@@ -267,3 +271,22 @@ def test_sink_cache_ownership(spark, monkeypatch):
     cached_empty.unpersist()
     cached.unpersist()
     assert cm.isEmpty()
+
+
+def test_every_foreach_batch_class_is_a_sink():
+    """Every class under ``streaming/`` that takes ``(batch, batch_id)``
+    gets emptiness, single materialization and retry from ``Sink``."""
+    found = set()
+    for info in pkgutil.iter_modules(streaming.__path__):
+        module = importlib.import_module(f"{streaming.__name__}.{info.name}")
+        for name, cls in inspect.getmembers(module, inspect.isclass):
+            if cls.__module__ != module.__name__:
+                continue
+            methods = [
+                fn for klass in cls.__mro__ for attr, fn in vars(klass).items()
+                if attr in ("__call__", "write") and inspect.isfunction(fn)
+            ]
+            if any("batch_id" in inspect.signature(fn).parameters for fn in methods):
+                found.add(name)
+                assert issubclass(cls, Sink), name
+    assert {"CompositeSink", "IdempotentParquetSink", "MetricsSink"} <= found
