@@ -178,3 +178,72 @@ def scd2_apply(
     if touched_only:
         return touched_rows
     return untouched.unionByName(touched_rows)
+
+
+def scd2_apply_table(
+    spark,
+    path: str,
+    new_log: DataFrame,
+    key_col: str,
+    ts_col: str,
+    attr_cols: Sequence[str],
+    tiebreak_cols: Sequence[str] = (),
+) -> None:
+    """Written-dimension twin of ``scd2_apply``: read the dimension
+    parquet at ``path``, apply the batch, and replace the table under
+    the repo's staged-swap crash discipline (fsutil.swap_with_staging —
+    the exact contract the index appends use): the live table stays
+    intact until the replacement is fully written, a crash between the
+    two renames is healed on the next entry, and replaying the same
+    batch is idempotent (every batch entry is already a no-op or an
+    existing version, so the rebuild-from-seed collapses it away)."""
+    from ..fsutil import heal_swap_crash, swap_with_staging
+
+    heal_swap_crash(spark, path)
+    dim = spark.read.parquet(path)
+    out = scd2_apply(
+        dim, new_log, key_col, ts_col, attr_cols, tiebreak_cols=tiebreak_cols
+    )
+    # materialize BEFORE the swap: the plan reads the live table, and
+    # writing it lazily into staging while the final rename retargets
+    # the source would race the scan
+    frozen = out.localCheckpoint(eager=True)
+    swap_with_staging(
+        spark, path, lambda staging: frozen.write.parquet(staging), job="compact"
+    )
+
+
+def asof_join_scd2(
+    facts: DataFrame,
+    dim: DataFrame,
+    key_col: str,
+    ts_col: str,
+    how: str = "inner",
+) -> DataFrame:
+    """Temporal join: each fact row picks the dimension version whose
+    [valid_from, valid_to) interval contains its timestamp.  An
+    equi-join on the key with the interval predicate as the join
+    condition — per-key version lists are small, so this stays a
+    hash/sort-merge join on the key, never a global theta join.
+
+    ``how`` is restricted to inner/left (and their semi/anti probe
+    forms): the result drops ``dim``'s copy of the key column, so a
+    right/full join would strip dim-only rows of their only non-null
+    key value — a silently-lossy shape this raises on instead."""
+    allowed = {"inner", "left", "left_outer", "leftouter", "left_semi",
+               "leftsemi", "semi", "left_anti", "leftanti", "anti"}
+    if how not in allowed:
+        raise ValueError(
+            f"asof_join_scd2: how={how!r} would drop dim-only rows' key "
+            "(dim's key column is removed from the output); use "
+            "inner/left/semi/anti"
+        )
+    cond = (
+        (facts[key_col] == dim[key_col])
+        & (facts[ts_col] >= dim["valid_from"])
+        & (dim["valid_to"].isNull() | (facts[ts_col] < dim["valid_to"]))
+    )
+    # drop the dimension's copy of the key: a condition-style join keeps
+    # both sides' columns, and two identically-named key columns make
+    # any downstream select/groupBy on the key ambiguous
+    return facts.join(dim, cond, how).drop(dim[key_col])

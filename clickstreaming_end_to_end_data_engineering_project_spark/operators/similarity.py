@@ -120,6 +120,64 @@ def brute_force_topk_batch(
     )
 
 
+def ivf_topk_indexed_batch(
+    spark,
+    path: str,
+    queries: "list[tuple[int, list[float]]]",
+    k: int = 10,
+    nprobe: int = 4,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    predicate=None,
+) -> DataFrame:
+    """Batched probe of a ``write_ivf_index`` layout: rank the stored
+    centroids per query DRIVER-side (Q × n_clusters dot products over
+    driver-sized artifacts), then scan the UNION of all probed
+    ``cluster=`` dirs ONCE — the isin over that union is a partition
+    filter, so I/O is bounded by the distinct probed clusters, shared
+    across the whole batch.  Membership (which query probes which
+    cluster) is a broadcast (query, cluster) pair join, and per-query
+    top-k is WindowGroupLimit, exactly ``brute_force_topk_batch``'s
+    shuffle bound.  Per query, results are IDENTICAL to the
+    single-query ``ivf_topk_indexed`` at the same nprobe (pinned in
+    tests).
+
+    ``queries``: [(query_id, vector)] — the serving batch, driver-sized
+    by definition.  Output: (query_id, vec_id, cos_sim, rnk).
+
+    ``predicate`` (r15): a Column, SQL string, or one-column id frame
+    shared by the whole batch (the per-tenant batch-serving shape) —
+    evaluated on the unioned pruned scan BEFORE per-query ranking,
+    exactly ``ivf_topk_indexed_filtered``'s rule; per query, results
+    equal the single-query filtered probe at the same nprobe."""
+    idx = segstore.Index("ivf", spark, path, id_col)
+    cents = _centroids(idx, "_ivf_centroids")
+    dims = idx.params["dims"]
+    pairs = []
+    qrows = []
+    for qid, qv in queries:
+        if len(qv) != dims:
+            raise ValueError(
+                f"ivf_topk_indexed_batch: query {qid} has {len(qv)} dims, "
+                f"index expects {dims}"
+            )
+        qrows.append((int(qid), [float(x) for x in qv]))
+        pairs.extend((int(qid), c) for c in _nearest_clusters(cents, qv, nprobe))
+    rows = idx.scan(sorted({c for _, c in pairs}), predicate)
+    pair_df = local_rows_df(spark, pairs, "_qid bigint, cluster int")
+    q_df = local_rows_df(spark, qrows, "_qid bigint, _qvec array<double>")
+    sim = F.expr(vecexpr.cosine(vecexpr.ref(vec_col), "_qvec"))
+    w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), F.col(id_col))
+    return (
+        rows.join(F.broadcast(pair_df), "cluster")
+        .join(F.broadcast(q_df), "_qid")
+        .filter(F.col(id_col) != F.col("_qid"))
+        .select(F.col("_qid").alias("query_id"), F.col(id_col), sim.alias("cos_sim"))
+        .withColumn("rnk", F.row_number().over(w))
+        .filter(F.col("rnk") <= k)
+    )
+
+
 def _nearest_clusters(cents: "list[tuple[int, list[float]]]", query_vec, nprobe: int) -> "list[int]":
     """The ``nprobe`` centroids nearest ``query_vec`` by cosine, ranked
     driver-side, ties to the lower cluster id; a zero vector scores 0.

@@ -415,3 +415,67 @@ class MetricsSink(Sink):
         for key, cnt in delta:
             self.counters[f"page_views:{key}"] += cnt
             self.series[f"page_views_ts:{key}"].append((now, cnt))
+
+
+class TrendingSink(Sink):
+    """Exponentially-decayed trending counters — the live "top pages
+    right now" primitive the reference's dashboard promises
+    (README.md:139-146) where a plain running count would be dominated
+    by all-time-popular keys.  Per key the sink maintains a count that
+    decays with a configurable half-life between observations:
+
+        score = old_score * 0.5^(dt / half_life) + batch_count
+
+    so recent activity outweighs history, and an idle key's score
+    halves every ``half_life_batches`` micro-batches (batch ids are
+    the clock — monotone under Structured Streaming's contract, and
+    replay-stable where wall-clock decay would double-decay on a
+    checkpoint retry).
+
+    Same staged-delta + copy-on-write discipline as MetricsSink /
+    AnomalySink: staging collects (can raise) before any state
+    mutation, then the new dict swaps in atomically, so the retry
+    wrapper in ``Sink.__call__`` never double-applies a batch.
+    ``top(k)`` reads are driver-side O(keys log k).
+    """
+
+    def __init__(self, key_col: str, count_col: str, half_life_batches: float = 10.0):
+        if half_life_batches <= 0:
+            raise ValueError(f"half_life_batches must be > 0, got {half_life_batches}")
+        self.key_col = key_col
+        self.count_col = count_col
+        self.half_life = float(half_life_batches)
+        # key -> (score, last_batch_id)
+        self.scores: dict[str, tuple[float, int]] = {}
+        self.last_batch: int | None = None
+
+    def write(self, df: DataFrame, batch_id: int) -> None:
+        staged = [(k, float(v)) for k, v in _batch_delta(df, self.key_col, self.count_col)]
+        new_scores = dict(self.scores)
+        for key, cnt in staged:
+            score, last = new_scores.get(key, (0.0, batch_id))
+            decay = 0.5 ** ((batch_id - last) / self.half_life)
+            new_scores[key] = (score * decay + cnt, batch_id)
+        self.scores = new_scores
+        self.last_batch = batch_id if self.last_batch is None else max(self.last_batch, batch_id)
+
+    def top(self, k: int = 10, as_of_batch: int | None = None) -> list[tuple[str, float]]:
+        """Top-k keys by decayed score AS OF ``as_of_batch`` (default:
+        the latest batch the sink has seen) — stored scores only decay
+        at a key's next write, so ranking must decay idle keys forward
+        or an all-time favorite that went quiet would dominate forever,
+        the exact failure this sink exists to prevent."""
+        import heapq
+
+        if as_of_batch is None:
+            as_of_batch = self.last_batch
+
+        def current(key: str) -> float:
+            score, last = self.scores[key]
+            if as_of_batch is None:
+                return score
+            return score * 0.5 ** (max(0, as_of_batch - last) / self.half_life)
+
+        return heapq.nlargest(
+            k, ((key, current(key)) for key in self.scores), key=lambda kv: (kv[1], kv[0])
+        )

@@ -227,6 +227,183 @@ print("TZ-OK")
     assert out.returncode == 0 and "TZ-OK" in out.stdout, out.stderr[-2000:]
 
 
+def test_write_zordered_narrows_stats_in_every_column(spark, sf_dir, tmp_path):
+    """Z-order clustered write: parquet file-level min-max must be
+    narrow in BOTH z-order columns at once, unlike a single-column
+    sort layout (narrow in the sort column, full-range in the other).
+    That narrowness IS the data-skipping contract: a predicate on
+    either column prunes most files via footer stats."""
+    import pyarrow.parquet as pq
+
+    from clickstreaming_end_to_end_data_engineering_project_spark.sources.formats import (
+        write_zordered,
+    )
+    from clickstreaming_end_to_end_data_engineering_project_spark.sources.tables import load
+
+    events = load(spark, sf_dir, "events").select("event_id", "user_id", "event_type")
+    n_files = 16
+
+    zpath = str(tmp_path / "zordered")
+    write_zordered(events, zpath, ["user_id", "event_id"], n_files)
+
+    spath = str(tmp_path / "sorted1d")
+    (events.repartitionByRange(n_files, "user_id")
+     .sortWithinPartitions("user_id").write.parquet(spath))
+
+    def mean_spread(path, col):
+        import glob
+
+        lo_g, hi_g, spreads = None, None, []
+        files = sorted(glob.glob(path + "/*.parquet"))
+        assert len(files) >= n_files // 2, "expected a multi-file layout"
+        per_file = []
+        for f in files:
+            md = pq.ParquetFile(f).metadata
+            los, his = [], []
+            for rg in range(md.num_row_groups):
+                for ci in range(md.num_columns):
+                    c = md.row_group(rg).column(ci)
+                    if c.path_in_schema == col and c.statistics is not None:
+                        los.append(c.statistics.min)
+                        his.append(c.statistics.max)
+            assert los, f"no stats for {col} in {f}"
+            per_file.append((min(los), max(his)))
+        lo_g = min(lo for lo, _ in per_file)
+        hi_g = max(hi for _, hi in per_file)
+        span = max(hi_g - lo_g, 1)
+        return sum((hi - lo) / span for lo, hi in per_file) / len(per_file)
+
+    # row preservation
+    assert spark.read.parquet(zpath).count() == events.count()
+
+    z_user = mean_spread(zpath, "user_id")
+    z_event = mean_spread(zpath, "event_id")
+    s_user = mean_spread(spath, "user_id")
+    s_event = mean_spread(spath, "event_id")
+
+    # the 1-D sort control behaves as expected: tight on the sort
+    # column, useless on the other
+    assert s_user < 0.3, s_user
+    assert s_event > 0.7, s_event
+    # z-order is materially narrow on BOTH columns simultaneously
+    assert z_user < 0.6 and z_event < 0.6, (z_user, z_event)
+    # and beats the 1-D layout decisively on the second column
+    assert z_event < s_event / 2, (z_event, s_event)
+
+
+def test_zorder_value_matches_python_morton(spark):
+    """The Morton interleave must equal the reference bit-interleave of
+    the min-max-normalized values (property-checked on a deterministic
+    grid incl. bounds, NULLs, and 3-column interleave)."""
+    from pyspark.sql import functions as F
+
+    from clickstreaming_end_to_end_data_engineering_project_spark.sources.formats import (
+        zorder_value,
+    )
+
+    def norm(v, lo, hi, bits):
+        top = (1 << bits) - 1
+        if v is None:
+            return 0
+        return max(0, min(top, int((v - lo) / float(hi - lo or 1) * top)))
+
+    def morton(vals, bits):
+        z = 0
+        n = len(vals)
+        for i in range(bits):
+            for j, v in enumerate(vals):
+                z |= ((v >> i) & 1) << (i * n + j)
+        return z
+
+    rows = [
+        (i, a, b, c)
+        for i, (a, b, c) in enumerate(
+            (a, b, c)
+            for a in (0, 1, 7, 63, 100)
+            for b in (0, 13, 50, 100)
+            for c in (None, 0, 100)
+        )
+    ]
+    df = spark.createDataFrame(rows, ["i", "a", "b", "c"])
+    for bits, cols in [(8, ["a", "b"]), (6, ["a", "b", "c"])]:
+        z = zorder_value([(F.col(c), 0, 100) for c in cols], bits=bits)
+        got = {r["i"]: r["z"] for r in df.withColumn("z", z).collect()}
+        for row in rows:
+            vals = [norm(row[1 + ["a", "b", "c"].index(c)], 0, 100, bits) for c in cols]
+            assert got[row[0]] == morton(vals, bits), (bits, cols, row)
+
+
+def test_write_zordered_supports_timestamp_columns(spark, sf_dir, tmp_path):
+    """The advertised (user_id, ts) workload: temporal columns are
+    normalized through epoch doubles; file-level ts stats must be
+    narrow too, and unsupported types must raise."""
+    import glob
+
+    import pyarrow.parquet as pq
+    import pytest
+
+    from clickstreaming_end_to_end_data_engineering_project_spark.sources.formats import (
+        write_zordered,
+    )
+    from clickstreaming_end_to_end_data_engineering_project_spark.sources.tables import load
+
+    events = load(spark, sf_dir, "events").select("event_id", "user_id", "ts")
+    path = str(tmp_path / "zts")
+    write_zordered(events, path, ["user_id", "ts"], 16)
+    assert spark.read.parquet(path).count() == events.count()
+
+    per_file = []
+    for f in sorted(glob.glob(path + "/*.parquet")):
+        md = pq.ParquetFile(f).metadata
+        st = [
+            md.row_group(g).column(i).statistics
+            for g in range(md.num_row_groups)
+            for i in range(md.num_columns)
+            if md.row_group(g).column(i).path_in_schema == "ts"
+            and md.row_group(g).column(i).statistics is not None
+            and md.row_group(g).column(i).statistics.has_min_max
+        ]
+        if not st:
+            continue
+        per_file.append((min(s.min for s in st), max(s.max for s in st)))
+    assert len(per_file) >= 8, "expected ts stats in most files"
+    lo = min(a for a, _ in per_file)
+    hi = max(b for _, b in per_file)
+    spread = sum((b - a) / (hi - lo) for a, b in per_file) / len(per_file)
+    assert spread < 0.6, spread
+
+    with pytest.raises(ValueError, match="unsupported type"):
+        write_zordered(
+            load(spark, sf_dir, "events").select("event_id", "event_type"),
+            str(tmp_path / "zbad"),
+            ["event_type", "event_id"],
+            4,
+        )
+
+
+def test_write_zordered_all_null_column(spark, tmp_path):
+    """Degenerate bounds: an all-NULL z-column has None min/max; the
+    write must still succeed with NULLs in bucket 0 (the r9 verdict
+    caught a TypeError on None arithmetic here) — and the same guard
+    covers a single-row/constant column (lo == hi)."""
+    from pyspark.sql import functions as F
+
+    from clickstreaming_end_to_end_data_engineering_project_spark.sources.formats import (
+        write_zordered,
+    )
+
+    df = spark.range(100).select(
+        F.col("id"),
+        F.lit(None).cast("double").alias("all_null"),
+        F.lit(7.0).alias("constant"),
+    )
+    path = str(tmp_path / "znull")
+    write_zordered(df, path, ["id", "all_null", "constant"], 4)
+    got = spark.read.parquet(path)
+    assert got.count() == 100
+    assert got.filter(F.col("all_null").isNull()).count() == 100
+
+
 def test_schema_cache_hits_after_first_load(spark, sf_dir):
     """The catalog-style schema cache: the first successful load of a
     table infers from the parquet footer and caches the raw schema;
@@ -334,3 +511,62 @@ def test_swap_invalidates_schema_cache(spark, tmp_path, monkeypatch):
     assert (os.path.abspath(str(tmp_path)), "dim") not in tables._SCHEMA_CACHE
     fresh = load(spark, str(tmp_path), "dim")
     assert sorted(fresh.columns) == ["a", "b"]
+
+
+def test_write_zordered_within_hive_partitions(spark, sf_dir, tmp_path):
+    """partition_by composes Hive partition pruning with z-order
+    stats pruning: the layout has one dir per event_date, rows are
+    preserved, and WITHIN a single date dir the per-file user_id
+    min-max spans are narrow (z-clustered) instead of full-range —
+    the bronze-layout composition the 100 TB scan path relies on."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    from pyspark.sql import functions as F
+
+    from clickstreaming_end_to_end_data_engineering_project_spark.sources.formats import (
+        write_zordered,
+    )
+    from clickstreaming_end_to_end_data_engineering_project_spark.sources.tables import load
+
+    events = (
+        load(spark, sf_dir, "events")
+        .select("event_id", "user_id", "ts")
+        .withColumn("event_date", F.to_date("ts"))
+    )
+    path = str(tmp_path / "zpart")
+    write_zordered(
+        events, path, ["user_id", "ts"], 64, partition_by=["event_date"]
+    )
+    dirs = sorted(glob.glob(path + "/event_date=*"))
+    n_dates = events.select("event_date").distinct().count()
+    assert len(dirs) == n_dates, (len(dirs), n_dates)
+    back = spark.read.parquet(path)
+    assert back.count() == events.count()
+
+    # pick the dir with the most files; its user_id spans must be
+    # narrow per file relative to the dir's own span
+    per_dir = {d: sorted(glob.glob(d + "/*.parquet")) for d in dirs}
+    d = max(per_dir, key=lambda x: len(per_dir[x]))
+    files = per_dir[d]
+    if len(files) < 2:
+        import pytest
+
+        pytest.skip("fixture too small for multi-file partitions")
+    spans = []
+    for f in files:
+        md = pq.ParquetFile(f).metadata
+        los, his = [], []
+        for rg in range(md.num_row_groups):
+            for ci in range(md.num_columns):
+                c = md.row_group(rg).column(ci)
+                if c.path_in_schema == "user_id" and c.statistics is not None:
+                    los.append(c.statistics.min)
+                    his.append(c.statistics.max)
+        assert los, f"no user_id stats in {f}"
+        spans.append((min(los), max(his)))
+    glo = min(lo for lo, _ in spans)
+    ghi = max(hi for _, hi in spans)
+    mean_rel = sum((hi - lo) / max(ghi - glo, 1) for lo, hi in spans) / len(spans)
+    assert mean_rel < 0.7, (mean_rel, spans)

@@ -248,6 +248,39 @@ def test_json_wire_bytes_through_device_stats_equals_direct(spark):
     assert via_wire == direct
 
 
+def test_stream_dedup_within_watermark(spark):
+    """Duplicate event_ids replayed inside the watermark horizon are
+    dropped; the downstream count equals the distinct count."""
+    from clickstreaming_end_to_end_data_engineering_project_spark.operators.stream_dedup import (
+        dedup_stream,
+    )
+
+    tmp = tempfile.mkdtemp(prefix="dedup_src_")
+    base = dt.datetime(2024, 1, 1, 12, 0, 0)
+    rows = [(i, base + dt.timedelta(seconds=i), 1, "view", 1.0, "{}") for i in range(10)]
+    dupes = rows[:4]  # redelivered events, same event_id
+    spark.createDataFrame(rows + dupes, EVENTS_SCHEMA).coalesce(1).write.mode(
+        "append"
+    ).parquet(tmp)
+
+    src = read_file_stream(spark, tmp, EVENTS_SCHEMA)
+    sink = MemorySink(key_cols=None)
+    ckpt = tempfile.mkdtemp(prefix="ckpt_dedup_")
+    q = (
+        dedup_stream(src, ["event_id"], watermark="10 minutes")
+        .writeStream.outputMode("append")
+        .foreachBatch(sink)
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(300)
+    shutil.rmtree(ckpt, ignore_errors=True)
+    shutil.rmtree(tmp, ignore_errors=True)
+    ids = [r["event_id"] for r in sink.result]
+    assert sorted(ids) == list(range(10))
+
+
 def test_query_monitor_records_progress(spark, events_dir):
     """Listener attached via the real API (spark.streams.addListener —
     the reference used a nonexistent query.addListener) sees start,
@@ -1018,6 +1051,94 @@ def test_checkpoint_recovery_continues_state(spark, sf_dir):
     )
     shutil.rmtree(src_dir, ignore_errors=True)
     shutil.rmtree(ckpt, ignore_errors=True)
+
+
+def test_trending_sink_decay_and_ranking(spark, monkeypatch):
+    """Decay math pinned exactly: a key hot early then idle must fall
+    below a key with recent activity once enough half-lives pass; a
+    retried batch must not double-count (copy-on-write staging); top()
+    with as_of_batch decays idle keys forward."""
+    from clickstreaming_end_to_end_data_engineering_project_spark.streaming.sinks import (
+        TrendingSink,
+    )
+
+    sink = TrendingSink(key_col="page", count_col="n", half_life_batches=2.0)
+
+    def batch(rows):
+        return spark.createDataFrame(rows, "page string, n long")
+
+    # batch 0: 'old' very hot; batch 4 (2 half-lives later): 'new' mildly hot
+    sink(batch([("old", 100)]), 0)
+    sink(batch([("new", 40)]), 4)
+    top = sink.top(2, as_of_batch=4)
+    scores = dict(top)
+    assert scores["old"] == 100 * 0.5 ** (4 / 2.0), "two half-lives must quarter the score"
+    assert top[0][0] == "new", "recent moderate heat must outrank decayed big heat"
+
+    # replay safety: Sink.__call__ retry on a failing first attempt
+    # (sleep stubbed and write patched via monkeypatch — self-cleaning,
+    # no real backoff delay, same pattern as the sibling retry tests)
+    no_backoff(monkeypatch)
+
+    class Boom(Exception):
+        pass
+
+    calls = {"n": 0}
+    orig = TrendingSink.write
+
+    def flaky(self, df, batch_id):
+        calls["n"] += 1
+        if calls["n"] == 1:
+            raise Boom()
+        orig(self, df, batch_id)
+
+    monkeypatch.setattr(TrendingSink, "write", flaky)
+    sink(batch([("old", 10)]), 5)
+    monkeypatch.setattr(TrendingSink, "write", orig)
+    assert calls["n"] == 2
+    expected_old = (100 * 0.5 ** (5 / 2.0)) + 10
+    assert dict(sink.top(2))["old"] == expected_old, "retried batch applied exactly once"
+
+    # as_of decay: far future → everything near zero, ordering stable
+    far = sink.top(2, as_of_batch=100)
+    assert far[0][1] < 1e-9 and len(far) == 2
+
+
+def test_trending_sink_streaming_end_to_end(spark, sf_dir, events_dir):
+    """TrendingSink through a real availableNow streaming query: final
+    scores must be positive for every observed event type and the
+    top-1 must be the type with the highest (decay-weighted) count."""
+    from clickstreaming_end_to_end_data_engineering_project_spark.streaming.pipelines import (
+        read_file_stream,
+    )
+    from clickstreaming_end_to_end_data_engineering_project_spark.streaming.sinks import (
+        TrendingSink,
+    )
+
+    events = load(spark, sf_dir, "events")
+    sink = TrendingSink(key_col="event_type", count_col="one", half_life_batches=10.0)
+    ckpt = tempfile.mkdtemp(prefix="trend_ckpt_")
+    try:
+        q = (
+            read_file_stream(spark, events_dir, events.schema)
+            .select("event_type", F.lit(1).alias("one"))
+            .writeStream.foreachBatch(sink)
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(120)
+        top = sink.top(10)
+        assert len(top) == 5, "all five event types must be scored"
+        assert all(score > 0 for _, score in top)
+        # single batch → no decay: scores equal raw counts
+        batch_counts = {
+            r.event_type: r.cnt
+            for r in events.groupBy("event_type").agg(F.count(F.lit(1)).alias("cnt")).collect()
+        }
+        assert top[0][0] == max(batch_counts, key=lambda k: (batch_counts[k], k))
+    finally:
+        shutil.rmtree(ckpt, ignore_errors=True)
 
 
 def test_streaming_cdc_apply_via_merge_upsert(spark):
